@@ -518,7 +518,12 @@ def q_hash_embed_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_adwin_drift_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     cfg = PipelineConfig(alpha=0.05, window=100, warmup=10, drift_detector="adwin", adwin_delta=0.002)
-    out = calibrate(ev, cfg, score_col="value", order_cols=("ts", "event_id"), group_keys=["user_id"])
+    # needed_cols=(): the aggregate below reads only (user_id, is_drift,
+    # is_anom), as in fixed_thr_per_user
+    out = calibrate(
+        ev, cfg, score_col="value", order_cols=("ts", "event_id"),
+        group_keys=["user_id"], needed_cols=(),
+    )
     return out.groupBy("user_id").agg(
         F.sum(F.col("is_drift").cast("long")).alias("n_drift"),
         F.sum(F.col("is_anom").cast("long")).alias("n_anom"),

@@ -70,6 +70,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from log_project_spark import synth
     from log_project_spark.config import PipelineConfig
+    from log_project_spark.operators import route
     from log_project_spark.pipeline import run_pipeline, summary_from_result
     from log_project_spark.session import get_spark
     from log_project_spark.sources import formats
@@ -142,9 +143,12 @@ def main(argv: list[str] | None = None) -> None:
     elif args.check_summary:
         raise SystemExit("--check-summary requires --summary-out")
     if args.scores_out:
-        trace = res.scored.withColumn(
-            "event_idx", F.col("turn_idx").cast("long")
-        )
+        # with --out-dir the sinks already hold every scored row: read
+        # them back rather than execute the scored plan a second time
+        scored = route.read_fanout(spark, args.out_dir, res.sink_paths)
+        if scored is None:
+            scored = res.scored
+        trace = scored.withColumn("event_idx", F.col("turn_idx").cast("long"))
         formats.write_scores_csv(trace, args.scores_out)
     if args.figures_out:
         if not args.summary_out:

@@ -19,7 +19,7 @@ on both sink and dt.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SINKS = ("anomalous", "drifting", "nominal")
@@ -76,13 +76,28 @@ def sink_counts(scored: DataFrame) -> DataFrame:
     return with_sink(scored).groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
 
 
-def flag_counts(scored: DataFrame) -> DataFrame:
-    """Single-path flag sums (SURVEY.md C8/C9): must reconcile with
-    sink_counts: anomalous == n_anom, drifting == n_drift_not_anom,
-    nominal == total - anomalous - drifting."""
-    return scored.agg(
+def read_fanout(spark: SparkSession, out_dir: str, sink_paths: dict[str, str]) -> DataFrame | None:
+    """The rows a parquet write_fanout wrote, read back from the sink
+    paths it returned (with a `sink` column); None when no sink received
+    rows — an empty out_dir has no schema to infer."""
+    if not sink_paths:
+        return None
+    return spark.read.option("basePath", out_dir).parquet(*sink_paths.values())
+
+
+def flag_aggs() -> list[Column]:
+    """The flag sums as aggregate expressions, for `agg` or for a
+    `df.observe` that rides a write."""
+    return [
         F.count(F.lit(1)).alias("n_total"),
         F.sum(F.col("is_anom").cast("long")).alias("n_anom"),
         F.sum(F.col("is_drift").cast("long")).alias("n_drift"),
         F.sum((F.col("is_drift") & ~F.col("is_anom")).cast("long")).alias("n_drift_not_anom"),
-    )
+    ]
+
+
+def flag_counts(scored: DataFrame) -> DataFrame:
+    """Single-path flag sums (SURVEY.md C8/C9): must reconcile with
+    sink_counts: anomalous == n_anom, drifting == n_drift_not_anom,
+    nominal == total - anomalous - drifting."""
+    return scored.agg(*flag_aggs())

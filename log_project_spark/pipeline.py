@@ -6,6 +6,15 @@ declarative plan (parse/enrich are pure Catalyst; scoring is a
 broadcast-model Arrow UDF or a grouped kernel; calibration+drift is
 the grouped stateful kernel), the counters become aggregates, and the
 summary row becomes a one-row append to the summary sink.
+
+Single-execution contract: like the reference's one pass over the event
+stream, a `run_pipeline(..., out_dir=...)` call executes the scored plan
+(scan, parse, enrich, shuffle, score+calibrate kernel) exactly once —
+the fan-out write. The run counters ride that write via `df.observe`,
+and TPR@FPR is computed over the rows just written, read back from the
+returned sink paths (two columns, pruned at the parquet scan). With
+`out_dir=None` there is no write to ride, so the counters and TPR are
+recomputed over `scored`.
 """
 
 from __future__ import annotations
@@ -14,7 +23,7 @@ import math
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
@@ -112,7 +121,12 @@ def run_pipeline(
     """Full pipeline. With `checkpoint_root` set, each stage
     materializes with a lineage manifest and re-runs resume after the
     last completed stage. With `out_dir` set, routed rows fan out to
-    anomalous/drifting/nominal parquet sinks partitioned by dt."""
+    anomalous/drifting/nominal parquet sinks partitioned by dt, and that
+    write is the scored plan's single execution: the event/anomaly/drift
+    counters are observed on it (`df.observe`) and TPR@1%FPR is computed
+    over the written sinks' (score, label). With `out_dir=None` the
+    counters and TPR are aggregates over `scored` (re-executing its plan
+    unless `checkpoint_root` made it a parquet read)."""
     role_dim = role_dim if role_dim is not None else synth.role_dim(spark)
     tool_dim = tool_dim if tool_dim is not None else synth.tool_dim(spark)
 
@@ -160,18 +174,26 @@ def run_pipeline(
         scored = build_scored()
 
     sink_paths: dict = {}
+    tpr_src: DataFrame | None = scored
     if out_dir:
-        sink_paths = route_ops.write_fanout(scored, out_dir)
-
-    # run-level aggregates (single action over the scored frame)
-    flags = route_ops.flag_counts(scored).first()
+        # the write is the plan's only execution: counters ride it, and
+        # TPR reads the sinks back (a disjoint, union-complete partition
+        # of `scored`; doubles round-trip parquet exactly)
+        obs = Observation()
+        sink_paths = route_ops.write_fanout(
+            scored.observe(obs, *route_ops.flag_aggs()), out_dir
+        )
+        flags = obs.get
+        tpr_src = route_ops.read_fanout(spark, out_dir, sink_paths)
+    else:
+        flags = route_ops.flag_counts(scored).first()
     n_total = int(flags["n_total"])
     n_anom = int(flags["n_anom"] or 0)
     n_drift = int(flags["n_drift"] or 0)
 
     tpr_str = "NA"
-    if compute_tpr and "label" in scored.columns:
-        tpr, _thr = agg.tpr_at_fpr(scored, "score", "label", target_fpr=0.01)
+    if compute_tpr and tpr_src is not None and "label" in scored.columns:
+        tpr, _thr = agg.tpr_at_fpr(tpr_src, "score", "label", target_fpr=0.01)
         if not math.isnan(tpr):
             tpr_str = f"{tpr:.4f}"
 

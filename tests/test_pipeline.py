@@ -138,3 +138,132 @@ def test_checkpoint_invalidates_on_config_change(spark, small_transcripts, tmp_p
     with open(os.path.join(root, "parse", "manifest.json")) as f:
         fp2 = json.load(f)["fingerprint"]
     assert fp1 != fp2
+
+
+def test_empty_input_single_pass_path(spark, small_transcripts, tmp_path):
+    """A 0-row input writes no sink: the counters still come from the
+    observed write, and TPR skips the read-back (an empty out_dir has
+    no parquet schema to infer)."""
+    cfg = PipelineConfig(mode="len", window=200, warmup=20, scope="conv_id")
+    res = run_pipeline(
+        spark, small_transcripts.limit(0), cfg, out_dir=str(tmp_path / "sinks")
+    )
+    assert res.sink_paths == {}
+    m = res.metrics
+    assert (m["events"], m["anomalies"], m["drifts"]) == (0, 0, 0)
+    assert m["tpr_at_1pct_fpr"] == "NA"
+
+
+@pytest.fixture(scope="module")
+def baseline_run(spark, tmp_path_factory):
+    """mode="baseline" run_pipeline with out_dir, its fused scorer
+    wrapped to add len(texts) per call to an accumulator."""
+    from types import SimpleNamespace
+
+    from log_project_spark.operators import scoring
+
+    real = scoring.make_broadcast_scorer
+    acc = spark.sparkContext.accumulator(0)
+    models = []
+
+    def counting_scorer(model):
+        models.append(model)
+        score = real(model)
+
+        def score_batch(texts):
+            acc.add(len(texts))
+            return score(texts)
+
+        return score_batch
+
+    t = synth.transcripts(spark, 2000, n_convs=10, anom_ratio=0.03, seed=7)
+    cfg = PipelineConfig(
+        mode="baseline", window=200, warmup=20, alpha=0.05, iso_n_estimators=50
+    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scoring, "make_broadcast_scorer", counting_scorer)
+        res = run_pipeline(spark, t, cfg, out_dir=str(tmp_path_factory.mktemp("bsinks")))
+    return SimpleNamespace(
+        res=res, cfg=cfg, transcripts=t, model=models[0],
+        counting_scorer=counting_scorer, acc=acc, texts_scored=acc.value,
+    )
+
+
+def test_baseline_run_executes_kernel_once(spark, baseline_run):
+    """The fan-out write is the scored plan's only execution: the flag
+    counts and TPR must not re-run the score+calibrate kernel, so the
+    texts it scored equal one noop write of the same calibrate frame."""
+    from log_project_spark.operators import enrich as enrich_ops
+    from log_project_spark.operators.calibrate import calibrate
+    from log_project_spark.pipeline import parse_stage
+
+    b = baseline_run
+    enriched = enrich_ops.enrich_roles_tools(
+        parse_stage(b.transcripts), synth.role_dim(spark), synth.tool_dim(spark)
+    )
+    frame = calibrate(
+        enriched.drop("tokens"), b.cfg, order_cols=("turn_idx",),
+        batch_score_fn=b.counting_scorer(b.model), batch_score_input="norm_text",
+    )
+    before = b.acc.value
+    frame.write.format("noop").mode("overwrite").save()
+    one_pass = b.acc.value - before
+    assert one_pass > 0
+    assert b.texts_scored == one_pass
+
+
+def test_baseline_metrics_match_scored_aggregates(spark, baseline_run):
+    """Counters observed on the write and TPR over the written sinks
+    equal the same aggregates computed directly over res.scored."""
+    from log_project_spark.operators import aggregate as agg
+
+    res = baseline_run.res
+    flags = route.flag_counts(res.scored).first()
+    tpr, _ = agg.tpr_at_fpr(res.scored, "score", "label", 0.01)
+    m = res.metrics
+    assert m["events"] == flags["n_total"] == 2000
+    assert m["anomalies"] == (flags["n_anom"] or 0)
+    assert m["drifts"] == (flags["n_drift"] or 0)
+    assert m["anomalies"] > 0
+    assert m["tpr_at_1pct_fpr"] == f"{tpr:.4f}"
+
+
+def test_job_cli_scores_csv_from_sinks(spark, tmp_path, monkeypatch):
+    """jobs/run_pipeline.py --out-dir --scores-out builds the per-event
+    CSV from the written sinks; it must be byte-identical to the CSV
+    written from res.scored."""
+    import json
+    import os
+
+    from log_project_spark import pipeline
+    from log_project_spark.sources import formats
+
+    monkeypatch.syspath_prepend(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs.run_pipeline import main
+
+    seqs = [["tok"] * (40 if i % 37 == 0 else 1 + i % 5) for i in range(300)]
+    tokens, labels = tmp_path / "tokens.json", tmp_path / "labels.json"
+    tokens.write_text(json.dumps(seqs))
+    labels.write_text(json.dumps([int(i % 37 == 0) for i in range(300)]))
+    results = []
+    real = pipeline.run_pipeline
+
+    def recording_run(*args, **kwargs):
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(pipeline, "run_pipeline", recording_run)
+    from_sinks = tmp_path / "scores.csv"
+    main([
+        "--tokens-json", str(tokens), "--labels-json", str(labels),
+        "--mode", "len", "--alpha", "0.05", "--warmup", "10", "--window", "100",
+        "--out-dir", str(tmp_path / "sinks"), "--scores-out", str(from_sinks),
+    ])
+    (res,) = results
+    assert len(res.sink_paths) >= 2  # the CSV unions more than one sink
+    from_scored = tmp_path / "scores_scored.csv"
+    formats.write_scores_csv(
+        res.scored.withColumn("event_idx", F.col("turn_idx").cast("long")), str(from_scored)
+    )
+    assert len(from_sinks.read_text().splitlines()) == 301
+    assert from_sinks.read_bytes() == from_scored.read_bytes()

@@ -210,6 +210,7 @@ def test_fit_df_exact_across_formulations():
     X[nz] = rng.integers(1, 9, size=int(nz.sum())).astype(np.float32)
     X[17] = 0.0  # empty doc
     w = rng.integers(0, 50_000, size=n).astype(np.float64)
+    assert w.sum() < float(1 << 24)  # inside the guarded float32 branch
 
     got = HashedTfidf(b, 7)._fit_from_counts(X.copy(), n, w).idf_
 
