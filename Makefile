@@ -1,7 +1,9 @@
 .PHONY: test gate bench package submit-example
 
+# the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 gate:
 	python scripts/check_entry.py

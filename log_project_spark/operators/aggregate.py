@@ -19,6 +19,8 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------------------
 # exact lower-index percentile (A1, /root/reference/src/stream.py:138-143)
 # ---------------------------------------------------------------------------
@@ -434,7 +436,7 @@ def summary_row(
         iso_n_estimators, iso_max_samples, iso_random_state, notes,
     ]
     schema = ", ".join(f"`{c}` string" for c in SUMMARY_COLUMNS)
-    return spark.createDataFrame([tuple(values)], schema)
+    return local_frame(spark, [values], schema)
 
 
 def append_summary(row: DataFrame, path: str) -> None:

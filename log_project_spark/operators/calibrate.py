@@ -98,7 +98,6 @@ def _run_group(
         return thr, anom, drift
 
     buf: list[float] = []  # sorted conformal window since last reset
-    seg_start = 0  # first row index of the current calibration segment
     for i in range(n):
         s = float(scores[i])
         bisect.insort(buf, s)
@@ -114,7 +113,6 @@ def _run_group(
         if detector is not None and detector.update(s):
             drift[i] = True
             buf.clear()
-            seg_start = i + 1  # noqa: F841  (documents segment semantics)
         if sleep_ms > 0:
             _time.sleep(sleep_ms / 1000.0)
     return thr, anom, drift

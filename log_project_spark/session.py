@@ -9,8 +9,12 @@ configuration (spark.apache.org/docs/latest/configuration.html).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -64,6 +68,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
+    """Small driver-side rows as a `LocalTableScan` DataFrame.
+
+    `spark.createDataFrame(list_of_tuples, ddl)` plans as
+    `Scan ExistingRDD`, a PythonRDD: every execution of a plan that
+    reads it (each BroadcastExchange over a lookup table, for one) runs
+    a Spark job whose tasks unpickle the rows in a Python worker. A
+    pyarrow Table is converted on the driver into a LocalRelation, with
+    `spark.sql.execution.arrow.pyspark.enabled` on or off (a pandas
+    frame falls back to the PythonRDD scan when it is off), so its scan
+    stays in the JVM. The schema is exactly the DDL's, `nullable=True`
+    on every field.
+
+    Only for lookup/summary-sized data: a LocalRelation embeds its rows
+    in the plan. Hence `sources.formats` (data-sized lists) keeps
+    `createDataFrame(list)`, and so does the >64-strata path of
+    `sampling.stratified_sample`, whose schema is inferred from
+    arbitrary key types.
+    """
+    schema = T.StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

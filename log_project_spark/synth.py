@@ -34,6 +34,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # Reference template pools (make_synth.py:6-18). The masked-token
 # sequences of our concrete lines equal tok(template) for these.
 NORMAL_TEMPLATES = [
@@ -207,16 +209,22 @@ def labels_of(transcripts_df: DataFrame) -> DataFrame:
 
 
 def role_dim(spark: SparkSession) -> DataFrame:
+    """Role lookup table for the broadcast enrich join. Built with
+    `session.local_frame` so it plans as a `LocalTableScan`: a
+    `createDataFrame(list)` PythonRDD would run Python-worker tasks on
+    every broadcast of it."""
     rows = [
         ("user", "human", 0),
         ("assistant", "model", 1),
         ("tool", "automation", 1),
         ("system", "control", 1),
     ]
-    return spark.createDataFrame(rows, "role string, role_group string, is_automated int")
+    return local_frame(spark, rows, "role string, role_group string, is_automated int")
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
+    """Tool lookup table for the broadcast enrich join; a
+    `LocalTableScan` for the same reason as `role_dim`."""
     rows = [
         ("search", "retrieval", 1),
         ("browser", "retrieval", 2),
@@ -228,4 +236,4 @@ def tool_dim(spark: SparkSession) -> DataFrame:
         ("mailer", "external", 3),
         ("NA", "none", 0),
     ]
-    return spark.createDataFrame(rows, "tool string, tool_family string, risk_tier int")
+    return local_frame(spark, rows, "tool string, tool_family string, risk_tier int")

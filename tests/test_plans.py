@@ -3,8 +3,11 @@ engine promises (broadcast joins, parquet pushdown/pruning, native
 codegen parse, two-phase salted aggregation) must be visible in
 `explain`, not just hoped for."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from log_project_spark import synth
 from log_project_spark.operators import aggregate as agg
@@ -22,12 +25,60 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _broadcast_sources(plan: str) -> list[str]:
+    """The child operator of each BroadcastExchange in `plan`."""
+    return re.findall(r"BroadcastExchange [^\n]*\n[ :|]*\+- (?:\*\(\d+\) )?(\w+)", plan)
+
+
 def test_enrich_uses_broadcast_hash_join(spark):
     t = synth.transcripts(spark, 100, n_convs=5)
     out = enrich_ops.enrich_roles_tools(t, synth.role_dim(spark), synth.tool_dim(spark))
     plan = _plan(out)
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
+    # the dims are driver-local relations: broadcasting them runs no
+    # Python-worker tasks
+    assert "Scan ExistingRDD" not in plan
+    assert _broadcast_sources(plan) == ["LocalTableScan", "LocalTableScan"], plan
+
+    role, tool = synth.role_dim(spark), synth.tool_dim(spark)
+    assert role.schema == T.StructType.fromDDL(
+        "role string, role_group string, is_automated int"
+    )
+    assert tool.schema == T.StructType.fromDDL(
+        "tool string, tool_family string, risk_tier int"
+    )
+    assert all(f.nullable for f in role.schema.fields + tool.schema.fields)
+    assert [tuple(r) for r in role.collect()] == [
+        ("user", "human", 0),
+        ("assistant", "model", 1),
+        ("tool", "automation", 1),
+        ("system", "control", 1),
+    ]
+    assert [tuple(r) for r in tool.collect()] == [
+        ("search", "retrieval", 1),
+        ("browser", "retrieval", 2),
+        ("python", "execution", 3),
+        ("bash", "execution", 3),
+        ("calculator", "compute", 1),
+        ("sql", "data", 2),
+        ("editor", "workspace", 2),
+        ("mailer", "external", 3),
+        ("NA", "none", 0),
+    ]
+
+    # no pandas/Arrow fallback: still local with Arrow conversion off
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        off = _plan(enrich_ops.enrich_roles_tools(
+            t, synth.role_dim(spark), synth.tool_dim(spark)
+        ))
+    finally:
+        spark.conf.set(key, prev)
+    assert "Scan ExistingRDD" not in off
+    assert _broadcast_sources(off) == ["LocalTableScan", "LocalTableScan"], off
 
 
 def test_parquet_filter_pushdown_and_pruning(spark):
@@ -116,4 +167,4 @@ def test_scored_route_counts_reuse_one_scan(spark):
 
     counts = route_ops.sink_counts(calibrate(t, PipelineConfig(drift_detector="none")))
     plan = _plan(counts)
-    assert plan.count("Scan ExistingRDD") <= 1  # single source traversal
+    assert plan.count("Range (") == 1  # single source traversal
