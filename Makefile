@@ -1,9 +1,17 @@
-.PHONY: test gate bench package submit-example
+.PHONY: test kernels gate bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the calibration/scoring kernels: their oracle, property, streaming and
+# golden-hash tests, then the DuckDB gate on the three kernel queries
+kernels:
+	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
+	  tests/test_calibrate.py tests/test_property.py tests/test_streaming.py \
+	  tests/test_scoring.py tests/test_golden_hashes.py
+	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores
 
 gate:
 	python scripts/check_entry.py

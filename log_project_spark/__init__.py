@@ -5,8 +5,12 @@ A from-scratch parse -> enrich -> score -> calibrate -> route -> aggregate
 pipeline over tables of multi-turn conversation transcripts
 (conv_id, turn_idx, role, text, tool, ts), built Spark-first:
 DataFrame/Catalyst for everything expressible declaratively,
-Arrow-vectorized pandas UDFs for the model/stateful kernels, grouped
-state via applyInPandas keyed by conv_id ordered by turn_idx.
+Arrow-vectorized UDFs for the model/stateful kernels, and one
+calibration state machine (operators/calibrate.CalibrationState) per
+conv_id ordered by turn_idx: batch drives it from a mapInArrow walk over
+group-sorted partitions, streaming restores it from
+applyInPandasWithState group state, and transformer mode feeds it from
+a grouped hash-embedding scorer.
 
 Reference semantics reproduced (citations are file:line into
 /root/reference): tokenizer mask chain (src/log_tokenize.py:12-17),

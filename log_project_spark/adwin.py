@@ -166,9 +166,13 @@ class NoDrift:
         return False
 
 
+# every kind make_detector accepts; all but "adwin" never fire
+DETECTOR_KINDS = ("adwin", "none", "off", "fallback")
+
+
 def make_detector(kind: str, delta: float = 0.002):
     if kind == "adwin":
         return Adwin(delta=delta)
-    if kind in ("none", "off", "fallback"):
+    if kind in DETECTOR_KINDS:
         return NoDrift()
     raise ValueError(f"unknown drift detector: {kind}")

@@ -16,7 +16,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from .adwin import DETECTOR_KINDS
+
 DEFAULT_SEED = 20250819
+
+# the closed value sets of the string fields, checked on construction
+# so a typo fails on the driver instead of silently meaning a default
+CHOICES = {
+    "calibration": ("conformal", "no_calib"),
+    "scope": ("conv_id", "global"),
+    "mode": ("baseline", "transformer", "len"),
+    "drift_detector": DETECTOR_KINDS,
+}
 
 
 @dataclass(frozen=True)
@@ -29,7 +40,7 @@ class PipelineConfig:
     scope: str = "conv_id"  # "conv_id" | "global"
 
     # drift (src/stream.py:283-288)
-    drift_detector: str = "adwin"  # "adwin" | "none"
+    drift_detector: str = "adwin"  # "adwin" | "none" ("off"/"fallback" = "none")
     adwin_delta: float = 0.002
 
     # per-event pacing simulation knob (src/stream.py:268-270,373-374);
@@ -54,6 +65,12 @@ class PipelineConfig:
     shuffle_partitions: int = 32
     salt_buckets: int = 16  # salting fan-out for hot conv_ids
     extra: dict = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        for name, allowed in CHOICES.items():
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(f"PipelineConfig.{name}={value!r}: expected one of {allowed}")
 
     def scope_keys(self) -> list[str]:
         return ["conv_id"] if self.scope == "conv_id" else []

@@ -4,11 +4,15 @@ The reference runs ONE sequential stream with a sliding conformal
 calibrator, a fixed-threshold ablation, and an ADWIN drift detector
 that resets the calibrator (/root/reference/src/stream.py:335-374,
 src/calibration.py:13-53). Spark has no built-in operator for
-"rolling exact quantile with reset-on-drift", so this is an
-`applyInPandas` grouped-map kernel: state is sharded by `conv_id`
-(the north-rule contract) or kept global (scope="global", test/parity
-mode — a single group degenerates to the reference's semantics
-exactly), rows ordered by `turn_idx` inside each group.
+"rolling exact quantile with reset-on-drift", so this module holds
+that event loop once, as `CalibrationState`, and `calibrate` drives it
+from a mapInArrow walk over group-sorted partitions: state is sharded
+by `conv_id` (the north-rule contract) or kept global (scope="global",
+test/parity mode — a single group degenerates to the reference's
+semantics exactly), rows ordered by `turn_idx` inside each group. The
+Structured Streaming kernel (streaming/stream_pipeline.py) and
+transformer mode (scoring.with_transformer_calibrate) drive the same
+state object.
 
 Semantics preserved bit-for-bit (see oracle.py for the per-event
 statement):
@@ -37,10 +41,12 @@ downstream per-sink aggregates (operators/aggregate.py).
 from __future__ import annotations
 
 import bisect
+import pickle
+import time
+from collections import deque
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,71 +57,126 @@ from ..config import PipelineConfig
 GLOBAL_KEY = "__scope__"
 
 
-def _fixed_threshold(warm: np.ndarray, alpha: float) -> float:
+def _fixed_threshold(warm: list[float], alpha: float) -> float:
     """C6 freeze formula: k = int((1-alpha)*(n-1)) (stream.py:354-357)."""
     ordered = np.sort(warm)
     k = int((1.0 - alpha) * (len(ordered) - 1))
     return float(ordered[min(max(k, 0), len(ordered) - 1)])
 
 
-def _run_group(
-    scores: np.ndarray,
-    alpha: float,
-    window: int,
-    warmup: int,
-    no_calib: bool,
-    drift_kind: str,
-    adwin_delta: float,
-    sleep_ms: float = 0.0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Sequential per-group kernel; returns (thr, is_anom, is_drift).
+class CalibrationState:
+    """One scope's resumable calibration state: the reference event
+    loop (src/stream.py:335-374) as an object that batch, streaming and
+    transformer mode all drive through `run`.
 
-    sleep_ms > 0 paces each event like the reference's --sleep_ms
-    simulation knob (src/stream.py:268-270,373-374); off by default
-    and never used in throughput paths."""
-    import time as _time
+    Conformal (C1/C2): `arrivals` is the window in arrival order (the
+    eviction order) and `ordered` its sorted view, both since the last
+    drift reset. No-calib (C6): `warm` holds the scores until `seen`
+    reaches max(warmup, 1), then `frozen` holds the one threshold. A
+    drift (C7/C3) clears only the conformal window, never the warm list
+    or the frozen threshold (oracle.run_stream)."""
 
-    n = len(scores)
-    thr = np.full(n, np.inf)
-    anom = np.zeros(n, dtype=bool)
-    drift = np.zeros(n, dtype=bool)
-    detector = make_detector(drift_kind, adwin_delta) if drift_kind != "none" else None
+    def __init__(
+        self,
+        alpha: float,
+        window: int,
+        warmup: int,
+        no_calib: bool,
+        drift_kind: str,
+        adwin_delta: float,
+        sleep_ms: float = 0.0,
+    ):
+        self.alpha, self.window, self.warmup = alpha, window, warmup
+        self.no_calib = no_calib
+        # --sleep_ms pacing (src/stream.py:268-270,373-374): simulation
+        # only, never set in throughput paths
+        self.sleep_ms = sleep_ms
+        self.arrivals: deque[float] = deque()
+        self.ordered: list[float] = []
+        self.warm: list[float] = []
+        self.frozen: float | None = None
+        self.seen = 0  # 1-based event count in scope (C5)
+        self.detector = make_detector(drift_kind, adwin_delta) if drift_kind != "none" else None
 
-    if no_calib:
-        # Two-phase: freeze once warm count reaches `warmup` (1-based).
-        freeze_at = max(warmup, 1) - 1  # row index at which thr freezes
-        if n > freeze_at:
-            frozen = _fixed_threshold(scores[: freeze_at + 1], alpha)
-            thr[freeze_at:] = frozen
-            anom[freeze_at:] = scores[freeze_at:] > frozen
-        if detector is not None:
-            for i in range(n):
-                if detector.update(float(scores[i])):
-                    drift[i] = True
-        if sleep_ms > 0:
-            for _ in range(n):
-                _time.sleep(sleep_ms / 1000.0)
+    @classmethod
+    def from_config(cls, cfg: PipelineConfig) -> "CalibrationState":
+        return cls(
+            cfg.alpha, cfg.window, cfg.warmup, cfg.calibration == "no_calib",
+            cfg.drift_detector, cfg.adwin_delta, cfg.sleep_ms,
+        )
+
+    def checkpoint(self) -> tuple[list[float], int, bytes]:
+        """The (arrivals, seen, det) row of stream_pipeline.STATE_SCHEMA.
+        Under no_calib `arrivals` carries the warm scores until the
+        freeze and the single frozen threshold after it."""
+        if not self.no_calib:
+            arrivals = list(self.arrivals)
+        else:
+            arrivals = list(self.warm) if self.frozen is None else [self.frozen]
+        det = pickle.dumps(self.detector) if self.detector is not None else b""
+        return arrivals, self.seen, det
+
+    def restore(self, row) -> None:
+        """Inverse of `checkpoint`."""
+        arrivals, self.seen, det = row
+        self.detector = pickle.loads(bytes(det)) if det else None
+        if not self.no_calib:
+            self.arrivals = deque(arrivals)
+            self.ordered = sorted(arrivals)
+        elif self.seen >= max(self.warmup, 1):
+            self.frozen = arrivals[0]
+        else:
+            self.warm = list(arrivals)
+
+    def run(
+        self, scores: Iterable[float], n: int, on_drift=None
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Feed the next `n` scores in order; returns (thr, is_anom,
+        is_drift). `scores` may be a generator: each score is pulled
+        only after the previous row's drift reset, so an `on_drift`
+        hook (transformer mode's context reset, C10) acts before the
+        next row is scored."""
+        thr = np.empty(n)
+        anom = np.zeros(n, dtype=bool)
+        drift = np.zeros(n, dtype=bool)
+        alpha, window, warmup = self.alpha, self.window, self.warmup
+        no_calib, detector = self.no_calib, self.detector
+        arrivals, ordered, warm = self.arrivals, self.ordered, self.warm
+        seen, frozen = self.seen, self.frozen
+        freeze_at = max(warmup, 1)
+        pause = self.sleep_ms / 1000.0
+        for i, s in enumerate(scores):
+            seen += 1
+            if no_calib:
+                if frozen is None:
+                    warm.append(s)
+                    if seen >= freeze_at:
+                        frozen = _fixed_threshold(warm, alpha)
+                        warm.clear()
+                t = np.inf if frozen is None else frozen
+                anom[i] = frozen is not None and s > t
+            else:
+                # update BEFORE the threshold read: the row's own score
+                # is in its window (C1)
+                bisect.insort(ordered, s)
+                arrivals.append(s)
+                if len(arrivals) > window:
+                    del ordered[bisect.bisect_left(ordered, arrivals.popleft())]
+                t = ordered[max(1, int(round((1.0 - alpha) * len(ordered)))) - 1]
+                anom[i] = seen >= warmup and s > t
+            thr[i] = t
+            # drift update AFTER the decision; the reset applies from
+            # the next row (C7/C3)
+            if detector is not None and detector.update(s):
+                drift[i] = True
+                arrivals.clear()
+                ordered.clear()
+                if on_drift is not None:
+                    on_drift()
+            if pause:
+                time.sleep(pause)
+        self.seen, self.frozen = seen, frozen
         return thr, anom, drift
-
-    buf: list[float] = []  # sorted conformal window since last reset
-    for i in range(n):
-        s = float(scores[i])
-        bisect.insort(buf, s)
-        if len(buf) > window:
-            # evict the arrival-order-oldest value in the segment
-            oldest = float(scores[i - window])
-            del buf[bisect.bisect_left(buf, oldest)]
-        m = len(buf)
-        k = max(1, int(round((1.0 - alpha) * m)))  # half-even, like Python round
-        t = buf[k - 1]
-        thr[i] = t
-        anom[i] = (i + 1 >= warmup) and s > t
-        if detector is not None and detector.update(s):
-            drift[i] = True
-            buf.clear()
-        if sleep_ms > 0:
-            _time.sleep(sleep_ms / 1000.0)
-    return thr, anom, drift
 
 
 def _extended_schema(df: DataFrame) -> T.StructType:
@@ -144,7 +205,6 @@ def calibrate(
     batch_score_input: str | None = None,
     drop_score_input: bool = True,
     layout: str = "shuffle",
-    engine: str = "arrow",
     needed_cols: Iterable[str] | None = None,
 ) -> DataFrame:
     """Attach (score, thr, is_anom, is_drift) to every row via the
@@ -163,8 +223,7 @@ def calibrate(
     given, prunes the input to exactly (group keys + order cols + the
     score input/column + needed_cols) BEFORE the kernel, and the
     output carries only those plus (score, thr, is_anom, is_drift).
-    mapInArrow/mapInPandas are opaque to Catalyst, so without this the
-    full row rides the Arrow socket JVM->Python->JVM twice (and the
+    mapInArrow is opaque to Catalyst, so without this the full row rides the Arrow socket JVM->Python->JVM twice (and the
     exchange, in layout="shuffle") even when downstream consumes two
     columns — at 100 TB the dead passthrough bytes, not the kernel,
     are the bottleneck (measured on the sf1 bench: 12 columns shipped,
@@ -178,34 +237,30 @@ def calibrate(
     one input split, sorted by order_cols) — the layout a write-
     distributed/sorted Iceberg table gives you — and skips the
     repartition+sort entirely: the whole pipeline then runs shuffle-
-    free. The streaming kernel only needs contiguity (boundary
+    free. The Arrow walk only needs contiguity (boundary
     detection is key-change-based), so packing multiple hash-disjoint
     sorted files into one read split stays correct. The caller owns
     the layout guarantee; keep input files under
     spark.sql.files.maxPartitionBytes so splits never bisect a file.
 
-    engine="arrow" (default) streams pyarrow RecordBatches
-    (mapInArrow): passthrough columns — including every string column —
-    are zero-copy slices that never materialize as Python objects; the
-    kernel touches only the score float array and the group-key change
-    mask, and fused scoring dedupes via Arrow dictionary_encode (C++).
-    engine="pandas" keeps the mapInPandas implementation (used by the
-    parity tests as a second witness).
+    The kernel streams pyarrow RecordBatches (mapInArrow): passthrough
+    columns — including every string column — are zero-copy slices that
+    never materialize as Python objects; the walk touches only the
+    score float array and the group-key change mask, carries a batch's
+    trailing (possibly incomplete) group into the next batch, and runs
+    one fresh `CalibrationState` per complete group. Fused scoring
+    dedupes via Arrow dictionary_encode (C++).
 
     Physical plan (layout="shuffle", default): repartition(group_keys)
     + sortWithinPartitions + a streaming map. Deliberately NOT
     groupBy().applyInPandas(): conversations are tiny (tens of rows),
     and applyInPandas pays per-GROUP pandas overhead (sort, frame
     assembly) that dwarfs the kernel at millions of groups. The
-    streaming kernel walks each sorted partition once, detects group
+    Arrow walk passes over each sorted partition once, detects group
     boundaries on the raw arrays, and pays per-BATCH overhead instead
     — one shuffle either way, same semantics (verified against the
     per-event oracle in tests)."""
     order_cols = list(order_cols)
-    no_calib = cfg.calibration == "no_calib"
-    alpha, window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    drift_kind, delta = cfg.drift_detector, cfg.adwin_delta
-    sleep_ms = getattr(cfg, "sleep_ms", 0.0)
     scope_keys = list(group_keys) if group_keys is not None else cfg.scope_keys()
 
     if needed_cols is not None:
@@ -256,63 +311,6 @@ def calibrate(
             *group_keys, *order_cols
         )
 
-    def run_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        """All rows of >=1 complete groups, already sorted."""
-        scores = pdf["score"].to_numpy(dtype=np.float64)
-        # group boundary mask over the (sorted) key columns
-        if len(group_keys) == 1:
-            keys = pdf[group_keys[0]].to_numpy()
-            change = np.empty(len(keys), dtype=bool)
-            change[0] = True
-            change[1:] = keys[1:] != keys[:-1]
-        else:
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for k in group_keys:
-                keys = pdf[k].to_numpy()
-                change[1:] |= keys[1:] != keys[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        thr = np.empty(len(pdf))
-        anom = np.empty(len(pdf), dtype=bool)
-        drift = np.empty(len(pdf), dtype=bool)
-        for s, e in zip(starts, ends):
-            t, a, d = _run_group(
-                scores[s:e], alpha, window, warmup, no_calib, drift_kind, delta, sleep_ms
-            )
-            thr[s:e], anom[s:e], drift[s:e] = t, a, d
-        return pdf.assign(thr=thr, is_anom=anom, is_drift=drift)[out_cols]
-
-    def stream(batches):
-        carry: pd.DataFrame | None = None
-        for batch in batches:
-            if input_col is not None and len(batch):
-                # fused scoring: per-batch dedupe then vectorized model
-                texts = batch[input_col].fillna("").astype(str)
-                uniq, inverse = np.unique(texts.to_numpy(), return_inverse=True)
-                batch = batch.assign(score=batch_score_fn(list(uniq))[inverse])
-            if carry is not None and len(carry):
-                batch = pd.concat([carry, batch], ignore_index=True)
-                carry = None
-            if not len(batch):
-                continue
-            # hold back the (possibly incomplete) final group
-            last_key = tuple(batch[k].iloc[-1] for k in group_keys)
-            mask = np.ones(len(batch), dtype=bool)
-            for k, v in zip(group_keys, last_key):
-                mask &= (batch[k] == v).to_numpy()
-            if mask.all():
-                carry = batch
-                continue
-            # rows of the final group are a contiguous tail (sorted input)
-            tail_start = int(np.flatnonzero(~mask).max() + 1)
-            carry = batch.iloc[tail_start:].reset_index(drop=True)
-            head = batch.iloc[:tail_start]
-            if len(head):
-                yield run_groups(head)
-        if carry is not None and len(carry):
-            yield run_groups(carry)
-
     def stream_arrow(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -340,11 +338,9 @@ def calibrate(
             anom = np.empty(head.num_rows, dtype=bool)
             drift = np.empty(head.num_rows, dtype=bool)
             for s, e in zip(starts, ends):
-                t, a, d = _run_group(
-                    head_scores[s:e], alpha, window, warmup, no_calib, drift_kind, delta,
-                    sleep_ms,
+                thr[s:e], anom[s:e], drift[s:e] = CalibrationState.from_config(cfg).run(
+                    head_scores[s:e].tolist(), e - s
                 )
-                thr[s:e], anom[s:e], drift[s:e] = t, a, d
             arrays = []
             for f in out_schema.fields:
                 if f.name == "score":
@@ -387,10 +383,7 @@ def calibrate(
         if carry is not None and carry[0].num_rows:
             yield emit(carry[0], carry[1], change_mask(carry[0]))
 
-    if engine == "arrow":
-        result = arranged.mapInArrow(stream_arrow, schema=out_schema)
-    else:
-        result = arranged.mapInPandas(stream, schema=out_schema)
+    result = arranged.mapInArrow(stream_arrow, schema=out_schema)
     if GLOBAL_KEY in result.columns:
         result = result.drop(GLOBAL_KEY)
     return result

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..iforest import TextAnomalyModel, fit_text_anomaly_model
+from .calibrate import CalibrationState
 
 
 def with_len_score(df: DataFrame, text_col: str = "norm_text", out_col: str = "score") -> DataFrame:
@@ -155,37 +156,40 @@ def _token_embedding(token: str, seed: int, dim: int, cache: dict) -> np.ndarray
     return vec
 
 
-def _hash_embed_group(
-    token_rows: list[list[str]],
-    seed: int,
-    dim: int,
-    window: int,
-    decay: float,
-) -> np.ndarray:
+class HashEmbedRing:
     """Vectorized-within-row port of TransformerScorer.score_and_update
     (src/transformer.py:65-119): context = decay-weighted unit mean of
     the last `window` token embeddings from PRIOR rows; score = mean
     of 1 - clamp(ctx . e) over the row's tokens, clamped to [0, 1];
-    context updates AFTER scoring."""
-    cache: dict[str, np.ndarray] = {}
-    ctx_buf = np.zeros((window, dim), dtype=np.float32)
-    ctx_len = 0  # number of valid rows in the ring (<= window)
-    ctx_pos = 0  # next write slot
-    out = np.zeros(len(token_rows), dtype=np.float64)
-    for r, toks in enumerate(token_rows):
-        if toks is None:
-            toks = []
-        if len(toks) and ctx_len:
+    context updates AFTER scoring. The context is a fixed (window, dim)
+    ring, not a deque of rows (measured faster)."""
+
+    def __init__(self, seed: int, dim: int, window: int, decay: float):
+        self.seed, self.dim, self.window, self.decay = seed, dim, window, decay
+        self.cache: dict[str, np.ndarray] = {}
+        self.buf = np.zeros((window, dim), dtype=np.float32)
+        self.len = 0  # number of valid rows in the ring (<= window)
+        self.pos = 0  # next write slot
+
+    def reset(self) -> None:
+        """Drop the context (the C10 drift hook, src/transformer.py:61-63)."""
+        self.len = self.pos = 0
+
+    def score_and_update(self, toks) -> float:
+        toks = list(toks) if toks is not None else []
+        seed, dim, window = self.seed, self.dim, self.window
+        score = 0.0
+        if len(toks) and self.len:
             # assemble buffer in arrival order (oldest first)
-            if ctx_len < window:
-                ordered = ctx_buf[:ctx_len]
+            if self.len < window:
+                ordered = self.buf[: self.len]
             else:
-                ordered = np.vstack((ctx_buf[ctx_pos:], ctx_buf[:ctx_pos]))
-            n = ctx_len
+                ordered = np.vstack((self.buf[self.pos:], self.buf[: self.pos]))
+            n = self.len
             # decay powers computed in float64 then cast, matching the
             # reference's [decay ** (n-i)] list -> float32 array
             # (transformer.py:111)
-            w = np.power(decay, np.arange(n, 0, -1, dtype=np.float64)).astype(np.float32)
+            w = np.power(self.decay, np.arange(n, 0, -1, dtype=np.float64)).astype(np.float32)
             total = float(w.sum())
             if total > 0 and math.isfinite(total):
                 w = w / np.float32(total)
@@ -194,21 +198,21 @@ def _hash_embed_group(
             ctx = (w[:, None] * ordered).sum(axis=0)
             nrm = float(np.linalg.norm(ctx))
             ctx = (ctx / nrm).astype(np.float32) if nrm > 0 and math.isfinite(nrm) else np.zeros(dim, np.float32)
-            E = np.stack([_token_embedding(t, seed, dim, cache) for t in toks])
+            E = np.stack([_token_embedding(t, seed, dim, self.cache) for t in toks])
             # per-token float32 dot, then clamp/subtract in float64 like
             # the reference's float(np.dot(...)) (transformer.py:89-94)
             sims = np.clip((E @ ctx).astype(np.float64), -1.0, 1.0)
             val = float(np.mean(1.0 - sims))
             if not math.isfinite(val):
                 val = 0.0
-            out[r] = min(1.0, max(0.0, val))
+            score = min(1.0, max(0.0, val))
         # update context ring with this row's tokens
         for t in toks:
-            ctx_buf[ctx_pos] = _token_embedding(t, seed, dim, cache)
-            ctx_pos = (ctx_pos + 1) % window
-            if ctx_len < window:
-                ctx_len += 1
-    return out
+            self.buf[self.pos] = _token_embedding(t, seed, dim, self.cache)
+            self.pos = (self.pos + 1) % window
+            if self.len < window:
+                self.len += 1
+        return score
 
 
 def with_hash_embed_score(
@@ -239,9 +243,9 @@ def with_hash_embed_score(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
-        rows = [list(x) if x is not None else [] for x in pdf[tokens_col]]
-        pdf = pdf.assign(**{out_col: _hash_embed_group(rows, seed, dim, window, decay)})
-        return pdf[out_cols]
+        ctx = HashEmbedRing(seed, dim, window, decay)
+        score = [ctx.score_and_update(x) for x in pdf[tokens_col]]
+        return pdf.assign(**{out_col: np.asarray(score, dtype=np.float64)})[out_cols]
 
     result = work.groupBy(*group_keys).applyInPandas(kernel, schema=out_schema)
     if "__scope__" in result.columns:
@@ -253,74 +257,6 @@ def with_hash_embed_score(
 # integrated transformer-mode kernel: score + conformal + drift + C10
 # ---------------------------------------------------------------------------
 
-def _transformer_stream_group(
-    token_rows: list[list[str]],
-    alpha: float,
-    cal_window: int,
-    warmup: int,
-    drift_kind: str,
-    adwin_delta: float,
-    seed: int,
-    dim: int,
-    embed_window: int,
-    decay: float,
-):
-    """Per-group sequential loop: hash-embedding context score feeding
-    the conformal threshold and drift detector, with BOTH calibration
-    buffer and context reset on drift — the C10 hook the reference
-    documents (src/transformer.py:61-63) but never wires. Returns
-    (score, thr, is_anom, is_drift) arrays."""
-    import bisect
-    from collections import deque
-
-    from ..adwin import make_detector
-
-    n = len(token_rows)
-    score = np.zeros(n)
-    thr = np.full(n, np.inf)
-    anom = np.zeros(n, dtype=bool)
-    drift = np.zeros(n, dtype=bool)
-    detector = make_detector(drift_kind, adwin_delta) if drift_kind != "none" else None
-    cache: dict[str, np.ndarray] = {}
-    ctx_buf: deque[np.ndarray] = deque(maxlen=embed_window)
-    cal_sorted: list[float] = []
-    cal_arrivals: deque[float] = deque()
-    for i, toks in enumerate(token_rows):
-        toks = list(toks or [])
-        # ---- score from prior context (transformer.py:78-101) ----
-        if toks and ctx_buf:
-            m = len(ctx_buf)
-            w = np.power(decay, np.arange(m, 0, -1, dtype=np.float64)).astype(np.float32)
-            total = float(w.sum())
-            w = w / np.float32(total) if total > 0 and math.isfinite(total) else np.full(m, 1.0 / m, np.float32)
-            ctx = (w[:, None] * np.stack(list(ctx_buf))).sum(axis=0)
-            nrm = float(np.linalg.norm(ctx))
-            ctx = (ctx / nrm).astype(np.float32) if nrm > 0 and math.isfinite(nrm) else np.zeros(dim, np.float32)
-            E = np.stack([_token_embedding(t, seed, dim, cache) for t in toks])
-            sims = np.clip((E @ ctx).astype(np.float64), -1.0, 1.0)
-            val = float(np.mean(1.0 - sims))
-            score[i] = min(1.0, max(0.0, val if math.isfinite(val) else 0.0))
-        for t in toks:
-            ctx_buf.append(_token_embedding(t, seed, dim, cache))
-        s = float(score[i])
-        # ---- conformal (calibration.py:28-53, stream.py:361-363) ----
-        bisect.insort(cal_sorted, s)
-        cal_arrivals.append(s)
-        if len(cal_arrivals) > cal_window:
-            oldest = cal_arrivals.popleft()
-            del cal_sorted[bisect.bisect_left(cal_sorted, oldest)]
-        k = max(1, int(round((1.0 - alpha) * len(cal_sorted))))
-        thr[i] = cal_sorted[k - 1]
-        anom[i] = (i + 1 >= warmup) and s > thr[i]
-        # ---- drift + resets (stream.py:365-368 + C10) ----
-        if detector is not None and detector.update(s):
-            drift[i] = True
-            cal_sorted.clear()
-            cal_arrivals.clear()
-            ctx_buf.clear()
-    return score, thr, anom, drift
-
-
 def with_transformer_calibrate(
     df: DataFrame,
     cfg: PipelineConfig,
@@ -328,9 +264,11 @@ def with_transformer_calibrate(
     order_cols: tuple[str, ...] = ("turn_idx",),
 ) -> DataFrame:
     """Transformer mode, fully integrated: one grouped pass per
-    conv_id doing scoring + calibration + drift with context reset."""
-    alpha, cal_window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    drift_kind, delta = cfg.drift_detector, cfg.adwin_delta
+    conv_id feeding the hash-embedding context scores into the shared
+    calibration state, with the context reset on drift — the C10 hook
+    the reference documents (src/transformer.py:61-63) but never
+    wires. Each row is scored only when the state pulls it, i.e. after
+    the previous row's drift reset."""
     seed, dim = cfg.seed, cfg.embed_dim
     embed_window, decay = cfg.embed_window, cfg.embed_decay
     order = list(order_cols)
@@ -355,10 +293,16 @@ def with_transformer_calibrate(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
-        rows = [list(x) if x is not None else [] for x in pdf[tokens_col]]
-        score, thr, anom, drift = _transformer_stream_group(
-            rows, alpha, cal_window, warmup, drift_kind, delta,
-            seed, dim, embed_window, decay,
+        ctx = HashEmbedRing(seed, dim, embed_window, decay)
+        score = np.zeros(len(pdf))
+
+        def feed():
+            for i, x in enumerate(pdf[tokens_col]):
+                score[i] = s = ctx.score_and_update(x)
+                yield s
+
+        thr, anom, drift = CalibrationState.from_config(cfg).run(
+            feed(), len(pdf), on_drift=ctx.reset
         )
         pdf = pdf.assign(score=score, thr=thr, is_anom=anom, is_drift=drift)
         return pdf[out_cols]

@@ -4,13 +4,19 @@ The reference "streams" by iterating an in-memory list
 (/root/reference/src/stream.py:335-374); the honest Spark analog of
 its semantics is the batch kernel (SURVEY.md §2.7). This module is the
 true streaming path for incremental arrival: parquet/file source ->
-same Catalyst parse stage -> per-conv_id conformal + drift state via
-applyInPandasWithState -> foreachBatch fan-out sinks.
+same Catalyst parse stage -> per-conv_id calibration + drift state via
+applyInPandasWithState -> foreachBatch fan-out sinks. The event loop
+is operators.calibrate.CalibrationState, the one batch uses; this
+module only restores it from, and saves it to, Spark's group state.
 
 State per conv_id (schema'd, checkpointable by Spark):
-- buf:   array<double>  conformal window since last reset (C1)
-- seen:  long           1-based event count in scope (C5 warmup)
-- det:   binary         pickled Adwin detector (C7), empty = none
+- arrivals: array<double>  conformal: the window in arrival order
+                           since the last drift reset (C1).
+                           no_calib: the warm scores until seen ==
+                           max(warmup, 1), then the one frozen
+                           threshold (C6).
+- seen:     long           1-based event count in scope (C5 warmup)
+- det:      binary         pickled drift detector (C7), empty = none
 
 Within each micro-batch, rows of a group are processed in turn_idx
 order; ACROSS micro-batches, correctness requires the source to
@@ -21,8 +27,7 @@ append-only transcript logs). No watermark: the contract is stable
 
 from __future__ import annotations
 
-import pickle
-from typing import Any, Iterable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,8 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..adwin import Adwin
 from ..config import PipelineConfig
+from ..operators.calibrate import CalibrationState
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -47,8 +52,8 @@ OUTPUT_SCHEMA = T.StructType(
 
 STATE_SCHEMA = T.StructType(
     [
-        # conformal window in ARRIVAL order since last reset (the
-        # eviction order; the sorted view is rebuilt per micro-batch)
+        # see the module docstring: the conformal window in arrival
+        # order, or the no_calib warm scores / frozen threshold
         T.StructField("arrivals", T.ArrayType(T.DoubleType())),
         T.StructField("seen", T.LongType()),
         T.StructField("det", T.BinaryType()),
@@ -57,51 +62,20 @@ STATE_SCHEMA = T.StructType(
 
 
 def make_stateful_kernel(cfg: PipelineConfig):
-    """Returns the applyInPandasWithState function implementing
-    C1/C2/C5/C7/C3 with persistent per-group state."""
-    alpha, window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    use_drift = cfg.drift_detector == "adwin"
-    delta = cfg.adwin_delta
+    """Returns the applyInPandasWithState function: one
+    CalibrationState per conv_id, restored from and saved to
+    STATE_SCHEMA around each micro-batch."""
 
     def kernel(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import bisect
-        from collections import deque
-
+        calib = CalibrationState.from_config(cfg)
         if state.exists:
-            arrivals_list, seen, det_blob = state.get
-            arrivals: deque[float] = deque(arrivals_list)
-            detector = pickle.loads(bytes(det_blob)) if det_blob else None
-        else:
-            arrivals, seen = deque(), 0
-            detector = Adwin(delta=delta) if use_drift else None
-        buf = sorted(arrivals)  # sorted view, kept in sync below
-
+            calib.restore(state.get)
         for pdf in pdfs:
             pdf = pdf.sort_values("turn_idx", kind="mergesort")
             scores = pdf["score"].to_numpy(dtype=np.float64)
-            n = len(scores)
-            thr = np.empty(n)
-            anom = np.zeros(n, dtype=bool)
-            drift = np.zeros(n, dtype=bool)
-            for i in range(n):
-                s = float(scores[i])
-                seen += 1
-                bisect.insort(buf, s)
-                arrivals.append(s)
-                if len(arrivals) > window:
-                    oldest = arrivals.popleft()
-                    del buf[bisect.bisect_left(buf, oldest)]
-                m = len(buf)
-                k = max(1, int(round((1.0 - alpha) * m)))
-                t = buf[k - 1]
-                thr[i] = t
-                anom[i] = seen >= warmup and s > t
-                if detector is not None and detector.update(s):
-                    drift[i] = True
-                    buf.clear()
-                    arrivals.clear()
+            thr, anom, drift = calib.run(scores.tolist(), len(scores))
             yield pd.DataFrame(
                 {
                     "conv_id": pdf["conv_id"].to_numpy(),
@@ -112,9 +86,7 @@ def make_stateful_kernel(cfg: PipelineConfig):
                     "is_drift": drift,
                 }
             )
-
-        det_blob = pickle.dumps(detector) if detector is not None else b""
-        state.update((list(arrivals), seen, det_blob))
+        state.update(calib.checkpoint())
 
     return kernel
 

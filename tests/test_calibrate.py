@@ -1,8 +1,9 @@
-"""Grouped stateful calibration kernel vs the per-event oracle.
+"""Calibration kernel vs the per-event oracle.
 
 The oracle (log_project_spark.oracle.run_stream) restates the
 reference event loop (/root/reference/src/stream.py:335-374) one
-event at a time; the kernel is the vectorized applyInPandas version.
+event at a time; the kernel is `calibrate`'s mapInArrow walk over
+group-sorted partitions, running one CalibrationState per group.
 A single group under scope='global' must match the oracle exactly —
 including drift-reset interplay and both quantile index formulas.
 """
@@ -176,24 +177,41 @@ def test_clustered_layout_matches_shuffle_path(spark, tmp_path):
     assert "Exchange" not in plan
 
 
-def test_arrow_engine_matches_pandas_engine(spark):
-    """Both kernel I/O engines produce identical outputs (the pandas
-    path is the second witness for the zero-copy Arrow path)."""
-    from log_project_spark import synth
-
-    t = synth.transcripts(spark, 2000, n_convs=40, anom_ratio=0.05, seed=9).withColumn(
-        "score", F.length("text").cast("double")
+def test_arrow_walk_batch_carry_matches_oracle(spark):
+    """Arrow batches of 7 rows split almost every conversation across
+    batches, so the walk's carry of a batch's trailing group (and of
+    batches holding one group only) decides every result. Each
+    conversation must still equal the oracle on its own scores."""
+    rng = random.Random(21)
+    convs = {}
+    for c in range(40):
+        n = 40 + (c * 13) % 70
+        convs[f"c{c:02d}"] = [
+            rng.gauss(0.0, 1.0) + (8.0 if i >= n // 2 else 0.0) for i in range(n)
+        ]
+    rows = [(k, i, float(s)) for k, xs in convs.items() for i, s in enumerate(xs)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, score double")
+    cfg = PipelineConfig(
+        scope="conv_id", window=30, warmup=5, drift_detector="adwin", adwin_delta=0.002
     )
-    cfg = PipelineConfig(scope="conv_id", window=80, warmup=10, drift_detector="adwin")
-    a = {
-        (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
-        for r in calibrate(t, cfg, engine="arrow").collect()
-    }
-    b = {
-        (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
-        for r in calibrate(t, cfg, engine="pandas").collect()
-    }
-    assert a == b
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = calibrate(df, cfg, num_partitions=3).orderBy("conv_id", "turn_idx").collect()
+    finally:
+        spark.conf.set(key, old)
+    n_drift = 0
+    for conv, xs in convs.items():
+        got = [r for r in out if r["conv_id"] == conv]
+        want = oracle.run_stream(
+            xs, alpha=cfg.alpha, window=30, warmup=5, detector=Adwin(delta=0.002)
+        )
+        assert [r["thr"] for r in got] == want.thresholds, conv
+        assert [r["is_anom"] for r in got] == want.is_anom, conv
+        assert [r["is_drift"] for r in got] == want.is_drift, conv
+        n_drift += want.n_drift
+    assert n_drift > 0, "fixture must actually drift"
 
 
 def test_needed_cols_projection_matches_full_width(spark):
@@ -241,18 +259,16 @@ def test_needed_cols_projection_matches_full_width(spark):
 
 def test_sleep_ms_paces_kernel():
     """--sleep_ms parity knob (src/stream.py:268-270,373-374): the
-    per-group kernel sleeps per event when configured."""
+    calibration state sleeps per event when configured."""
     import time
 
-    import numpy as np
+    from log_project_spark.operators.calibrate import CalibrationState
 
-    from log_project_spark.operators.calibrate import _run_group
-
-    scores = np.arange(30, dtype=np.float64)
+    scores = [float(i) for i in range(30)]
     t0 = time.perf_counter()
-    _run_group(scores, 0.05, 10, 5, False, "none", 0.002, sleep_ms=5.0)
+    CalibrationState(0.05, 10, 5, False, "none", 0.002, sleep_ms=5.0).run(scores, 30)
     wall = time.perf_counter() - t0
     assert wall >= 30 * 0.005
     t0 = time.perf_counter()
-    _run_group(scores, 0.05, 10, 5, False, "none", 0.002)
+    CalibrationState(0.05, 10, 5, False, "none", 0.002).run(scores, 30)
     assert time.perf_counter() - t0 < 0.05

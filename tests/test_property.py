@@ -1,16 +1,24 @@
 """Property-based tests (hypothesis) over the pure kernel functions —
-the vectorized `_run_group` must equal the per-event oracle for ANY
-score sequence and any (alpha, window, warmup) configuration, not just
-the handpicked fixtures."""
+the shared `CalibrationState` event loop must equal the per-event
+oracle for ANY score sequence and any (alpha, window, warmup)
+configuration, not just the handpicked fixtures, and a run resumed
+from its checkpoint at any split points must equal one run."""
 
 import math
+import pickle
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from log_project_spark import oracle
 from log_project_spark.adwin import Adwin
-from log_project_spark.operators.calibrate import _run_group
+from log_project_spark.operators.calibrate import CalibrationState
+
+
+def _run(scores, alpha, window, warmup, no_calib, drift_kind, delta=0.002):
+    state = CalibrationState(alpha, window, warmup, no_calib, drift_kind, delta)
+    return state.run(list(scores), len(scores))
+
 
 scores_strategy = st.lists(
     st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False),
@@ -27,9 +35,7 @@ scores_strategy = st.lists(
     warmup=st.integers(min_value=0, max_value=250),
 )
 def test_conformal_kernel_equals_oracle(scores, alpha, window, warmup):
-    thr, anom, drift = _run_group(
-        np.asarray(scores), alpha, window, warmup, False, "none", 0.002
-    )
+    thr, anom, drift = _run(scores, alpha, window, warmup, False, "none")
     want = oracle.run_stream(scores, alpha=alpha, window=window, warmup=warmup)
     assert list(thr) == want.thresholds
     assert list(anom) == want.is_anom
@@ -43,9 +49,7 @@ def test_conformal_kernel_equals_oracle(scores, alpha, window, warmup):
     warmup=st.integers(min_value=1, max_value=250),
 )
 def test_fixed_threshold_kernel_equals_oracle(scores, alpha, warmup):
-    thr, anom, _ = _run_group(
-        np.asarray(scores), alpha, 1000, warmup, True, "none", 0.002
-    )
+    thr, anom, _ = _run(scores, alpha, 1000, warmup, True, "none")
     want = oracle.run_stream(scores, alpha=alpha, warmup=warmup, no_calib=True)
     for a, b in zip(thr, want.thresholds):
         assert (math.isinf(a) and math.isinf(b)) or a == b
@@ -65,15 +69,57 @@ def test_adwin_kernel_equals_oracle_sequence(scores, delta):
     """The kernel's embedded detector sees the same score sequence as a
     standalone ADWIN (drift bits equal), and resets keep thresholds
     equal to the oracle's."""
-    thr, anom, drift = _run_group(
-        np.asarray(scores), 0.05, 50, 10, False, "adwin", delta
-    )
+    thr, anom, drift = _run(scores, 0.05, 50, 10, False, "adwin", delta)
     want = oracle.run_stream(
         scores, alpha=0.05, window=50, warmup=10, detector=Adwin(delta=delta)
     )
     assert list(drift) == want.is_drift
     assert list(thr) == want.thresholds
     assert list(anom) == want.is_anom
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    scores=st.lists(
+        st.floats(min_value=-100, max_value=100, allow_nan=False, allow_infinity=False),
+        min_size=1,
+        max_size=300,
+    ),
+    cuts=st.lists(st.integers(min_value=0, max_value=300), max_size=4),
+    window=st.integers(min_value=1, max_value=60),
+    warmup=st.integers(min_value=0, max_value=120),
+    no_calib=st.booleans(),
+    drift_kind=st.sampled_from(["none", "adwin"]),
+)
+def test_resumed_state_equals_one_run_and_oracle(
+    scores, cuts, window, warmup, no_calib, drift_kind
+):
+    """Streaming resumes the state from its STATE_SCHEMA row at every
+    micro-batch boundary: runs chunked at any split points, with the
+    (arrivals, seen, det) tuple pickled between chunks, must equal one
+    uninterrupted run and the oracle."""
+    args = (0.05, window, warmup, no_calib, drift_kind, 0.005)
+    whole = CalibrationState(*args).run(list(scores), len(scores))
+
+    bounds = sorted({min(c, len(scores)) for c in cuts} | {0, len(scores)})
+    parts, row = [], None
+    for lo, hi in zip(bounds, bounds[1:]):
+        state = CalibrationState(*args)
+        if row is not None:
+            state.restore(pickle.loads(pickle.dumps(row)))
+        parts.append(state.run(scores[lo:hi], hi - lo))
+        row = state.checkpoint()
+    chunked = [np.concatenate([p[j] for p in parts]) for j in range(3)]
+    for a, b in zip(whole, chunked):
+        assert list(a) == list(b)
+
+    want = oracle.run_stream(
+        scores, alpha=0.05, window=window, warmup=warmup, no_calib=no_calib,
+        detector=Adwin(delta=0.005) if drift_kind == "adwin" else None,
+    )
+    assert list(whole[0]) == want.thresholds
+    assert list(whole[1]) == want.is_anom
+    assert list(whole[2]) == want.is_drift
 
 
 @settings(max_examples=60, deadline=None)

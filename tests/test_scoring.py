@@ -9,6 +9,7 @@ from log_project_spark import oracle, synth
 from log_project_spark.config import PipelineConfig
 from log_project_spark.iforest import fit_text_anomaly_model
 from log_project_spark.operators import parse, scoring
+from log_project_spark.operators.calibrate import calibrate
 
 
 @pytest.fixture(scope="module")
@@ -161,6 +162,31 @@ def test_integrated_transformer_calibrate_matches_oracle(spark):
         assert r["is_drift"] == want.is_drift[i], i
         assert r["is_anom"] == want.is_anom[i], i
         assert r["thr"] == pytest.approx(want.thresholds[i], abs=1e-6), i
+
+
+@pytest.mark.parametrize("calibration", ["conformal", "no_calib"])
+def test_transformer_calibrate_equals_score_then_calibrate(spark, corpus, calibration):
+    """Without drift (no C10 context reset) the integrated transformer
+    kernel is hash-embed scoring followed by calibrate, for both
+    calibration modes."""
+    tokens, _ = corpus
+    rows = [(f"c{i % 3}", i // 3, toks) for i, toks in enumerate(tokens)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+    cfg = PipelineConfig(
+        scope="conv_id", mode="transformer", alpha=0.05, window=40, warmup=30,
+        calibration=calibration, drift_detector="none",
+    )
+
+    def collect(frame):
+        return {
+            (r["conv_id"], r["turn_idx"]): (r["score"], r["thr"], r["is_anom"], r["is_drift"])
+            for r in frame.collect()
+        }
+
+    got = collect(scoring.with_transformer_calibrate(df, cfg))
+    want = collect(calibrate(scoring.with_hash_embed_score(df, cfg), cfg))
+    assert len(got) == len(rows)
+    assert got == want
 
 
 def test_tfidf_counts_factorize_matches_unique_path():

@@ -152,11 +152,18 @@ def test_streaming_fanout_sinks(spark, fixture_dir, tmp_path):
     assert union.distinct().count() == total_in
 
 
-def test_streaming_drift_parity_across_microbatches(spark, tmp_path):
+@pytest.mark.parametrize(
+    "calibration,warmup", [("conformal", 20), ("no_calib", 1500)],
+    ids=["conformal", "no_calib"],
+)
+def test_streaming_drift_parity_across_microbatches(spark, tmp_path, calibration, warmup):
     """ADWIN fires mid-stream (score mean shifts at turn 2048) and the
     detection + calibrator reset must land on the SAME rows whether
     the stream arrives as one batch or as 4 micro-batches — i.e. the
-    pickled detector state survives micro-batch boundaries."""
+    pickled detector state survives micro-batch boundaries. Under
+    no_calib the threshold freezes at turn 1500, inside the 2nd
+    micro-batch, so the warm scores and then the frozen threshold
+    ride the group state."""
     import os
 
     import numpy as np
@@ -170,7 +177,10 @@ def test_streaming_drift_parity_across_microbatches(spark, tmp_path):
     )
     rows = [("c0", i, float(s)) for i, s in enumerate(scores)]
     base = spark.createDataFrame(rows, "conv_id string, turn_idx int, score double")
-    cfg = PipelineConfig(window=200, warmup=20, scope="conv_id", drift_detector="adwin")
+    cfg = PipelineConfig(
+        window=200, warmup=warmup, calibration=calibration, scope="conv_id",
+        drift_detector="adwin",
+    )
 
     batch = {
         r["turn_idx"]: (r["thr"], r["is_anom"], r["is_drift"])
@@ -208,7 +218,7 @@ def test_streaming_drift_parity_across_microbatches(spark, tmp_path):
         scored_stream(stream, cfg)
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName("drift_stream_out")
+        .queryName(f"drift_stream_out_{calibration}")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
@@ -218,7 +228,7 @@ def test_streaming_drift_parity_across_microbatches(spark, tmp_path):
         q.stop()
     got = {
         r["turn_idx"]: (r["thr"], r["is_anom"], r["is_drift"])
-        for r in spark.sql("SELECT * FROM drift_stream_out").collect()
+        for r in spark.sql(f"SELECT * FROM drift_stream_out_{calibration}").collect()
     }
     assert got == batch
 
