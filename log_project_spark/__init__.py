@@ -7,10 +7,11 @@ pipeline over tables of multi-turn conversation transcripts
 DataFrame/Catalyst for everything expressible declaratively,
 Arrow-vectorized UDFs for the model/stateful kernels, and one
 calibration state machine (operators/calibrate.CalibrationState) per
-conv_id ordered by turn_idx: batch drives it from a mapInArrow walk over
-group-sorted partitions, streaming restores it from
-applyInPandasWithState group state, and transformer mode feeds it from
-a grouped hash-embedding scorer.
+conv_id ordered by turn_idx: batch drives it from the one grouped-kernel
+transport (calibrate.walk_groups, a mapInArrow walk over group-sorted
+partitions, on which transformer mode also feeds it hash-embedding
+scores), and streaming restores it from applyInPandasWithState group
+state.
 
 Reference semantics reproduced (citations are file:line into
 /root/reference): tokenizer mask chain (src/log_tokenize.py:12-17),

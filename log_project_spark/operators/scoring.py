@@ -12,8 +12,9 @@ like the reference's mode dispatch (/root/reference/src/stream.py:299-311):
   each batch before the matrix work (log corpora are template-heavy:
   scoring cost ~ O(unique texts), not O(rows)).
 - transformer: hash-embedding decayed-context cosine scorer
-  (src/transformer.py:65-137), as a grouped applyInPandas kernel per
-  conv_id ordered by turn_idx (the reference keeps ONE context deque;
+  (src/transformer.py:65-137), one context per conv_id ordered by
+  turn_idx, run on calibrate.walk_groups — the sorted-partition Arrow
+  walk calibrate itself uses (the reference keeps ONE context deque;
   a single group reproduces that exactly).
 """
 
@@ -31,7 +32,7 @@ from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..iforest import TextAnomalyModel, fit_text_anomaly_model
-from .calibrate import CalibrationState
+from .calibrate import CALIBRATED_FIELDS, CalibrationState, walk_groups
 
 
 def with_len_score(df: DataFrame, text_col: str = "norm_text", out_col: str = "score") -> DataFrame:
@@ -224,33 +225,22 @@ def with_hash_embed_score(
 ) -> DataFrame:
     """Grouped stateful scorer: one decayed-context stream per
     conv_id (scope='global' collapses to the reference's single
-    stream). Weight arithmetic kept in float32 to match
-    src/transformer.py:111-119 bit-for-bit."""
-    seed, dim = cfg.seed, cfg.embed_dim
-    window, decay = cfg.embed_window, cfg.embed_decay
-    order = list(order_cols)
-    scope_keys = cfg.scope_keys()
+    stream), each group run on `calibrate.walk_groups` with a fresh
+    `HashEmbedRing`. `out_col` is the last output column (an input
+    column of that name is replaced). Weight arithmetic kept in float32
+    to match src/transformer.py:111-119 bit-for-bit."""
 
-    work = df
-    group_keys = scope_keys
-    if not group_keys:
-        work = work.withColumn("__scope__", F.lit(0))
-        group_keys = ["__scope__"]
+    def run_group(group, _):
+        ring = HashEmbedRing(cfg.seed, cfg.embed_dim, cfg.embed_window, cfg.embed_decay)
+        # to_pandas shares one str object per distinct token: ~3x faster
+        # than to_numpy, ~30x than to_pylist, and cache hits on identity
+        toks = group.column(tokens_col).to_pandas()
+        return [[ring.score_and_update(t) for t in toks]]
 
-    fields = [f for f in work.schema.fields if f.name != out_col]
-    out_schema = T.StructType(fields + [T.StructField(out_col, T.DoubleType())])
-    out_cols = [f.name for f in out_schema.fields]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        ctx = HashEmbedRing(seed, dim, window, decay)
-        score = [ctx.score_and_update(x) for x in pdf[tokens_col]]
-        return pdf.assign(**{out_col: np.asarray(score, dtype=np.float64)})[out_cols]
-
-    result = work.groupBy(*group_keys).applyInPandas(kernel, schema=out_schema)
-    if "__scope__" in result.columns:
-        result = result.drop("__scope__")
-    return result
+    return walk_groups(
+        df, cfg.scope_keys(), order_cols, [T.StructField(out_col, T.DoubleType())],
+        run_group, drop=[out_col],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -263,51 +253,30 @@ def with_transformer_calibrate(
     tokens_col: str = "tokens",
     order_cols: tuple[str, ...] = ("turn_idx",),
 ) -> DataFrame:
-    """Transformer mode, fully integrated: one grouped pass per
-    conv_id feeding the hash-embedding context scores into the shared
-    calibration state, with the context reset on drift — the C10 hook
-    the reference documents (src/transformer.py:61-63) but never
-    wires. Each row is scored only when the state pulls it, i.e. after
-    the previous row's drift reset."""
-    seed, dim = cfg.seed, cfg.embed_dim
-    embed_window, decay = cfg.embed_window, cfg.embed_decay
-    order = list(order_cols)
-    group_keys = cfg.scope_keys()
+    """Transformer mode, fully integrated: one pass per conv_id on
+    `calibrate.walk_groups`, feeding the hash-embedding context scores
+    into the shared calibration state, with the context reset on drift —
+    the C10 hook the reference documents (src/transformer.py:61-63) but
+    never wires. Each row is scored only when the state pulls it, i.e.
+    after the previous row's drift reset. (score, thr, is_anom,
+    is_drift) are the last output columns."""
 
-    work = df
-    if not group_keys:
-        work = work.withColumn("__scope__", F.lit(0))
-        group_keys = ["__scope__"]
-
-    fields = [f for f in work.schema.fields if f.name not in ("score", "thr", "is_anom", "is_drift")]
-    out_schema = T.StructType(
-        fields
-        + [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("thr", T.DoubleType()),
-            T.StructField("is_anom", T.BooleanType()),
-            T.StructField("is_drift", T.BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        ctx = HashEmbedRing(seed, dim, embed_window, decay)
-        score = np.zeros(len(pdf))
+    def run_group(group, _):
+        toks = group.column(tokens_col).to_pandas()
+        ring = HashEmbedRing(cfg.seed, cfg.embed_dim, cfg.embed_window, cfg.embed_decay)
+        score = np.zeros(len(toks))
 
         def feed():
-            for i, x in enumerate(pdf[tokens_col]):
-                score[i] = s = ctx.score_and_update(x)
+            for i, x in enumerate(toks):
+                score[i] = s = ring.score_and_update(x)
                 yield s
 
         thr, anom, drift = CalibrationState.from_config(cfg).run(
-            feed(), len(pdf), on_drift=ctx.reset
+            feed(), len(toks), on_drift=ring.reset
         )
-        pdf = pdf.assign(score=score, thr=thr, is_anom=anom, is_drift=drift)
-        return pdf[out_cols]
+        return score, thr, anom, drift
 
-    result = work.groupBy(*group_keys).applyInPandas(kernel, schema=out_schema)
-    if "__scope__" in result.columns:
-        result = result.drop("__scope__")
-    return result
+    return walk_groups(
+        df, cfg.scope_keys(), order_cols, CALIBRATED_FIELDS, run_group,
+        drop=[f.name for f in CALIBRATED_FIELDS],
+    )

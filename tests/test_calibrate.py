@@ -180,37 +180,46 @@ def test_clustered_layout_matches_shuffle_path(spark, tmp_path):
 def test_arrow_walk_batch_carry_matches_oracle(spark):
     """Arrow batches of 7 rows split almost every conversation across
     batches, so the walk's carry of a batch's trailing group (and of
-    batches holding one group only) decides every result. Each
-    conversation must still equal the oracle on its own scores."""
+    batches holding one group only) decides every result. A second
+    input is one 560-turn conversation: it spans 80 batches, stays open
+    through all of them and closes only at the end of its partition.
+    Each conversation must still equal the oracle on its own scores."""
     rng = random.Random(21)
-    convs = {}
+    many = {}
     for c in range(40):
         n = 40 + (c * 13) % 70
-        convs[f"c{c:02d}"] = [
+        many[f"c{c:02d}"] = [
             rng.gauss(0.0, 1.0) + (8.0 if i >= n // 2 else 0.0) for i in range(n)
         ]
-    rows = [(k, i, float(s)) for k, xs in convs.items() for i, s in enumerate(xs)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, score double")
+    single = {"long": [rng.gauss(0.0, 1.0) + (8.0 if i >= 280 else 0.0) for i in range(560)]}
     cfg = PipelineConfig(
         scope="conv_id", window=30, warmup=5, drift_detector="adwin", adwin_delta=0.002
     )
+
+    def run(convs):
+        rows = [(k, i, float(s)) for k, xs in convs.items() for i, s in enumerate(xs)]
+        df = spark.createDataFrame(rows, "conv_id string, turn_idx int, score double")
+        return calibrate(df, cfg, num_partitions=3).orderBy("conv_id", "turn_idx").collect()
+
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        out = calibrate(df, cfg, num_partitions=3).orderBy("conv_id", "turn_idx").collect()
+        outs = [run(many), run(single)]
     finally:
         spark.conf.set(key, old)
     n_drift = 0
-    for conv, xs in convs.items():
-        got = [r for r in out if r["conv_id"] == conv]
-        want = oracle.run_stream(
-            xs, alpha=cfg.alpha, window=30, warmup=5, detector=Adwin(delta=0.002)
-        )
-        assert [r["thr"] for r in got] == want.thresholds, conv
-        assert [r["is_anom"] for r in got] == want.is_anom, conv
-        assert [r["is_drift"] for r in got] == want.is_drift, conv
-        n_drift += want.n_drift
+    for convs, out in zip((many, single), outs):
+        assert len(out) == sum(map(len, convs.values()))
+        for conv, xs in convs.items():
+            got = [r for r in out if r["conv_id"] == conv]
+            want = oracle.run_stream(
+                xs, alpha=cfg.alpha, window=30, warmup=5, detector=Adwin(delta=0.002)
+            )
+            assert [r["thr"] for r in got] == want.thresholds, conv
+            assert [r["is_anom"] for r in got] == want.is_anom, conv
+            assert [r["is_drift"] for r in got] == want.is_drift, conv
+            n_drift += want.n_drift
     assert n_drift > 0, "fixture must actually drift"
 
 

@@ -228,6 +228,42 @@ def test_baseline_metrics_match_scored_aggregates(spark, baseline_run):
     assert m["tpr_at_1pct_fpr"] == f"{tpr:.4f}"
 
 
+def test_transformer_mode_end_to_end(spark, tmp_path):
+    """The shipped transformer mode with sinks: the written rows
+    partition the parsed input, each conversation's `score` is the
+    hash-embed context oracle over parse_stage's tokens, and
+    is_anom/is_drift are the calibration oracle over the written
+    scores."""
+    from log_project_spark import oracle
+    from log_project_spark.adwin import Adwin
+    from log_project_spark.pipeline import parse_stage
+
+    t = synth.transcripts(spark, 600, n_convs=6, anom_ratio=0.03, seed=5)
+    cfg = PipelineConfig(mode="transformer", alpha=0.05, window=50, warmup=10, scope="conv_id")
+    out = str(tmp_path / "sinks")
+    res = run_pipeline(spark, t, cfg, out_dir=out)
+    cols = ["conv_id", "turn_idx", "score", "is_anom", "is_drift"]
+    written = route.read_fanout(spark, out, res.sink_paths).select(*cols).collect()
+    tokens = {
+        (r["conv_id"], r["turn_idx"]): r["tokens"]
+        for r in parse_stage(t).select("conv_id", "turn_idx", "tokens").collect()
+    }
+    keys = [(r["conv_id"], r["turn_idx"]) for r in written]
+    assert len(keys) == len(set(keys)) == len(tokens) == res.metrics["events"]
+    assert set(keys) == set(tokens)
+    for conv in sorted({k for k, _ in keys})[:2]:
+        got = sorted((r for r in written if r["conv_id"] == conv), key=lambda r: r["turn_idx"])
+        ctx = oracle.HashEmbedContext()
+        want = [ctx.score_and_update(tokens[(conv, r["turn_idx"])]) for r in got]
+        assert [r["score"] for r in got] == pytest.approx(want, abs=1e-6), conv
+        stream = oracle.run_stream(
+            [r["score"] for r in got], alpha=cfg.alpha, window=cfg.window,
+            warmup=cfg.warmup, detector=Adwin(delta=cfg.adwin_delta),
+        )
+        assert [r["is_anom"] for r in got] == stream.is_anom, conv
+        assert [r["is_drift"] for r in got] == stream.is_drift, conv
+
+
 def test_job_cli_scores_csv_from_sinks(spark, tmp_path, monkeypatch):
     """jobs/run_pipeline.py --out-dir --scores-out builds the per-event
     CSV from the written sinks; it must be byte-identical to the CSV

@@ -111,22 +111,40 @@ def test_salted_agg_is_two_phase(spark):
     assert "pmod(xxhash64" in opt
 
 
-def test_kernel_single_shuffle(spark):
-    """calibrate introduces exactly one exchange (the repartition by
-    group keys); the sort is within partitions, not global."""
+@pytest.mark.parametrize(
+    "kernel", ["calibrate", "with_hash_embed_score", "with_transformer_calibrate"]
+)
+def test_kernel_single_shuffle(spark, kernel):
+    """Every batch per-group kernel runs on calibrate.walk_groups: exactly
+    one exchange (the repartition by group keys), a within-partition
+    sort, and one MapInArrow — never a FlatMapGroupsInPandas. The output
+    is the input's columns then the kernel's, with no `__scope__` key
+    under either scope."""
     from log_project_spark.config import PipelineConfig
+    from log_project_spark.operators import scoring
     from log_project_spark.operators.calibrate import calibrate
 
-    t = synth.transcripts(spark, 500, n_convs=10).withColumn(
-        "score", F.length("text").cast("double")
-    )
-    cfg = PipelineConfig(scope="conv_id", drift_detector="none")
-    plan = _plan(calibrate(t, cfg))
+    t = parse_ops.with_tokens(synth.transcripts(spark, 500, n_convs=10))
+    if kernel == "calibrate":
+        # the input carries `score`, which keeps its position
+        t = t.withColumn("score", F.length("text").cast("double"))
+        run, added = calibrate, ["thr", "is_anom", "is_drift"]
+    elif kernel == "with_hash_embed_score":
+        run, added = scoring.with_hash_embed_score, ["score"]
+    else:
+        run, added = scoring.with_transformer_calibrate, ["score", "thr", "is_anom", "is_drift"]
+    cfg = PipelineConfig(scope="conv_id", mode="transformer", drift_detector="none")
+    out = run(t, cfg)
+    plan = _plan(out)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
     # SortExec prints "Sort [keys...], global, sortOrder" — the
     # `], false, 0` tail is the non-global (within-partition) form
     assert "Sort [conv_id" in plan and "], false, 0" in plan
+    assert plan.count("MapInArrow") == 1 and "FlatMapGroupsInPandas" not in plan, plan
+    assert out.columns == t.columns + added
+    glob = run(t, PipelineConfig(scope="global", mode="transformer", drift_detector="none"))
+    assert glob.columns == t.columns + added
 
 
 def test_needed_cols_prunes_scan_and_exchange(spark, tmp_path):

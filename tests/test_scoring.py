@@ -164,6 +164,57 @@ def test_integrated_transformer_calibrate_matches_oracle(spark):
         assert r["thr"] == pytest.approx(want.thresholds[i], abs=1e-6), i
 
 
+def test_transformer_kernels_batch_carry_match_oracle(spark):
+    """Arrow batches of 7 rows split every conversation across batches,
+    so the walk's carry of a group's rows — a `list<string>` tokens
+    column included — decides both transformer kernels' results. Each
+    of 5 drifting conversations must equal the per-event oracles: the
+    hash-embed scores `oracle.HashEmbedContext`, and the integrated
+    kernel `oracle.run_transformer_stream` (C10 resets included)."""
+    from log_project_spark.adwin import Adwin
+
+    rng = __import__("random").Random(17)
+    vocab_b = [f"other{i}" for i in range(500)]
+    convs = {}
+    for c in range(5):
+        n = 100 + 7 * c
+        convs[f"c{c}"] = [["stable"] * 6 for _ in range(n // 2)] + [
+            [rng.choice(vocab_b) for _ in range(6)] for _ in range(n - n // 2)
+        ]
+    rows = [(k, i, toks) for k, seqs in convs.items() for i, toks in enumerate(seqs)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+    cfg = PipelineConfig(
+        scope="conv_id", mode="transformer", alpha=0.05, window=100, warmup=10,
+        drift_detector="adwin", adwin_delta=0.002,
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        scored = scoring.with_hash_embed_score(df, cfg).orderBy("conv_id", "turn_idx").collect()
+        calibrated = (
+            scoring.with_transformer_calibrate(df, cfg).orderBy("conv_id", "turn_idx").collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+    n_drift = 0
+    for conv, seqs in convs.items():
+        ctx = oracle.HashEmbedContext()
+        want = [ctx.score_and_update(t) for t in seqs]
+        assert [r["score"] for r in scored if r["conv_id"] == conv] == pytest.approx(
+            want, abs=1e-6
+        ), conv
+        scores_o, stream = oracle.run_transformer_stream(
+            seqs, alpha=0.05, window=100, warmup=10, detector=Adwin(delta=0.002)
+        )
+        got = [r for r in calibrated if r["conv_id"] == conv]
+        assert [r["score"] for r in got] == pytest.approx(scores_o, abs=1e-6), conv
+        assert [r["is_anom"] for r in got] == stream.is_anom, conv
+        assert [r["is_drift"] for r in got] == stream.is_drift, conv
+        n_drift += stream.n_drift
+    assert n_drift > 0, "fixture must drift"
+
+
 @pytest.mark.parametrize("calibration", ["conformal", "no_calib"])
 def test_transformer_calibrate_equals_score_then_calibrate(spark, corpus, calibration):
     """Without drift (no C10 context reset) the integrated transformer
