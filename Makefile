@@ -6,13 +6,13 @@ test:
 	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # the calibration/scoring kernels: their oracle, property, streaming,
-# golden-hash, plan and pipeline tests, then the DuckDB gate on the three
-# kernel queries
+# golden-hash, plan, pipeline and run-aggregate (TPR) tests, then the
+# DuckDB gate on the three kernel queries
 kernels:
 	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
 	  tests/test_calibrate.py tests/test_property.py tests/test_streaming.py \
 	  tests/test_scoring.py tests/test_golden_hashes.py tests/test_plans.py \
-	  tests/test_pipeline.py
+	  tests/test_pipeline.py tests/test_aggregate.py
 	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores
 
 gate:

@@ -10,10 +10,16 @@ formulas coexist by contract (SURVEY.md §7 hard part c):
     conformal (C2):  k = max(1, int(round_half_even((1-a)*n))), pick k-th smallest
     fixed/no-calib (C6) and percentile/TPR (A1/A3):
                      k = int(q*(n-1)), pick (k+1)-th smallest
+
+TPR@FPR (A3) takes the same pick from a distinct-value histogram: one
+aggregate counts the (score, label) pairs, and the driver walks their
+cumulative counts. Its cost follows the distinct values, not the rows;
+above TPR_HISTOGRAM_CAP pairs it runs the distributed rank selection.
 """
 
 from __future__ import annotations
 
+import math
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -35,6 +41,11 @@ def exact_percentile_col(values: Column, p: float) -> Column:
     k = F.floor((F.lit(p) / F.lit(100.0)) * (n - F.lit(1)).cast("double")).cast("int")
     k = F.greatest(F.lit(0), F.least(k, n - F.lit(1)))
     return F.element_at(arr, k + F.lit(1))
+
+
+def _lower_index(p: float, n: int) -> int:
+    """0-based index of the p-th lower-index percentile of n sorted values."""
+    return min(max(int((p / 100.0) * (n - 1)), 0), n - 1)
 
 
 def exact_percentile_distributed(
@@ -128,7 +139,7 @@ def exact_percentile_distributed(
         by_idx = {int(r["__gidx__"]): float(r["__v__"]) for r in rows}
         out = {}
         for p in ps:
-            k = min(max(int((p / 100.0) * (n - 1)), 0), n - 1)
+            k = _lower_index(p, n)
             if k not in by_idx:
                 return None
             out[p] = by_idx[k]
@@ -238,6 +249,46 @@ def percentile_rank_filter(
 # TPR @ target FPR (A3, src/stream.py:146-158)
 # ---------------------------------------------------------------------------
 
+# distinct (score, label) pairs up to which tpr_at_fpr answers from the
+# collected count histogram; the probe collects at most CAP + 1 rows of
+# (double, boolean, long), a few hundred KB
+TPR_HISTOGRAM_CAP = 4096
+
+
+def _spark_double_order(v: float) -> tuple[int, float]:
+    """Sort key of Spark's double ordering: NaN after every number and
+    equal to itself; -0.0 == 0.0 as in Python."""
+    return (1, 0.0) if math.isnan(v) else (0, v)
+
+
+def _tpr_from_histogram(hist: list, p: float) -> tuple[float, float]:
+    """tpr_at_fpr over the collected (score, is_pos, count) rows: the same
+    lower-index pick as exact_percentile_distributed, taken by walking the
+    cumulative negative counts, then the `>=` positive fraction under
+    Spark's NaN rule (NaN >= x for every x). Null scores count nowhere."""
+    neg = sorted(
+        ((v, c) for v, is_pos, c in hist if not is_pos and v is not None),
+        key=lambda vc: _spark_double_order(vc[0]),
+    )
+    n = sum(c for _, c in neg)
+    if n == 0:
+        return float("nan"), float("nan")
+    k = _lower_index(p, n)
+    seen = 0
+    for thr, c in neg:
+        seen += c
+        if seen > k:
+            break
+    if math.isnan(thr):
+        return float("nan"), float("nan")
+    pos = [(v, c) for v, is_pos, c in hist if is_pos and v is not None]
+    n_pos = sum(c for _, c in pos)
+    if n_pos == 0:
+        return float("nan"), thr
+    hits = sum(c for v, c in pos if math.isnan(v) or v >= thr)
+    return hits / n_pos, thr
+
+
 def tpr_at_fpr(
     scored: DataFrame,
     score_col: str = "score",
@@ -246,13 +297,30 @@ def tpr_at_fpr(
 ) -> tuple[float, float]:
     """Threshold = exact (1-fpr) lower-index quantile of NEGATIVE
     scores; TPR = fraction of positives with score >= thr (note >=,
-    vs the strict > of the streaming anomaly decision)."""
-    import math
+    vs the strict > of the streaming anomaly decision).
+
+    Histogram first: one aggregate counts the distinct (score, label)
+    pairs and the driver walks their cumulative counts, so the cost
+    follows the distinct values (a dozen on template-shaped logs), not
+    the rows. Above TPR_HISTOGRAM_CAP pairs (continuous scores) it falls
+    back to exact_percentile_distributed plus one positive aggregate.
+    Both give the same (tpr, thr); a NaN pick gives (nan, nan), no
+    negatives (nan, nan), no scored positives (nan, thr)."""
+    p = (1.0 - target_fpr) * 100.0
+    is_pos = F.col(label_col) == 1
+    hist = (
+        scored.where(F.col(label_col).isin(0, 1))
+        .groupBy(F.col(score_col).cast("double").alias("v"), is_pos.alias("pos"))
+        .count()
+        .limit(TPR_HISTOGRAM_CAP + 1)
+        .collect()
+    )
+    if len(hist) <= TPR_HISTOGRAM_CAP:
+        return _tpr_from_histogram(hist, p)
 
     neg = scored.where(F.col(label_col) == 0)
-    pos = scored.where(F.col(label_col) == 1)
-    q = exact_percentile_distributed(neg, score_col, [(1.0 - target_fpr) * 100.0])
-    thr = q[(1.0 - target_fpr) * 100.0]
+    pos = scored.where(is_pos)
+    thr = exact_percentile_distributed(neg, score_col, [p])[p]
     if math.isnan(thr):
         return float("nan"), float("nan")
     tpr_row = pos.agg(F.avg((F.col(score_col) >= F.lit(thr)).cast("double")).alias("tpr")).first()
@@ -269,9 +337,10 @@ def tpr_at_fpr_df(
 ) -> DataFrame:
     """Single-plan DataFrame variant (SQL-expressible, oracle-checkable).
     Collects the label-split score arrays into ONE aggregate row — fine
-    at gate/report scale, NOT the 10^12-row path: the scalable default
-    is tpr_at_fpr (JVM percentile + one positive aggregate), which
-    run_pipeline uses."""
+    at gate/report scale, NOT the 10^12-row path: run_pipeline uses
+    tpr_at_fpr, whose result size is bounded by the distinct (score,
+    label) pairs or, above TPR_HISTOGRAM_CAP of them, by the JVM
+    percentile path."""
     arrays = scored.agg(
         F.sort_array(
             F.collect_list(F.when(F.col(label_col) == 0, F.col(score_col)))
@@ -437,7 +506,3 @@ def summary_row(
     ]
     schema = ", ".join(f"`{c}` string" for c in SUMMARY_COLUMNS)
     return local_frame(spark, [values], schema)
-
-
-def append_summary(row: DataFrame, path: str) -> None:
-    row.coalesce(1).write.mode("append").option("header", True).csv(path)

@@ -22,11 +22,3 @@ def enrich_roles_tools(
     out = df.join(F.broadcast(role_dim), on="role", how="left")
     out = out.join(F.broadcast(tool_dim), on="tool", how="left")
     return out
-
-
-def join_labels(df: DataFrame, labels: DataFrame, how: str = "left") -> DataFrame:
-    """Label alignment on the real keys. The labels side is typically
-    the same cardinality as the fact table; Catalyst/AQE picks the
-    join strategy (sort-merge at scale). When labels are already a
-    column of df this is a no-op at call sites."""
-    return df.join(labels, on=["conv_id", "turn_idx"], how=how)

@@ -38,19 +38,6 @@ IP_PATTERN = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 NUM_PATTERN = r"\d+"
 
 
-def normalized_col(text: Column) -> Column:
-    """Lowercase + strip + mask chain as one Catalyst expression tree.
-
-    Python's str.strip() trims all whitespace (not just spaces), so we
-    use anchored regexp_replace rather than trim().
-    """
-    c = F.lower(F.regexp_replace(text, r"^\s+|\s+$", ""))
-    c = F.regexp_replace(c, HEX_PATTERN, "<hex>")
-    c = F.regexp_replace(c, IP_PATTERN, "<ip>")
-    c = F.regexp_replace(c, NUM_PATTERN, "<num>")
-    return c
-
-
 def _masked_unstripped(text: Column) -> Column:
     """Mask chain WITHOUT the strip pass (whitespace handled later by
     collapse+btrim — masking never matches whitespace and lowercasing
@@ -154,11 +141,6 @@ def _normalize_series(s: pd.Series) -> pd.Series:
     out = out.str.replace(IP_PATTERN, "<ip>", regex=True)
     out = out.str.replace(NUM_PATTERN, "<num>", regex=True)
     return out
-
-
-@F.pandas_udf(T.StringType())
-def normalize_text_pandas(s: pd.Series) -> pd.Series:
-    return _normalize_series(s)
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))

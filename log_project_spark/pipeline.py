@@ -15,6 +15,10 @@ and TPR@FPR is computed over the rows just written, read back from the
 returned sink paths (two columns, pruned at the parquet scan). With
 `out_dir=None` there is no write to ride, so the counters and TPR are
 recomputed over `scored`.
+
+In baseline mode the model is fitted on the parsed frame, before
+enrich, as the reference fits on the corpus (src/stream.py:178-187):
+the dim joins leave norm_text unchanged, so the fit runs no broadcast.
 """
 
 from __future__ import annotations
@@ -126,7 +130,12 @@ def run_pipeline(
     counters are observed on it (`df.observe`) and TPR@1%FPR is computed
     over the written sinks' (score, label). With `out_dir=None` the
     counters and TPR are aggregates over `scored` (re-executing its plan
-    unless `checkpoint_root` made it a parquet read)."""
+    unless `checkpoint_root` made it a parquet read).
+
+    mode="baseline" fits its model on the parsed frame (the parse
+    checkpoint under `checkpoint_root`) and scores the enriched rows.
+    With user dims whose join keys repeat, enrich duplicates rows; the
+    fit does not see those duplicates."""
     role_dim = role_dim if role_dim is not None else synth.role_dim(spark)
     tool_dim = tool_dim if tool_dim is not None else synth.tool_dim(spark)
 
@@ -145,8 +154,9 @@ def run_pipeline(
         if cfg.mode == "baseline":
             # fused path: score inside the calibrate kernel pass (one
             # Arrow round trip); tokens dropped pre-shuffle, norm_text
-            # rides the shuffle to the scorer then drops
-            model = scoring.fit_baseline_model(src, cfg)
+            # rides the shuffle to the scorer then drops. The fit reads
+            # the parsed frame: enrich leaves norm_text unchanged.
+            model = scoring.fit_baseline_model(run.stages[0].df if run else build_parsed(), cfg)
             return calibrate(
                 src.drop("tokens"),
                 cfg,

@@ -94,9 +94,3 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> Data
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

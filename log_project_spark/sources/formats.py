@@ -87,10 +87,6 @@ def append_summary_csv(row_df: DataFrame, out_path: str) -> None:
             f.write(",".join("" if r[c] is None else str(r[c]) for c in SUMMARY_COLUMNS) + "\n")
 
 
-def read_summary_csv(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("header", True).csv(path)
-
-
 def write_scores_csv(scored: DataFrame, out_path: str) -> None:
     """Per-event score trace (S6 schema from the committed artifact
     experiments/scores_synth_baseline.csv:1): idx,score,label,flag,
@@ -124,8 +120,3 @@ def hash_manifest(paths: list[str]) -> list[str]:
                 h.update(chunk)
         lines.append(f"{os.path.basename(p)}  {os.path.getsize(p)}  {h.hexdigest().upper()}")
     return lines
-
-
-def write_hash_manifest(paths: list[str], out_path: str) -> None:
-    with open(out_path, "w", encoding="utf-8", newline="") as f:
-        f.write("\n".join(hash_manifest(paths)) + "\n")

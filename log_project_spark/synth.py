@@ -203,11 +203,6 @@ def transcripts(
     )
 
 
-def labels_of(transcripts_df: DataFrame) -> DataFrame:
-    """Ground-truth labels table (FIXTURES.md §2)."""
-    return transcripts_df.select("conv_id", "turn_idx", "label")
-
-
 def role_dim(spark: SparkSession) -> DataFrame:
     """Role lookup table for the broadcast enrich join. Built with
     `session.local_frame` so it plans as a `LocalTableScan`: a

@@ -1,9 +1,11 @@
 """Aggregates: exact percentile formulas, TPR@FPR, salted group-bys,
 keep-last dedup, categorical sort (SURVEY.md A1-A8, O2, O8)."""
 
+import math
 import random
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from log_project_spark import oracle
@@ -138,6 +140,132 @@ def test_tpr_at_fpr_matches_oracle(spark):
     row = agg.tpr_at_fpr_df(df, "score", "label", 0.01).first()
     assert row["thr"] == pytest.approx(want_thr)
     assert row["tpr"] == pytest.approx(want_tpr)
+
+
+NAN = float("nan")
+
+
+def _same(a: float, b: float) -> bool:
+    return (math.isnan(a) and math.isnan(b)) or a == b
+
+
+def _distributed_tpr(df, target_fpr):
+    """The rank-selection path the histogram replaces, composed from its
+    parts: exact_percentile_distributed over the negatives, then the
+    `>=` average over the positives."""
+    p = (1.0 - target_fpr) * 100.0
+    thr = agg.exact_percentile_distributed(df.where(F.col("label") == 0), "score", [p])[p]
+    if math.isnan(thr):
+        return NAN, NAN
+    row = df.where(F.col("label") == 1).agg(
+        F.avg((F.col("score") >= F.lit(thr)).cast("double")).alias("tpr")
+    ).first()
+    return (NAN if row["tpr"] is None else float(row["tpr"])), thr
+
+
+def _check_tpr(spark, rows, target_fpr, want=None):
+    """tpr_at_fpr (histogram) == the distributed path, and == `want`
+    and the oracle where they apply; returns the histogram's answer."""
+    df = spark.createDataFrame(rows, "score double, label int").repartition(3)
+    got = agg.tpr_at_fpr(df, "score", "label", target_fpr)
+    ref = _distributed_tpr(df, target_fpr)
+    assert _same(got[0], ref[0]) and _same(got[1], ref[1]), (got, ref)
+    if want is not None:
+        assert _same(got[0], want[0]) and _same(got[1], want[1]), (got, want)
+    scores = [s for s, _ in rows]
+    labels = [y for _, y in rows]
+    defined = (
+        None not in scores and None not in labels
+        and not any(math.isnan(s) for s in scores)
+        and 0 in labels and 1 in labels
+    )
+    if defined:
+        assert got == oracle.tpr_at_fpr(scores, labels, target_fpr)
+    return got
+
+
+# target_fpr 0.3 over 10 negatives: k = int(70.0/100 * 9) = 6, the 7th smallest
+TPR_EDGE_CASES = {
+    "nan_among_negatives_below_k": (
+        [(float(i), 0) for i in range(9)] + [(NAN, 0), (8.0, 1), (NAN, 1), (5.0, 1)],
+        0.01, (2 / 3, 8.0)),
+    "nan_at_k_gives_nan_nan": (
+        [(float(i), 0) for i in range(5)] + [(NAN, 0)] * 5 + [(NAN, 1)], 0.3, (NAN, NAN)),
+    "nan_positive_is_at_or_above_every_thr": (
+        [(float(i), 0) for i in range(10)] + [(NAN, 1), (0.0, 1)], 0.3, (0.5, 6.0)),
+    "negative_zero_equals_zero": (
+        [(-0.0, 0)] * 4 + [(0.0, 0)] * 4 + [(-1.0, 0)] * 2 + [(-0.0, 1), (0.0, 1), (-0.5, 1)],
+        0.3, (2 / 3, 0.0)),
+    "ties_at_k": (
+        [(1.0, 0)] * 3 + [(2.0, 0)] * 5 + [(3.0, 0)] * 2 + [(2.0, 1), (1.5, 1), (3.0, 1)],
+        0.3, (2 / 3, 2.0)),
+    "null_scores_are_skipped": (
+        [(float(i), 0) for i in range(10)] + [(None, 0)] * 7 + [(6.0, 1), (None, 1), (1.0, 1)],
+        0.3, (0.5, 6.0)),
+    "labels_outside_0_1_and_null": (
+        [(float(i), 0) for i in range(10)] + [(100.0, 2), (100.0, None), (-5.0, -1), (7.0, 1)],
+        0.3, (1.0, 6.0)),
+    "no_negatives": ([(1.0, 1), (2.0, 1), (3.0, 2)], 0.01, (NAN, NAN)),
+    "no_scored_positives": ([(float(i), 0) for i in range(10)] + [(None, 1)], 0.3, (NAN, 6.0)),
+    "no_positives": ([(float(i), 0) for i in range(10)], 0.3, (NAN, 6.0)),
+    "empty": ([], 0.01, (NAN, NAN)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TPR_EDGE_CASES))
+def test_tpr_histogram_edge_semantics(spark, case):
+    rows, target_fpr, want = TPR_EDGE_CASES[case]
+    _check_tpr(spark, rows, target_fpr, want)
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from([NAN, -0.0, 0.0, 1.0, 2.5, -3.0, None]),
+            st.sampled_from([0, 0, 1, 2, None]),
+        ),
+        max_size=60,
+    ),
+    target_fpr=st.sampled_from([0.01, 0.2, 0.5]),
+)
+def test_tpr_histogram_equals_distributed_path(spark, rows, target_fpr):
+    _check_tpr(spark, rows, target_fpr)
+
+
+def test_tpr_above_cap_falls_back_to_distributed_path(spark, monkeypatch):
+    """More distinct (score, label) pairs than the cap: the answer comes
+    from exact_percentile_distributed, and equals the histogram's."""
+    rng = random.Random(11)
+    rows = [(rng.gauss(0, 1), 0) for _ in range(300)] + [(rng.gauss(2, 1), 1) for _ in range(30)]
+    rows += [(NAN, 1), (None, 1), (1.0, 2)]
+    hist = _check_tpr(spark, rows, 0.01)
+    calls = []
+    real = agg.exact_percentile_distributed
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(agg, "exact_percentile_distributed", spy)
+    monkeypatch.setattr(agg, "TPR_HISTOGRAM_CAP", 50)
+    df = spark.createDataFrame(rows, "score double, label int").repartition(3)
+    assert agg.tpr_at_fpr(df, "score", "label", 0.01) == hist
+    assert len(calls) == 1
+
+
+def test_no_positives_reports_na(spark, tmp_path):
+    """A run without positives has a threshold but no TPR: the metric
+    and the ledger read NA."""
+    from log_project_spark import synth
+    from log_project_spark.config import PipelineConfig
+    from log_project_spark.pipeline import run_pipeline
+
+    t = synth.transcripts(spark, 300, n_convs=3, anom_ratio=0.03, seed=3)
+    t = t.withColumn("label", F.lit(0))
+    cfg = PipelineConfig(mode="len", window=50, warmup=10, scope="conv_id")
+    res = run_pipeline(spark, t, cfg, out_dir=str(tmp_path / "sinks"))
+    assert res.metrics["tpr_at_1pct_fpr"] == "NA"
 
 
 def test_salted_counts_equal_plain(spark):

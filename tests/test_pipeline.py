@@ -156,15 +156,16 @@ def test_empty_input_single_pass_path(spark, small_transcripts, tmp_path):
 
 @pytest.fixture(scope="module")
 def baseline_run(spark, tmp_path_factory):
-    """mode="baseline" run_pipeline with out_dir, its fused scorer
-    wrapped to add len(texts) per call to an accumulator."""
+    """mode="baseline" run_pipeline with out_dir under its own job group,
+    its fused scorer wrapped to add len(texts) per call to an
+    accumulator, and the fit's input frame, texts and weights recorded."""
     from types import SimpleNamespace
 
     from log_project_spark.operators import scoring
 
     real = scoring.make_broadcast_scorer
     acc = spark.sparkContext.accumulator(0)
-    models = []
+    models, fits = [], []
 
     def counting_scorer(model):
         models.append(model)
@@ -176,16 +177,34 @@ def baseline_run(spark, tmp_path_factory):
 
         return score_batch
 
+    def recording_fit(df, cfg, *args, **kwargs):
+        fits.append(SimpleNamespace(df=df))
+        return real_fit(df, cfg, *args, **kwargs)
+
+    def recording_model_fit(texts, weights, *args):
+        fits[-1].texts, fits[-1].weights = texts, weights
+        return real_model_fit(texts, weights, *args)
+
+    real_fit, real_model_fit = scoring.fit_baseline_model, scoring._fit_and_maybe_cache
     t = synth.transcripts(spark, 2000, n_convs=10, anom_ratio=0.03, seed=7)
     cfg = PipelineConfig(
         mode="baseline", window=200, warmup=20, alpha=0.05, iso_n_estimators=50
     )
+    sc = spark.sparkContext
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(scoring, "make_broadcast_scorer", counting_scorer)
-        res = run_pipeline(spark, t, cfg, out_dir=str(tmp_path_factory.mktemp("bsinks")))
+        mp.setattr(scoring, "fit_baseline_model", recording_fit)
+        mp.setattr(scoring, "_fit_and_maybe_cache", recording_model_fit)
+        sc.setJobGroup("baseline_run", "baseline run_pipeline")
+        try:
+            res = run_pipeline(spark, t, cfg, out_dir=str(tmp_path_factory.mktemp("bsinks")))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    (fit,) = fits
     return SimpleNamespace(
-        res=res, cfg=cfg, transcripts=t, model=models[0],
+        res=res, cfg=cfg, transcripts=t, model=models[0], fit=fit,
         counting_scorer=counting_scorer, acc=acc, texts_scored=acc.value,
+        jobs=sc.statusTracker().getJobIdsForGroup("baseline_run"),
     )
 
 
@@ -226,6 +245,58 @@ def test_baseline_metrics_match_scored_aggregates(spark, baseline_run):
     assert m["drifts"] == (flags["n_drift"] or 0)
     assert m["anomalies"] > 0
     assert m["tpr_at_1pct_fpr"] == f"{tpr:.4f}"
+
+
+def test_baseline_run_job_count(spark, baseline_run):
+    """The whole run (fit, observed fan-out write, TPR over the sinks)
+    fits in 11 Spark jobs on this input: the fit skips the enrich
+    broadcasts and TPR reads a (score, label) count histogram instead of
+    a distributed rank selection (20 jobs before both)."""
+    assert 0 < len(baseline_run.jobs) <= 11, len(baseline_run.jobs)
+
+
+def test_fit_reads_parsed_frame(spark, baseline_run):
+    """The model is fitted before enrich (the reference fits on the
+    corpus): no dim join in the fit's plan, and the same profile, hence
+    the same model, as a fit on the enriched frame."""
+    import pickle
+
+    from log_project_spark.operators import enrich as enrich_ops
+    from log_project_spark.operators import scoring
+    from log_project_spark.pipeline import parse_stage
+
+    b = baseline_run
+    plan = b.fit.df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
+    enriched = enrich_ops.enrich_roles_tools(
+        parse_stage(b.transcripts), synth.role_dim(spark), synth.tool_dim(spark)
+    )
+    recorded = []
+    real = scoring._fit_and_maybe_cache
+
+    def record(texts, weights, *args):
+        recorded.append((texts, weights))
+        return real(texts, weights, *args)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scoring, "_fit_and_maybe_cache", record)
+        model = scoring.fit_baseline_model(enriched, b.cfg)
+    ((texts, weights),) = recorded
+    assert b.fit.texts == texts
+    assert b.fit.weights.tolist() == weights.tolist()
+    assert pickle.dumps(b.model) == pickle.dumps(model)
+
+
+def test_checkpointed_baseline_metrics_equal_direct_run(spark, baseline_run, tmp_path):
+    """Under checkpoint_root the fit reads the parse stage's checkpoint;
+    counters and TPR equal the run without a checkpoint."""
+    b = baseline_run
+    res = run_pipeline(
+        spark, b.transcripts, b.cfg, checkpoint_root=str(tmp_path / "ckpt"), compute_tpr=True
+    )
+    keys = ("events", "anomalies", "drifts", "tpr_at_1pct_fpr")
+    assert {k: res.metrics[k] for k in keys} == {k: b.res.metrics[k] for k in keys}
+    assert res.metrics["tpr_at_1pct_fpr"] != "NA"
 
 
 def test_transformer_mode_end_to_end(spark, tmp_path):
