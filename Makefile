@@ -1,4 +1,4 @@
-.PHONY: test kernels gate bench package submit-example
+.PHONY: test kernels ngrams gate bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
@@ -14,6 +14,15 @@ kernels:
 	  tests/test_scoring.py tests/test_golden_hashes.py tests/test_plans.py \
 	  tests/test_pipeline.py tests/test_aggregate.py
 	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores
+
+# the gram builder (parse.ngram_windows/ngram_text) and every operator
+# that reads grams, then the DuckDB gate on their queries
+ngrams:
+	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
+	  tests/test_parse.py tests/test_dedup.py tests/test_decontam.py \
+	  tests/test_text_analysis.py tests/test_lm_score.py tests/test_dsir.py
+	python scripts/check_entry.py minhash_signatures lsh_band_buckets lsh_candidate_pairs \
+	  repetition_stats decontam_hits lm_perplexity dsir_select
 
 gate:
 	python scripts/check_entry.py

@@ -337,21 +337,18 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # >=3 words <=> the raw text contains (non-ws run, ws run) x2 +
     # non-ws — same proof shape as parse.has_token_col: word_tokens_col
     # only collapses Java-\s whitespace, so token count == count of
-    # \S+ runs. The cheap probe pushes to the scan; the split itself
-    # is evaluated once, above the spread exchange, not in a pushed
-    # filter copy at raw-scan parallelism (guide §2.3/§4.4).
+    # \S+ runs. The cheap probe pushes to the scan and drops short docs
+    # before the spread exchange. with_shingles' own size >= 3 row
+    # filter is pushed there too, with the split inlined, so the
+    # split also runs once at raw-scan parallelism on the rows that
+    # pass the probe (guide §2.3/§4.4).
+    from log_project_spark.operators import dedup
+
     toked = _doc_word_tokens(spark, sf_dir).where(
         F.col("text").rlike(r"\S+\s+\S+\s+\S")
     )
-    sh = toked.withColumn(
-        "shingles",
-        F.expr("transform(sequence(1, size(toks)-2), i -> concat_ws(' ', slice(toks, i, 3)))"),
-    )
-    cols = [
-        F.array_min(F.expr(f"transform(shingles, s -> md5(concat(s, '|{k}')))")).alias(f"m{k}")
-        for k in range(4)
-    ]
-    return sh.select("doc_id", *cols)
+    sig = dedup.minhash_signature(dedup.with_shingles(toked, "toks", 3), num_hashes=4)
+    return sig.select("doc_id", *[f"m{k}" for k in range(4)])
 
 
 def q_lsh_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

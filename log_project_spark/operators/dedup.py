@@ -40,6 +40,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .parse import ngram_text, ngram_windows, word_tokens_col
+
 logger = logging.getLogger(__name__)
 
 SIMHASH_BITS = 60
@@ -48,8 +50,6 @@ SIMHASH_BITS = 60
 def word_tokens(text: Column) -> Column:
     """Lowercased whitespace tokens — collapse-then-single-char-split,
     no higher-order filter() lambda (see operators/parse.py)."""
-    from .parse import word_tokens_col
-
     return word_tokens_col(text)
 
 
@@ -113,24 +113,14 @@ def with_shingles(
     df: DataFrame, tokens_col: str = "tokens", n: int = 3, out_col: str = "shingles"
 ) -> DataFrame:
     """n-token shingles as space-joined strings (rows with fewer than
-    n tokens get no shingles and are dropped).
-
-    The expression is TOTAL (CASE-guarded), not merely guarded by the
-    row filter: a downstream explode() pushes its `size(...) > 0`
-    predicate into the same Filter as the size >= n guard, and Spark
-    may evaluate the conjuncts in either order — on a row with fewer
-    than n tokens the unguarded `sequence(1, size-n+1)` yields a
-    DESCENDING sequence through 0 and `slice(toks, 0, n)` throws
-    INVALID_PARAMETER_VALUE.START at runtime (found r5 via
-    repetition_stats on an empty document; the same latent crash sat
-    under jaccard_pairs/minhash for any sub-n-token doc)."""
-    expr = (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(1, size({tokens_col}) - {n - 1}),"
-        f" i -> concat_ws(' ', slice({tokens_col}, i, {n}))) "
-        f"ELSE array() END"
-    )
-    return df.where(F.size(tokens_col) >= n).withColumn(out_col, F.expr(expr))
+    n tokens get no shingles and are dropped). Windows and gram text
+    come from parse.ngram_windows / parse.ngram_text."""
+    # The one gram-building lambda in the package: minhash, Jaccard and
+    # decontam need each row's shingles as an array on that row, and
+    # exploding the windows then collecting them back would cost a
+    # shuffle. The lambda only joins an already-built window.
+    shingles = F.transform(ngram_windows(F.col(tokens_col), n), lambda g: ngram_text(g, n))
+    return df.where(F.size(tokens_col) >= n).withColumn(out_col, shingles)
 
 
 def minhash_signature(

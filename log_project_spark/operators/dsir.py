@@ -25,9 +25,9 @@ Documented contract (mirrored by the DuckDB oracle):
 
 Scale design (100 TB raw corpus):
 
-- feature extraction is pure codegen: n-grams via explode of
-  arrays_zip over slice()s (CASE-guarded total, no interpreted
-  higher-order lambdas), md5 hashing JVM-side.
+- feature extraction is pure codegen: n-grams from the one gram
+  builder (explode of parse.ngram_windows, then parse.ngram_text),
+  md5 hashing JVM-side.
 - model fit: one exchange keyed on the 8-byte feature id with
   map-side partial aggregation; the fitted model is <= `buckets`
   rows and BROADCASTS into scoring, so weighting is one exchange
@@ -55,7 +55,7 @@ from typing import NamedTuple, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from log_project_spark.operators.parse import word_tokens_col
+from log_project_spark.operators.parse import ngram_text, ngram_windows, word_tokens_col
 from log_project_spark.operators.sampling import HASH_BITS, hash60
 
 
@@ -78,7 +78,7 @@ def hashed_ngram_features(
     seed: int = 7,
 ) -> DataFrame:
     """(id, feature bigint) one row per n-gram OCCURRENCE. Pure
-    codegen: slices + arrays_zip, explode, concat_ws, md5."""
+    codegen: parse.ngram_windows, explode, parse.ngram_text, md5."""
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive ints, got {ns}")
     if buckets < 2:
@@ -88,27 +88,8 @@ def hashed_ngram_features(
     )
     pieces = []
     for n in sorted(set(int(n) for n in ns)):
-        if n == 1:
-            grams = base.select(id_col, F.explode("__toks__").alias("gram"))
-        else:
-            zipped = F.expr(
-                "CASE WHEN size(__toks__) >= "
-                + str(n)
-                + " THEN arrays_zip("
-                + ", ".join(
-                    f"slice(__toks__, {j + 1}, size(__toks__) - {n - 1})"
-                    for j in range(n)
-                )
-                + ") ELSE array() END"
-            )
-            ex = base.select(id_col, F.explode(zipped).alias("__g__"))
-            grams = ex.select(
-                id_col,
-                F.concat_ws(
-                    " ", *[F.col("__g__").getField(str(j)) for j in range(n)]
-                ).alias("gram"),
-            )
-        pieces.append(grams)
+        ex = base.select(id_col, F.explode(ngram_windows(F.col("__toks__"), n)).alias("__g__"))
+        pieces.append(ex.select(id_col, ngram_text(F.col("__g__"), n).alias("gram")))
     allgrams = pieces[0]
     for p in pieces[1:]:
         allgrams = allgrams.unionAll(p)

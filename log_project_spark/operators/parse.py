@@ -132,6 +132,38 @@ def word_tokens_col(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# n-grams: the one builder every gram-reading operator uses
+# ---------------------------------------------------------------------------
+
+def ngram_windows(tokens: Column, n: int) -> Column:
+    """array<struct<0, ..., n-1>>: one struct per n-token window of
+    `tokens`, in token order; [] when there are fewer than n tokens.
+
+    Pure codegen: arrays_zip over n slices, where slice j (length
+    size-n+1) contributes token i+j to window i — no higher-order
+    lambda, which Catalyst would interpret per element (~45 us/gram
+    measured: 125 s for 2.75M grams at sf1 vs 2.3 s for this form).
+
+    The expression is TOTAL (CASE-guarded), not merely protected by a
+    caller's row filter: a downstream explode() pushes its
+    `size(...) > 0` predicate into the same Filter as any size >= n
+    guard, Spark may evaluate the conjuncts in either order, and an
+    unguarded slice of negative length throws at runtime on a short
+    row."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    size = F.size(tokens)
+    zipped = F.arrays_zip(*[F.slice(tokens, j + 1, size - (n - 1)) for j in range(n)])
+    return F.when(size >= n, zipped).otherwise(F.array())
+
+
+def ngram_text(window: Column, n: int) -> Column:
+    """One `ngram_windows` element as gram text: its n tokens joined
+    by single spaces — the package's only spelling of a gram."""
+    return F.concat_ws(" ", *[window.getField(str(j)) for j in range(n)])
+
+
+# ---------------------------------------------------------------------------
 # Arrow/pandas-UDF variant (same output, Python vectorized path)
 # ---------------------------------------------------------------------------
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parse import word_tokens_col, ws_collapsed_col
+from .parse import ngram_text, ngram_windows, word_tokens_col, ws_collapsed_col
 
 # small built-in stopword profiles for the n-gram-free heuristic
 STOPWORDS = {
@@ -178,26 +178,10 @@ def repetition_stats(
     toked = df.select(
         F.col(id_col), word_tokens(F.col(text_col)).alias("__toks__")
     ).where(F.size("__toks__") >= n)
-    # n-grams via the codegen zip-of-slices form (as in dsir.py) rather
-    # than dedup.with_shingles' transform(..., i -> concat_ws(slice))
-    # HOF: Catalyst interprets HOF lambdas per element (~45 us/gram
-    # measured — 125 s for 2.75M grams at sf1), while arrays_zip +
-    # explode + concat_ws stay in whole-stage codegen (2.3 s same
-    # input). Gram multiset per doc is identical: slice j of length
-    # size-n+1 contributes token i+j-1 to gram i.
-    zipped = F.expr(
-        f"CASE WHEN size(__toks__) >= {n} THEN arrays_zip("
-        + ", ".join(
-            f"slice(__toks__, {j + 1}, size(__toks__) - {n - 1})" for j in range(n)
-        )
-        + ") ELSE array() END"
-    )
-    grams = toked.select(F.col(id_col), F.explode(zipped).alias("__g__")).select(
-        F.col(id_col),
-        F.concat_ws(
-            " ", *[F.col("__g__").getField(str(j)) for j in range(n)]
-        ).alias("__gram__"),
-    )
+    # grams from the one codegen builder (parse.ngram_windows)
+    grams = toked.select(
+        F.col(id_col), F.explode(ngram_windows(F.col("__toks__"), n)).alias("__g__")
+    ).select(F.col(id_col), ngram_text(F.col("__g__"), n).alias("__gram__"))
     if hash_grams:
         grams = grams.withColumn("__gram__", F.xxhash64("__gram__"))
     per_gram = grams.groupBy(id_col, "__gram__").agg(F.count(F.lit(1)).alias("__c__"))

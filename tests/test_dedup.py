@@ -422,21 +422,3 @@ def test_jaccard_hot_items_lazy_audit(spark, docs_df):
     df_counts = Counter(tok for s in _token_sets().values() for tok in s)
     want = {item: n for item, n in df_counts.items() if n > 2}
     assert got == want
-
-
-def test_with_shingles_total_under_predicate_pushdown(spark):
-    """Regression (r5): explode() pushes `size(shingles) > 0` into the
-    same Filter as the size >= n guard; with an unguarded transform the
-    sequence(1, size-n+1) goes DESCENDING through 0 on sub-n-token rows
-    and slice(toks, 0, n) throws at runtime. The CASE-guarded
-    expression must survive empty and short docs."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(0, ["a"]), (1, []), (2, ["a", "b", "c", "d"])],
-        "doc_id long, tokens array<string>",
-    )
-    sh = dedup.with_shingles(df, n=3)
-    grams = sh.select("doc_id", F.explode("shingles").alias("g"))
-    got = sorted(map(tuple, grams.collect()))
-    assert got == [(2, "a b c"), (2, "b c d")]

@@ -142,3 +142,96 @@ def test_min_words_predicate_equivalence(spark):
         r["id"] for r in toked.where(F.size("toks") >= 3).select("id").collect()
     )
     assert cheap == strict
+
+
+# token arrays for the gram builder: empty, 1..5 distinct tokens (so
+# every n in 1..5 meets a shorter, an exactly-n and a longer array),
+# longer arrays with repeated tokens, and a null array
+NGRAM_TOKENS = [
+    [],
+    ["a"],
+    ["a", "b"],
+    ["a", "b", "c"],
+    ["a", "b", "c", "d"],
+    ["a", "b", "c", "d", "e"],
+    ["x", "y", "x", "y", "x", "y", "z"],
+    ["spam"] * 6,
+    ["the", "cat", "sat", "on", "the", "cat", "sat", "again"],
+    None,
+]
+
+
+def _brute_grams(toks, n):
+    toks = toks or []
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.fixture(scope="module")
+def ngram_df(spark):
+    return spark.createDataFrame(
+        list(enumerate(NGRAM_TOKENS)), "doc_id long, tokens array<string>"
+    )
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+@pytest.mark.parametrize("path", ["windows", "shingles", "pushed_filter"])
+def test_ngram_builder_matches_bruteforce(spark, ngram_df, path, n):
+    """Every path to grams equals Python's sliding join, in order:
+    - windows: posexplode(ngram_windows) + ngram_text, the form
+      repetition_stats, bigram_pairs and dsir explode;
+    - shingles: dedup.with_shingles' per-row array (rows with fewer
+      than n tokens are dropped);
+    - pushed_filter: explode() over with_shingles pushes
+      `size(shingles) > 0` into the same Filter as the size >= n guard;
+      the CASE-guarded windows must stay total on empty and short rows
+      (an unguarded slice of negative length throws at runtime)."""
+    from log_project_spark.operators import dedup
+
+    want = {i: _brute_grams(t, n) for i, t in enumerate(NGRAM_TOKENS)}
+    if path == "windows":
+        rows = ngram_df.select(
+            "doc_id",
+            F.posexplode(parse.ngram_windows(F.col("tokens"), n)).alias("pos", "w"),
+        ).select("doc_id", "pos", parse.ngram_text(F.col("w"), n).alias("g"))
+        got = {i: [] for i in want}
+        for r in sorted(rows.collect(), key=lambda r: (r["doc_id"], r["pos"])):
+            got[r["doc_id"]].append(r["g"])
+        assert got == want
+    elif path == "shingles":
+        rows = dedup.with_shingles(ngram_df, n=n).collect()
+        assert {r["doc_id"]: list(r["shingles"]) for r in rows} == {
+            i: g for i, g in want.items() if g
+        }
+    else:
+        grams = dedup.with_shingles(ngram_df, n=n).select(
+            "doc_id", F.explode("shingles").alias("g")
+        )
+        assert sorted(map(tuple, grams.collect())) == sorted(
+            (i, g) for i, gs in want.items() for g in gs
+        )
+
+
+@pytest.mark.parametrize(
+    "op", ["ngram_windows", "with_shingles", "contamination_hits", "repetition_stats"]
+)
+@pytest.mark.parametrize("n", [0, -1])
+def test_ngram_n_below_one_raises(spark, op, n):
+    """No gram of fewer than one token exists. Without the check,
+    with_shingles(n=0) emitted size+1 empty-string shingles per row,
+    contamination_hits(n=0) flagged a document sharing no token with
+    the benchmark, and repetition_stats(n=0) silently returned no rows."""
+    from log_project_spark.operators import decontam, dedup, text_analysis
+
+    df = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (1, "delta epsilon")], "doc_id long, text string"
+    ).withColumn("tokens", parse.word_tokens_col(F.col("text")))
+    calls = {
+        "ngram_windows": lambda: parse.ngram_windows(F.col("tokens"), n),
+        "with_shingles": lambda: dedup.with_shingles(df, n=n),
+        "contamination_hits": lambda: decontam.contamination_hits(
+            df.where("doc_id = 1"), df.where("doc_id = 0"), n=n
+        ),
+        "repetition_stats": lambda: text_analysis.repetition_stats(df, n=n),
+    }
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        calls[op]()

@@ -126,6 +126,49 @@ def test_checkpoint_resume(spark, small_transcripts, tmp_path):
         assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
 
 
+def test_checkpoint_manifest_reads_part_footers(spark, small_transcripts, tmp_path):
+    """Manifests take per-file row counts from the written part files'
+    parquet footers: they equal a read-back groupBy(input_file_name) of
+    every stage, and writing one costs no Spark job beyond the stage's
+    write and the read-back's schema inference."""
+    import os
+
+    from log_project_spark.lineage import CheckpointedRun
+
+    cfg = PipelineConfig(mode="len", window=100, warmup=10, scope="conv_id")
+    root = str(tmp_path / "ckpt")
+    res = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root, compute_tpr=False)
+    for m in res.stage_manifests:
+        read_back = (
+            spark.read.parquet(os.path.join(root, m["stage"], "data"))
+            .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+            .orderBy("file")
+            .collect()
+        )
+        assert m["partitions"] == [{"file": r["file"], "rows": r["rows"]} for r in read_back]
+        assert m["rows"] == sum(r["rows"] for r in read_back) > 0
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    frame = small_transcripts.select("conv_id", "turn_idx", "text")
+    plain = str(tmp_path / "plain")
+    run = CheckpointedRun(spark, str(tmp_path / "stage"), config_payload={})
+    n_stage = jobs("lineage_stage", lambda: run.run_stage("s", lambda: frame))
+    n_plain = jobs(
+        "lineage_plain", lambda: (frame.write.parquet(plain), spark.read.parquet(plain))
+    )
+    assert n_stage == n_plain > 0
+
+
 def test_checkpoint_invalidates_on_config_change(spark, small_transcripts, tmp_path):
     root = str(tmp_path / "ckpt2")
     cfg1 = PipelineConfig(mode="len", window=100, warmup=10)

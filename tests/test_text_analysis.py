@@ -102,13 +102,15 @@ def test_repetition_stats_brute_force(spark):
 
 
 def test_repetition_stats_hash_parity_and_plan(spark):
-    """Hashed-gram scale path == raw-string path, and no shuffle key
-    carries the gram text (16-byte (id, hash) composite only)."""
+    """Hashed-gram scale path == raw-string path, no shuffle key
+    carries the gram text (16-byte (id, hash) composite only), and the
+    grams are built in codegen (no interpreted higher-order lambda)."""
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     a = ta.repetition_stats(docs, n=2, hash_grams=True)
     b = ta.repetition_stats(docs, n=2, hash_grams=False)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     plan = a._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan.lower()
     for ln in plan.splitlines():
         if "Exchange hashpartitioning" in ln:
             inner = ln.split("hashpartitioning(", 1)[1]
