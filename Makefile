@@ -7,13 +7,14 @@ test:
 
 # the calibration/scoring kernels: their oracle, property, streaming,
 # golden-hash, plan, pipeline and run-aggregate (TPR) tests, then the
-# DuckDB gate on the three kernel queries
+# DuckDB gate on every query that runs the walk
 kernels:
 	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
 	  tests/test_calibrate.py tests/test_property.py tests/test_streaming.py \
 	  tests/test_scoring.py tests/test_golden_hashes.py tests/test_plans.py \
 	  tests/test_pipeline.py tests/test_aggregate.py
-	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores
+	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores \
+	  conformal_per_user conformal_pruned fixed_thr_per_user flagship_route
 
 # the gram builder (parse.ngram_windows/ngram_text) and every operator
 # that reads grams, then the DuckDB gate on their queries

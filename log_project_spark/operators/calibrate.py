@@ -221,8 +221,17 @@ def walk_groups(
     No group keys means one global group.
 
     Arrangement: layout="shuffle" hash-repartitions by the group keys
-    (`num_partitions`, default spark.sql.shuffle.partitions) and sorts
-    within partitions by keys + `order_cols`. Global scope is ONE
+    and sorts within partitions by keys + `order_cols`. Without
+    `num_partitions` the exchange carries no count, so AQE sizes it by
+    shuffle bytes: coalescing merges whole reducer partitions (a group
+    is never split) and the sort runs after the coalesced read (groups
+    stay contiguous and ordered). Every reducer partition is one Python
+    task, and each task pays a fixed worker setup cost (PySpark's
+    per-task `importlib.invalidate_caches()` re-reads pyspark.zip's
+    directory, ~0.25 CPU-s on a 4-vCPU host) that dwarfs the kernel on
+    small inputs, so the count follows the data, not
+    spark.sql.shuffle.partitions. An explicit `num_partitions` pins
+    exactly that many reducer partitions. Global scope is ONE
     sequential stream (reference parity, src/stream.py:313-315), so it
     gathers into exactly one partition (upstream stages stay parallel)
     instead of hashing a constant key over N mostly empty reducers.
@@ -257,9 +266,11 @@ def walk_groups(
         arranged = work
     elif not group_keys:
         arranged = work.repartition(1).sortWithinPartitions(*order_cols)
+    elif num_partitions is None:
+        # no count: AQE coalesces this exchange by shuffle bytes (see
+        # docstring); a count would pin it to that many Python tasks
+        arranged = work.repartition(*keys).sortWithinPartitions(*keys, *order_cols)
     else:
-        if num_partitions is None:
-            num_partitions = int(work.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         arranged = work.repartition(num_partitions, *keys).sortWithinPartitions(
             *keys, *order_cols
         )
@@ -342,6 +353,12 @@ def calibrate(
     arrangement). All input columns pass through, so no re-join is
     needed afterwards. `group_keys` overrides the cfg scope (e.g.
     per-user streams on a non-transcript table).
+
+    By default (`num_partitions=None`) AQE sizes the per-group exchange
+    by its shuffle bytes, so a small input runs as one or a few Python
+    tasks instead of spark.sql.shuffle.partitions of them: each Python
+    task costs a fixed worker setup that, on small inputs, outweighs
+    the kernel itself (walk_groups' docstring has the figures).
 
     Fused scoring: when `batch_score_fn` is given (a
     list[str] -> np.ndarray batch scorer, e.g. the broadcast iforest

@@ -41,26 +41,27 @@ from .operators.calibrate import calibrate
 from . import synth
 
 
-def _pgroup_cpu_seconds() -> float | None:
-    """Total CPU seconds (utime+stime) of every live process in this
-    process group — the driver, the local-mode JVM it spawned, and the
-    Python workers the JVM forked all share the group. psutil-free
-    /proc parse (psutil is unavailable here; the reference samples
-    psutil.Process().cpu_percent every 50 events,
-    /root/reference/src/stream.py:345-349 — at engine scale we report
-    the group-wide CPU/wall ratio over the run instead). Returns None
-    off-Linux. Undercounts work done by processes that exited mid-run.
-    """
+def _tree_cpu_seconds() -> float | None:
+    """Total CPU seconds (utime+stime+cutime+cstime) of this process
+    and all its descendants: the driver, the local-mode JVM it spawned,
+    and the Python worker daemon and workers the JVM forked. The tree
+    is walked by parent pid, not process group, because PySpark's
+    worker daemon moves itself into its own group; children reaped
+    during the run count through their parent's cutime/cstime.
+    psutil-free /proc parse (psutil is not a dependency; the reference
+    samples psutil.Process().cpu_percent every 50 events,
+    src/stream.py:345-349 — at engine scale we report the tree-wide
+    CPU/wall ratio over the run instead). Returns None off-Linux."""
     import os
 
     if not os.path.isdir("/proc"):
         return None
     try:
-        pgid = os.getpgrp()
         clk = os.sysconf("SC_CLK_TCK")
-    except Exception:
+    except (OSError, ValueError):
         return None
-    total = 0
+    ticks: dict[int, int] = {}
+    children: dict[int, list[int]] = {}
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
@@ -69,11 +70,16 @@ def _pgroup_cpu_seconds() -> float | None:
                 data = f.read().decode("ascii", "replace")
             # comm (field 2) may contain spaces/parens: split after ')'
             rest = data[data.rindex(")") + 2:].split()
-            if int(rest[2]) != pgid:  # field 5: pgrp
-                continue
-            total += int(rest[11]) + int(rest[12])  # fields 14/15: utime+stime
-        except Exception:
-            continue
+            # field 4: ppid; fields 14-17: utime, stime, cutime, cstime
+            ticks[int(pid)] = sum(int(x) for x in rest[11:15])
+            children.setdefault(int(rest[1]), []).append(int(pid))
+        except (OSError, ValueError, IndexError):
+            continue  # the process exited, or its stat was cut short, mid-read
+    total, stack = 0, [os.getpid()]
+    while stack:
+        pid = stack.pop()
+        total += ticks.get(pid, 0)
+        stack.extend(children.get(pid, ()))
     return total / clk
 
 
@@ -139,7 +145,7 @@ def run_pipeline(
     role_dim = role_dim if role_dim is not None else synth.role_dim(spark)
     tool_dim = tool_dim if tool_dim is not None else synth.tool_dim(spark)
 
-    cpu_start = _pgroup_cpu_seconds()
+    cpu_start = _tree_cpu_seconds()
     t_start = time.perf_counter()
 
     def build_parsed() -> DataFrame:
@@ -211,10 +217,10 @@ def run_pipeline(
     eps = n_total / wall if wall > 0 else float("nan")
     per_event_ms = (wall / n_total) * 1000.0 if n_total else float("nan")
 
-    cpu_end = _pgroup_cpu_seconds()
+    cpu_end = _tree_cpu_seconds()
     cpu_pct_str = "NA"
     if cpu_start is not None and cpu_end is not None and wall > 0:
-        # process-group CPU over wall: >100% means parallel speedup
+        # process-tree CPU over wall: >100% means parallel speedup
         cpu_pct_str = f"{100.0 * (cpu_end - cpu_start) / wall:.1f}"
 
     metrics = {
@@ -271,7 +277,7 @@ def summary_from_result(
         iso_random_state=str(cfg.seed) if cfg.mode == "baseline" else "NA",
         notes=(
             f"{cfg.mode} {cfg.calibration};engine=pyspark;"
-            f"cpu_sampler={'pgroup_delta' if m.get('cpu_pct', 'NA') != 'NA' else 'na'};"
+            f"cpu_sampler={'proc_tree_delta' if m.get('cpu_pct', 'NA') != 'NA' else 'na'};"
             "energy_na"
         ),
         drift_detector="ADWIN" if cfg.drift_detector == "adwin" else "none",

@@ -8,6 +8,7 @@ A single group under scope='global' must match the oracle exactly —
 including drift-reset interplay and both quantile index formulas.
 """
 
+import contextlib
 import math
 import random
 
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 
 from log_project_spark.adwin import Adwin
 from log_project_spark.config import PipelineConfig
+from log_project_spark.operators import scoring
 from log_project_spark.operators.calibrate import calibrate
 from log_project_spark import oracle
 
@@ -264,6 +266,96 @@ def test_needed_cols_projection_matches_full_width(spark):
             t, cfg, batch_score_fn=fake_scorer, batch_score_input="norm_text",
             needed_cols=("no_such_col",),
         )
+
+
+# coalescing targets small enough that AQE leaves several partitions
+_TINY_TARGETS = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1",
+}
+
+
+@contextlib.contextmanager
+def _conf(spark, conf: dict):
+    """Set session confs for the block, then restore (or unset) them."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _uneven_groups(spark, n_groups=60):
+    rng = random.Random(5)
+    rows = [
+        (f"c{c:02d}", i, rng.gauss(0.0, 1.0), [f"w{(c * 7 + i * j) % 23}" for j in range(1, 4)])
+        for c in range(n_groups)
+        for i in range(3 + (c * 37) % 90)
+    ]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, score double, tokens array<string>"
+    )
+
+
+@pytest.mark.parametrize(
+    "run",
+    [calibrate, scoring.with_hash_embed_score, scoring.with_transformer_calibrate],
+    ids=lambda f: f.__name__,
+)
+def test_coalesced_walk_keeps_groups_whole(spark, run):
+    """walk_groups leaves its exchange's partition count to AQE, which
+    merges whole reducer partitions and sorts after the coalesced read.
+    With tiny coalescing targets over 64 hash partitions the walk runs
+    on several coalesced partitions, and every row must be bit-identical
+    to the fixed arrangement: 8 uncoalesced hash partitions, what
+    `num_partitions=8` pins."""
+    df = _uneven_groups(spark)
+    cfg = PipelineConfig(
+        scope="conv_id", mode="transformer", window=30, warmup=5, drift_detector="adwin"
+    )
+
+    def rows(out):
+        return {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
+
+    with _conf(spark, {"spark.sql.shuffle.partitions": "64", **_TINY_TARGETS}):
+        out = run(df, cfg)
+        n_parts = out.rdd.getNumPartitions()
+        got = rows(out)
+    fixed = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    with _conf(spark, fixed):
+        ref = run(df, cfg)
+        assert ref.rdd.getNumPartitions() == 8
+        want = rows(ref)
+    if run is calibrate:
+        assert rows(calibrate(df, cfg, num_partitions=8)) == want
+    assert 1 < n_parts < 64
+    assert len(got) == df.count() and got == want
+
+
+def test_walk_exchange_is_sized_by_aqe(spark):
+    """On a small input at the session's defaults, the executed plan
+    reads the walk's exchange through a coalescing AQEShuffleRead; an
+    explicit num_partitions still pins exactly that many reducer
+    partitions, tiny coalescing targets or not."""
+    df = _uneven_groups(spark)
+    cfg = PipelineConfig(scope="conv_id", drift_detector="none")
+    out = calibrate(df, cfg)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    ex = next(i for i, ln in enumerate(plan) if "Exchange hashpartitioning(conv_id" in ln)
+    assert any("AQEShuffleRead coalesced" in ln for ln in plan[ex - 3:ex]), "\n".join(plan)
+    with _conf(spark, _TINY_TARGETS):
+        for n in (3, 5):
+            assert calibrate(df, cfg, num_partitions=n).rdd.getNumPartitions() == n
 
 
 def test_sleep_ms_paces_kernel():

@@ -88,7 +88,7 @@ def test_summary_row_from_pipeline(spark, result):
 
 def test_summary_commit_provenance_and_cpu(spark, result, monkeypatch):
     """VERDICT r1 #9: commit resolves COMMIT env -> git rev-parse ->
-    NA (src/stream.py:115-128); CPU% comes from the /proc process-group
+    NA (src/stream.py:115-128); CPU% comes from the /proc process-tree
     sampler on Linux."""
     import subprocess
 
@@ -102,9 +102,44 @@ def test_summary_commit_provenance_and_cpu(spark, result, monkeypatch):
     ).decode().strip()
     assert row["commit"] == sha
     assert float(row["CPU_pct"]) > 0  # /proc sampler active in this env
-    assert "cpu_sampler=pgroup_delta" in row["notes"]
+    assert "cpu_sampler=proc_tree_delta" in row["notes"]
     monkeypatch.setenv("COMMIT", "deadbeef")
     assert agg.resolve_commit() == "deadbeef"
+
+
+def test_cpu_sampler_counts_children_in_their_own_process_group():
+    """PySpark's worker daemon calls os.setpgid(0, 0), so the Python
+    workers sit outside the driver's process group. The CPU% sampler
+    walks the process tree instead: a child that leaves the group and
+    burns ~0.3 CPU-s is counted while it runs and, through cutime, once
+    it has been reaped."""
+    import os
+    import subprocess
+    import sys
+
+    from log_project_spark.pipeline import _tree_cpu_seconds
+
+    burn = (
+        "import os, sys, time\n"
+        "os.setpgid(0, 0)\n"
+        "while time.process_time() < 0.3:\n"
+        "    pass\n"
+        "print('done', flush=True)\n"
+        "sys.stdin.read()\n"
+    )
+    before = _tree_cpu_seconds()
+    child = subprocess.Popen(
+        [sys.executable, "-c", burn], stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True
+    )
+    try:
+        assert child.stdout.readline().strip() == "done"
+        assert os.getpgid(child.pid) != os.getpgrp()
+        running = _tree_cpu_seconds()
+    finally:
+        child.communicate()
+    reaped = _tree_cpu_seconds()
+    assert running - before >= 0.25
+    assert reaped - before >= 0.25
 
 
 def test_checkpoint_resume(spark, small_transcripts, tmp_path):
