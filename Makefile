@@ -5,16 +5,19 @@ test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-# the calibration/scoring kernels: their oracle, property, streaming,
-# golden-hash, plan, pipeline and run-aggregate (TPR) tests, then the
-# DuckDB gate on every query that runs the walk
+# the grouped kernels on the walk (calibration, scoring, SemDeDup) and
+# the centroid argmax: their oracle, property, streaming, golden-hash,
+# plan, pipeline and run-aggregate (TPR) tests, then the DuckDB gate on
+# every query that runs the walk or the argmax
 kernels:
 	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
 	  tests/test_calibrate.py tests/test_property.py tests/test_streaming.py \
 	  tests/test_scoring.py tests/test_golden_hashes.py tests/test_plans.py \
-	  tests/test_pipeline.py tests/test_aggregate.py
+	  tests/test_pipeline.py tests/test_aggregate.py tests/test_semdedup.py \
+	  tests/test_similarity.py
 	python scripts/check_entry.py adwin_drift_per_user transformer_calibrate hash_embed_scores \
-	  conformal_per_user conformal_pruned fixed_thr_per_user flagship_route
+	  conformal_per_user conformal_pruned fixed_thr_per_user flagship_route \
+	  semdedup_embeddings ivf_assign ivf_topk
 
 # the gram builder (parse.ngram_windows/ngram_text) and every operator
 # that reads grams, then the DuckDB gate on their queries

@@ -1130,7 +1130,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("__rn__") == 1)
         .drop("__rn__", "fp")
     )
-    toked = exact.withColumn("tokens", dedup.word_tokens(F.col("text")))
+    toked = exact.withColumn("tokens", parse_ops.word_tokens_col(F.col("text")))
     sig = dedup.simhash60(toked.select("doc_id", "tokens"))
     pairs = dedup.hamming_near_pairs(sig, max_hamming=3)
     survivors = dedup.dedup_near(exact, pairs)

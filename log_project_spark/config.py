@@ -14,7 +14,7 @@ seed=20250819. `scope` selects calibration-state sharding:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .adwin import DETECTOR_KINDS
 
@@ -60,11 +60,6 @@ class PipelineConfig:
     embed_dim: int = 32
     embed_window: int = 32
     embed_decay: float = 0.90
-
-    # layout
-    shuffle_partitions: int = 32
-    salt_buckets: int = 16  # salting fan-out for hot conv_ids
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         for name, allowed in CHOICES.items():

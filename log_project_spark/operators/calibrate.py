@@ -52,7 +52,7 @@ from typing import Iterable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
@@ -197,7 +197,7 @@ CALIBRATED_FIELDS = [
 def walk_groups(
     df: DataFrame,
     group_keys: Iterable[str],
-    order_cols: Iterable[str],
+    order_cols: Iterable[str | Column],
     new_fields: list[T.StructField],
     run_group,
     batch_scores=None,
@@ -206,8 +206,9 @@ def walk_groups(
     layout: str = "shuffle",
 ) -> DataFrame:
     """The one transport for batch per-group kernels: arrange `df` so
-    each group's rows are contiguous and ordered by `order_cols`, then
-    stream the partitions through one mapInArrow walk that calls
+    each group's rows are contiguous and ordered by `order_cols` (names
+    or sort expressions, e.g. F.desc_nulls_last("sim")), then stream
+    the partitions through one mapInArrow walk that calls
     `run_group(group, scores)` once per complete group.
 
     `group` is the group's rows as a pyarrow RecordBatch, and `scores`

@@ -40,17 +40,11 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parse import ngram_text, ngram_windows, word_tokens_col
+from .parse import ngram_text, ngram_windows
 
 logger = logging.getLogger(__name__)
 
 SIMHASH_BITS = 60
-
-
-def word_tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens — collapse-then-single-char-split,
-    no higher-order filter() lambda (see operators/parse.py)."""
-    return word_tokens_col(text)
 
 
 def exact_dup_groups(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -13,29 +13,38 @@ default) or closest to (keep="high") the centroid.
 Documented contract (mirrored by the DuckDB oracle):
 
 - clustering: nearest centroid by dot product over a provided unit
-  centroid list (similarity.ivf_assign semantics: strict `>` argmax,
-  ties and all-zero vectors to the lowest index). Centroid FITTING is
-  out of scope here, as for ivf_topk — pass any deterministically
-  derived list.
+  centroid list (similarity.centroid_argmax, shared with ivf_assign:
+  first largest dot, ties and all-zero vectors to the lowest index).
+  Centroid FITTING is out of scope here, as for ivf_topk — pass any
+  deterministically derived list.
 - centroid_sim: round(dot(vec, centroid)/|vec|, round_dp); NULL for a
   zero-norm vector.
 - order within a cluster: (centroid_sim asc nulls last, id asc) for
-  keep="low"; descending centroid_sim for keep="high". The ROUNDED
-  sim is the sort key, so the order is identical across engines.
+  keep="low"; (centroid_sim desc nulls last, id asc) for keep="high".
+  The ROUNDED sim is the sort key, so the order is identical across
+  engines.
 - drop rule: j is dropped iff some i before j in that order has
   round(cos(v_i, v_j), round_dp) >= eps. Zero-norm vectors have NULL
   pairwise sims: they are never dropped and never drop others (and a
   NULL centroid_sim never orders "before" anything, which is
   consistent — their pair sims are NULL anyway).
+- vectors with NaN elements are outside the contract: a NaN pair sim
+  is >= eps under Spark's comparison (impl="expr"), while in NumPy's
+  row max (impl="arrow") it hides the row's other sims and compares
+  False, so the two need not agree on them.
 
 Scale design (100 TB embedding table):
 
-- impl="pandas" (default): one exchange keyed on the INT cluster id
-  (vectors ride as values, never keys), then a per-cluster Arrow
-  kernel: sort, L2-normalize once, and take the upper-triangular max
-  via CHUNKED BLAS matmuls — peak memory O(chunk x n_c), not n_c^2.
-  Compute is O(n_c^2 d) flops per cluster, the method's intrinsic
-  cost; SemDeDup scales K with N precisely so n_c = N/K stays bounded.
+- impl="arrow" (default): the per-cluster kernel runs on
+  calibrate.walk_groups, the package's one grouped-kernel transport:
+  one exchange keyed on the INT cluster id (vectors ride as values,
+  never keys), Spark sorts each cluster by the order above, and the
+  mapInArrow walk hands each cluster to the kernel, which builds its
+  matrix from the Arrow list column's flat values (one reshape),
+  L2-normalizes once, and takes the upper-triangular max via CHUNKED
+  BLAS matmuls — peak memory O(chunk x n_c), not n_c^2. Compute is
+  O(n_c^2 d) flops per cluster, the method's intrinsic cost; SemDeDup
+  scales K with N precisely so n_c = N/K stays bounded.
   `max_cluster_rows` guards the contract: a cluster above the bound
   raises inside the kernel rather than silently thrashing.
 - impl="expr": within-cluster self-join with the sequential Catalyst
@@ -43,9 +52,9 @@ Scale design (100 TB embedding table):
   the oracle-gated query. O(n_c^2) JOIN ROWS through a shuffle, so
   gate/verification scale only (HOF-lambda folds are interpreted;
   CLAUDE.md).
-- the argmax assignment unrolls to a codegen expression tree
-  (similarity.ivf_assign), no shuffle; skew note: a hot cluster is a
-  hot k-means cell — fix the centroids (more clusters), not the
+- the argmax assignment is a greatest() expression, O(K) in plan size
+  (similarity.centroid_argmax), no shuffle; skew note: a hot cluster
+  is a hot k-means cell — fix the centroids (more clusters), not the
   engine; the guard raise makes the condition visible.
 
 Reference parity note: the reference has no embedding/dedup surface
@@ -59,12 +68,17 @@ centroid-distance keep rule and needs no pair-graph post-processing).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from log_project_spark.operators.similarity import _as_double, dot_expr, norm_expr
+from log_project_spark.operators.calibrate import walk_groups
+from log_project_spark.operators.similarity import (
+    _as_double,
+    centroid_argmax,
+    dot_expr,
+    norm_expr,
+)
 
 
 def assign_with_sim(
@@ -75,29 +89,24 @@ def assign_with_sim(
     round_dp: int = 6,
 ) -> DataFrame:
     """(id, vec, cluster int, centroid_sim double): ivf_assign's
-    strict-> argmax fold, retaining the winning dot so the centroid
-    cosine costs no second pass. Centroids are assumed unit-norm (as
-    everywhere in similarity.py), so cos = best_dot / |vec|."""
-    if not centroids:
-        raise ValueError("centroids must be non-empty")
+    argmax (similarity.centroid_argmax), whose winning dot makes the
+    centroid cosine cost no second pass. Centroids are assumed
+    unit-norm (as everywhere in similarity.py), so cos = best_dot /
+    |vec|."""
     e = _as_double(F.col(vec_col))
+    names = [f"__d{i}__" for i in range(len(centroids))]
     dots = [
-        dot_expr(e, F.array(*[F.lit(float(x)) for x in c])).alias(f"__d{i}__")
-        for i, c in enumerate(centroids)
+        dot_expr(e, F.array(*[F.lit(float(x)) for x in c])).alias(n)
+        for n, c in zip(names, centroids)
     ]
     tmp = df.select(F.col(id_col), F.col(vec_col), *dots, norm_expr(e).alias("__n__"))
-    best = F.lit(0)
-    best_val = F.col("__d0__")
-    for i in range(1, len(centroids)):
-        cond = F.col(f"__d{i}__") > best_val
-        best = F.when(cond, F.lit(i)).otherwise(best)
-        best_val = F.when(cond, F.col(f"__d{i}__")).otherwise(best_val)
+    cell, best = centroid_argmax([F.col(n) for n in names])
     return tmp.select(
         F.col(id_col),
         F.col(vec_col),
-        best.cast("int").alias("cluster"),
+        cell.cast("int").alias("cluster"),
         F.round(
-            F.when(F.col("__n__") != 0, best_val / F.col("__n__")), round_dp
+            F.when(F.col("__n__") != 0, best / F.col("__n__")), round_dp
         ).alias("centroid_sim"),
     )
 
@@ -119,7 +128,7 @@ def semdedup(
     keep: str = "low",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
+    impl: str = "arrow",
     round_dp: int = 6,
     max_cluster_rows: int = 2_000_000,
 ) -> DataFrame:
@@ -131,8 +140,8 @@ def semdedup(
         raise ValueError(f"eps must be in (0, 1], got {eps}")
     if keep not in ("low", "high"):
         raise ValueError(f"keep must be 'low' or 'high', got {keep!r}")
-    if impl not in ("pandas", "expr"):
-        raise ValueError(f"impl must be 'pandas' or 'expr', got {impl!r}")
+    if impl not in ("arrow", "expr"):
+        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     base = assign_with_sim(df, centroids, id_col, vec_col, round_dp)
 
     if impl == "expr":
@@ -177,31 +186,17 @@ def semdedup(
             )
         )
 
-    asc = keep == "low"
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("centroid_sim", T.DoubleType()),
-            T.StructField("kept", T.IntegerType()),
-        ]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
+    def run_group(group, _scores):
+        n = group.num_rows
         if n > max_cluster_rows:
             raise ValueError(
-                f"semdedup cluster {int(pdf['cluster'].iloc[0])} has {n} rows "
+                f"semdedup cluster {group.column('cluster')[0].as_py()} has {n} rows "
                 f"> max_cluster_rows={max_cluster_rows}: raise the bound or "
                 "use more centroids (SemDeDup scales K with N)"
             )
-        pdf = pdf.sort_values(
-            ["centroid_sim", id_col],
-            ascending=[asc, True],
-            na_position="last",
-            kind="mergesort",
-        ).reset_index(drop=True)
-        E = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+        # rows arrive sorted by (centroid_sim, id): row i is "before" row j iff i < j
+        E = group.column(vec_col).flatten().to_numpy(zero_copy_only=False)
+        E = E.astype(np.float64).reshape(n, -1)
         norms = np.linalg.norm(E, axis=1)
         zero = norms == 0
         E = E / np.where(zero, 1.0, norms)[:, None]
@@ -216,8 +211,14 @@ def semdedup(
                 S[r, j:] = -np.inf
             dropped = np.round(S.max(axis=1), round_dp) >= eps
             kept[s:e_][dropped] = 0
-        out = pdf[[id_col, "cluster", "centroid_sim"]].copy()
-        out["kept"] = kept
-        return out
+        return [kept]
 
-    return base.groupBy("cluster").applyInPandas(kernel, schema=out_schema)
+    sim_order = F.asc_nulls_last if keep == "low" else F.desc_nulls_last
+    return walk_groups(
+        base,
+        ["cluster"],
+        [sim_order("centroid_sim"), F.asc(id_col)],
+        [T.StructField("kept", T.IntegerType())],
+        run_group,
+        drop=[vec_col],
+    )

@@ -199,6 +199,24 @@ def topk_cosine_lsh(
     return topk_cosine(cand.drop("__bucket__"), query, k, id_col, vec_col)
 
 
+def centroid_argmax(dots: list[Column]) -> tuple[Column, Column]:
+    """(cell, winning_dot) over one dot column per centroid: the index
+    of the first largest dot and that dot. Equal to a strict-`>` fold
+    under Spark semantics (ties and all-zero vectors to the lowest
+    index, NaN largest); a row whose dots are all NULL gets cell 0 and
+    a NULL dot. The winning dot is read back from the array, so it is
+    the cell's dot bit for bit (a zero keeps its sign). The expression
+    is O(K): pass references to projected dot columns, since each one
+    appears in greatest(), in its own test and in the array."""
+    if not dots:
+        raise ValueError("centroids must be non-empty")
+    if len(dots) == 1:
+        return F.lit(0), dots[0]
+    top = F.greatest(*dots)
+    cell = F.coalesce(*[F.when(d == top, F.lit(i)) for i, d in enumerate(dots)], F.lit(0))
+    return cell, F.array(*dots)[cell]
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
@@ -207,18 +225,15 @@ def ivf_assign(
 ) -> DataFrame:
     """IVF coarse quantization: nearest centroid by dot product (unit
     centroids assumed). Centroid list is small -> the argmax unrolls to
-    a greatest() expression tree, fully JVM-side."""
+    a greatest() expression tree (centroid_argmax), fully JVM-side."""
     e = _as_double(F.col(vec_col))
-    dots = [dot_expr(e, F.array(*[F.lit(float(x)) for x in c])).alias(f"__d{i}__") for i, c in enumerate(centroids)]
-    tmp = df.select("*", *dots)
-    best = F.lit(0)
-    best_val = F.col("__d0__")
-    for i in range(1, len(centroids)):
-        cond = F.col(f"__d{i}__") > best_val
-        best = F.when(cond, F.lit(i)).otherwise(best)
-        best_val = F.when(cond, F.col(f"__d{i}__")).otherwise(best_val)
-    out = tmp.withColumn(out_col, best)
-    return out.drop(*[f"__d{i}__" for i in range(len(centroids))])
+    names = [f"__d{i}__" for i in range(len(centroids))]
+    dots = [
+        dot_expr(e, F.array(*[F.lit(float(x)) for x in c])).alias(n)
+        for n, c in zip(names, centroids)
+    ]
+    cell, _ = centroid_argmax([F.col(n) for n in names])
+    return df.select("*", *dots).withColumn(out_col, cell).drop(*names)
 
 
 def ivf_topk(

@@ -32,10 +32,6 @@ STOPWORDS = {
 BPE_ISH_PATTERN = r"\w+|[^\w\s]"
 
 
-def word_tokens(text: Column) -> Column:
-    return word_tokens_col(text)
-
-
 def _n_tokens(norm: Column) -> Column:
     """Token count from the collapsed norm text (split is single-char,
     no filter lambda)."""
@@ -176,7 +172,7 @@ def repetition_stats(
     hash_grams=False keeps the gram string for byte-exact audits and
     the DuckDB oracle."""
     toked = df.select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("__toks__")
+        F.col(id_col), word_tokens_col(F.col(text_col)).alias("__toks__")
     ).where(F.size("__toks__") >= n)
     # grams from the one codegen builder (parse.ngram_windows)
     grams = toked.select(

@@ -97,18 +97,6 @@ def parse_stage(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.where(parse_ops.has_token_col(F.col(text_col)))
 
 
-def score_stage(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Mode dispatch (SURVEY.md M7 / src/stream.py:299-311)."""
-    if cfg.mode == "len":
-        return scoring.with_len_score(df)
-    if cfg.mode == "baseline":
-        model = scoring.fit_baseline_model(df, cfg)
-        return scoring.with_iforest_score(df, model)
-    if cfg.mode == "transformer":
-        return scoring.with_hash_embed_score(df, cfg)
-    raise ValueError(f"unknown mode: {cfg.mode}")
-
-
 @dataclass
 class PipelineResult:
     scored: DataFrame
@@ -170,8 +158,15 @@ def run_pipeline(
                 batch_score_fn=scoring.make_broadcast_scorer(model),
                 batch_score_input="norm_text",
             )
-        scored = score_stage(src, cfg).drop("tokens", "norm_text")
-        return calibrate(scored, cfg, score_col="score", order_cols=("turn_idx",))
+        # mode dispatch (SURVEY.md M7 / src/stream.py:299-311); cfg.mode
+        # is validated on construction
+        if cfg.mode == "len":
+            scored = scoring.with_len_score(src)
+        else:
+            scored = scoring.with_hash_embed_score(src, cfg)
+        return calibrate(
+            scored.drop("tokens", "norm_text"), cfg, score_col="score", order_cols=("turn_idx",)
+        )
 
     run = None
     if checkpoint_root:

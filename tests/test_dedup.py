@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from log_project_spark.operators import dedup
+from log_project_spark.operators.parse import word_tokens_col
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -21,7 +22,7 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs_df(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    return df.withColumn("tokens", dedup.word_tokens(F.col("text")))
+    return df.withColumn("tokens", word_tokens_col(F.col("text")))
 
 
 def _token_sets():
@@ -217,7 +218,7 @@ def test_jaccard_df_cap_drops_hot_items(spark):
 
     rows = [(i, f"hot unique{i} tail{i % 3}") for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
-        "tokens", dedup.word_tokens(F.col("text"))
+        "tokens", word_tokens_col(F.col("text"))
     )
     # cap below the hot token's df: sets become {unique_i, tail_j}
     got = {

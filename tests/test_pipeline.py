@@ -1,6 +1,8 @@
 """End-to-end pipeline invariants: routing partition, fan-out counts,
 text round-trip equality, summary ledger, checkpoint/resume."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,8 +99,9 @@ def test_summary_commit_provenance_and_cpu(spark, result, monkeypatch):
     res, cfg, _ = result
     monkeypatch.delenv("COMMIT", raising=False)
     row = summary_from_result(spark, res, cfg, dataset="synth_transcripts").first()
+    # the repo root this test file sits in: where resolve_commit looks
     sha = subprocess.check_output(
-        ["git", "rev-parse", "--short", "HEAD"], cwd="/root/repo"
+        ["git", "rev-parse", "--short", "HEAD"], cwd=Path(__file__).parents[1]
     ).decode().strip()
     assert row["commit"] == sha
     assert float(row["CPU_pct"]) > 0  # /proc sampler active in this env

@@ -82,6 +82,70 @@ def test_ivf_assignment_is_argmax(spark, emb_df, vectors):
     assert got == {i: int(w) for i, w in enumerate(want)}
 
 
+def _analyzed_chars(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString())
+
+
+def test_centroid_argmax_linear_in_k_and_first_max(spark):
+    """One centroid argmax for ivf_assign and semdedup.assign_with_sim:
+    the plan grows linearly in K (a fold that copies its running max
+    into both branches of every step doubles per centroid, and at K=64
+    it does not compile), ties go to the lowest index, a NULL vector
+    gets cell 0 with a NULL sim, and K=64 equals NumPy's first-max
+    argmax."""
+    from log_project_spark.operators import semdedup as sd
+
+    dim = 8
+    rng = np.random.default_rng(3)
+
+    def unit(n):
+        c = rng.standard_normal((n, dim))
+        return c / np.linalg.norm(c, axis=1, keepdims=True)
+
+    V = rng.standard_normal((40, dim)).astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(V)] + [(len(V), None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    # plan size first, before anything executes: the fold's K=12 plan
+    # is ~50x its K=4 plan, and a K=64 fold takes the driver down
+    c12 = [[float(x) for x in c] for c in unit(12)]
+    for build in (
+        lambda cs: sim.ivf_assign(df, cs),
+        lambda cs: sd.assign_with_sim(df, cs),
+    ):
+        assert _analyzed_chars(build(c12)) < 4 * _analyzed_chars(build(c12[:4]))
+
+    # duplicate centroids: the max is tied, the lowest index wins
+    cents = unit(64)
+    cents[[20, 41, 63]] = cents[5]
+    clist = [[float(x) for x in c] for c in cents]
+    dots = V.astype(np.float64) @ cents.T
+    want = np.argmax(dots, axis=1)  # first max
+    assert (want != 5).any() and {20, 41, 63}.isdisjoint(want.tolist())
+
+    ivf = {r["vec_id"]: r["ivf_cell"] for r in sim.ivf_assign(df, clist).collect()}
+    assert ivf == {**{i: int(w) for i, w in enumerate(want)}, len(V): 0}
+
+    got = {
+        r["vec_id"]: (r["cluster"], r["centroid_sim"])
+        for r in sd.assign_with_sim(df, clist).collect()
+    }
+    assert got.pop(len(V)) == (0, None)  # NULL vector: cell 0, NULL sim
+    assert {i: c for i, (c, _) in got.items()} == {i: int(w) for i, w in enumerate(want)}
+    norms = np.linalg.norm(V.astype(np.float64), axis=1)
+    for i, (_, cs) in got.items():
+        assert cs == pytest.approx(dots[i, want[i]] / norms[i], abs=2e-6)
+
+    # a tie to the lowest index wherever the winner is duplicated
+    tied = [[float(x) for x in c] for c in np.repeat(unit(2), 3, axis=0)]
+    cells = {r["ivf_cell"] for r in sim.ivf_assign(df, tied).collect()}
+    assert cells <= {0, 3}
+
+    # K=1: every row is cell 0
+    one = sd.assign_with_sim(df, clist[:1]).collect()
+    assert {r["cluster"] for r in one} == {0}
+
+
 def test_pandas_matrix_path_matches_expression_path(spark, emb_df, vectors):
     q = [float(x) for x in vectors[3]]
     expr = {r["vec_id"]: r["cos"] for r in sim.cosine_to_query(emb_df, q).select("vec_id", "cos").collect()}
