@@ -1,4 +1,4 @@
-.PHONY: test kernels ngrams gate bench package submit-example
+.PHONY: test kernels ngrams metrics gate bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
@@ -27,6 +27,17 @@ ngrams:
 	  tests/test_text_analysis.py tests/test_lm_score.py tests/test_dsir.py
 	python scripts/check_entry.py minhash_signatures lsh_band_buckets lsh_candidate_pairs \
 	  repetition_stats decontam_hits lm_perplexity dsir_select
+
+# the run-level metrics (the lower-index pick, TPR@FPR, salted
+# aggregates, the pipeline counters) and the streaming fan-out: their
+# tests, then the DuckDB gate on every query that reads them
+metrics:
+	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
+	  tests/test_aggregate.py tests/test_property.py tests/test_pipeline.py \
+	  tests/test_streaming.py
+	python scripts/check_entry.py tpr_at_fpr exact_percentiles exact_percentiles_global \
+	  quality_percentile_filter salted_counts salted_agg_sums conformal_per_user \
+	  conformal_pruned fixed_thr_per_user pipeline_summary
 
 gate:
 	python scripts/check_entry.py

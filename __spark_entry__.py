@@ -27,6 +27,7 @@ from log_project_spark.operators import route as route_ops
 from log_project_spark.operators import scoring
 from log_project_spark.operators import sessionize
 from log_project_spark.operators.calibrate import calibrate
+from log_project_spark.session import local_frame
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -158,35 +159,19 @@ def q_labels_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_conformal_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1/C2/C5 grouped kernel on real keys: per-user sliding conformal
     thresholds over event values, oracle-checked against a window-SQL
-    restatement."""
+    restatement. Also registered as conformal_pruned, which pins the
+    plan of the declarative projection pushdown through the mapInArrow
+    boundary (operators/calibrate.py): the events scan ReadSchema
+    shrinks to the 4 consumed columns (event_type/props never leave
+    the files) and the exchange + Arrow socket carry 4 columns instead
+    of 6. Catalyst cannot prune through a Python map node, so the
+    operator declares the projection (plan-pinned in PLANS.md)."""
     ev = _t(spark, sf_dir, "events")
     cfg = PipelineConfig(
         alpha=0.05, window=100, warmup=10, drift_detector="none", calibration="conformal"
     )
     # needed_cols: the select below consumes 4 columns, so event_type/
-    # props need not ride the exchange and the Arrow socket (the same
-    # declarative pushdown conformal_pruned pins; results identical).
-    out = calibrate(
-        ev, cfg, score_col="value", order_cols=("ts", "event_id"),
-        group_keys=["user_id"], needed_cols=("event_id",),
-    )
-    return out.select("user_id", "event_id", "thr", "is_anom")
-
-
-def q_conformal_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same kernel as conformal_per_user but with needed_cols=() —
-    declarative projection pushdown through the mapInArrow boundary
-    (operators/calibrate.py). Results are identical (same oracle SQL);
-    the PLAN differs: the events scan ReadSchema shrinks to the 4
-    consumed columns (event_type/props never leave the files) and the
-    exchange + Arrow socket carry 4 columns instead of 6. Catalyst
-    cannot prune through a Python map node, so the operator declares
-    the projection — the 100 TB difference between scanning 4 and 6
-    columns of every row (plan-pinned in PLANS.md)."""
-    ev = _t(spark, sf_dir, "events")
-    cfg = PipelineConfig(
-        alpha=0.05, window=100, warmup=10, drift_detector="none", calibration="conformal"
-    )
+    # props need not ride the exchange and the Arrow socket.
     out = calibrate(
         ev, cfg, score_col="value", order_cols=("ts", "event_id"),
         group_keys=["user_id"], needed_cols=("event_id",),
@@ -220,9 +205,7 @@ def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = F.sort_array(F.collect_list("value"))
 
     def pick(p: float) -> F.Column:
-        n = F.size(F.col("__arr"))
-        k = F.floor((F.lit(p) / F.lit(100.0)) * (n - F.lit(1)).cast("double")).cast("int")
-        k = F.greatest(F.lit(0), F.least(k, n - F.lit(1)))
+        k = agg_ops.lower_index_col(p / 100.0, F.size("__arr")).cast("int")
         return F.element_at(F.col("__arr"), k + F.lit(1))
 
     return (
@@ -239,12 +222,15 @@ def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tpr_at_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A3 TPR@1%FPR through aggregate.tpr_at_fpr, the function the job
+    ships, as one (tpr, thr) row."""
     emb = _t(spark, sf_dir, "embeddings")
     scored = emb.select(
         F.element_at("embedding", 1).cast("double").alias("score"),
         (F.col("label") >= 5).cast("int").alias("label"),
     )
-    return agg_ops.tpr_at_fpr_df(scored, "score", "label", target_fpr=0.01)
+    tpr, thr = agg_ops.tpr_at_fpr(scored, "score", "label", target_fpr=0.01)
+    return local_frame(spark, [(tpr, thr)], "tpr double, thr double")
 
 
 def q_eps_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,7 +284,7 @@ def q_filter_combo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
-    return agg_ops.salted_counts(orders, ["o_orderpriority"], salt_col="o_orderkey", buckets=16)
+    return agg_ops.salted_agg(orders, ["o_orderpriority"], [], salt_col="o_orderkey", buckets=16)
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,8 +970,8 @@ def q_exact_percentiles_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the DuckDB gate: whole-column lower-index p50/p95/p99."""
     ev = _t(spark, sf_dir, "events")
     ps = agg_ops.exact_percentile_distributed(ev, "value", [50.0, 95.0, 99.0])
-    return spark.createDataFrame(
-        [(ps[50.0], ps[95.0], ps[99.0])], "p50 double, p95 double, p99 double"
+    return local_frame(
+        spark, [(ps[50.0], ps[95.0], ps[99.0])], "p50 double, p95 double, p99 double"
     )
 
 
@@ -1090,8 +1076,8 @@ def _components_sql(max_hamming: int = 3, n_bands: int = 4) -> str:
 
 
 def q_salted_agg_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted sum/count (decomposable-aggregate variant of
-    salted_counts) — result provably equals the plain groupBy."""
+    """Two-phase salted sum/count (the salted_counts query with a sum
+    column) — result provably equals the plain groupBy."""
     li = _t(spark, sf_dir, "lineitem")
     out = agg_ops.salted_agg(
         li, ["l_returnflag"], ["l_quantity"], salt_col="l_orderkey", buckets=16
@@ -1591,7 +1577,7 @@ _EXTRA_QUERIES = {
     "transformer_calibrate": q_transformer_calibrate,
     "jaccard_pairs_capped": q_jaccard_pairs_capped,
     "embedding_near_dups_lsh": q_embedding_near_dups_lsh,
-    "conformal_pruned": q_conformal_pruned,
+    "conformal_pruned": q_conformal_per_user,
 }
 
 _DUCK_WORD_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x != '')"
@@ -2075,9 +2061,8 @@ def oracle_sql() -> dict[str, str]:
     out["semdedup_embeddings"] = _semdedup_sql()
     out["dsir_select"] = _dsir_sql()
     out["pack_sequences"] = _pack_sql()
-    # identical results to conformal_per_user by construction — the
-    # variant changes only the physical plan (projection pushdown
-    # through the UDF boundary), which the same oracle re-witnesses
+    # the same function as conformal_per_user (q_conformal_per_user),
+    # registered a second time for its pinned plan
     out["conformal_pruned"] = out["conformal_per_user"]
     return out
 

@@ -4,12 +4,16 @@
 The reference's percentile/TPR formulas are EXACT lower-index picks
 over sorted samples — Spark's interpolating `percentile` and sketchy
 `percentile_approx` do NOT match; both reference formulas are
-reproduced index-for-index here. Three distinct quantile index
-formulas coexist by contract (SURVEY.md §7 hard part c):
+reproduced index-for-index here. Two distinct quantile index
+formulas coexist by contract (SURVEY.md §7 hard part c), one helper
+each:
 
-    conformal (C2):  k = max(1, int(round_half_even((1-a)*n))), pick k-th smallest
+    conformal (C2):  k = max(1, int(round_half_even((1-a)*n))), pick k-th
+                     smallest; spelled once, in CalibrationState.run
     fixed/no-calib (C6) and percentile/TPR (A1/A3):
-                     k = int(q*(n-1)), pick (k+1)-th smallest
+                     k = int(q*(n-1)), pick (k+1)-th smallest; spelled
+                     once, as lower_index (Python) / lower_index_col
+                     (Column), which every pick outside oracle.py calls
 
 TPR@FPR (A3) takes the same pick from a distinct-value histogram: one
 aggregate counts the (score, label) pairs, and the driver walks their
@@ -31,21 +35,27 @@ from ..session import local_frame
 # exact lower-index percentile (A1, /root/reference/src/stream.py:138-143)
 # ---------------------------------------------------------------------------
 
+def lower_index(q: float, n: int) -> int:
+    """0-based index of the lower-index q-quantile of n >= 1 sorted
+    values: k = int(q*(n-1)), clamped into [0, n-1]."""
+    return min(max(int(q * (n - 1)), 0), n - 1)
+
+
+def lower_index_col(q: float, n: Column) -> Column:
+    """lower_index over a count Column `n`, as a long: the same double
+    product, floored (int() on these non-negative products), clamped.
+    Callers indexing with element_at cast it to int (ANSI mode)."""
+    k = F.floor(F.lit(q) * (n - F.lit(1)).cast("double"))
+    return F.greatest(F.lit(0), F.least(k, n - F.lit(1)))
+
+
 def exact_percentile_col(values: Column, p: float) -> Column:
     """Aggregate expression: k = int((p/100)*(n-1)) over the sorted
     collected values. collect_list bounds memory by group size — fine
     for run-level metric samples; use exact_percentile_distributed for
     billion-row columns."""
     arr = F.sort_array(F.collect_list(values))
-    n = F.size(arr)
-    k = F.floor((F.lit(p) / F.lit(100.0)) * (n - F.lit(1)).cast("double")).cast("int")
-    k = F.greatest(F.lit(0), F.least(k, n - F.lit(1)))
-    return F.element_at(arr, k + F.lit(1))
-
-
-def _lower_index(p: float, n: int) -> int:
-    """0-based index of the p-th lower-index percentile of n sorted values."""
-    return min(max(int((p / 100.0) * (n - 1)), 0), n - 1)
+    return F.element_at(arr, lower_index_col(p / 100.0, F.size(arr)).cast("int") + F.lit(1))
 
 
 def exact_percentile_distributed(
@@ -116,15 +126,9 @@ def exact_percentile_distributed(
         joined = arranged.join(F.broadcast(offsets), "__pid__").withColumn(
             "__gidx__", F.col("__off__") + F.col("__lrn__")
         )
-        n_col = F.col("__n__")
-
-        def k_expr(p: float):
-            k = F.floor(F.lit(p / 100.0) * (n_col - F.lit(1)).cast("double")).cast("long")
-            return F.greatest(F.lit(0).cast("long"), F.least(k, n_col - F.lit(1)))
-
         cond = F.lit(False)
         for p in ps:
-            cond = cond | (F.col("__gidx__") == k_expr(p))
+            cond = cond | (F.col("__gidx__") == lower_index_col(p / 100.0, F.col("__n__")))
         try:
             rows = joined.where(cond).select("__v__", "__gidx__", "__n__").collect()
         finally:
@@ -139,7 +143,7 @@ def exact_percentile_distributed(
         by_idx = {int(r["__gidx__"]): float(r["__v__"]) for r in rows}
         out = {}
         for p in ps:
-            k = _lower_index(p, n)
+            k = lower_index(p / 100.0, n)
             if k not in by_idx:
                 return None
             out[p] = by_idx[k]
@@ -234,8 +238,7 @@ def percentile_rank_filter(
     rn = F.row_number().over(
         w.orderBy(F.col(score_col).asc_nulls_last(), F.col(tiebreak_col).asc())
     )
-    n = F.count(F.lit(1)).over(w)
-    k = F.floor(F.lit(q / 100.0) * (n - F.lit(1)).cast("double")).cast("long")
+    k = lower_index_col(q / 100.0, F.count(F.lit(1)).over(w))
     ranked = df.withColumn("__rn__", rn.cast("long")).withColumn("__k__", k)
     keep = (
         (F.col("__rn__") <= F.col("__k__"))
@@ -273,7 +276,7 @@ def _tpr_from_histogram(hist: list, p: float) -> tuple[float, float]:
     n = sum(c for _, c in neg)
     if n == 0:
         return float("nan"), float("nan")
-    k = _lower_index(p, n)
+    k = lower_index(p / 100.0, n)
     seen = 0
     for thr, c in neg:
         seen += c
@@ -329,50 +332,9 @@ def tpr_at_fpr(
     return float(tpr_row["tpr"]), thr
 
 
-def tpr_at_fpr_df(
-    scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-    target_fpr: float = 0.01,
-) -> DataFrame:
-    """Single-plan DataFrame variant (SQL-expressible, oracle-checkable).
-    Collects the label-split score arrays into ONE aggregate row — fine
-    at gate/report scale, NOT the 10^12-row path: run_pipeline uses
-    tpr_at_fpr, whose result size is bounded by the distinct (score,
-    label) pairs or, above TPR_HISTOGRAM_CAP of them, by the JVM
-    percentile path."""
-    arrays = scored.agg(
-        F.sort_array(
-            F.collect_list(F.when(F.col(label_col) == 0, F.col(score_col)))
-        ).alias("neg"),
-        F.collect_list(F.when(F.col(label_col) == 1, F.col(score_col))).alias("pos"),
-    )
-    n_neg = F.size(F.col("neg"))
-    k = F.floor(F.lit(1.0 - target_fpr) * (n_neg - F.lit(1)).cast("double")).cast("int")
-    k = F.greatest(F.lit(0), F.least(k, n_neg - F.lit(1)))
-    with_thr = arrays.withColumn("thr", F.element_at(F.col("neg"), k + F.lit(1)).cast("double"))
-    hits = F.size(F.filter(F.col("pos"), lambda x: x >= F.col("thr")))
-    return with_thr.select(
-        (hits.cast("double") / F.size(F.col("pos"))).alias("tpr"),
-        F.col("thr"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # salted two-phase aggregation (north rule skew handling)
 # ---------------------------------------------------------------------------
-
-def salted_counts(
-    df: DataFrame, keys: list[str], salt_col: str = "turn_idx", buckets: int = 16
-) -> DataFrame:
-    """groupBy(keys).count() as a two-phase aggregate with an explicit
-    salt: phase 1 groups on (keys + salt) so a hot key fans out over
-    `buckets` reducers, phase 2 sums the partials. Result provably
-    equals the plain groupBy count."""
-    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(buckets)).alias("__salt__")
-    partial = df.groupBy(*keys, salt).agg(F.count(F.lit(1)).alias("__n__"))
-    return partial.groupBy(*keys).agg(F.sum("__n__").alias("n"))
-
 
 def salted_agg(
     df: DataFrame,
@@ -381,7 +343,11 @@ def salted_agg(
     salt_col: str = "turn_idx",
     buckets: int = 16,
 ) -> DataFrame:
-    """Two-phase salted sum/count for arbitrary decomposable aggregates."""
+    """groupBy(keys) count `n` plus `sum_<c>` per sum column, as a
+    two-phase aggregate with an explicit salt: phase 1 groups on
+    (keys + salt) so a hot key fans out over `buckets` reducers, phase
+    2 sums the partials. Result provably equals the plain groupBy;
+    sum_cols=[] is the salted count."""
     salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(buckets)).alias("__salt__")
     partial = df.groupBy(*keys, salt).agg(
         F.count(F.lit(1)).alias("__n__"),

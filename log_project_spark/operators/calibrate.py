@@ -59,15 +59,9 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..adwin import make_detector
 from ..config import PipelineConfig
+from .aggregate import lower_index
 
 GLOBAL_KEY = "__scope__"
-
-
-def _fixed_threshold(warm: list[float], alpha: float) -> float:
-    """C6 freeze formula: k = int((1-alpha)*(n-1)) (stream.py:354-357)."""
-    ordered = np.sort(warm)
-    k = int((1.0 - alpha) * (len(ordered) - 1))
-    return float(ordered[min(max(k, 0), len(ordered) - 1)])
 
 
 class CalibrationState:
@@ -157,7 +151,8 @@ class CalibrationState:
                 if frozen is None:
                     warm.append(s)
                     if seen >= freeze_at:
-                        frozen = _fixed_threshold(warm, alpha)
+                        # C6 freeze: k = int((1-alpha)*(n-1)) (stream.py:354-357)
+                        frozen = float(np.sort(warm)[lower_index(1.0 - alpha, len(warm))])
                         warm.clear()
                 t = np.inf if frozen is None else frozen
                 anom[i] = frozen is not None and s > t

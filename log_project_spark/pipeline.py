@@ -109,12 +109,9 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     cfg: PipelineConfig,
-    role_dim: DataFrame | None = None,
-    tool_dim: DataFrame | None = None,
     out_dir: str | None = None,
     checkpoint_root: str | None = None,
     dataset_name: str = "transcripts",
-    compute_tpr: bool = True,
 ) -> PipelineResult:
     """Full pipeline. With `checkpoint_root` set, each stage
     materializes with a lineage manifest and re-runs resume after the
@@ -127,12 +124,7 @@ def run_pipeline(
     unless `checkpoint_root` made it a parquet read).
 
     mode="baseline" fits its model on the parsed frame (the parse
-    checkpoint under `checkpoint_root`) and scores the enriched rows.
-    With user dims whose join keys repeat, enrich duplicates rows; the
-    fit does not see those duplicates."""
-    role_dim = role_dim if role_dim is not None else synth.role_dim(spark)
-    tool_dim = tool_dim if tool_dim is not None else synth.tool_dim(spark)
-
+    checkpoint under `checkpoint_root`) and scores the enriched rows."""
     cpu_start = _tree_cpu_seconds()
     t_start = time.perf_counter()
 
@@ -141,7 +133,7 @@ def run_pipeline(
 
     def build_enriched() -> DataFrame:
         src = run.stages[-1].df if run else build_parsed()
-        return enrich_ops.enrich_roles_tools(src, role_dim, tool_dim)
+        return enrich_ops.enrich_roles_tools(src, synth.role_dim(spark), synth.tool_dim(spark))
 
     def build_scored() -> DataFrame:
         src = run.stages[-1].df if run else build_enriched()
@@ -203,7 +195,7 @@ def run_pipeline(
     n_drift = int(flags["n_drift"] or 0)
 
     tpr_str = "NA"
-    if compute_tpr and tpr_src is not None and "label" in scored.columns:
+    if tpr_src is not None and "label" in scored.columns:
         tpr, _thr = agg.tpr_at_fpr(tpr_src, "score", "label", target_fpr=0.01)
         if not math.isnan(tpr):
             tpr_str = f"{tpr:.4f}"

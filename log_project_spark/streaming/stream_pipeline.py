@@ -110,13 +110,13 @@ def scored_stream(
 
 
 def route_foreach_batch(out_dir: str):
-    """foreachBatch sink: route each micro-batch through the same
-    single-pass fan-out as batch mode (one write partitioned by sink,
-    no per-sink rescan — VERDICT r1 #6 applies here too). Per-sink
-    paths are <out_dir>/sink=<name>/."""
-    from ..operators.route import with_sink
+    """foreachBatch sink: each micro-batch appends through batch mode's
+    writer, route.write_fanout (one write partitioned by sink, no
+    per-sink rescan — VERDICT r1 #6 applies here too). Streaming rows
+    carry no `ts`, so the partitions are <out_dir>/sink=<name>/ only."""
+    from ..operators.route import write_fanout
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        with_sink(batch_df).write.mode("append").partitionBy("sink").parquet(out_dir)
+        write_fanout(batch_df, out_dir, mode="append")
 
     return write

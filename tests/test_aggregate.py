@@ -137,9 +137,25 @@ def test_tpr_at_fpr_matches_oracle(spark):
     got_tpr, got_thr = agg.tpr_at_fpr(df, "score", "label", 0.01)
     assert got_thr == pytest.approx(want_thr)
     assert got_tpr == pytest.approx(want_tpr)
-    row = agg.tpr_at_fpr_df(df, "score", "label", 0.01).first()
-    assert row["thr"] == pytest.approx(want_thr)
-    assert row["tpr"] == pytest.approx(want_tpr)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_tpr_query_returns_shipped_tpr_at_fpr(spark, sf):
+    """The declared tpr_at_fpr query, which the DuckDB gate checks, is
+    the job's tpr_at_fpr on the same (score, label) pairs, and both
+    equal the oracle exactly."""
+    import __spark_entry__ as entry
+
+    sf_dir = f"/root/testdata/{sf}"
+    scored = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        F.element_at("embedding", 1).cast("double").alias("score"),
+        (F.col("label") >= 5).cast("int").alias("label"),
+    )
+    shipped = agg.tpr_at_fpr(scored, "score", "label", 0.01)
+    assert [tuple(r) for r in entry.q_tpr_at_fpr(spark, sf_dir).collect()] == [shipped]
+    pairs = [(r["score"], r["label"]) for r in scored.collect()]
+    assert len(set(pairs)) <= agg.TPR_HISTOGRAM_CAP  # the histogram walk ran
+    assert shipped == oracle.tpr_at_fpr([s for s, _ in pairs], [y for _, y in pairs], 0.01)
 
 
 NAN = float("nan")
@@ -272,7 +288,7 @@ def test_salted_counts_equal_plain(spark):
     rows = [("hot" if i % 10 else f"k{i}", i) for i in range(5000)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
     plain = {r["conv_id"]: r["n"] for r in df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    salted = {r["conv_id"]: r["n"] for r in agg.salted_counts(df, ["conv_id"], "turn_idx", 16).collect()}
+    salted = {r["conv_id"]: r["n"] for r in agg.salted_agg(df, ["conv_id"], [], "turn_idx", 16).collect()}
     assert salted == plain
 
 

@@ -148,14 +148,10 @@ def test_cpu_sampler_counts_children_in_their_own_process_group():
 def test_checkpoint_resume(spark, small_transcripts, tmp_path):
     cfg = PipelineConfig(mode="len", window=100, warmup=10, scope="conv_id")
     root = str(tmp_path / "ckpt")
-    r1 = run_pipeline(
-        spark, small_transcripts, cfg, checkpoint_root=root, compute_tpr=False
-    )
+    r1 = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root)
     assert all(not m.get("resumed", False) for m in r1.stage_manifests)
     assert all("partitions" in m and m["rows"] > 0 for m in r1.stage_manifests)
-    r2 = run_pipeline(
-        spark, small_transcripts, cfg, checkpoint_root=root, compute_tpr=False
-    )
+    r2 = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root)
     # second run resumed every stage from its manifest
     assert r2.metrics["events"] == r1.metrics["events"]
     assert r2.metrics["anomalies"] == r1.metrics["anomalies"]
@@ -175,7 +171,7 @@ def test_checkpoint_manifest_reads_part_footers(spark, small_transcripts, tmp_pa
 
     cfg = PipelineConfig(mode="len", window=100, warmup=10, scope="conv_id")
     root = str(tmp_path / "ckpt")
-    res = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root, compute_tpr=False)
+    res = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root)
     for m in res.stage_manifests:
         read_back = (
             spark.read.parquet(os.path.join(root, m["stage"], "data"))
@@ -210,12 +206,12 @@ def test_checkpoint_manifest_reads_part_footers(spark, small_transcripts, tmp_pa
 def test_checkpoint_invalidates_on_config_change(spark, small_transcripts, tmp_path):
     root = str(tmp_path / "ckpt2")
     cfg1 = PipelineConfig(mode="len", window=100, warmup=10)
-    run_pipeline(spark, small_transcripts, cfg1, checkpoint_root=root, compute_tpr=False)
+    run_pipeline(spark, small_transcripts, cfg1, checkpoint_root=root)
     import json, os
     with open(os.path.join(root, "parse", "manifest.json")) as f:
         fp1 = json.load(f)["fingerprint"]
     cfg2 = PipelineConfig(mode="len", window=999, warmup=10)
-    run_pipeline(spark, small_transcripts, cfg2, checkpoint_root=root, compute_tpr=False)
+    run_pipeline(spark, small_transcripts, cfg2, checkpoint_root=root)
     with open(os.path.join(root, "parse", "manifest.json")) as f:
         fp2 = json.load(f)["fingerprint"]
     assert fp1 != fp2
@@ -372,9 +368,7 @@ def test_checkpointed_baseline_metrics_equal_direct_run(spark, baseline_run, tmp
     """Under checkpoint_root the fit reads the parse stage's checkpoint;
     counters and TPR equal the run without a checkpoint."""
     b = baseline_run
-    res = run_pipeline(
-        spark, b.transcripts, b.cfg, checkpoint_root=str(tmp_path / "ckpt"), compute_tpr=True
-    )
+    res = run_pipeline(spark, b.transcripts, b.cfg, checkpoint_root=str(tmp_path / "ckpt"))
     keys = ("events", "anomalies", "drifts", "tpr_at_1pct_fpr")
     assert {k: res.metrics[k] for k in keys} == {k: b.res.metrics[k] for k in keys}
     assert res.metrics["tpr_at_1pct_fpr"] != "NA"

@@ -103,7 +103,7 @@ def test_parse_stage_stays_jvm_side(spark):
 
 def test_salted_agg_is_two_phase(spark):
     t = synth.transcripts(spark, 1000, n_convs=10)
-    out = agg.salted_counts(t, ["conv_id"], "turn_idx", 8)
+    out = agg.salted_agg(t, ["conv_id"], [], "turn_idx", 8)
     opt = _optimized(out)
     # two Aggregate nodes: (keys+salt) partial then keys final; the
     # optimizer inlines the __salt__ alias into a grouping expression

@@ -6,12 +6,15 @@ from its checkpoint at any split points must equal one run."""
 
 import math
 import pickle
+import random
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from log_project_spark import oracle
 from log_project_spark.adwin import Adwin
+from log_project_spark.operators.aggregate import lower_index, lower_index_col
 from log_project_spark.operators.calibrate import CalibrationState
 
 
@@ -133,6 +136,54 @@ def test_exact_percentile_properties(samples, p):
     v = oracle.exact_percentile(samples, p)
     assert v in samples  # exact pick, never interpolated
     assert min(samples) <= v <= max(samples)
+
+
+# quantiles at and next to both ends of [0, 1] and between them (p50,
+# p95 and p99, and the 1%-FPR TPR threshold among them); n covers
+# every sample size up to 300
+LOWER_INDEX_QS = [0.0, 1e-12, 0.01, 0.5, 0.93, 0.95, 0.99, 1.0 - 1e-12, 1.0]
+LOWER_INDEX_NS = range(1, 301)
+
+
+def _p_and_alpha(q: float) -> tuple[float, float]:
+    """The percentile p = 100q (callers pass p/100.0) and the C6 alpha
+    = 1 - q (the freeze passes 1.0 - alpha) for quantile q."""
+    return q * 100.0, 1.0 - q
+
+
+def test_lower_index_picks_equal_oracle():
+    """lower_index at p/100.0 is oracle.exact_percentile's pick, and at
+    1.0 - alpha oracle.fixed_threshold's, over distinct sorted values
+    for every n and q of the grid."""
+    rng = random.Random(12)
+    for n in LOWER_INDEX_NS:
+        ordered = sorted(rng.sample(range(10 * n), n))
+        shuffled = rng.sample(ordered, n)
+        for q in LOWER_INDEX_QS:
+            p, alpha = _p_and_alpha(q)
+            assert ordered[lower_index(p / 100.0, n)] == oracle.exact_percentile(shuffled, p)
+            assert ordered[lower_index(1.0 - alpha, n)] == oracle.fixed_threshold(shuffled, alpha)
+
+
+def test_lower_index_col_equals_lower_index(spark):
+    """The Column pick, over a long count and an int size, equals the
+    Python pick for every n of the grid and every double a caller
+    passes for its qs."""
+    qs = set(LOWER_INDEX_QS)
+    for q in LOWER_INDEX_QS:
+        p, alpha = _p_and_alpha(q)
+        qs |= {p / 100.0, 1.0 - alpha}
+    qs = sorted(qs)
+    ns = spark.range(LOWER_INDEX_NS.start, LOWER_INDEX_NS.stop).select(F.col("id").alias("n"))
+    rows = ns.select(
+        "n",
+        *[lower_index_col(q, F.col("n")).alias(f"long{i}") for i, q in enumerate(qs)],
+        *[lower_index_col(q, F.col("n").cast("int")).alias(f"int{i}") for i, q in enumerate(qs)],
+    ).collect()
+    assert len(rows) == len(LOWER_INDEX_NS)
+    for r in rows:
+        for i, q in enumerate(qs):
+            assert r[f"long{i}"] == r[f"int{i}"] == lower_index(q, r["n"]), (q, r["n"])
 
 
 @settings(max_examples=40, deadline=None)
