@@ -1,4 +1,4 @@
-.PHONY: test kernels ngrams metrics gate bench package submit-example
+.PHONY: test kernels ngrams metrics curation gate bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
@@ -38,6 +38,19 @@ metrics:
 	python scripts/check_entry.py tpr_at_fpr exact_percentiles exact_percentiles_global \
 	  quality_percentile_filter salted_counts salted_agg_sums conformal_per_user \
 	  conformal_pruned fixed_thr_per_user pipeline_summary
+
+# the curation operators (sampling, dedup, similarity, text analysis,
+# keep-last, parse) and the declared queries that call them: their
+# tests, then the DuckDB gate on those queries
+curation:
+	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
+	  tests/test_sampling.py tests/test_dedup.py tests/test_similarity.py \
+	  tests/test_text_analysis.py tests/test_aggregate.py tests/test_parse.py
+	python scripts/check_entry.py parse_norm_documents parse_pandas_udf parse_mask_events \
+	  fingerprint flagship_route iforest_scores token_count_regex ngram_jaccard_pairs \
+	  ann_cosine_topk keep_last_per_user corpus_curation lang_id_heuristic quality_score \
+	  quality_percentile_filter stratified_sample_k token_budget_cap token_budget_ranked \
+	  sample_fraction_det sample_by_stratum mixing_weights hash_split_counts
 
 gate:
 	python scripts/check_entry.py

@@ -363,13 +363,14 @@ def salted_agg(
 # report-shaping operators (A6/A7/O2/O8)
 # ---------------------------------------------------------------------------
 
-def keep_last(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+def keep_last(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
     """Latest row per key (reference keep-last dedup,
-    scripts/make_readme_table.py:86-90) — window row_number, not
+    scripts/make_readme_table.py:86-90) — window row_number over
+    `order_cols`, each descending (later columns break ties), not
     dropDuplicates, so "last" is well-defined."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
     return (
         df.withColumn("__rn__", F.row_number().over(w))
         .where(F.col("__rn__") == 1)

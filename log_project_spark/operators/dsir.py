@@ -37,8 +37,7 @@ Scale design (100 TB raw corpus):
   (per-partition top-k + driver merge of k rows — bounded by k, no
   global sort shuffle); the k winners broadcast back as a flag join.
   For k beyond driver comfort (~10M), cut at an approximate key
-  quantile instead — documented alternative, same contract shape as
-  sampling.percentile prefilters.
+  quantile instead (documented alternative).
 
 Reference parity note: the reference has no data-selection surface
 (verified by reading every module under /root/reference/src/ --

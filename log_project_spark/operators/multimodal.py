@@ -80,27 +80,3 @@ def extract_features(
             )
 
     return media.select("media_id", "blob").mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning (pure metadata math, Catalyst-side): target
-    dims preserving aspect ratio; the byte-level resample would run in
-    the same mapInPandas slot as extract_features."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest(F.col("width"), F.col("height")).cast("double"),
-    )
-    return media.withColumn("target_w", F.ceil(F.col("width") * scale).cast("int")).withColumn(
-        "target_h", F.ceil(F.col("height") * scale).cast("int")
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for video-kind rows: explode deterministic
-    sample timestamps (metadata only; decode happens in the UDF slot)."""
-    n_frames = F.greatest((F.col("duration_ms") / every_ms).cast("int"), F.lit(1))
-    return (
-        media.where(F.col("kind") == "video")
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
-        .withColumn("frame_ms", F.col("frame_idx") * every_ms)
-    )

@@ -110,12 +110,6 @@ def norm_text_col(text: Column) -> Column:
     return F.btrim(F.regexp_replace(_masked_unstripped(text), r"\s+", " "), F.lit(" "))
 
 
-def with_normalized_text(
-    df: DataFrame, text_col: str = "text", out_col: str = "norm_text"
-) -> DataFrame:
-    return df.withColumn(out_col, norm_text_col(F.col(text_col)))
-
-
 def ws_collapsed_col(text: Column) -> Column:
     """Lowercased text with runs of whitespace collapsed to single
     spaces and ends trimmed (NO masking) — the 'norm' form the

@@ -21,14 +21,11 @@ flip a boundary row.
 Scale notes: `sample_fraction` and `hash_split` are pure scan-side
 filters — zero shuffle, no driver state; they compose with partition
 pruning and stay in whole-stage codegen (md5 is a JVM intrinsic
-expression). `stratified_sample_exact` is one shuffle on the strata
-columns (payload rides as value); within each stratum the window sort
-is spillable. Its per-stratum sort is the honest cost of EXACT k — for
-k << |stratum| pass `prefilter_fraction` to pre-thin rows by hash
-before the window (selection is unchanged because the window order is
-the same hash the prefilter cuts on — it keeps a superset of the
-winners as long as every stratum retains >= k rows; sizing guidance in
-the docstring).
+expression). `stratified_sample_exact` and `token_budget_cap` are one
+shuffle on the strata columns (payload rides as value) and a spillable
+window sort per stratum; the stratified window's row_number() <= k
+filter is pruned map-side by Spark's `WindowGroupLimit`, so only k rows
+per stratum per input partition reach the exchange.
 """
 
 from __future__ import annotations
@@ -138,8 +135,6 @@ def stratified_sample_exact(
     k: int,
     key_col: str,
     seed: int = 20250819,
-    prefilter_fraction: float | str | None = None,
-    margin: float = 4.0,
 ) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, chosen as the k
     smallest hash60(key) values within each stratum (ties broken by
@@ -147,178 +142,21 @@ def stratified_sample_exact(
     sampling, identical at any parallelism and restatable as a SQL
     ROW_NUMBER window (the DuckDB oracle).
 
-    One exchange, keyed on the strata columns only. Because the window
-    ranks by the same hash a prefilter cuts on, ANY hash-threshold
-    prefilter that keeps >= min(k, |stratum|) rows in a stratum
-    preserves the winners exactly (a threshold keeps the bottom of the
-    hash order intact). Three modes:
-
-    - `prefilter_fraction=None` (default): shuffle the whole input —
-      but NOT the whole sort: the row_number()<=k filter triggers
-      Spark's rank-limit pushdown (`WindowGroupLimit`, plan-verified in
-      PLANS.md), which prunes to k rows per stratum PER MAP PARTITION
-      before the exchange, so the shuffle and the reduce-side sort see
-      at most k * n_input_partitions rows per stratum, not |stratum|.
-      Exact, and already scale-tolerable.
-    - `prefilter_fraction=q` (float): drop hash >= floor(q * 2^60)
-      before the shuffle. Caller-sized; exact while every stratum
-      retains >= k survivors (expected q * |stratum|).
-    - `prefilter_fraction="auto"`: thins further — worthwhile when the
-      input has many thousands of partitions (k * n_partitions rows per
-      stratum is still big) or scans are expensive. One narrow
-      count-per-stratum pass sizes a PER-STRATUM threshold
-      min(1, margin * k / n_s) (strata with n_s <= margin * k are not
-      cut at all, so undersized strata keep every row), broadcast-joins
-      it, prefilters, windows — the sort then touches ~margin * k rows
-      per stratum instead of |stratum| — and VERIFIES the per-stratum
-      output counts against min(k, n_s), raising if the binomial tail
-      ever bites (P < e^{-k(margin-1)^2/(2 margin)}, ~1e-10 at k=20,
-      margin=4; raise `margin` if it does). Auto mode persists the
-      result and runs that verification count as an extra action; the
-      returned frame is the persisted, verified sample. #strata is
-      assumed driver-collectable (it is the groupBy cardinality)."""
+    One exchange, keyed on the strata columns only, but not the whole
+    sort: the row_number() <= k filter triggers Spark's rank-limit
+    pushdown (`WindowGroupLimit`, plan-verified in PLANS.md), which
+    prunes to k rows per stratum PER MAP PARTITION before the
+    exchange, so the shuffle and the reduce-side sort see at most
+    k * n_input_partitions rows per stratum, not |stratum|."""
     from pyspark.sql import Window
 
     h = hash60(F.col(key_col), seed)
-    counts = None
-    out = df
-    if prefilter_fraction == "auto":
-        if margin <= 1.0:
-            raise ValueError(f"margin must be > 1, got {margin}")
-        counts = df.groupBy(*strata_cols).agg(F.count(F.lit(1)).alias("__n__"))
-        thr = counts.select(
-            *strata_cols,
-            (
-                F.least(F.lit(1.0), F.lit(float(margin * k)) / F.col("__n__"))
-                * F.lit(float(1 << HASH_BITS))
-            )
-            .cast("long")
-            .alias("__thr__"),
-        )
-        out = df.join(F.broadcast(thr), strata_cols).where(h < F.col("__thr__")).drop("__thr__")
-    elif prefilter_fraction is not None:
-        out = out.where(h < F.lit(fraction_threshold(prefilter_fraction)))
     w = Window.partitionBy(*strata_cols).orderBy(h.asc(), F.col(key_col).asc())
-    # select(*df.columns): the auto-mode broadcast join moves the join
-    # keys to the front of the schema — restore the input column order
-    # so every mode returns an identical schema (ADVICE r4)
-    result = (
-        out.withColumn("__srn__", F.row_number().over(w))
+    return (
+        df.withColumn("__srn__", F.row_number().over(w))
         .where(F.col("__srn__") <= k)
-        .select(*df.columns)
+        .drop("__srn__")
     )
-    if counts is not None:
-        result = result.persist()
-        got = {
-            tuple(r[c] for c in strata_cols): r["__g__"]
-            for r in result.groupBy(*strata_cols)
-            .agg(F.count(F.lit(1)).alias("__g__"))
-            .collect()
-        }
-        want = {
-            tuple(r[c] for c in strata_cols): min(k, r["__n__"])
-            for r in counts.collect()
-        }
-        if got != want:
-            result.unpersist()
-            short = {s: (got.get(s, 0), n) for s, n in want.items() if got.get(s, 0) != n}
-            raise RuntimeError(
-                "stratified_sample_exact(auto): prefilter left strata short of k "
-                f"(got, want) per stratum: {short} — raise margin (currently {margin})"
-            )
-    return result
-
-
-def ranked_budget_prefilter(
-    df: DataFrame,
-    budget: float,
-    strata_cols: list[str],
-    weight_col: str,
-    order_col: str,
-    descending: bool = True,
-    margin: float = 4.0,
-    bins: int = 1024,
-) -> tuple[DataFrame, DataFrame]:
-    """Counted `order_col`-threshold pre-cut for RANKED budget filling
-    (the scale path behind `token_budget_cap(order_col=..,
-    prefilter='auto')`; exposed for plan tests and advanced callers).
-
-    Returns (survivors, thr): `survivors` is df restricted, per cut
-    stratum (total weight > margin * budget, non-constant order_col),
-    to the best-ranked rows whose bucketed cumulative weight first
-    reaches margin * budget — an exact ranked-order prefix, because
-    the equal-width bucket index is weakly monotone in order_col and
-    the filter reuses the very bucket expression the histogram
-    counted, so survivor weight >= margin * budget BY CONSTRUCTION.
-    Uncut strata pass through whole. `thr` is the broadcast-size
-    cut-strata frame (strata_cols, __lo__, __hi__, __tb__, __cut__)
-    for downstream verification. Two narrow aggregation passes over
-    df (per-stratum stats, then a (stratum, bucket) weight histogram
-    whose per-stratum cumulation window touches <= `bins` rows)."""
-    from pyspark.sql import Window
-
-    if margin <= 1.0:
-        raise ValueError(f"margin must be > 1, got {margin}")
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2, got {bins}")
-    target = F.lit(float(margin * budget))
-    oc = F.col(order_col).cast("double")
-    stats = df.groupBy(*strata_cols).agg(
-        F.sum(F.col(weight_col)).alias("__w__"),
-        F.min(oc).alias("__lo__"),
-        F.max(oc).alias("__hi__"),
-        F.sum(F.col(order_col).isNull().cast("long")).alias("__nn__"),
-    )
-    cut_stats = stats.where(
-        (F.col("__w__") > target) & (F.col("__hi__") > F.col("__lo__"))
-    ).select(*strata_cols, "__lo__", "__hi__", "__nn__")
-    null_strata = cut_stats.where(F.col("__nn__") > 0).limit(5).collect()
-    if null_strata:
-        bad = [tuple(r[c] for c in strata_cols) for r in null_strata]
-        raise ValueError(
-            "token_budget_cap(auto, ranked): order_col has NULLs in cut "
-            f"strata {bad} — NULL rank order is engine-dependent; filter "
-            "or impute order_col first"
-        )
-
-    def bucket_of(col_lo: Column, col_hi: Column) -> Column:
-        # weakly monotone in order_col (every IEEE op preserves
-        # monotonicity), so {bucket >= t} is a ranked-order prefix
-        raw = F.floor((oc - col_lo) / (col_hi - col_lo) * F.lit(float(bins)))
-        return F.least(F.lit(bins - 1), F.greatest(F.lit(0), raw)).cast("int")
-
-    edges = cut_stats.select(*strata_cols, "__lo__", "__hi__")
-    hist = (
-        df.join(F.broadcast(edges), strata_cols)  # cut strata only
-        .select(
-            *strata_cols,
-            bucket_of(F.col("__lo__"), F.col("__hi__")).alias("__b__"),
-            F.col(weight_col).alias("__wv__"),
-        )
-        .groupBy(*strata_cols, "__b__")
-        .agg(F.sum("__wv__").alias("__bw__"))
-    )
-    # cumulate bucket weights from the best end; threshold bucket =
-    # the last one needed to reach margin * budget
-    border = F.col("__b__").desc() if descending else F.col("__b__").asc()
-    bw = (
-        Window.partitionBy(*strata_cols)
-        .orderBy(border)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    reach = hist.withColumn("__cumb__", F.sum("__bw__").over(bw)).where(
-        F.col("__cumb__") >= target
-    )
-    tb_pick = (F.max("__b__") if descending else F.min("__b__")).alias("__tb__")
-    tb = reach.groupBy(*strata_cols).agg(tb_pick)
-    thr = edges.join(tb, strata_cols).withColumn("__cut__", F.lit(True))
-    joined = df.join(F.broadcast(thr), strata_cols, "left")
-    b_expr = bucket_of(F.col("__lo__"), F.col("__hi__"))
-    keep_cut = (
-        (b_expr >= F.col("__tb__")) if descending else (b_expr <= F.col("__tb__"))
-    )
-    survivors = joined.where(F.col("__tb__").isNull() | keep_cut).select(*df.columns)
-    return survivors, thr
 
 
 def token_budget_cap(
@@ -328,11 +166,8 @@ def token_budget_cap(
     weight_col: str,
     key_col: str,
     seed: int = 20250819,
-    prefilter: str | None = None,
-    margin: float = 4.0,
     order_col: str | None = None,
     descending: bool = True,
-    bins: int = 1024,
 ) -> DataFrame:
     """Per-stratum weight budgeting: keep the deterministic greedy
     PREFIX of each stratum whose running weight sum stays <= budget.
@@ -360,82 +195,10 @@ def token_budget_cap(
     shape of production data mixing over a quality-scored corpus.
 
     One exchange, keyed on the strata columns only; the running sum is
-    a spillable window over each stratum. Like stratified sampling,
-    the sort of a stratum holding most of a 100 TB table lands on one
-    reducer — `prefilter="auto"` is the scale path, in BOTH modes:
-
-    - Uniform auto: one narrow pass sums each stratum's total weight
-      W_s; rows are pre-cut at hash fraction
-      min(1, margin * budget / W_s) (strata with W_s <= margin *
-      budget are never cut). A hash-threshold cut keeps the bottom of
-      the hash order, so the winning prefix is untouched exactly when
-      the survivors alone already overflow the budget.
-    - Ranked auto (r5, closes VERDICT r4 "What's wrong #2"): the cut
-      must keep a RANKED-order prefix, so it is an `order_col`
-      threshold instead of a hash threshold, sized by a counted
-      histogram pass: per cut stratum (W_s > margin * budget and a
-      non-constant order_col), `order_col` is binned into `bins`
-      equal-width buckets between the stratum's min and max, bucket
-      weights are cumulated from the best end, and the cut keeps the
-      buckets whose cumulative weight first reaches margin * budget.
-      Bucketing is weakly monotone in order_col, so the kept set is
-      exactly a ranked-order prefix, and — because the filter reuses
-      the very bucket expression the histogram counted — survivor
-      weight per cut stratum is >= margin * budget > budget BY
-      CONSTRUCTION, which is precisely the exactness predicate.
-      Strata with a constant order_col cannot be cut on it and fall
-      through whole (their sort cost is irreducible at this layer);
-      NULL order_col values in a cut stratum raise (their rank is
-      engine-dependent). Costs one extra narrow scan vs uniform auto
-      (stats, histogram, then the filtered window).
-
-    Either auto mode VERIFIES exactness per cut stratum with the
-    predicate `sum(survivor weights) > budget` (the winning prefix
-    then lies entirely inside the survivors); a failure raises with
-    guidance instead of silently under-filling. For uniform mode the
-    expected survivor weight is margin * budget and the binomial tail
-    can bite (heavy-tailed weights, tiny margin — the raise path);
-    for ranked mode the construction guarantees the check passes and
-    it stands as defense-in-depth. Auto mode persists the result and
-    runs the verification as an extra small action."""
+    a spillable window over each stratum."""
     from pyspark.sql import Window
 
-    h = hash60(F.col(key_col), seed)
-    if prefilter not in (None, "auto"):
-        raise ValueError(f"prefilter must be None or 'auto', got {prefilter!r}")
-    if prefilter == "auto" and margin <= 1.0:
-        raise ValueError(f"margin must be > 1, got {margin}")
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2, got {bins}")
-
-    target = F.lit(float(margin * budget))
-    out = df
-    thr = None  # broadcast-size frame of cut strata, for verification
-    if prefilter == "auto" and order_col is None:
-        totals = df.groupBy(*strata_cols).agg(F.sum(F.col(weight_col)).alias("__w__"))
-        thr = totals.select(
-            *strata_cols,
-            (
-                F.least(F.lit(1.0), target / F.col("__w__"))
-                * F.lit(float(1 << HASH_BITS))
-            )
-            .cast("long")
-            .alias("__thr__"),
-            (F.col("__w__") > target).alias("__cut__"),
-        )
-        out = (
-            df.join(F.broadcast(thr), strata_cols)
-            .where(h < F.col("__thr__"))
-            .select(*df.columns)  # join moved keys to the front (ADVICE r4)
-            .persist()  # verification + the window both read the survivors
-        )
-    elif prefilter == "auto":
-        out, thr = ranked_budget_prefilter(
-            df, budget, strata_cols, weight_col, order_col,
-            descending=descending, margin=margin, bins=bins,
-        )
-        out = out.persist()
-    order = [h.asc(), F.col(key_col).asc()]
+    order = [hash60(F.col(key_col), seed).asc(), F.col(key_col).asc()]
     if order_col is not None:
         lead = F.col(order_col).desc() if descending else F.col(order_col).asc()
         order = [lead, *order]
@@ -445,36 +208,7 @@ def token_budget_cap(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum(F.col(weight_col)).over(w)
-    result = out.withColumn("__cum__", cum).where(F.col("__cum__") <= budget)
-    if thr is not None:
-        # exactness predicate per CUT stratum: survivors must overflow
-        # the budget (then the true prefix lies entirely below the cut).
-        # Anchor on the thresholds frame, not the survivors: a stratum
-        # whose survivors vanished entirely has NO survivor group to
-        # flag and must still fail (sum 0 <= budget).
-        survivor_w = out.groupBy(*strata_cols).agg(
-            F.sum(F.col(weight_col)).alias("__sw__")
-        )
-        bad = (
-            thr.where(F.col("__cut__"))
-            .join(survivor_w, strata_cols, "left")
-            .select(*strata_cols, F.coalesce(F.col("__sw__"), F.lit(0)).alias("__sw__"))
-            .where(F.col("__sw__") <= budget)
-            .collect()
-        )
-        if bad:
-            out.unpersist()
-            short = {tuple(r[c] for c in strata_cols): r["__sw__"] for r in bad}
-            raise RuntimeError(
-                "token_budget_cap(auto): prefilter survivors no longer overflow "
-                f"the budget for strata {short} — the greedy prefix may extend "
-                f"past the cut; raise margin (currently {margin})"
-            )
-        result = result.select(*df.columns).persist()
-        result.count()  # materialize off the cached survivors
-        out.unpersist()
-        return result
-    return result.drop("__cum__")
+    return df.withColumn("__cum__", cum).where(F.col("__cum__") <= budget).drop("__cum__")
 
 
 def mixing_weights(

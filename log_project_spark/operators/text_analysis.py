@@ -32,7 +32,7 @@ STOPWORDS = {
 BPE_ISH_PATTERN = r"\w+|[^\w\s]"
 
 
-def _n_tokens(norm: Column) -> Column:
+def n_tokens(norm: Column) -> Column:
     """Token count from the collapsed norm text (split is single-char,
     no filter lambda)."""
     return F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
@@ -51,7 +51,7 @@ def stopword_count(norm: Column, words: list[str]) -> Column:
 def with_lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-language stopword-ratio columns lang_score_<lang>."""
     out = df.withColumn("__norm__", ws_collapsed_col(F.col(text_col)))
-    n_tok = _n_tokens(F.col("__norm__"))
+    n_tok = n_tokens(F.col("__norm__"))
     for lang, words in STOPWORDS.items():
         out = out.withColumn(
             f"lang_score_{lang}", stopword_count(F.col("__norm__"), words) / n_tok
@@ -83,7 +83,7 @@ def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     punctuation ratio, stopword ratio, uppercase ratio, digit ratio."""
     text = F.col(text_col)
     norm = ws_collapsed_col(text)
-    n_tok = _n_tokens(norm)
+    n_tok = n_tokens(norm)
     n_chars = F.length(text)
     n_punct = F.regexp_count(text, F.lit(r"[.,!?;:'\"()\[\]{}]"))
     n_upper = F.regexp_count(text, F.lit(r"[A-Z]"))

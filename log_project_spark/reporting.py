@@ -46,7 +46,7 @@ def _with_file_order(summary: DataFrame) -> DataFrame:
 def latest_per_config(summary: DataFrame) -> DataFrame:
     """Keep-last dedup (make_readme_table.py:86-90: OrderedDict
     overwrite == last occurrence wins)."""
-    return keep_last(_with_file_order(summary), REPORT_KEYS, "__order__").drop("__order__")
+    return keep_last(_with_file_order(summary), REPORT_KEYS, ["__order__"]).drop("__order__")
 
 
 def median_collapse(summary: DataFrame) -> DataFrame:

@@ -17,14 +17,23 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-# (query name, one-line property statement, [must-contain], [must-not-contain])
+# (query name, one-line property statement, [must-contain], [must-not-contain]);
+# a "A > B" must-not entry forbids B inside the subtree of the first
+# plan node whose line contains A
 AUDITS = [
     (
         "parse_norm_documents",
-        "pure scan+project: masks/tokenize JVM-side, no Python nodes, "
-        "no exchange (codegen spans appear once AQE finalizes)",
+        "scan+project: masks/tokenize JVM-side, no Python nodes, no hash "
+        "or range exchange; the only exchange is the input spread's "
+        "round-robin, and only the raw-text probe runs below it, so the "
+        "mask chain runs once, above it (codegen spans appear once AQE "
+        "finalizes)",
         ["FileScan parquet"],
-        ["BatchEvalPython", "ArrowEvalPython", "MapInArrow", "Exchange"],
+        [
+            "BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+            "hashpartitioning(", "rangepartitioning(",
+            "RoundRobinPartitioning > regexp_replace",
+        ],
     ),
     (
         "enrich_broadcast",
@@ -133,6 +142,29 @@ AUDITS = [
 ]
 
 
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the first node whose line contains `marker` and of
+    every node indented below it, up to its next sibling."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if marker in line:
+            depth = len(line) - len(line.lstrip(" :|+-"))
+            out = [line]
+            for below in lines[i + 1:]:
+                if len(below) - len(below.lstrip(" :|+-")) <= depth:
+                    break
+                out.append(below)
+            return "\n".join(out)
+    return ""
+
+
+def _present(plan: str, pattern: str) -> bool:
+    if " > " in pattern:
+        node, inner = pattern.split(" > ", 1)
+        return inner in _subtree(plan, node)
+    return pattern in plan
+
+
 def main() -> None:
     import __spark_entry__ as entry
     from log_project_spark.session import get_spark
@@ -150,7 +182,7 @@ def main() -> None:
                 status = f"MISSING `{m}`"
                 failures.append((name, status))
         for m in must_not:
-            if m in plan:
+            if _present(plan, m):
                 status = f"FORBIDDEN `{m}` present"
                 failures.append((name, status))
         # keep the dump readable: cap very long plans

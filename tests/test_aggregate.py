@@ -312,7 +312,7 @@ def test_salted_agg_equal_plain(spark):
 def test_keep_last(spark):
     rows = [("a", 1, "x"), ("a", 3, "z"), ("a", 2, "y"), ("b", 1, "only")]
     df = spark.createDataFrame(rows, "k string, ord int, v string")
-    got = {r["k"]: r["v"] for r in agg.keep_last(df, ["k"], "ord").collect()}
+    got = {r["k"]: r["v"] for r in agg.keep_last(df, ["k"], ["ord"]).collect()}
     assert got == {"a": "z", "b": "only"}
 
 

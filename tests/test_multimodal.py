@@ -1,8 +1,6 @@
-"""Multimodal plumbing: binary columns, Arrow batch decode stub,
-resize/frame-sample planning."""
+"""Multimodal plumbing: binary columns, Arrow batch decode stub."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from log_project_spark.operators import multimodal as mm
 
@@ -32,22 +30,6 @@ def test_extract_features_deterministic(spark, media):
 def test_real_decode_is_stubbed(media):
     with pytest.raises(NotImplementedError):
         mm.extract_features(media, fake=False)
-
-
-def test_resize_plan_preserves_aspect(spark, media):
-    out = mm.resize_plan(media, max_side=64).collect()
-    for r in out:
-        assert max(r["target_w"], r["target_h"]) <= 65  # ceil slack
-        assert r["target_w"] >= 1 and r["target_h"] >= 1
-
-
-def test_frame_sample_plan(spark):
-    docs = spark.createDataFrame([(0, "vid")], "doc_id long, text string")
-    vid = mm.media_table_from_text(docs, "doc_id", "text", kind="video")
-    dur = vid.first()["duration_ms"]
-    frames = mm.frame_sample_plan(vid, every_ms=1000).collect()
-    assert len(frames) == max(dur // 1000, 1)
-    assert [r["frame_ms"] for r in frames] == [i * 1000 for i in range(len(frames))]
 
 
 def test_multimodal_gate_pair_on_non_ascii_and_empty(spark, tmp_path):

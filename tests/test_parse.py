@@ -75,7 +75,11 @@ def test_reference_mini_log_parity(spark):
 
 
 def test_norm_text_rejoin(spark, tricky_df):
-    out = parse.with_normalized_text(tricky_df, out_col="norm_text").orderBy("id").collect()
+    out = (
+        tricky_df.withColumn("norm_text", parse.norm_text_col(F.col("text")))
+        .orderBy("id")
+        .collect()
+    )
     for r, raw in zip(out, TRICKY):
         assert r["norm_text"] == " ".join(oracle.tokenize_line(raw))
 

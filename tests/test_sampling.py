@@ -80,15 +80,6 @@ def test_stratified_small_stratum_keeps_all(spark):
     assert sizes == {"big": 10, "tiny": 3}
 
 
-def test_stratified_prefilter_preserves_selection(spark, docs):
-    base = sampling.stratified_sample_exact(docs, ["lang"], 10, "doc_id")
-    thinned = sampling.stratified_sample_exact(
-        docs, ["lang"], 10, "doc_id", prefilter_fraction=0.6
-    )
-    # 0.6 * min-stratum(64) ~ 38 expected survivors >= k=10: winners intact
-    assert _ids(base) == _ids(thinned)
-
-
 def test_stratified_shuffles_on_strata_only(spark, docs):
     got = sampling.stratified_sample_exact(docs, ["lang"], 20, "doc_id")
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -121,68 +112,6 @@ def test_sample_by_stratum_rebalances(spark, docs):
     # zero shuffle
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def _py_hash60(key, seed):
-    import hashlib
-
-    return int(hashlib.md5(f"{key}|{seed}".encode()).hexdigest()[:15], 16)
-
-
-def test_stratified_auto_prefilter_exact_and_verified(spark, docs):
-    """prefilter_fraction='auto' (the 100 TB path: per-stratum
-    thresholds from a counted pass, ~margin*k rows per stratum reach
-    the sort) returns exactly the default mode's selection."""
-    base = sampling.stratified_sample_exact(docs, ["lang"], 20, "doc_id")
-    auto = sampling.stratified_sample_exact(
-        docs, ["lang"], 20, "doc_id", prefilter_fraction="auto"
-    )
-    assert _ids(base) == _ids(auto)
-    auto.unpersist()
-
-
-def test_stratified_auto_keeps_undersized_strata_whole(spark):
-    rows = [(i, "big") for i in range(400)] + [(1000 + i, "tiny") for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    got = sampling.stratified_sample_exact(
-        df, ["lang"], 10, "doc_id", prefilter_fraction="auto"
-    )
-    sizes = {r["lang"]: r["n"] for r in
-             got.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert sizes == {"big": 10, "tiny": 3}
-    got.unpersist()
-
-
-def test_stratified_auto_raises_when_margin_too_thin(spark):
-    """The verification action must catch a prefilter that left a
-    stratum short of k — margin chosen so the deterministic hash
-    provably undershoots (computed with the same md5 in Python)."""
-    n, seed = 500, 20250819
-    rows = [(i, "s") for i in range(n)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    hashes = sorted(_py_hash60(i, seed) for i in range(n))
-    # find a (k, margin > 1) pair whose threshold provably admits
-    # FEWER than k rows under the deterministic hash layout
-    found = None
-    for k in range(20, 200, 5):
-        for margin in (1.01, 1.02, 1.05, 1.1):
-            thr = int(min(1.0, margin * k / n) * float(1 << 60))
-            if sum(1 for h in hashes if h < thr) < k:
-                found = (k, margin)
-                break
-        if found:
-            break
-    assert found, "no shortfall combo in range — widen the search"
-    k, margin = found
-    with pytest.raises(RuntimeError, match="raise margin"):
-        sampling.stratified_sample_exact(
-            df, ["lang"], k, "doc_id", seed=seed,
-            prefilter_fraction="auto", margin=margin,
-        )
-    with pytest.raises(ValueError, match="margin"):
-        sampling.stratified_sample_exact(
-            df, ["lang"], k, "doc_id", prefilter_fraction="auto", margin=1.0
-        )
 
 
 def test_token_budget_cap_is_greedy_prefix(spark, docs):
@@ -238,94 +167,6 @@ def test_token_budget_cap_ranked_filling(spark, docs):
     assert _ids(got) == want
 
 
-def test_token_budget_ranked_auto_exact(spark, docs):
-    """Ranked auto (r5 scale path: counted order_col histogram pre-cut)
-    returns exactly the non-auto ranked selection. At budget=5000,
-    margin=4 the en/es/fr/zh strata all exceed margin*budget and are
-    genuinely cut; de falls through whole."""
-    base = sampling.token_budget_cap(
-        docs, 5000, ["lang"], "n_chars", "doc_id", seed=42, order_col="n_chars"
-    )
-    auto = sampling.token_budget_cap(
-        docs, 5000, ["lang"], "n_chars", "doc_id", seed=42,
-        order_col="n_chars", prefilter="auto",
-    )
-    assert auto.columns == docs.columns  # ADVICE r4: schema order preserved
-    assert _ids(base) == _ids(auto)
-    auto.unpersist()
-    # ascending variant ("shortest-first") agrees with brute force too
-    asc_auto = sampling.token_budget_cap(
-        docs, 3000, ["lang"], "n_chars", "doc_id", seed=42,
-        order_col="n_chars", descending=False, prefilter="auto",
-    )
-    asc_base = sampling.token_budget_cap(
-        docs, 3000, ["lang"], "n_chars", "doc_id", seed=42,
-        order_col="n_chars", descending=False,
-    )
-    assert _ids(asc_base) == _ids(asc_auto)
-    asc_auto.unpersist()
-
-
-def test_token_budget_ranked_auto_giant_stratum_precut(spark):
-    """The pre-cut must actually thin a giant stratum: survivors reach
-    the window at ~margin*budget weight, not |stratum|, and the bucket
-    filter is visible in the survivors' plan."""
-    n = 20_000
-    rows = [(i, "s", 10 + (i * 7919) % 500) for i in range(n)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, q long")
-    budget, margin = 2_000, 4.0
-    survivors, thr = sampling.ranked_budget_prefilter(
-        df, budget, ["lang"], "q", "q", margin=margin
-    )
-    total_w = df.agg(F.sum("q")).collect()[0][0]
-    surv_w = survivors.agg(F.sum("q")).collect()[0][0]
-    # >= margin*budget by construction, and a tiny slice of the stratum
-    assert surv_w >= margin * budget
-    assert surv_w < total_w * 0.02
-    plan = survivors._jdf.queryExecution().executedPlan().toString()
-    assert "__tb__" in plan  # the bucket-threshold filter survived pruning
-    # end-to-end: auto == non-auto on the same giant stratum
-    base = sampling.token_budget_cap(df, budget, ["lang"], "q", "doc_id", order_col="q")
-    auto = sampling.token_budget_cap(
-        df, budget, ["lang"], "q", "doc_id", order_col="q", prefilter="auto"
-    )
-    assert _ids(base) == _ids(auto)
-    auto.unpersist()
-
-
-def test_token_budget_ranked_auto_constant_order_falls_through(spark):
-    """A heavy stratum whose order_col is constant cannot be cut on it
-    — it must fall through whole and still produce the exact ranked
-    selection (ties broken by hash, then key)."""
-    rows = [(i, "s", 5, 7) for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, w long, q long")
-    base = sampling.token_budget_cap(df, 100, ["lang"], "w", "doc_id", order_col="q")
-    auto = sampling.token_budget_cap(
-        df, 100, ["lang"], "w", "doc_id", order_col="q", prefilter="auto"
-    )
-    assert _ids(base) == _ids(auto) and len(_ids(auto)) == 20
-    auto.unpersist()
-
-
-def test_token_budget_ranked_auto_null_order_raises(spark):
-    rows = [(i, "s", 10, None if i == 7 else i) for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, w long, q long")
-    with pytest.raises(ValueError, match="NULL"):
-        sampling.token_budget_cap(
-            df, 50, ["lang"], "w", "doc_id", order_col="q", prefilter="auto"
-        )
-    with pytest.raises(ValueError, match="margin"):
-        sampling.token_budget_cap(
-            df, 50, ["lang"], "w", "doc_id", order_col="q",
-            prefilter="auto", margin=1.0,
-        )
-    with pytest.raises(ValueError, match="bins"):
-        sampling.token_budget_cap(
-            df, 50, ["lang"], "w", "doc_id", order_col="q",
-            prefilter="auto", bins=1,
-        )
-
-
 def test_token_budget_cap_partition_invariant(spark, docs):
     a = _ids(sampling.token_budget_cap(docs, 5000, ["lang"], "n_chars", "doc_id"))
     b = _ids(sampling.token_budget_cap(docs.repartition(9), 5000, ["lang"], "n_chars", "doc_id"))
@@ -346,44 +187,6 @@ def test_sample_by_stratum_join_path_matches_case_path(spark, docs):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan and "Exchange hashpartitioning" not in plan
-
-
-def test_token_budget_cap_auto_prefilter_exact(spark, docs):
-    """auto mode (counted per-stratum hash cut, survivors-overflow
-    verification) returns exactly the default selection."""
-    base = sampling.token_budget_cap(docs, 5000, ["lang"], "n_chars", "doc_id", seed=42)
-    auto = sampling.token_budget_cap(
-        docs, 5000, ["lang"], "n_chars", "doc_id", seed=42, prefilter="auto"
-    )
-    assert _ids(base) == _ids(auto)
-    auto.unpersist()
-    with pytest.raises(ValueError, match="margin"):
-        sampling.token_budget_cap(
-            docs, 5000, ["lang"], "n_chars", "doc_id", prefilter="auto", margin=0.5
-        )
-    with pytest.raises(ValueError, match="prefilter"):
-        sampling.token_budget_cap(
-            docs, 5000, ["lang"], "n_chars", "doc_id", prefilter="bogus"
-        )
-
-
-def test_token_budget_cap_auto_raises_on_underflow(spark):
-    """If the cut survivors no longer overflow the budget the greedy
-    prefix might extend past the cut — the verification must raise.
-    Construct it deterministically: one huge-weight row near the top
-    of the hash order inflates W_s (thin cut) while the surviving
-    rows' weights stay tiny."""
-    n, seed = 400, 20250819
-    hashes = {i: _py_hash60(i, seed) for i in range(n)}
-    top = max(hashes, key=lambda i: hashes[i])  # cut first, never kept
-    rows = [(i, "s", 1_000_000 if i == top else 1) for i in range(n)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, w long")
-    # W_s ~ 1e6; budget 300: threshold fraction ~ margin*300/1e6 ~ 0.12%
-    # of hash space -> ~0 tiny-weight survivors, sum << budget
-    with pytest.raises(RuntimeError, match="raise margin"):
-        sampling.token_budget_cap(
-            df, 300, ["lang"], "w", "doc_id", seed=seed, prefilter="auto", margin=4.0
-        )
 
 
 def test_hash60_matches_duckdb(spark, docs):
