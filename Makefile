@@ -1,4 +1,4 @@
-.PHONY: test kernels ngrams metrics curation gate bench package submit-example
+.PHONY: test kernels ngrams metrics curation gate lines bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
@@ -54,6 +54,11 @@ curation:
 
 gate:
 	python scripts/check_entry.py
+
+# code-only lines (comments, docstrings and blank lines excluded) of
+# log_project_spark/ and __spark_entry__.py, per path and in total
+lines:
+	python scripts/code_lines.py
 
 bench:
 	python bench.py

@@ -466,9 +466,13 @@ def q_iforest_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hash_embed_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
-    cfg = PipelineConfig(mode="transformer", scope="global")
-    return scoring.with_hash_embed_score(
-        toked, cfg, tokens_col="tokens", order_cols=("doc_id",)
+    # the transformer-mode kernel with calibration and drift switched
+    # off: only its hash-embed context scores are read
+    cfg = PipelineConfig(
+        mode="transformer", scope="global", calibration="no_calib", drift_detector="none"
+    )
+    return scoring.with_transformer_calibrate(
+        toked, cfg, order_cols=("doc_id",), reset_on_drift=False
     ).select("doc_id", "score")
 
 

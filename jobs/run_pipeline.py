@@ -41,7 +41,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--no-calib", dest="no_calib", action="store_true")
     ap.add_argument("--adwin-delta", type=float, default=0.002)
     ap.add_argument("--no-drift", action="store_true", help="disable ADWIN (fallback detector)")
-    ap.add_argument("--contam", type=float, default=0.01)
+    ap.add_argument(
+        "--contam", type=float, default=0.01,
+        help="accepted for reference-CLI parity; has no effect (the score is "
+        "-score_samples, which contamination does not change)",
+    )
     ap.add_argument("--seed", type=int, default=20250819)
     ap.add_argument("--scope", choices=["conv_id", "global"], default="conv_id")
     ap.add_argument("--out-dir", default="", help="fan-out sink root (anomalous/drifting/nominal)")
@@ -111,7 +115,6 @@ def main(argv: list[str] | None = None) -> None:
         drift_detector="none" if args.no_drift else "adwin",
         adwin_delta=args.adwin_delta,
         mode=args.mode,
-        contamination=args.contam,
         seed=args.seed,
         sleep_ms=args.sleep_ms,
     )

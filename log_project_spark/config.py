@@ -1,8 +1,10 @@
 """Pipeline configuration.
 
 Defaults mirror the reference CLI (src/stream.py:258-292): alpha=0.01,
-window=5000, warmup=200, adwin_delta=0.002, contamination=0.01,
-seed=20250819. `scope` selects calibration-state sharding:
+window=5000, warmup=200, adwin_delta=0.002, seed=20250819. The
+reference's `--contam` has no field: the score is -score_samples, which
+IsolationForest's contamination does not change (SURVEY.md M2/M3).
+`scope` selects calibration-state sharding:
 
 - "conv_id": grouped state per conversation, ordered by turn_idx —
   the distributed contract (BASELINE.json north_rule).
@@ -49,7 +51,6 @@ class PipelineConfig:
 
     # scoring (src/stream.py:264,289-290)
     mode: str = "baseline"  # "baseline" (iforest) | "transformer" (hash-embed) | "len"
-    contamination: float = 0.01
     seed: int = DEFAULT_SEED
     iso_n_estimators: int = 200
     iso_max_samples: int = 512

@@ -11,11 +11,12 @@ group-sorted partitions that hands each complete group to a callback.
 `calibrate` runs one fresh state per group on it; state is sharded by
 `conv_id` (the north-rule contract) or kept global (scope="global",
 test/parity mode — a single group degenerates to the reference's
-semantics exactly), rows ordered by `turn_idx` inside each group. The
-hash-embed scorer and transformer mode (scoring.with_hash_embed_score,
-scoring.with_transformer_calibrate) run on the same walk, and the
-Structured Streaming kernel (streaming/stream_pipeline.py) drives the
-same state object.
+semantics exactly), rows ordered by `turn_idx` inside each group.
+Transformer mode (scoring.with_transformer_calibrate) runs on the same
+walk: its stateful hash-embed scorer feeds this state inside the one
+kernel, so score and calibration share one exchange and one Arrow round
+trip. The Structured Streaming kernel (streaming/stream_pipeline.py)
+drives the same state object.
 
 Semantics preserved bit-for-bit (see oracle.py for the per-event
 statement):

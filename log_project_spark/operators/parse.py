@@ -13,8 +13,10 @@ never half-matches, ip before num so `10.0.0.5` stays one `<ip>`
 token instead of `<num>.<num>.<num>.<num>`.
 
 Two implementations with identical output:
-- `with_tokens` — native Catalyst expressions (regexp_replace/split/
-  filter): whole-stage codegen, no Python in the hot path. DEFAULT.
+- `tokens_col` / `norm_text_col` / `has_token_col` — native Catalyst
+  expressions (regexp_replace/split): whole-stage codegen, no Python in
+  the hot path. DEFAULT: `pipeline.parse_stage` composes them into the
+  job's parse, and the declared queries parse through it.
 - `with_tokens_pandas` — Arrow-vectorized pandas UDF doing the same
   chain with pandas .str ops, kept for the "grok/regex parse via
   Arrow UDFs" contract surface and as a perf comparison point.
@@ -85,20 +87,6 @@ def has_token_col(text: Column) -> Column:
     and leaves the mask chain evaluated exactly once, above any
     spread exchange."""
     return text.rlike(r"\S")
-
-
-def with_tokens(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "tokens",
-    drop_empty: bool = True,
-) -> DataFrame:
-    """Add masked-token array column; optionally drop token-less rows
-    (the reference skips them: src/log_tokenize.py:28-29)."""
-    out = df.withColumn(out_col, tokens_col(F.col(text_col)))
-    if drop_empty:
-        out = out.where(has_token_col(F.col(text_col)))
-    return out
 
 
 def norm_text_col(text: Column) -> Column:

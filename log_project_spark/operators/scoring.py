@@ -13,9 +13,12 @@ like the reference's mode dispatch (/root/reference/src/stream.py:299-311):
   scoring cost ~ O(unique texts), not O(rows)).
 - transformer: hash-embedding decayed-context cosine scorer
   (src/transformer.py:65-137), one context per conv_id ordered by
-  turn_idx, run on calibrate.walk_groups — the sorted-partition Arrow
-  walk calibrate itself uses (the reference keeps ONE context deque;
-  a single group reproduces that exactly).
+  turn_idx (the reference keeps ONE context deque; a single group
+  reproduces that exactly). The scorer is stateful, so it runs inside
+  the calibration walk: `with_transformer_calibrate` scores and
+  calibrates each group in one `calibrate.walk_groups` kernel, the
+  same sorted-partition Arrow walk calibrate uses — one exchange, one
+  Arrow round trip.
 """
 
 from __future__ import annotations
@@ -216,35 +219,8 @@ class HashEmbedRing:
         return score
 
 
-def with_hash_embed_score(
-    df: DataFrame,
-    cfg: PipelineConfig,
-    tokens_col: str = "tokens",
-    order_cols: tuple[str, ...] = ("turn_idx",),
-    out_col: str = "score",
-) -> DataFrame:
-    """Grouped stateful scorer: one decayed-context stream per
-    conv_id (scope='global' collapses to the reference's single
-    stream), each group run on `calibrate.walk_groups` with a fresh
-    `HashEmbedRing`. `out_col` is the last output column (an input
-    column of that name is replaced). Weight arithmetic kept in float32
-    to match src/transformer.py:111-119 bit-for-bit."""
-
-    def run_group(group, _):
-        ring = HashEmbedRing(cfg.seed, cfg.embed_dim, cfg.embed_window, cfg.embed_decay)
-        # to_pandas shares one str object per distinct token: ~3x faster
-        # than to_numpy, ~30x than to_pylist, and cache hits on identity
-        toks = group.column(tokens_col).to_pandas()
-        return [[ring.score_and_update(t) for t in toks]]
-
-    return walk_groups(
-        df, cfg.scope_keys(), order_cols, [T.StructField(out_col, T.DoubleType())],
-        run_group, drop=[out_col],
-    )
-
-
 # ---------------------------------------------------------------------------
-# integrated transformer-mode kernel: score + conformal + drift + C10
+# transformer mode: score + conformal + drift (+ C10) in one kernel
 # ---------------------------------------------------------------------------
 
 def with_transformer_calibrate(
@@ -252,16 +228,22 @@ def with_transformer_calibrate(
     cfg: PipelineConfig,
     tokens_col: str = "tokens",
     order_cols: tuple[str, ...] = ("turn_idx",),
+    reset_on_drift: bool = True,
 ) -> DataFrame:
-    """Transformer mode, fully integrated: one pass per conv_id on
-    `calibrate.walk_groups`, feeding the hash-embedding context scores
-    into the shared calibration state, with the context reset on drift —
-    the C10 hook the reference documents (src/transformer.py:61-63) but
-    never wires. Each row is scored only when the state pulls it, i.e.
-    after the previous row's drift reset. (score, thr, is_anom,
-    is_drift) are the last output columns."""
+    """Transformer mode in one pass per conv_id (scope='global'
+    collapses to the reference's single stream) on
+    `calibrate.walk_groups`: a fresh `HashEmbedRing` per group feeds its
+    context scores into the shared calibration state. Each row is scored
+    only when the state pulls it, i.e. after the previous row's drift
+    reset. With `reset_on_drift` a drift also drops the context — the
+    C10 hook the reference documents (src/transformer.py:61-63) but
+    never wires into main(); the shipped job passes False to keep the
+    reference's behaviour. `tokens_col` is consumed and dropped, and
+    (score, thr, is_anom, is_drift) are the last output columns."""
 
     def run_group(group, _):
+        # to_pandas shares one str object per distinct token: ~3x faster
+        # than to_numpy, ~30x than to_pylist, and cache hits on identity
         toks = group.column(tokens_col).to_pandas()
         ring = HashEmbedRing(cfg.seed, cfg.embed_dim, cfg.embed_window, cfg.embed_decay)
         score = np.zeros(len(toks))
@@ -272,11 +254,11 @@ def with_transformer_calibrate(
                 yield s
 
         thr, anom, drift = CalibrationState.from_config(cfg).run(
-            feed(), len(toks), on_drift=ring.reset
+            feed(), len(toks), on_drift=ring.reset if reset_on_drift else None
         )
         return score, thr, anom, drift
 
     return walk_groups(
         df, cfg.scope_keys(), order_cols, CALIBRATED_FIELDS, run_group,
-        drop=[f.name for f in CALIBRATED_FIELDS],
+        drop=[tokens_col, *(f.name for f in CALIBRATED_FIELDS)],
     )

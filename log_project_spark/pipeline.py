@@ -2,10 +2,14 @@
 
 Spark-first restatement of the reference's run lifecycle
 (/root/reference/src/stream.py:257-415): the per-event loop becomes a
-declarative plan (parse/enrich are pure Catalyst; scoring is a
-broadcast-model Arrow UDF or a grouped kernel; calibration+drift is
-the grouped stateful kernel), the counters become aggregates, and the
-summary row becomes a one-row append to the summary sink.
+declarative plan (parse/enrich are pure Catalyst; scoring plus
+calibration+drift is ONE grouped kernel per mode on
+`calibrate.walk_groups` — the len score is a Catalyst column it reads,
+the baseline scorer is fused into it, and the stateful transformer
+scorer runs inside it), the counters become aggregates, and the summary
+row becomes a one-row append to the summary sink. `run_pipeline` is one
+linear stage chain, parse -> enrich -> score_calibrate, each stage
+checkpointed under `checkpoint_root` or composed directly.
 
 Single-execution contract: like the reference's one pass over the event
 stream, a `run_pipeline(..., out_dir=...)` call executes the scored plan
@@ -128,53 +132,43 @@ def run_pipeline(
     cpu_start = _tree_cpu_seconds()
     t_start = time.perf_counter()
 
-    def build_parsed() -> DataFrame:
-        return parse_stage(transcripts)
-
-    def build_enriched() -> DataFrame:
-        src = run.stages[-1].df if run else build_parsed()
-        return enrich_ops.enrich_roles_tools(src, synth.role_dim(spark), synth.tool_dim(spark))
-
-    def build_scored() -> DataFrame:
-        src = run.stages[-1].df if run else build_enriched()
-        if cfg.mode == "baseline":
-            # fused path: score inside the calibrate kernel pass (one
-            # Arrow round trip); tokens dropped pre-shuffle, norm_text
-            # rides the shuffle to the scorer then drops. The fit reads
-            # the parsed frame: enrich leaves norm_text unchanged.
-            model = scoring.fit_baseline_model(run.stages[0].df if run else build_parsed(), cfg)
-            return calibrate(
-                src.drop("tokens"),
-                cfg,
-                order_cols=("turn_idx",),
-                batch_score_fn=scoring.make_broadcast_scorer(model),
-                batch_score_input="norm_text",
-            )
-        # mode dispatch (SURVEY.md M7 / src/stream.py:299-311); cfg.mode
-        # is validated on construction
-        if cfg.mode == "len":
-            scored = scoring.with_len_score(src)
-        else:
-            scored = scoring.with_hash_embed_score(src, cfg)
-        return calibrate(
-            scored.drop("tokens", "norm_text"), cfg, score_col="score", order_cols=("turn_idx",)
-        )
-
-    run = None
+    # one linear stage chain: under `checkpoint_root` each stage is
+    # materialized with a lineage manifest (or resumed) and the next one
+    # builds from its parquet read; without it the stages compose directly
     if checkpoint_root:
-        run = CheckpointedRun(
-            spark,
-            checkpoint_root,
-            config_payload={
-                "cfg": cfg.__dict__,
-                "dataset": dataset_name,
-            },
-        )
-        run.run_stage("parse", build_parsed)
-        run.run_stage("enrich", build_enriched)
-        scored = run.run_stage("score_calibrate", build_scored)
+        payload = {"cfg": cfg.__dict__, "dataset": dataset_name}
+        run = CheckpointedRun(spark, checkpoint_root, config_payload=payload)
+        stage, manifests = run.run_stage, run.metrics
     else:
-        scored = build_scored()
+        stage, manifests = (lambda _name, build: build()), list
+    parsed = stage("parse", lambda: parse_stage(transcripts))
+    enriched = stage(
+        "enrich",
+        lambda: enrich_ops.enrich_roles_tools(parsed, synth.role_dim(spark), synth.tool_dim(spark)),
+    )
+
+    def score_calibrate() -> DataFrame:
+        # one grouped kernel per mode, ordered by turn_idx (SURVEY.md M7 /
+        # src/stream.py:299-311; cfg.mode is validated on construction)
+        if cfg.mode == "baseline":
+            # the scorer is fused into the calibrate walk: tokens drop
+            # before the shuffle, norm_text rides it to the scorer and
+            # drops. The fit reads the parsed frame: enrich leaves
+            # norm_text unchanged.
+            model = scoring.fit_baseline_model(parsed, cfg)
+            return calibrate(
+                enriched.drop("tokens"), cfg,
+                batch_score_fn=scoring.make_broadcast_scorer(model), batch_score_input="norm_text",
+            )
+        if cfg.mode == "len":
+            return calibrate(scoring.with_len_score(enriched).drop("tokens", "norm_text"), cfg)
+        # the stateful scorer runs inside the calibration walk; the
+        # reference's main() never resets the context on drift (C10)
+        return scoring.with_transformer_calibrate(
+            enriched.drop("norm_text"), cfg, reset_on_drift=False
+        )
+
+    scored = stage("score_calibrate", score_calibrate)
 
     sink_paths: dict = {}
     tpr_src: DataFrame | None = scored
@@ -226,13 +220,9 @@ def run_pipeline(
         "p99_ms": per_event_ms,
     }
 
-    result = PipelineResult(
-        scored=scored,
-        metrics=metrics,
-        sink_paths=sink_paths,
-        stage_manifests=run.metrics() if run else [],
+    return PipelineResult(
+        scored=scored, metrics=metrics, sink_paths=sink_paths, stage_manifests=manifests()
     )
-    return result
 
 
 def summary_from_result(

@@ -9,6 +9,7 @@ including drift-reset interplay and both quantile index formulas.
 """
 
 import contextlib
+import functools
 import math
 import random
 
@@ -305,8 +306,12 @@ def _uneven_groups(spark, n_groups=60):
 
 @pytest.mark.parametrize(
     "run",
-    [calibrate, scoring.with_hash_embed_score, scoring.with_transformer_calibrate],
-    ids=lambda f: f.__name__,
+    [
+        calibrate,
+        functools.partial(scoring.with_transformer_calibrate, reset_on_drift=False),
+        scoring.with_transformer_calibrate,
+    ],
+    ids=["calibrate", "with_transformer_calibrate_no_reset", "with_transformer_calibrate"],
 )
 def test_coalesced_walk_keeps_groups_whole(spark, run):
     """walk_groups leaves its exchange's partition count to AQE, which

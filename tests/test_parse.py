@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from log_project_spark import oracle
 from log_project_spark.operators import parse
+from log_project_spark.pipeline import parse_stage
 
 TRICKY = [
     "2025-08-19 10:01:22 serviceA INFO user 42 connected from 0xDEAD",
@@ -33,20 +34,25 @@ def _collected(df):
     return [(r["id"], list(r["tokens"])) for r in rows]
 
 
+def _tokenized(df):
+    """Every row with its masked tokens, token-less rows kept."""
+    return df.withColumn("tokens", parse.tokens_col(F.col("text")))
+
+
 def test_native_matches_oracle(spark, tricky_df):
-    got = _collected(parse.with_tokens(tricky_df, drop_empty=False))
+    got = _collected(_tokenized(tricky_df))
     want = [(i, oracle.tokenize_line(t)) for i, t in enumerate(TRICKY)]
     assert got == want
 
 
 def test_pandas_udf_matches_native(spark, tricky_df):
-    native = _collected(parse.with_tokens(tricky_df, drop_empty=False))
+    native = _collected(_tokenized(tricky_df))
     udf = _collected(parse.with_tokens_pandas(tricky_df, drop_empty=False))
     assert native == udf
 
 
 def test_empty_lines_dropped(spark, tricky_df):
-    kept = parse.with_tokens(tricky_df, drop_empty=True).count()
+    kept = parse_stage(tricky_df).count()
     expected = sum(1 for t in TRICKY if oracle.tokenize_line(t))
     assert kept == expected
 
@@ -54,7 +60,7 @@ def test_empty_lines_dropped(spark, tricky_df):
 def test_mask_order_invariant(spark):
     """hex before num, ip before num (log_tokenize.py:14-16)."""
     df = spark.createDataFrame([(0, "0xAB 10.0.0.5 77")], "id int, text string")
-    toks = parse.with_tokens(df).first()["tokens"]
+    toks = parse_stage(df).first()["tokens"]
     assert list(toks) == ["<hex>", "<ip>", "<num>"]
 
 
@@ -69,7 +75,7 @@ def test_reference_mini_log_parity(spark):
         [(i, ln) for i, ln in enumerate(lines)], "id int, text string"
     )
     got = [toks for _, toks in sorted(
-        (r["id"], list(r["tokens"])) for r in parse.with_tokens(df).collect()
+        (r["id"], list(r["tokens"])) for r in parse_stage(df).collect()
     )]
     assert got == expected
 
@@ -87,7 +93,7 @@ def test_norm_text_rejoin(spark, tricky_df):
 def test_plan_is_native(spark, tricky_df):
     """The default parse path must contain no Python UDF (stays in
     whole-stage codegen)."""
-    plan = parse.with_tokens(tricky_df)._jdf.queryExecution().executedPlan().toString()
+    plan = parse_stage(tricky_df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -110,20 +116,18 @@ ADVERSARIAL = TRICKY + [
 
 
 def test_drop_empty_predicate_equivalence(spark):
-    """r6 optimization: with_tokens(drop_empty=True) filters on the
-    cheap raw-text predicate has_token_col instead of size(tokens)>0
-    (which made Catalyst inline the whole mask-regex chain into the
-    Filter). The two must keep exactly the same rows on adversarial
-    inputs, including NULLs and unicode whitespace."""
+    """r6 optimization: parse_stage filters on the cheap raw-text
+    predicate has_token_col instead of size(tokens)>0 (which made
+    Catalyst inline the whole mask-regex chain into the Filter). The
+    two must keep exactly the same rows on adversarial inputs,
+    including NULLs and unicode whitespace."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(ADVERSARIAL)], "id int, text string"
     )
-    cheap = sorted(
-        r["id"] for r in parse.with_tokens(df, drop_empty=True).select("id").collect()
-    )
+    cheap = sorted(r["id"] for r in parse_stage(df).select("id").collect())
     strict = sorted(
         r["id"]
-        for r in parse.with_tokens(df, drop_empty=False)
+        for r in _tokenized(df)
         .where(F.size("tokens") > 0)
         .select("id")
         .collect()

@@ -375,19 +375,24 @@ def test_checkpointed_baseline_metrics_equal_direct_run(spark, baseline_run, tmp
 
 
 def test_transformer_mode_end_to_end(spark, tmp_path):
-    """The shipped transformer mode with sinks: the written rows
-    partition the parsed input, each conversation's `score` is the
-    hash-embed context oracle over parse_stage's tokens, and
-    is_anom/is_drift are the calibration oracle over the written
-    scores."""
+    """The shipped transformer mode with sinks, on conversations that
+    drift: the written rows partition the parsed input, each
+    conversation's `score` is the hash-embed context oracle over
+    parse_stage's tokens with NO reset on drift (the reference's main()
+    never wires the C10 hook), and is_anom/is_drift are the calibration
+    oracle over the written scores."""
     from log_project_spark import oracle
     from log_project_spark.adwin import Adwin
     from log_project_spark.pipeline import parse_stage
 
-    t = synth.transcripts(spark, 600, n_convs=6, anom_ratio=0.03, seed=5)
+    t = synth.transcripts(
+        spark, 1600, n_convs=2, anom_ratio=0.03, seed=5, hot_frac=0.0,
+        drift_convs_mod=1, drift_from=200,
+    )
     cfg = PipelineConfig(mode="transformer", alpha=0.05, window=50, warmup=10, scope="conv_id")
     out = str(tmp_path / "sinks")
     res = run_pipeline(spark, t, cfg, out_dir=out)
+    assert res.metrics["drifts"] > 0, "fixture must drift"
     cols = ["conv_id", "turn_idx", "score", "is_anom", "is_drift"]
     written = route.read_fanout(spark, out, res.sink_paths).select(*cols).collect()
     tokens = {
@@ -397,7 +402,7 @@ def test_transformer_mode_end_to_end(spark, tmp_path):
     keys = [(r["conv_id"], r["turn_idx"]) for r in written]
     assert len(keys) == len(set(keys)) == len(tokens) == res.metrics["events"]
     assert set(keys) == set(tokens)
-    for conv in sorted({k for k, _ in keys})[:2]:
+    for conv in sorted({k for k, _ in keys}):
         got = sorted((r for r in written if r["conv_id"] == conv), key=lambda r: r["turn_idx"])
         ctx = oracle.HashEmbedContext()
         want = [ctx.score_and_update(tokens[(conv, r["turn_idx"])]) for r in got]

@@ -12,7 +12,7 @@ from pyspark.sql import types as T
 from log_project_spark import synth
 from log_project_spark.operators import aggregate as agg
 from log_project_spark.operators import enrich as enrich_ops
-from log_project_spark.operators import parse as parse_ops
+from log_project_spark.pipeline import parse_stage
 
 SF = "/root/testdata/sf0.001"
 
@@ -95,7 +95,7 @@ def test_parse_stage_stays_jvm_side(spark):
     Python eval nodes (with AQE the WholeStageCodegen wrapper only
     materializes at execution, so assert the plan shape instead)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(parse_ops.with_tokens(docs))
+    plan = _plan(parse_stage(docs))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # codegen'd operators print with a "*(stage)" prefix
     assert plan.lstrip().startswith("*(") or "WholeStageCodegen" in plan
@@ -112,27 +112,31 @@ def test_salted_agg_is_two_phase(spark):
 
 
 @pytest.mark.parametrize(
-    "kernel", ["calibrate", "with_hash_embed_score", "with_transformer_calibrate"]
+    "kernel", ["calibrate", "with_transformer_calibrate_no_reset", "with_transformer_calibrate"]
 )
 def test_kernel_single_shuffle(spark, kernel):
     """Every batch per-group kernel runs on calibrate.walk_groups: exactly
     one exchange (the repartition by group keys), a within-partition
     sort, and one MapInArrow — never a FlatMapGroupsInPandas. The output
-    is the input's columns then the kernel's, with no `__scope__` key
-    under either scope."""
+    is the input's columns (less the transformer kernel's consumed
+    `tokens`) then the kernel's, with no `__scope__` key under either
+    scope."""
     from log_project_spark.config import PipelineConfig
     from log_project_spark.operators import scoring
     from log_project_spark.operators.calibrate import calibrate
 
-    t = parse_ops.with_tokens(synth.transcripts(spark, 500, n_convs=10))
+    t = parse_stage(synth.transcripts(spark, 500, n_convs=10))
     if kernel == "calibrate":
         # the input carries `score`, which keeps its position
         t = t.withColumn("score", F.length("text").cast("double"))
-        run, added = calibrate, ["thr", "is_anom", "is_drift"]
-    elif kernel == "with_hash_embed_score":
-        run, added = scoring.with_hash_embed_score, ["score"]
+        run, want = calibrate, t.columns + ["thr", "is_anom", "is_drift"]
     else:
-        run, added = scoring.with_transformer_calibrate, ["score", "thr", "is_anom", "is_drift"]
+        reset = kernel == "with_transformer_calibrate"
+
+        def run(df, cfg):
+            return scoring.with_transformer_calibrate(df, cfg, reset_on_drift=reset)
+
+        want = [c for c in t.columns if c != "tokens"] + ["score", "thr", "is_anom", "is_drift"]
     cfg = PipelineConfig(scope="conv_id", mode="transformer", drift_detector="none")
     out = run(t, cfg)
     plan = _plan(out)
@@ -142,9 +146,26 @@ def test_kernel_single_shuffle(spark, kernel):
     # `], false, 0` tail is the non-global (within-partition) form
     assert "Sort [conv_id" in plan and "], false, 0" in plan
     assert plan.count("MapInArrow") == 1 and "FlatMapGroupsInPandas" not in plan, plan
-    assert out.columns == t.columns + added
+    assert out.columns == want
     glob = run(t, PipelineConfig(scope="global", mode="transformer", drift_detector="none"))
-    assert glob.columns == t.columns + added
+    assert glob.columns == want
+
+
+@pytest.mark.parametrize("mode", ["len", "baseline", "transformer"])
+def test_job_scored_plan_one_walk(spark, mode):
+    """The shipped job runs one Python walk per mode: run_pipeline's
+    scored plan has exactly one group exchange and one MapInArrow (score
+    and calibration in one kernel; transformer mode's stateful scorer
+    inside the calibration walk), and no FlatMapGroupsInPandas."""
+    from log_project_spark.config import PipelineConfig
+    from log_project_spark.pipeline import run_pipeline
+
+    t = synth.transcripts(spark, 300, n_convs=6, anom_ratio=0.03)
+    cfg = PipelineConfig(mode=mode, iso_n_estimators=20, window=50, warmup=10)
+    plan = _plan(run_pipeline(spark, t, cfg).scored)
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_needed_cols_prunes_scan_and_exchange(spark, tmp_path):

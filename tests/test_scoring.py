@@ -1,6 +1,8 @@
 """Scorers: hash-embedding kernel vs per-event oracle; isolation
 forest determinism, partition-invariance, and detection power."""
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -8,8 +10,13 @@ from pyspark.sql import functions as F
 from log_project_spark import oracle, synth
 from log_project_spark.config import PipelineConfig
 from log_project_spark.iforest import fit_text_anomaly_model
-from log_project_spark.operators import parse, scoring
+from log_project_spark.operators import scoring
 from log_project_spark.operators.calibrate import calibrate
+from log_project_spark.pipeline import parse_stage
+
+# transformer mode with calibration and drift switched off: the kernel's
+# hash-embed context scores alone, as the hash_embed_scores query reads them
+SCORES_ONLY = dict(mode="transformer", calibration="no_calib", drift_detector="none")
 
 
 @pytest.fixture(scope="module")
@@ -24,9 +31,9 @@ def test_hash_embed_kernel_matches_oracle(spark, corpus):
     tokens, _ = corpus
     rows = [("c0", i, toks) for i, toks in enumerate(tokens[:200])]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
-    cfg = PipelineConfig(scope="global", mode="transformer")
+    cfg = PipelineConfig(scope="global", **SCORES_ONLY)
     got = (
-        scoring.with_hash_embed_score(df, cfg)
+        scoring.with_transformer_calibrate(df, cfg, reset_on_drift=False)
         .orderBy("turn_idx")
         .select("score")
         .collect()
@@ -43,8 +50,12 @@ def test_hash_embed_per_conv_isolation(spark, corpus):
     tokens, _ = corpus
     rows = [(f"c{i % 3}", i // 3, toks) for i, toks in enumerate(tokens[:90])]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
-    cfg = PipelineConfig(scope="conv_id", mode="transformer")
-    got = scoring.with_hash_embed_score(df, cfg).orderBy("conv_id", "turn_idx").collect()
+    cfg = PipelineConfig(scope="conv_id", **SCORES_ONLY)
+    got = (
+        scoring.with_transformer_calibrate(df, cfg, reset_on_drift=False)
+        .orderBy("conv_id", "turn_idx")
+        .collect()
+    )
     for conv in ("c0", "c1", "c2"):
         seq = [tokens[i] for i in range(90) if f"c{i % 3}" == conv]
         ctx = oracle.HashEmbedContext()
@@ -117,7 +128,7 @@ def test_scored_templates_pipeline_end_to_end(spark):
     """Parse raw-style lines -> iforest -> anomaly templates rank high
     (TPR at 1% FPR near 1, like the reference's synth run)."""
     t = synth.transcripts(spark, 600, n_convs=20, anom_ratio=0.05)
-    parsed = parse.with_tokens(t).withColumn("norm_text", F.concat_ws(" ", "tokens"))
+    parsed = parse_stage(t)
     cfg = PipelineConfig(mode="baseline", iso_n_estimators=200)
     model = scoring.fit_baseline_model(parsed, cfg)
     scored = scoring.with_iforest_score(parsed, model)
@@ -127,27 +138,39 @@ def test_scored_templates_pipeline_end_to_end(spark):
     assert tpr > 0.9
 
 
+def _drifting_convs(seed: int, lengths: dict) -> dict:
+    """conv_id -> token sequences that switch halfway from one repeated
+    token (context matches, score ~ 0) to fresh tokens from a wide
+    vocabulary (score ~ 1): a sustained mean shift that fires ADWIN."""
+    rng = random.Random(seed)
+    vocab_b = [f"other{i}" for i in range(500)]
+    return {
+        conv: [["stable"] * 6 for _ in range(n // 2)]
+        + [[rng.choice(vocab_b) for _ in range(6)] for _ in range(n - n // 2)]
+        for conv, n in lengths.items()
+    }
+
+
+def _token_rows(spark, convs: dict):
+    rows = [(k, i, toks) for k, seqs in convs.items() for i, toks in enumerate(seqs)]
+    return spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+
+
 def test_integrated_transformer_calibrate_matches_oracle(spark):
     """Integrated transformer kernel (score + conformal + drift with
     C10 context reset) vs the per-event oracle, on a stream with a
     vocabulary shift that actually fires ADWIN."""
-    rng = __import__("random").Random(13)
-    # phase A: one repeated token -> context matches -> score ~ 0;
-    # phase B: fresh random tokens from a wide vocab every row ->
-    # context never matches -> score ~ 1, a sustained mean shift
-    vocab_b = [f"other{i}" for i in range(500)]
-    seqs = [["stable"] * 6 for _ in range(400)]
-    seqs += [[rng.choice(vocab_b) for _ in range(6)] for _ in range(400)]
-
     from log_project_spark.adwin import Adwin
+
+    convs = _drifting_convs(13, {"c0": 800})
+    seqs = convs["c0"]
 
     scores_o, want = oracle.run_transformer_stream(
         seqs, alpha=0.05, window=100, warmup=10, detector=Adwin(delta=0.002)
     )
     assert want.n_drift > 0, "fixture must drift"
 
-    rows = [("c0", i, s) for i, s in enumerate(seqs)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+    df = _token_rows(spark, convs)
     cfg = PipelineConfig(
         scope="global", mode="transformer", alpha=0.05, window=100, warmup=10,
         drift_detector="adwin", adwin_delta=0.002,
@@ -167,22 +190,16 @@ def test_integrated_transformer_calibrate_matches_oracle(spark):
 def test_transformer_kernels_batch_carry_match_oracle(spark):
     """Arrow batches of 7 rows split every conversation across batches,
     so the walk's carry of a group's rows — a `list<string>` tokens
-    column included — decides both transformer kernels' results. Each
-    of 5 drifting conversations must equal the per-event oracles: the
-    hash-embed scores `oracle.HashEmbedContext`, and the integrated
-    kernel `oracle.run_transformer_stream` (C10 resets included)."""
+    column included — decides the transformer kernel's results under
+    both drift policies. Each of 5 drifting conversations must equal
+    the per-event oracles: without the context reset (the shipped job),
+    the scores are `oracle.HashEmbedContext` over the whole conversation
+    and the flags `oracle.run_stream` over them; with it,
+    `oracle.run_transformer_stream` (C10 resets included)."""
     from log_project_spark.adwin import Adwin
 
-    rng = __import__("random").Random(17)
-    vocab_b = [f"other{i}" for i in range(500)]
-    convs = {}
-    for c in range(5):
-        n = 100 + 7 * c
-        convs[f"c{c}"] = [["stable"] * 6 for _ in range(n // 2)] + [
-            [rng.choice(vocab_b) for _ in range(6)] for _ in range(n - n // 2)
-        ]
-    rows = [(k, i, toks) for k, seqs in convs.items() for i, toks in enumerate(seqs)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+    convs = _drifting_convs(17, {f"c{c}": 100 + 7 * c for c in range(5)})
+    df = _token_rows(spark, convs)
     cfg = PipelineConfig(
         scope="conv_id", mode="transformer", alpha=0.05, window=100, warmup=10,
         drift_detector="adwin", adwin_delta=0.002,
@@ -191,7 +208,11 @@ def test_transformer_kernels_batch_carry_match_oracle(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        scored = scoring.with_hash_embed_score(df, cfg).orderBy("conv_id", "turn_idx").collect()
+        shipped = (
+            scoring.with_transformer_calibrate(df, cfg, reset_on_drift=False)
+            .orderBy("conv_id", "turn_idx")
+            .collect()
+        )
         calibrated = (
             scoring.with_transformer_calibrate(df, cfg).orderBy("conv_id", "turn_idx").collect()
         )
@@ -201,9 +222,14 @@ def test_transformer_kernels_batch_carry_match_oracle(spark):
     for conv, seqs in convs.items():
         ctx = oracle.HashEmbedContext()
         want = [ctx.score_and_update(t) for t in seqs]
-        assert [r["score"] for r in scored if r["conv_id"] == conv] == pytest.approx(
-            want, abs=1e-6
-        ), conv
+        got = [r for r in shipped if r["conv_id"] == conv]
+        assert [r["score"] for r in got] == pytest.approx(want, abs=1e-6), conv
+        stream = oracle.run_stream(
+            [r["score"] for r in got], alpha=0.05, window=100, warmup=10,
+            detector=Adwin(delta=0.002),
+        )
+        assert [r["is_anom"] for r in got] == stream.is_anom, conv
+        assert [r["is_drift"] for r in got] == stream.is_drift, conv
         scores_o, stream = oracle.run_transformer_stream(
             seqs, alpha=0.05, window=100, warmup=10, detector=Adwin(delta=0.002)
         )
@@ -217,16 +243,11 @@ def test_transformer_kernels_batch_carry_match_oracle(spark):
 
 @pytest.mark.parametrize("calibration", ["conformal", "no_calib"])
 def test_transformer_calibrate_equals_score_then_calibrate(spark, corpus, calibration):
-    """Without drift (no C10 context reset) the integrated transformer
-    kernel is hash-embed scoring followed by calibrate, for both
-    calibration modes."""
-    tokens, _ = corpus
-    rows = [(f"c{i % 3}", i // 3, toks) for i, toks in enumerate(tokens)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
-    cfg = PipelineConfig(
-        scope="conv_id", mode="transformer", alpha=0.05, window=40, warmup=30,
-        calibration=calibration, drift_detector="none",
-    )
+    """Without the C10 context reset the transformer kernel is
+    hash-embed scoring followed by calibrate, drift or not: on a
+    drifting input its rows equal `calibrate` over the per-conversation
+    oracle scores, for both calibration modes. Without drift the reset
+    never fires, so both `reset_on_drift` values give the same rows."""
 
     def collect(frame):
         return {
@@ -234,10 +255,33 @@ def test_transformer_calibrate_equals_score_then_calibrate(spark, corpus, calibr
             for r in frame.collect()
         }
 
-    got = collect(scoring.with_transformer_calibrate(df, cfg))
-    want = collect(calibrate(scoring.with_hash_embed_score(df, cfg), cfg))
-    assert len(got) == len(rows)
-    assert got == want
+    convs = _drifting_convs(29, {f"c{c}": 240 + 20 * c for c in range(3)})
+    cfg = PipelineConfig(
+        scope="conv_id", mode="transformer", alpha=0.05, window=40, warmup=30,
+        calibration=calibration, drift_detector="adwin",
+    )
+    got = collect(
+        scoring.with_transformer_calibrate(_token_rows(spark, convs), cfg, reset_on_drift=False)
+    )
+    oracle_scores = []
+    for conv, seqs in convs.items():
+        ctx = oracle.HashEmbedContext()
+        oracle_scores += [(conv, i, ctx.score_and_update(t)) for i, t in enumerate(seqs)]
+    scores_df = spark.createDataFrame(oracle_scores, "conv_id string, turn_idx int, score double")
+    want = collect(calibrate(scores_df, cfg))
+    assert sum(drift for *_, drift in want.values()) > 0, "fixture must drift"
+    assert got.keys() == want.keys()
+    for k, (score, thr, anom, drift) in want.items():
+        assert got[k][0] == pytest.approx(score, abs=1e-6), k
+        assert got[k][1] == pytest.approx(thr, abs=1e-6), k
+        assert got[k][2:] == (anom, drift), k
+
+    tokens, _ = corpus
+    rows = [(f"c{i % 3}", i // 3, toks) for i, toks in enumerate(tokens)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, tokens array<string>")
+    reset = collect(scoring.with_transformer_calibrate(df, cfg))
+    assert len(reset) == len(rows) and not any(drift for *_, drift in reset.values())
+    assert reset == collect(scoring.with_transformer_calibrate(df, cfg, reset_on_drift=False))
 
 
 def test_tfidf_counts_factorize_matches_unique_path():
