@@ -66,8 +66,11 @@ bench:
 package:
 	sh scripts/build_pyfiles.sh
 
+# run from outside the checkout, so the driver and the Python workers
+# see the package only through the --py-files zip; local[N] needs 2N
+# threads (a JVM task thread and a Python worker per slot)
 submit-example: package
-	/opt/spark/bin/spark-submit --master 'local[8]' \
-	  --py-files dist/log_project_spark.zip jobs/run_pipeline.py \
+	cd /tmp && spark-submit --master 'local[2]' \
+	  --py-files $(CURDIR)/dist/log_project_spark.zip $(CURDIR)/jobs/run_pipeline.py \
 	  --synth-rows 20000 --mode len --out-dir /tmp/lps_sinks \
 	  --summary-out /tmp/lps_summary.csv

@@ -84,7 +84,7 @@ def _parsed_docs(spark: SparkSession, sf_dir: str, pandas_variant: bool = False)
     docs = _spread(_t(spark, sf_dir, "documents"))
     if not pandas_variant:
         return parse_stage(docs)
-    return parse_ops.with_tokens_pandas(docs, text_col="text", drop_empty=True).withColumn(
+    return parse_ops.with_tokens_pandas(docs, text_col="text").withColumn(
         "norm_text", F.concat_ws(" ", "tokens")
     )
 

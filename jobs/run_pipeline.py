@@ -63,7 +63,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "--figures-out", default="",
         help="render the reference's summary bar charts (SVG) into this dir",
     )
-    ap.add_argument("--master", default="", help="override master (default: from spark-submit)")
+    ap.add_argument(
+        "--master", default="",
+        help="override master (default: spark-submit's --master, else "
+        "local[$SPARK_GRAFT_CPUS], else one local slot per core)",
+    )
     return ap.parse_args(argv)
 
 

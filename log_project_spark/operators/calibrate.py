@@ -224,14 +224,16 @@ def walk_groups(
     is never split) and the sort runs after the coalesced read (groups
     stay contiguous and ordered). Every reducer partition is one Python
     task, and each task pays a fixed worker setup cost (PySpark's
-    per-task `importlib.invalidate_caches()` re-reads pyspark.zip's
-    directory, ~0.25 CPU-s on a 4-vCPU host) that dwarfs the kernel on
-    small inputs, so the count follows the data, not
-    spark.sql.shuffle.partitions. An explicit `num_partitions` pins
-    exactly that many reducer partitions. Global scope is ONE
-    sequential stream (reference parity, src/stream.py:313-315), so it
-    gathers into exactly one partition (upstream stages stay parallel)
-    instead of hashing a constant key over N mostly empty reducers.
+    per-task `importlib.invalidate_caches()` re-reads the directory of
+    each zip cached on the worker's path: ~0.09 CPU-s on a 4-vCPU host
+    with `session.get_spark`'s daemon, 0.20 with pyspark.zip on the
+    path) that matches the kernel on small inputs, so the count
+    follows the data, not spark.sql.shuffle.partitions. An explicit
+    `num_partitions` pins exactly that many reducer partitions. Global
+    scope is ONE sequential stream (reference parity,
+    src/stream.py:313-315), so it gathers into exactly one partition
+    (upstream stages stay parallel) instead of hashing a constant key
+    over N mostly empty reducers.
     layout="clustered" declares that the input is ALREADY group-
     contiguous and ordered (each group's rows contiguous within one
     input split, sorted by `order_cols`) — the layout a write-
@@ -354,8 +356,8 @@ def calibrate(
     By default (`num_partitions=None`) AQE sizes the per-group exchange
     by its shuffle bytes, so a small input runs as one or a few Python
     tasks instead of spark.sql.shuffle.partitions of them: each Python
-    task costs a fixed worker setup that, on small inputs, outweighs
-    the kernel itself (walk_groups' docstring has the figures).
+    task costs a fixed worker setup that, on small inputs, is as much
+    as the kernel itself (walk_groups' docstring has the figures).
 
     Fused scoring: when `batch_score_fn` is given (a
     list[str] -> np.ndarray batch scorer, e.g. the broadcast iforest

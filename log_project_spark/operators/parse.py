@@ -162,13 +162,7 @@ def tokenize_pandas(s: pd.Series) -> pd.Series:
     return _normalize_series(s).str.split()
 
 
-def with_tokens_pandas(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "tokens",
-    drop_empty: bool = True,
-) -> DataFrame:
-    out = df.withColumn(out_col, tokenize_pandas(F.col(text_col)))
-    if drop_empty:
-        out = out.where(F.size(F.col(out_col)) > 0)
-    return out
+def with_tokens_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """`tokens` from `tokenize_pandas`; rows with no token are dropped."""
+    out = df.withColumn("tokens", tokenize_pandas(F.col(text_col)))
+    return out.where(F.size("tokens") > 0)

@@ -4,6 +4,12 @@ Local mode is a single JVM; on a real cluster the same configs hold
 (AQE, Arrow, UTC timezone) and `spark.sql.shuffle.partitions` should be
 sized to ~2-3x total executor cores. Everything here is public Spark
 configuration (spark.apache.org/docs/latest/configuration.html).
+
+On a local master the Python worker daemon is `pydaemon`, which imports
+the installed, bytecode-cached pyspark instead of Spark's source-only
+`pyspark.zip` when both are the same release. The package's own path
+root goes on `spark.executorEnv.PYTHONPATH`, so the daemon can import
+it before any task ships `--py-files`.
 """
 
 from __future__ import annotations
@@ -12,6 +18,7 @@ import os
 from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -33,14 +40,17 @@ def get_spark(
     - Arrow on: every pandas UDF exchange is columnar.
     - UTC session timezone: parity with DuckDB oracle comparisons.
     - maxRecordsPerBatch: bounds Arrow batch memory in the scoring UDFs.
+    - Local masters start their Python workers from `pydaemon`.
+
+    `master=None` keeps the master spark-submit was given, else runs
+    `local[$SPARK_GRAFT_CPUS]`, else one local slot per host core.
+    `extra_conf` is applied last and wins.
     """
     # one BLAS thread per python worker: with N workers on N cores,
     # nested OpenBLAS/MKL pools oversubscribe catastrophically
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cpus}]"
+    master = _master(master)
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -62,6 +72,14 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
+    if master.startswith("local"):
+        # the sys.path root this package came from (the checkout or the
+        # --py-files zip): the daemon imports it before any task ships it
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.config("spark.python.daemon.module", "log_project_spark.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", root)
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
@@ -94,3 +112,16 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> Data
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
+
+
+def _master(master: str | None) -> str:
+    if master is not None:
+        return master
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the JVM, with its --master, before Python:
+        # connect to it (as getOrCreate would) and read that master
+        SparkContext._ensure_initialized()
+        submitted = SparkConf().get("spark.master", None)
+        if submitted:
+            return submitted
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"

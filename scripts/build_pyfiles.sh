@@ -17,4 +17,4 @@ with zipfile.ZipFile("dist/log_project_spark.zip", "w", zipfile.ZIP_DEFLATED) as
 print("wrote dist/log_project_spark.zip")
 EOF
 echo "submit example:"
-echo "  spark-submit --master local[32] --py-files dist/log_project_spark.zip jobs/run_pipeline.py --synth-rows 100000 --out-dir /tmp/sinks"
+echo "  spark-submit --master local[2] --py-files dist/log_project_spark.zip jobs/run_pipeline.py --synth-rows 100000 --out-dir /tmp/sinks"

@@ -47,7 +47,7 @@ def test_native_matches_oracle(spark, tricky_df):
 
 def test_pandas_udf_matches_native(spark, tricky_df):
     native = _collected(_tokenized(tricky_df))
-    udf = _collected(parse.with_tokens_pandas(tricky_df, drop_empty=False))
+    udf = _collected(tricky_df.withColumn("tokens", parse.tokenize_pandas(F.col("text"))))
     assert native == udf
 
 
