@@ -1,4 +1,4 @@
-.PHONY: test kernels ngrams metrics curation gate lines bench package submit-example
+.PHONY: test kernels ngrams metrics curation pairs gate lines bench package submit-example
 
 # the ROADMAP tier-1 command: one local slot per core, every test reported
 test:
@@ -52,6 +52,16 @@ curation:
 	  quality_percentile_filter stratified_sample_k token_budget_cap token_budget_ranked \
 	  sample_fraction_det sample_by_stratum mixing_weights hash_split_counts
 
+# the banded index and the pair join (dedup.band_rows / pairs_sharing)
+# and every near-duplicate operator on them: their tests, then the
+# DuckDB gate on the queries that build or join candidate pairs
+pairs:
+	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
+	  tests/test_dedup.py tests/test_similarity.py tests/test_decontam.py
+	python scripts/check_entry.py lsh_candidate_pairs lsh_band_buckets minhash_signatures \
+	  simhash_near_pairs near_dup_components corpus_curation embedding_near_dups_lsh \
+	  embedding_near_dups jaccard_pairs_capped ngram_jaccard_pairs srp_buckets
+
 gate:
 	python scripts/check_entry.py
 
@@ -68,9 +78,11 @@ package:
 
 # run from outside the checkout, so the driver and the Python workers
 # see the package only through the --py-files zip; local[N] needs 2N
-# threads (a JVM task thread and a Python worker per slot)
+# threads (a JVM task thread and a Python worker per slot); the driver
+# heap is spark-submit's to set, since its JVM is running before
+# get_spark builds the session
 submit-example: package
-	cd /tmp && spark-submit --master 'local[2]' \
+	cd /tmp && spark-submit --master 'local[2]' --driver-memory 2g \
 	  --py-files $(CURDIR)/dist/log_project_spark.zip $(CURDIR)/jobs/run_pipeline.py \
 	  --synth-rows 20000 --mode len --out-dir /tmp/lps_sinks \
 	  --summary-out /tmp/lps_summary.csv

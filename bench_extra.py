@@ -126,7 +126,7 @@ def cmd_phases(sf_dir: str) -> None:
         texts = profile["norm_text"].astype(str).tolist()
         weights = profile["n"].to_numpy(dtype=np.float64)
         model = fit_text_anomaly_model(
-            texts, weights=weights, n_features=cfg.hash_features,
+            texts, weights=weights,
             n_estimators=cfg.iso_n_estimators, max_samples=cfg.iso_max_samples,
             seed=cfg.seed,
         )

@@ -9,7 +9,7 @@ Reference CLI (/root/reference/src/stream.py:258-292):
 
 This job accepts the same knobs plus the table-world inputs:
 
-  spark-submit --py-files log_project_spark.zip jobs/run_pipeline.py \
+  spark-submit --driver-memory 2g --py-files log_project_spark.zip jobs/run_pipeline.py \
       --transcripts /path/to/transcripts_parquet \
       --mode baseline --alpha 0.01 --window 5000 --warmup 200 \
       --out-dir /path/sinks --checkpoint-root /path/ckpt \
@@ -40,7 +40,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--warmup", type=int, default=200)
     ap.add_argument("--no-calib", dest="no_calib", action="store_true")
     ap.add_argument("--adwin-delta", type=float, default=0.002)
-    ap.add_argument("--no-drift", action="store_true", help="disable ADWIN (fallback detector)")
+    ap.add_argument("--no-drift", action="store_true", help="run with no drift detector")
     ap.add_argument(
         "--contam", type=float, default=0.01,
         help="accepted for reference-CLI parity; has no effect (the score is "

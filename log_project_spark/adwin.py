@@ -166,8 +166,8 @@ class NoDrift:
         return False
 
 
-# every kind make_detector accepts; all but "adwin" never fire
-DETECTOR_KINDS = ("adwin", "none", "off", "fallback")
+# every kind make_detector accepts; "none" never fires
+DETECTOR_KINDS = ("adwin", "none")
 
 
 def make_detector(kind: str, delta: float = 0.002):

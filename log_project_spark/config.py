@@ -42,7 +42,7 @@ class PipelineConfig:
     scope: str = "conv_id"  # "conv_id" | "global"
 
     # drift (src/stream.py:283-288)
-    drift_detector: str = "adwin"  # "adwin" | "none" ("off"/"fallback" = "none")
+    drift_detector: str = "adwin"  # "adwin" | "none" (no detector, never drifts)
     adwin_delta: float = 0.002
 
     # per-event pacing simulation knob (src/stream.py:268-270,373-374);
@@ -54,13 +54,7 @@ class PipelineConfig:
     seed: int = DEFAULT_SEED
     iso_n_estimators: int = 200
     iso_max_samples: int = 512
-    hash_features: int = 1024
     fit_sample_rows: int = 200_000  # cap on driver-side fit sample
-
-    # transformer-mode kernel (src/transformer.py:40-57)
-    embed_dim: int = 32
-    embed_window: int = 32
-    embed_decay: float = 0.90
 
     def __post_init__(self) -> None:
         for name, allowed in CHOICES.items():

@@ -101,7 +101,6 @@ def _fit_and_maybe_cache(texts, weights, cfg, cache_path):
     model = fit_text_anomaly_model(
         texts,
         weights=weights,
-        n_features=cfg.hash_features,
         n_estimators=cfg.iso_n_estimators,
         max_samples=cfg.iso_max_samples,
         seed=cfg.seed,
@@ -147,6 +146,11 @@ def with_iforest_score(
 # ---------------------------------------------------------------------------
 # transformer scorer: hash-embedding decayed context (M4-M6)
 # ---------------------------------------------------------------------------
+
+# the reference scorer's embedding width, context window and decay
+# (src/transformer.py:40-57)
+EMBED_DIM, EMBED_WINDOW, EMBED_DECAY = 32, 32, 0.90
+
 
 def _token_embedding(token: str, seed: int, dim: int, cache: dict) -> np.ndarray:
     vec = cache.get(token)
@@ -245,7 +249,7 @@ def with_transformer_calibrate(
         # to_pandas shares one str object per distinct token: ~3x faster
         # than to_numpy, ~30x than to_pylist, and cache hits on identity
         toks = group.column(tokens_col).to_pandas()
-        ring = HashEmbedRing(cfg.seed, cfg.embed_dim, cfg.embed_window, cfg.embed_decay)
+        ring = HashEmbedRing(cfg.seed, EMBED_DIM, EMBED_WINDOW, EMBED_DECAY)
         score = np.zeros(len(toks))
 
         def feed():

@@ -82,7 +82,11 @@ def topk_cosine(
 
 def srp_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
     """Signed-random-projection bucket id: one bit per hyperplane
-    (deterministic plane list supplied by the caller)."""
+    (deterministic plane list supplied by the caller). Catalyst
+    sequential fold, bit-identical to a DuckDB list_dot_product
+    restatement (the oracle path); one band of a banded index is
+    `srp_bucket` on that band's slice of the planes. Use
+    srp_band_buckets_pandas for wide fan-outs."""
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
         plit = F.array(*[F.lit(float(x)) for x in plane])
@@ -94,24 +98,6 @@ def srp_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
 def make_planes(dim: int, n_planes: int = 8, seed: int = 20250819) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return [[float(v) for v in rng.standard_normal(dim)] for _ in range(n_planes)]
-
-
-def srp_band_bucket(
-    vec_col: Column, planes: list[list[float]], band: int, band_bits: int
-) -> Column:
-    """Bucket id for ONE band: sign bits of planes
-    [band*band_bits, (band+1)*band_bits). Catalyst sequential fold —
-    bit-identical to a DuckDB list_dot_product restatement (the
-    oracle path); use srp_band_buckets_pandas for wide fan-outs."""
-    bucket = F.lit(0).cast("long")
-    for j in range(band_bits):
-        plane = planes[band * band_bits + j]
-        plit = F.array(*[F.lit(float(x)) for x in plane])
-        d = dot_expr(_as_double(vec_col), plit)
-        bucket = bucket.bitwiseOR(
-            F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return bucket
 
 
 def srp_band_buckets_pandas(

@@ -45,6 +45,11 @@ def get_spark(
     `master=None` keeps the master spark-submit was given, else runs
     `local[$SPARK_GRAFT_CPUS]`, else one local slot per host core.
     `extra_conf` is applied last and wins.
+
+    The driver heap (`$SPARK_GRAFT_DRIVER_MEM`, default 24g) applies
+    only when `get_spark` starts the JVM. Under spark-submit the JVM is
+    already running with the heap spark-submit gave it, so pass
+    `--driver-memory` there.
     """
     # one BLAS thread per python worker: with N workers on N cores,
     # nested OpenBLAS/MKL pools oversubscribe catastrophically

@@ -15,7 +15,7 @@ def test_defaults_and_every_listed_value_accepted():
         PipelineConfig(scope=scope)
     for mode in ("baseline", "transformer", "len"):
         PipelineConfig(mode=mode)
-    for kind in ("adwin", "none", "off", "fallback"):
+    for kind in ("adwin", "none"):
         PipelineConfig(drift_detector=kind)
         make_detector(kind)  # the same set make_detector accepts
 
@@ -38,3 +38,13 @@ def test_unknown_mode_rejected():
 def test_unknown_drift_detector_rejected():
     with pytest.raises(ValueError, match="drift_detector='ddm'"):
         PipelineConfig(drift_detector="ddm")
+
+
+@pytest.mark.parametrize("kind", ["off", "fallback"])
+def test_none_aliases_rejected(kind):
+    """"none" is the one no-detector value; other spellings of it are
+    rejected by the config and by make_detector alike."""
+    with pytest.raises(ValueError, match=f"drift_detector='{kind}'"):
+        PipelineConfig(drift_detector=kind)
+    with pytest.raises(ValueError, match="unknown drift detector"):
+        make_detector(kind)

@@ -81,22 +81,39 @@ def test_dedup_exact_distinct_keys_in_one_hash_partition(spark):
 
 
 def test_lsh_hash_buckets_parity(spark, docs_df):
-    """The xxhash64 band-bucket join (default) yields the same
-    candidate pairs as the concatenated md5-hex string join, and the
-    hashed plan joins on longs."""
+    """The band-bucket join runs on xxhash64 longs; the DuckDB oracle of
+    lsh_candidate_pairs joins the md5-hex strings, so the gate checks
+    the hashed pairs against the string join."""
     sh = dedup.with_shingles(docs_df, tokens_col="tokens", n=3)
     sig = dedup.minhash_signature(sh, num_hashes=4)
-    pairs = lambda hb: {
-        (r["id_a"], r["id_b"])
-        for r in dedup.lsh_candidate_pairs(
-            sig, num_hashes=4, band_size=2, hash_buckets=hb
-        ).collect()
-    }
-    assert pairs(True) == pairs(False)
     plan = dedup.lsh_candidate_pairs(
         sig, num_hashes=4, band_size=2
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "xxhash64" in plan
+
+
+def test_pairs_sharing_and_band_rows(spark):
+    """pairs_sharing: one row per unordered pair and shared key, with
+    id_a < id_b and each side's carried value; band_rows: rows x bands
+    rows, band = the bucket's position in the list."""
+    rows = spark.createDataFrame(
+        [(3, "x", 30), (1, "x", 10), (2, "x", 20), (1, "y", 10), (3, "y", 30), (4, "z", 40)],
+        "id long, key string, v long",
+    )
+    got = sorted(
+        tuple(r) for r in dedup.pairs_sharing(rows, ["key"], carry=("v",)).collect()
+    )
+    # x: {1,2,3} -> 3 pairs; y: {1,3} -> 1 more (1,3); z: alone
+    assert got == [(1, 2, 10, 20), (1, 3, 10, 30), (1, 3, 10, 30), (2, 3, 20, 30)]
+
+    docs = spark.createDataFrame([(7, 5), (8, 6), (9, 5)], "doc_id long, w long")
+    banded = dedup.band_rows(docs, "doc_id", [F.col("w") % 2, F.col("w") * 10], carry=("w",))
+    assert banded.columns == ["id", "w", "band", "bucket"]
+    assert sorted(tuple(r) for r in banded.collect()) == [
+        (7, 5, 0, 1), (7, 5, 1, 50), (8, 6, 0, 0), (8, 6, 1, 60), (9, 5, 0, 1), (9, 5, 1, 50),
+    ]
+    pairs = dedup.pairs_sharing(banded, ["band", "bucket"]).collect()
+    assert sorted(tuple(r) for r in pairs) == [(7, 9), (7, 9)]  # once per shared band
 
 
 def test_jaccard_hash_items_parity(spark, docs_df):
@@ -319,7 +336,7 @@ def test_srp_band_bucket_impls_agree(spark):
     expr_rows = df.select(
         "vec_id",
         *[
-            sim.srp_band_bucket(F.col("embedding"), planes, b, 4).alias(f"b{b}")
+            sim.srp_bucket(F.col("embedding"), planes[b * 4 : (b + 1) * 4]).alias(f"b{b}")
             for b in range(3)
         ],
     ).collect()
