@@ -7,8 +7,9 @@ test:
 
 # the grouped kernels on the walk (calibration, scoring, SemDeDup) and
 # the centroid argmax: their oracle, property, streaming, golden-hash,
-# plan, pipeline and run-aggregate (TPR) tests, then the DuckDB gate on
-# every query that runs the walk or the argmax
+# plan, pipeline and run-aggregate (TPR, and the TPR tally the job's
+# walk counts) tests, then the DuckDB gate on every query that runs
+# the walk or the argmax
 kernels:
 	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
 	  tests/test_calibrate.py tests/test_property.py tests/test_streaming.py \

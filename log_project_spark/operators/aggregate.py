@@ -19,6 +19,8 @@ TPR@FPR (A3) takes the same pick from a distinct-value histogram: one
 aggregate counts the (score, label) pairs, and the driver walks their
 cumulative counts. Its cost follows the distinct values, not the rows;
 above TPR_HISTOGRAM_CAP pairs it runs the distributed rank selection.
+`TprTally` builds the same histogram inside a kernel that already runs
+(the job's calibration walk), batch by batch, into an accumulator.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ from __future__ import annotations
 import math
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -292,6 +297,18 @@ def _tpr_from_histogram(hist: list, p: float) -> tuple[float, float]:
     return hits / n_pos, thr
 
 
+def _collect_histogram(scored: DataFrame, score_col: str, label_col: str) -> list:
+    """The (v, pos, count) rows of the (score, label = 1) pairs over the
+    rows labelled 0 or 1, at most TPR_HISTOGRAM_CAP + 1 of them."""
+    return (
+        scored.where(F.col(label_col).isin(0, 1))
+        .groupBy(F.col(score_col).cast("double").alias("v"), (F.col(label_col) == 1).alias("pos"))
+        .count()
+        .limit(TPR_HISTOGRAM_CAP + 1)
+        .collect()
+    )
+
+
 def tpr_at_fpr(
     scored: DataFrame,
     score_col: str = "score",
@@ -310,19 +327,12 @@ def tpr_at_fpr(
     Both give the same (tpr, thr); a NaN pick gives (nan, nan), no
     negatives (nan, nan), no scored positives (nan, thr)."""
     p = (1.0 - target_fpr) * 100.0
-    is_pos = F.col(label_col) == 1
-    hist = (
-        scored.where(F.col(label_col).isin(0, 1))
-        .groupBy(F.col(score_col).cast("double").alias("v"), is_pos.alias("pos"))
-        .count()
-        .limit(TPR_HISTOGRAM_CAP + 1)
-        .collect()
-    )
+    hist = _collect_histogram(scored, score_col, label_col)
     if len(hist) <= TPR_HISTOGRAM_CAP:
         return _tpr_from_histogram(hist, p)
 
     neg = scored.where(F.col(label_col) == 0)
-    pos = scored.where(is_pos)
+    pos = scored.where(F.col(label_col) == 1)
     thr = exact_percentile_distributed(neg, score_col, [p])[p]
     if math.isnan(thr):
         return float("nan"), float("nan")
@@ -330,6 +340,75 @@ def tpr_at_fpr(
     if tpr_row["tpr"] is None:
         return float("nan"), thr
     return float(tpr_row["tpr"]), thr
+
+
+# the one NaN key of a tally histogram: NaN != NaN, so each NaN that
+# arrives (every batch, every unpickled update) is filed under this object
+_NAN = float("nan")
+
+
+class _PairCounts(AccumulatorParam):
+    """Accumulates (rows seen, {(score, is_pos): count}). The histogram
+    becomes None, and stays None, once it holds more than `cap` pairs."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+
+    def zero(self, value):
+        return 0, {}
+
+    def addInPlace(self, acc, term):
+        rows, hist = acc
+        if hist is None or term[1] is None:
+            return rows + term[0], None
+        for (v, pos), c in term[1].items():
+            key = (_NAN if v != v else v, pos)
+            hist[key] = hist.get(key, 0) + c
+        return rows + term[0], hist if len(hist) <= self.cap else None
+
+
+class TprTally:
+    """tpr_at_fpr's (score, label) histogram, counted batch by batch in a
+    kernel that already runs, instead of by a query over its output.
+
+    Called on the executor with each Arrow batch the kernel emits, it
+    counts every row, and the (score, label = 1) pairs of the rows
+    labelled 0 or 1 with pyarrow's group_by, into a PySpark accumulator:
+    -0.0 counts as 0.0 and NaN as one key, as in Spark's grouping. The
+    accumulator stops merging pairs above TPR_HISTOGRAM_CAP (as read
+    when the tally is built), so its memory stays bounded.
+
+    Spark merges each task's accumulator update exactly once only in a
+    result stage, so the kernel must run in the result stage of the one
+    action that executes it (a write); `tpr` refuses a tally whose row
+    count differs from that action's."""
+
+    def __init__(self, spark: SparkSession, score_col: str = "score", label_col: str = "label"):
+        self.score_col, self.label_col = score_col, label_col
+        self.pairs = spark.sparkContext.accumulator((0, {}), _PairCounts(TPR_HISTOGRAM_CAP))
+
+    def __call__(self, batch: pa.RecordBatch) -> None:
+        label = batch.column(self.label_col)
+        keep = pc.is_in(label, value_set=pa.array([0, 1]).cast(label.type))
+        # + 0.0 folds -0.0 into 0.0 (IEEE); group_by already keeps NaN as one key
+        score = pc.add(batch.column(self.score_col).cast(pa.float64()), 0.0)
+        counts = pa.table({
+            "v": pc.filter(score, keep), "pos": pc.filter(pc.equal(label, 1), keep),
+        }).group_by(["v", "pos"]).aggregate([([], "count_all")])
+        pairs = zip(counts["v"].to_pylist(), counts["pos"].to_pylist())
+        self.pairs.add((batch.num_rows, dict(zip(pairs, counts["count_all"].to_pylist()))))
+
+    def tpr(self, n_rows: int, target_fpr: float = 0.01) -> tuple[float, float] | None:
+        """tpr_at_fpr over the tallied histogram (the same walk); None
+        when it overflowed the cap or did not see exactly `n_rows` rows
+        (a kernel that ran twice, or not at all), and the caller must
+        run tpr_at_fpr over the rows instead."""
+        rows, hist = self.pairs.value
+        if hist is None or rows != n_rows:
+            return None
+        return _tpr_from_histogram(
+            [(v, pos, c) for (v, pos), c in hist.items()], (1.0 - target_fpr) * 100.0
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -200,6 +200,7 @@ def walk_groups(
     drop: Iterable[str] = (),
     num_partitions: int | None = None,
     layout: str = "shuffle",
+    tally=None,
 ) -> DataFrame:
     """The one transport for batch per-group kernels: arrange `df` so
     each group's rows are contiguous and ordered by `order_cols` (names
@@ -215,7 +216,9 @@ def walk_groups(
     with each new field at the position of the input column of its name
     or else appended. Passthrough columns — every string column
     included — are zero-copy slices that never become Python objects.
-    No group keys means one global group.
+    No group keys means one global group. `tally`, when given, is called
+    on the executor with every output batch (e.g. an
+    `aggregate.TprTally`), so a run-level count rides the walk.
 
     Arrangement: layout="shuffle" hash-repartitions by the group keys
     and sorts within partitions by keys + `order_cols`. Without
@@ -223,11 +226,11 @@ def walk_groups(
     shuffle bytes: coalescing merges whole reducer partitions (a group
     is never split) and the sort runs after the coalesced read (groups
     stay contiguous and ordered). Every reducer partition is one Python
-    task, and each task pays a fixed worker setup cost (PySpark's
-    per-task `importlib.invalidate_caches()` re-reads the directory of
-    each zip cached on the worker's path: ~0.09 CPU-s on a 4-vCPU host
-    with `session.get_spark`'s daemon, 0.20 with pyspark.zip on the
-    path) that matches the kernel on small inputs, so the count
+    task, and each task pays a fixed setup cost (~0.05 CPU-s of
+    process-tree CPU on a 4-vCPU host with `session.get_spark`'s daemon,
+    which keeps the archives PySpark's per-task
+    `importlib.invalidate_caches()` would re-read off the workers' path)
+    that matches the kernel on small inputs, so the count
     follows the data, not spark.sql.shuffle.partitions. An explicit
     `num_partitions` pins exactly that many reducer partitions. Global
     scope is ONE sequential stream (reference parity,
@@ -330,7 +333,13 @@ def walk_groups(
         if pieces:
             yield emit_open(pieces)
 
-    result = arranged.mapInArrow(stream_arrow, schema=out_schema)
+    def stream_tallied(batches):
+        for out in stream_arrow(batches):
+            tally(out)
+            yield out
+
+    walk = stream_arrow if tally is None else stream_tallied
+    result = arranged.mapInArrow(walk, schema=out_schema)
     return result if group_keys else result.drop(GLOBAL_KEY)
 
 
@@ -345,13 +354,15 @@ def calibrate(
     batch_score_input: str | None = None,
     layout: str = "shuffle",
     needed_cols: Iterable[str] | None = None,
+    tally=None,
 ) -> DataFrame:
     """Attach (score, thr, is_anom, is_drift) to every row: one fresh
     `CalibrationState` per group, run on `walk_groups` (the one
     grouped-kernel transport; `num_partitions` and `layout` are its
-    arrangement). All input columns pass through, so no re-join is
-    needed afterwards. `group_keys` overrides the cfg scope (e.g.
-    per-user streams on a non-transcript table).
+    arrangement, and `tally` its per-output-batch hook). All input
+    columns pass through, so no re-join is needed afterwards.
+    `group_keys` overrides the cfg scope (e.g. per-user streams on a
+    non-transcript table).
 
     By default (`num_partitions=None`) AQE sizes the per-group exchange
     by its shuffle bytes, so a small input runs as one or a few Python
@@ -415,5 +426,5 @@ def calibrate(
     return walk_groups(
         df, scope_keys, order_cols, CALIBRATED_FIELDS, run_group,
         batch_scores=batch_scores, drop=[input_col] if input_col else (),
-        num_partitions=num_partitions, layout=layout,
+        num_partitions=num_partitions, layout=layout, tally=tally,
     )

@@ -233,6 +233,7 @@ def with_transformer_calibrate(
     tokens_col: str = "tokens",
     order_cols: tuple[str, ...] = ("turn_idx",),
     reset_on_drift: bool = True,
+    tally=None,
 ) -> DataFrame:
     """Transformer mode in one pass per conv_id (scope='global'
     collapses to the reference's single stream) on
@@ -243,7 +244,8 @@ def with_transformer_calibrate(
     C10 hook the reference documents (src/transformer.py:61-63) but
     never wires into main(); the shipped job passes False to keep the
     reference's behaviour. `tokens_col` is consumed and dropped, and
-    (score, thr, is_anom, is_drift) are the last output columns."""
+    (score, thr, is_anom, is_drift) are the last output columns; `tally`
+    is walk_groups' per-output-batch hook."""
 
     def run_group(group, _):
         # to_pandas shares one str object per distinct token: ~3x faster
@@ -264,5 +266,5 @@ def with_transformer_calibrate(
 
     return walk_groups(
         df, cfg.scope_keys(), order_cols, CALIBRATED_FIELDS, run_group,
-        drop=[tokens_col, *(f.name for f in CALIBRATED_FIELDS)],
+        drop=[tokens_col, *(f.name for f in CALIBRATED_FIELDS)], tally=tally,
     )

@@ -14,11 +14,19 @@ checkpointed under `checkpoint_root` or composed directly.
 Single-execution contract: like the reference's one pass over the event
 stream, a `run_pipeline(..., out_dir=...)` call executes the scored plan
 (scan, parse, enrich, shuffle, score+calibrate kernel) exactly once —
-the fan-out write. The run counters ride that write via `df.observe`,
-and TPR@FPR is computed over the rows just written, read back from the
-returned sink paths (two columns, pruned at the parquet scan). With
-`out_dir=None` there is no write to ride, so the counters and TPR are
-recomputed over `scored`.
+the fan-out write — and its run-level figures ride that write. The
+counters come from `df.observe`, and TPR@FPR from the (score, label)
+histogram an `aggregate.TprTally` counts inside the kernel, on every
+Arrow batch the kernel emits, as the reference computes TPR from the
+scores its one loop produced (src/stream.py:146-158). The kernel runs in
+the result stage of the one write that executes it (the fan-out, or the
+score_calibrate checkpoint under `checkpoint_root`), where Spark merges
+each task's accumulator update once. Fallback: when the tally overflowed TPR_HISTOGRAM_CAP
+pairs, or did not see exactly the observed row count (a resumed
+score_calibrate checkpoint ran no kernel), TPR reads the written sinks
+back (two columns, pruned at the parquet scan) and runs
+`aggregate.tpr_at_fpr`. With `out_dir=None` there is no write to ride,
+so the counters and TPR are recomputed over `scored`.
 
 In baseline mode the model is fitted on the parsed frame, before
 enrich, as the reference fits on the corpus (src/stream.py:178-187):
@@ -122,10 +130,13 @@ def run_pipeline(
     last completed stage. With `out_dir` set, routed rows fan out to
     anomalous/drifting/nominal parquet sinks partitioned by dt, and that
     write is the scored plan's single execution: the event/anomaly/drift
-    counters are observed on it (`df.observe`) and TPR@1%FPR is computed
-    over the written sinks' (score, label). With `out_dir=None` the
-    counters and TPR are aggregates over `scored` (re-executing its plan
-    unless `checkpoint_root` made it a parquet read).
+    counters are observed on it (`df.observe`) and TPR@1%FPR comes from
+    the kernel's (score, label) tally. Only a tally that overflowed the
+    cap or saw other than `n_total` rows (the score_calibrate stage
+    resumed from its checkpoint) makes TPR read the written sinks back.
+    With `out_dir=None` the counters and TPR are aggregates over
+    `scored` (re-executing its plan unless `checkpoint_root` made it a
+    parquet read).
 
     mode="baseline" fits its model on the parsed frame (the parse
     checkpoint under `checkpoint_root`) and scores the enriched rows."""
@@ -147,6 +158,11 @@ def run_pipeline(
         lambda: enrich_ops.enrich_roles_tools(parsed, synth.role_dim(spark), synth.tool_dim(spark)),
     )
 
+    # with sinks, the kernel tallies the (score, label) histogram TPR
+    # reads, in the result stage of the one write that executes it
+    has_label = "label" in enriched.columns
+    tally = agg.TprTally(spark) if out_dir and has_label else None
+
     def score_calibrate() -> DataFrame:
         # one grouped kernel per mode, ordered by turn_idx (SURVEY.md M7 /
         # src/stream.py:299-311; cfg.mode is validated on construction)
@@ -159,40 +175,46 @@ def run_pipeline(
             return calibrate(
                 enriched.drop("tokens"), cfg,
                 batch_score_fn=scoring.make_broadcast_scorer(model), batch_score_input="norm_text",
+                tally=tally,
             )
         if cfg.mode == "len":
-            return calibrate(scoring.with_len_score(enriched).drop("tokens", "norm_text"), cfg)
+            return calibrate(
+                scoring.with_len_score(enriched).drop("tokens", "norm_text"), cfg, tally=tally
+            )
         # the stateful scorer runs inside the calibration walk; the
         # reference's main() never resets the context on drift (C10)
         return scoring.with_transformer_calibrate(
-            enriched.drop("norm_text"), cfg, reset_on_drift=False
+            enriched.drop("norm_text"), cfg, reset_on_drift=False, tally=tally
         )
 
     scored = stage("score_calibrate", score_calibrate)
 
     sink_paths: dict = {}
-    tpr_src: DataFrame | None = scored
     if out_dir:
-        # the write is the plan's only execution: counters ride it, and
-        # TPR reads the sinks back (a disjoint, union-complete partition
-        # of `scored`; doubles round-trip parquet exactly)
+        # the write is the plan's only execution: the counters ride it
+        # (df.observe) and the kernel's tally is the TPR histogram
         obs = Observation()
         sink_paths = route_ops.write_fanout(
             scored.observe(obs, *route_ops.flag_aggs()), out_dir
         )
         flags = obs.get
-        tpr_src = route_ops.read_fanout(spark, out_dir, sink_paths)
     else:
         flags = route_ops.flag_counts(scored).first()
     n_total = int(flags["n_total"])
     n_anom = int(flags["n_anom"] or 0)
     n_drift = int(flags["n_drift"] or 0)
 
-    tpr_str = "NA"
-    if tpr_src is not None and "label" in scored.columns:
-        tpr, _thr = agg.tpr_at_fpr(tpr_src, "score", "label", target_fpr=0.01)
-        if not math.isnan(tpr):
-            tpr_str = f"{tpr:.4f}"
+    tpr = tally.tpr(n_total, target_fpr=0.01) if tally is not None else None
+    if tpr is None and has_label:
+        # no tally (out_dir=None), or one that overflowed the cap or did
+        # not see each row once (a resumed score_calibrate checkpoint):
+        # TPR over the rows, read back from the sinks (a disjoint,
+        # union-complete partition of `scored`; doubles round-trip
+        # parquet exactly) or recomputed over `scored`
+        src = route_ops.read_fanout(spark, out_dir, sink_paths) if out_dir else scored
+        if src is not None:
+            tpr = agg.tpr_at_fpr(src, "score", "label", target_fpr=0.01)
+    tpr_str = "NA" if tpr is None or math.isnan(tpr[0]) else f"{tpr[0]:.4f}"
 
     wall = time.perf_counter() - t_start
     eps = n_total / wall if wall > 0 else float("nan")

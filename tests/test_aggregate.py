@@ -234,6 +234,64 @@ def test_tpr_histogram_edge_semantics(spark, case):
     _check_tpr(spark, rows, target_fpr, want)
 
 
+def _canon_pairs(items) -> list:
+    """((score, is_pos), count) items with each NaN spelled "nan" and
+    -0.0 as 0.0, sorted: a repeated key stays repeated."""
+    def key(v):
+        return None if v is None else "nan" if math.isnan(v) else v + 0.0
+
+    return sorted(((key(v), pos, c) for (v, pos), c in items), key=repr)
+
+
+def _tallied(spark, rows, batch_rows: int = 10_000):
+    """(frame, TprTally) after one write that runs the tally on the
+    executors over `rows` in 3 partitions, in Arrow batches of at most
+    `batch_rows` rows."""
+    df = spark.createDataFrame(rows, "score double, label int").repartition(3)
+    tally = agg.TprTally(spark)
+
+    def counted(batches):
+        for batch in batches:
+            tally(batch)
+            yield batch
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch_rows))
+    try:
+        df.mapInArrow(counted, df.schema).write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.set(conf, prev)
+    return df, tally
+
+
+@pytest.mark.parametrize("case", sorted(TPR_EDGE_CASES))
+def test_tpr_tally_equals_collected_histogram(spark, case):
+    """TprTally run on the executors over 3-row Arrow batches of 3
+    partitions counts every row, holds the histogram tpr_at_fpr collects
+    (one NaN key, -0.0 as 0.0), and gives tpr_at_fpr's (tpr, thr)."""
+    rows, target_fpr, want = TPR_EDGE_CASES[case]
+    df, tally = _tallied(spark, rows, batch_rows=3)
+    seen, hist = tally.pairs.value
+    assert seen == len(rows)
+    collected = agg._collect_histogram(df, "score", "label")
+    assert _canon_pairs(hist.items()) == _canon_pairs(
+        ((r["v"], r["pos"]), r["count"]) for r in collected
+    )
+    got = tally.tpr(len(rows), target_fpr)
+    assert _same(got[0], want[0]) and _same(got[1], want[1]), (got, want)
+    assert tally.tpr(len(rows) + 1, target_fpr) is None
+
+
+def test_tpr_tally_stops_merging_above_cap(spark, monkeypatch):
+    """A tally built with the cap below its distinct pairs ends without
+    a histogram, still counting rows, and asks for the fallback."""
+    monkeypatch.setattr(agg, "TPR_HISTOGRAM_CAP", 4)
+    _, tally = _tallied(spark, [(float(i % 6), i % 2) for i in range(30)])
+    assert tally.pairs.value == (30, None)
+    assert tally.tpr(30) is None
+
+
 @settings(max_examples=15, deadline=None)
 @given(
     rows=st.lists(

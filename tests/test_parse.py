@@ -97,6 +97,19 @@ def test_plan_is_native(spark, tricky_df):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_tokens_projection_runs_mask_chain_once(spark, tricky_df):
+    """A projection that keeps `tokens` without `norm_text` (transformer
+    mode's walk input, the word-token operators) evaluates the mask
+    chain once per row: 3 masks + the whitespace collapse, 4
+    regexp_replace (8 while tokens_col named norm_text in both a CASE
+    condition and its ELSE branch). Its rows equal tokenize_pandas."""
+    tokens = parse_stage(tricky_df).select("id", "tokens")
+    plan = tokens._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_replace(") == 4, plan
+    udf = tricky_df.withColumn("tokens", parse.tokenize_pandas(F.col("text")))
+    assert _collected(tokens) == [(i, t) for i, t in _collected(udf) if t]
+
+
 ADVERSARIAL = TRICKY + [
     None,
     "0xFF",

@@ -231,6 +231,26 @@ def test_empty_input_single_pass_path(spark, small_transcripts, tmp_path):
     assert m["tpr_at_1pct_fpr"] == "NA"
 
 
+def _count_read_backs():
+    """route.read_fanout wrapped to record each call: the TPR fallback."""
+    real = route.read_fanout
+
+    def read_fanout(*args, **kwargs):
+        read_fanout.calls.append(args)
+        return real(*args, **kwargs)
+
+    read_fanout.calls = []
+    return read_fanout
+
+
+def _sink_tpr(spark, out_dir, res) -> str:
+    """TPR@1%FPR over the written sinks, formatted as the metric."""
+    from log_project_spark.operators import aggregate as agg
+
+    tpr, _ = agg.tpr_at_fpr(route.read_fanout(spark, out_dir, res.sink_paths), "score", "label")
+    return f"{tpr:.4f}"
+
+
 @pytest.fixture(scope="module")
 def baseline_run(spark, tmp_path_factory):
     """mode="baseline" run_pipeline with out_dir under its own job group,
@@ -263,6 +283,7 @@ def baseline_run(spark, tmp_path_factory):
         return real_model_fit(texts, weights, *args)
 
     real_fit, real_model_fit = scoring.fit_baseline_model, scoring._fit_and_maybe_cache
+    read_backs = _count_read_backs()
     t = synth.transcripts(spark, 2000, n_convs=10, anom_ratio=0.03, seed=7)
     cfg = PipelineConfig(
         mode="baseline", window=200, warmup=20, alpha=0.05, iso_n_estimators=50
@@ -272,16 +293,18 @@ def baseline_run(spark, tmp_path_factory):
         mp.setattr(scoring, "make_broadcast_scorer", counting_scorer)
         mp.setattr(scoring, "fit_baseline_model", recording_fit)
         mp.setattr(scoring, "_fit_and_maybe_cache", recording_model_fit)
+        mp.setattr(route, "read_fanout", read_backs)
         sc.setJobGroup("baseline_run", "baseline run_pipeline")
         try:
-            res = run_pipeline(spark, t, cfg, out_dir=str(tmp_path_factory.mktemp("bsinks")))
+            out_dir = str(tmp_path_factory.mktemp("bsinks"))
+            res = run_pipeline(spark, t, cfg, out_dir=out_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
     (fit,) = fits
     return SimpleNamespace(
-        res=res, cfg=cfg, transcripts=t, model=models[0], fit=fit,
+        res=res, cfg=cfg, transcripts=t, out_dir=out_dir, model=models[0], fit=fit,
         counting_scorer=counting_scorer, acc=acc, texts_scored=acc.value,
-        jobs=sc.statusTracker().getJobIdsForGroup("baseline_run"),
+        jobs=sc.statusTracker().getJobIdsForGroup("baseline_run"), read_backs=read_backs.calls,
     )
 
 
@@ -325,11 +348,92 @@ def test_baseline_metrics_match_scored_aggregates(spark, baseline_run):
 
 
 def test_baseline_run_job_count(spark, baseline_run):
-    """The whole run (fit, observed fan-out write, TPR over the sinks)
-    fits in 11 Spark jobs on this input: the fit skips the enrich
-    broadcasts and TPR reads a (score, label) count histogram instead of
-    a distributed rank selection (20 jobs before both)."""
-    assert 0 < len(baseline_run.jobs) <= 11, len(baseline_run.jobs)
+    """The whole run (fit, observed fan-out write) fits in 8 Spark jobs
+    on this input: the fit skips the enrich broadcasts, and TPR comes
+    from the kernel's tally, with no read-back of the sinks (20 jobs
+    before the first two, 11 before the tally)."""
+    assert 0 < len(baseline_run.jobs) <= 8, len(baseline_run.jobs)
+
+
+def test_baseline_tpr_rides_the_write(spark, baseline_run):
+    """TPR comes from the calibration walk's tally: the sinks are not
+    read back, and the figure equals tpr_at_fpr over the sinks."""
+    b = baseline_run
+    assert b.read_backs == []
+    assert b.res.metrics["tpr_at_1pct_fpr"] == _sink_tpr(spark, b.out_dir, b.res) != "NA"
+
+
+def test_len_tpr_rides_the_write(spark, small_transcripts, result, monkeypatch):
+    """len mode: the tally's TPR equals tpr_at_fpr over the sinks, and
+    the run reads no sink back."""
+    _, cfg, out = result
+    read_backs = _count_read_backs()
+    monkeypatch.setattr(route, "read_fanout", read_backs)
+    res = run_pipeline(spark, small_transcripts, cfg, out_dir=str(out / "again"))
+    assert read_backs.calls == []
+    assert res.metrics["tpr_at_1pct_fpr"] == _sink_tpr(spark, str(out / "again"), res) != "NA"
+
+
+def test_transformer_continuous_scores_fall_back(spark, tmp_path, monkeypatch):
+    """Transformer mode on text whose every token is new: its context
+    scores are continuous, the tally overflows TPR_HISTOGRAM_CAP and the
+    run reads the sinks back once; the TPR is tpr_at_fpr's over them."""
+    from log_project_spark.operators import aggregate as agg
+
+    letters = F.translate(
+        F.sha2(F.concat_ws("/", "conv_id", F.col("turn_idx").cast("string")), 256),
+        "0123456789", "ghijklmnop",
+    )
+    t = synth.transcripts(spark, agg.TPR_HISTOGRAM_CAP + 400, n_convs=4, anom_ratio=0.03, seed=5)
+    t = t.withColumn("text", F.concat_ws(" ", F.lit("event"), letters))
+    cfg = PipelineConfig(mode="transformer", alpha=0.05, window=50, warmup=10, scope="conv_id")
+    read_backs = _count_read_backs()
+    monkeypatch.setattr(route, "read_fanout", read_backs)
+    out = str(tmp_path / "sinks")
+    res = run_pipeline(spark, t, cfg, out_dir=out)
+    assert len(read_backs.calls) == 1
+    written = route.read_fanout(spark, out, res.sink_paths)
+    assert written.select("score", "label").distinct().count() > agg.TPR_HISTOGRAM_CAP
+    assert res.metrics["tpr_at_1pct_fpr"] == _sink_tpr(spark, out, res) != "NA"
+
+
+def test_tally_over_cap_falls_back(spark, small_transcripts, result, monkeypatch):
+    """With the cap below the run's distinct (score, label) pairs the
+    tally overflows: the run reads the sinks back once, and its metrics
+    equal the run that used the tally."""
+    from log_project_spark.operators import aggregate as agg
+
+    res0, cfg, out = result
+    read_backs = _count_read_backs()
+    monkeypatch.setattr(route, "read_fanout", read_backs)
+    monkeypatch.setattr(agg, "TPR_HISTOGRAM_CAP", 3)
+    res = run_pipeline(spark, small_transcripts, cfg, out_dir=str(out / "capped"))
+    assert len(read_backs.calls) == 1
+    keys = ("events", "anomalies", "drifts", "tpr_at_1pct_fpr")
+    assert {k: res.metrics[k] for k in keys} == {k: res0.metrics[k] for k in keys}
+
+
+def test_resumed_checkpoint_tpr_falls_back(spark, small_transcripts, result, tmp_path, monkeypatch):
+    """A fresh checkpointed run tallies in its score_calibrate stage's
+    write; a resumed one runs no kernel, so its empty tally does not
+    match the observed row count and TPR reads the sinks back. Both
+    equal the run without checkpoints."""
+    res0, cfg, _ = result
+    root = str(tmp_path / "ckpt")
+    runs = []
+    for name in ("fresh", "resumed"):
+        read_backs = _count_read_backs()
+        monkeypatch.setattr(route, "read_fanout", read_backs)
+        res = run_pipeline(
+            spark, small_transcripts, cfg, out_dir=str(tmp_path / name), checkpoint_root=root
+        )
+        runs.append((res, len(read_backs.calls)))
+    (fresh, fresh_reads), (resumed, resumed_reads) = runs
+    assert (fresh_reads, resumed_reads) == (0, 1)
+    keys = ("events", "anomalies", "drifts", "tpr_at_1pct_fpr")
+    want = {k: res0.metrics[k] for k in keys}
+    assert {k: fresh.metrics[k] for k in keys} == want
+    assert {k: resumed.metrics[k] for k in keys} == want
 
 
 def test_fit_reads_parsed_frame(spark, baseline_run):

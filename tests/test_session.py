@@ -70,24 +70,48 @@ def test_installed_first_without_bundled_zip(tmp_path):
     assert installed_first(path) == path
 
 
+def _jar(tmp_path, name: str, entries: list[str]) -> str:
+    path = tmp_path / "jars" / name
+    path.parent.mkdir(exist_ok=True)
+    with zipfile.ZipFile(path, "w") as z:
+        for entry in entries:
+            z.writestr(entry, "")
+    return str(path)
+
+
+def test_installed_first_drops_jar_without_python(tmp_path):
+    core = _jar(tmp_path, "spark-core_2.13-4.1.2.jar", [
+        "META-INF/MANIFEST.MF", "org/apache/spark/SparkContext.class", "org/python/README",
+    ])
+    path = [str(tmp_path), core, str(tmp_path / "site")]
+    assert installed_first(path) == [str(tmp_path), str(tmp_path / "site")]
+
+
+def test_installed_first_keeps_jar_holding_python(tmp_path):
+    path = [
+        _jar(tmp_path, "with-source.jar", ["META-INF/MANIFEST.MF", "pkg/__init__.py"]),
+        _jar(tmp_path, "with-bytecode.jar", ["mod.pyc"]),
+        str(tmp_path / "missing.jar"),
+    ]
+    assert installed_first(path) == path
+
+
 def test_worker_imports_installed_pyspark(spark):
     def origin(batches):
         """Where this worker imported pyspark from, its PYTHONPATH, and
-        how many zipimporters it caches on pyspark.zip."""
+        how many zipimporters it caches on pyspark.zip and on jars."""
         import zipimport
 
-        cached = sum(
-            isinstance(f, zipimport.zipimporter) and "pyspark.zip" in p
-            for p, f in sys.path_importer_cache.items()
-        )
+        zips = [p for p, f in sys.path_importer_cache.items() if isinstance(f, zipimport.zipimporter)]
         for _ in batches:
             yield pa.RecordBatch.from_pylist([{
                 "pyspark": pyspark.__file__,
                 "pythonpath": os.environ.get("PYTHONPATH", ""),
-                "zipimporters": cached,
+                "zipimporters": sum("pyspark.zip" in p for p in zips),
+                "jar_zipimporters": sum(".jar" in p for p in zips),
             }])
 
-    ddl = "pyspark string, pythonpath string, zipimporters long"
+    ddl = "pyspark string, pythonpath string, zipimporters long, jar_zipimporters long"
     row = spark.range(1, numPartitions=1).mapInArrow(origin, ddl).first()
     bundled = [p for p in row.pythonpath.split(os.pathsep) if p.endswith("pyspark.zip")]
     with open(os.path.join(os.path.dirname(pyspark.__file__), "version.py"), "rb") as f:
@@ -98,6 +122,8 @@ def test_worker_imports_installed_pyspark(spark):
                 pytest.skip(f"{path} is not the installed pyspark's release")
     assert ".zip" not in row.pyspark
     assert row.zipimporters == 0
+    assert any(p.endswith(".jar") for p in row.pythonpath.split(os.pathsep))
+    assert row.jar_zipimporters == 0
 
 
 def test_package_import_leaves_pyspark_unloaded():
