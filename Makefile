@@ -30,12 +30,13 @@ ngrams:
 	  repetition_stats decontam_hits lm_perplexity dsir_select
 
 # the run-level metrics (the lower-index pick, TPR@FPR, salted
-# aggregates, the pipeline counters) and the streaming fan-out: their
-# tests, then the DuckDB gate on every query that reads them
+# aggregates, the pipeline counters, the summary row and its CSV) and
+# the streaming fan-out: their tests, then the DuckDB gate on every
+# query that reads them
 metrics:
 	SPARK_LOCAL_DIRS=/tmp/spark-local python -m pytest -q -p no:cacheprovider \
 	  tests/test_aggregate.py tests/test_property.py tests/test_pipeline.py \
-	  tests/test_streaming.py
+	  tests/test_streaming.py tests/test_sources.py
 	python scripts/check_entry.py tpr_at_fpr exact_percentiles exact_percentiles_global \
 	  quality_percentile_filter salted_counts salted_agg_sums conformal_per_user \
 	  conformal_pruned fixed_thr_per_user pipeline_summary

@@ -26,7 +26,6 @@ above TPR_HISTOGRAM_CAP pairs it runs the distributed rank selection.
 from __future__ import annotations
 
 import math
-from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -503,52 +502,3 @@ SUMMARY_COLUMNS = [
     "calib_window", "warmup", "adwin_delta", "iso_n_estimators",
     "iso_max_samples", "iso_random_state", "notes",
 ]
-
-
-def summary_row(
-    spark: SparkSession,
-    *,
-    dataset: str,
-    mode: str,
-    calibration: str,
-    seed: int,
-    events: int,
-    anomalies: int,
-    drifts: int,
-    tpr_str: str,
-    p95_ms: float,
-    p99_ms: float,
-    eps: float,
-    cpu_pct: str,
-    calib_target_fpr: str,
-    calib_window: str,
-    warmup: int,
-    adwin_delta: float,
-    iso_n_estimators: str,
-    iso_max_samples: str,
-    iso_random_state: str,
-    notes: str,
-    commit: str = "NA",
-    drift_detector: str = "ADWIN",
-    energy_j: str = "NA",
-) -> DataFrame:
-    """One-row summary DataFrame with the exact 24-column header, all
-    stringly-typed like the CSV ledger (NaN floats -> empty per
-    src/stream.py:107-110)."""
-    import math as _math
-
-    def fmt(x) -> str:
-        if isinstance(x, float):
-            return "" if _math.isnan(x) else f"{x:.6g}"
-        return str(x)
-
-    date_s = datetime.now(timezone.utc).strftime("%Y-%m-%d")
-    values = [
-        date_s, commit, dataset, mode, calibration, drift_detector,
-        fmt(seed), fmt(events), fmt(anomalies), fmt(drifts), tpr_str,
-        fmt(p95_ms), fmt(p99_ms), fmt(eps), cpu_pct, energy_j,
-        calib_target_fpr, calib_window, fmt(warmup), fmt(adwin_delta),
-        iso_n_estimators, iso_max_samples, iso_random_state, notes,
-    ]
-    schema = ", ".join(f"`{c}` string" for c in SUMMARY_COLUMNS)
-    return local_frame(spark, [values], schema)

@@ -38,11 +38,10 @@ def with_sink(df: DataFrame, out_col: str = "sink") -> DataFrame:
 def write_fanout(
     scored: DataFrame,
     out_dir: str,
-    file_format: str = "parquet",
     partition_by: tuple[str, ...] = ("dt",),
     mode: str = "overwrite",
 ) -> dict[str, str]:
-    """Single-pass fan-out: one write partitioned by (sink,
+    """Single-pass parquet fan-out: one write partitioned by (sink,
     *partition_by). Returns sink -> path for the sinks that actually
     received rows — a sink with no rows produces no directory, and
     handing a consumer a nonexistent path would fail its read with
@@ -53,12 +52,7 @@ def write_fanout(
     if "dt" not in routed.columns and "ts" in routed.columns:
         routed = routed.withColumn("dt", F.to_date("ts"))
     part_cols = ["sink", *[c for c in partition_by if c in routed.columns]]
-    (
-        routed.write.mode(mode)
-        .partitionBy(*part_cols)
-        .format(file_format)
-        .save(out_dir)
-    )
+    routed.write.parquet(out_dir, mode=mode, partitionBy=part_cols)
     sc = scored.sparkSession.sparkContext
     hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
     fs = hadoop_path(out_dir).getFileSystem(sc._jsc.hadoopConfiguration())
@@ -77,7 +71,7 @@ def sink_counts(scored: DataFrame) -> DataFrame:
 
 
 def read_fanout(spark: SparkSession, out_dir: str, sink_paths: dict[str, str]) -> DataFrame | None:
-    """The rows a parquet write_fanout wrote, read back from the sink
+    """The rows write_fanout wrote, read back from the sink
     paths it returned (with a `sink` column); None when no sink received
     rows — an empty out_dir has no schema to infer."""
     if not sink_paths:

@@ -12,21 +12,21 @@ linear stage chain, parse -> enrich -> score_calibrate, each stage
 checkpointed under `checkpoint_root` or composed directly.
 
 Single-execution contract: like the reference's one pass over the event
-stream, a `run_pipeline(..., out_dir=...)` call executes the scored plan
-(scan, parse, enrich, shuffle, score+calibrate kernel) exactly once —
-the fan-out write — and its run-level figures ride that write. The
-counters come from `df.observe`, and TPR@FPR from the (score, label)
-histogram an `aggregate.TprTally` counts inside the kernel, on every
-Arrow batch the kernel emits, as the reference computes TPR from the
-scores its one loop produced (src/stream.py:146-158). The kernel runs in
-the result stage of the one write that executes it (the fan-out, or the
-score_calibrate checkpoint under `checkpoint_root`), where Spark merges
-each task's accumulator update once. Fallback: when the tally overflowed TPR_HISTOGRAM_CAP
+stream, a `run_pipeline` call executes the scored plan (scan, parse,
+enrich, shuffle, score+calibrate kernel) exactly once, in one write —
+the fan-out under `out_dir`, else a `noop` write — and its run-level
+figures ride that write. The counters come from `df.observe`, and
+TPR@FPR from the (score, label) histogram an `aggregate.TprTally`
+counts inside the kernel, on every Arrow batch the kernel emits, as the
+reference computes TPR from the scores its one loop produced
+(src/stream.py:146-158). The kernel runs in the result stage of the one
+write that executes it (that write, or the score_calibrate checkpoint
+under `checkpoint_root`), where Spark merges each task's accumulator
+update once. Fallback: when the tally overflowed TPR_HISTOGRAM_CAP
 pairs, or did not see exactly the observed row count (a resumed
 score_calibrate checkpoint ran no kernel), TPR reads the written sinks
-back (two columns, pruned at the parquet scan) and runs
-`aggregate.tpr_at_fpr`. With `out_dir=None` there is no write to ride,
-so the counters and TPR are recomputed over `scored`.
+back (two columns, pruned at the parquet scan), or `scored` without
+sinks, and runs `aggregate.tpr_at_fpr`.
 
 In baseline mode the model is fitted on the parsed frame, before
 enrich, as the reference fits on the corpus (src/stream.py:178-187):
@@ -38,6 +38,7 @@ from __future__ import annotations
 import math
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -50,13 +51,17 @@ from .operators import parse as parse_ops
 from .operators import route as route_ops
 from .operators import scoring
 from .operators.calibrate import calibrate
+from .session import local_frame
 from . import synth
 
 
 def _tree_cpu_seconds() -> float | None:
     """Total CPU seconds (utime+stime+cutime+cstime) of this process
     and all its descendants: the driver, the local-mode JVM it spawned,
-    and the Python worker daemon and workers the JVM forked. The tree
+    and the Python worker daemon and workers the JVM forked. Under
+    spark-submit (`PYSPARK_GATEWAY_PORT` set, as `session._master`
+    tests) the JVM started this driver, so the walk starts at the
+    parent, the JVM, and counts it, its workers and this driver. The tree
     is walked by parent pid, not process group, because PySpark's
     worker daemon moves itself into its own group; children reaped
     during the run count through their parent's cutime/cstime.
@@ -87,7 +92,8 @@ def _tree_cpu_seconds() -> float | None:
             children.setdefault(int(rest[1]), []).append(int(pid))
         except (OSError, ValueError, IndexError):
             continue  # the process exited, or its stat was cut short, mid-read
-    total, stack = 0, [os.getpid()]
+    root = os.getppid() if "PYSPARK_GATEWAY_PORT" in os.environ else os.getpid()
+    total, stack = 0, [root]
     while stack:
         pid = stack.pop()
         total += ticks.get(pid, 0)
@@ -128,15 +134,14 @@ def run_pipeline(
     """Full pipeline. With `checkpoint_root` set, each stage
     materializes with a lineage manifest and re-runs resume after the
     last completed stage. With `out_dir` set, routed rows fan out to
-    anomalous/drifting/nominal parquet sinks partitioned by dt, and that
-    write is the scored plan's single execution: the event/anomaly/drift
-    counters are observed on it (`df.observe`) and TPR@1%FPR comes from
-    the kernel's (score, label) tally. Only a tally that overflowed the
-    cap or saw other than `n_total` rows (the score_calibrate stage
-    resumed from its checkpoint) makes TPR read the written sinks back.
-    With `out_dir=None` the counters and TPR are aggregates over
-    `scored` (re-executing its plan unless `checkpoint_root` made it a
-    parquet read).
+    anomalous/drifting/nominal parquet sinks partitioned by dt; without
+    it the scored plan runs into a `noop` write. That write is the
+    plan's single execution: the event/anomaly/drift counters are
+    observed on it (`df.observe`) and TPR@1%FPR comes from the kernel's
+    (score, label) tally. Only a tally that overflowed the cap or saw
+    other than `n_total` rows (the score_calibrate stage resumed from
+    its checkpoint) makes TPR re-read its rows: the written sinks, or
+    `scored` without `out_dir`.
 
     mode="baseline" fits its model on the parsed frame (the parse
     checkpoint under `checkpoint_root`) and scores the enriched rows."""
@@ -158,10 +163,10 @@ def run_pipeline(
         lambda: enrich_ops.enrich_roles_tools(parsed, synth.role_dim(spark), synth.tool_dim(spark)),
     )
 
-    # with sinks, the kernel tallies the (score, label) histogram TPR
-    # reads, in the result stage of the one write that executes it
+    # the kernel tallies the (score, label) histogram TPR reads, in the
+    # result stage of the one write that executes it
     has_label = "label" in enriched.columns
-    tally = agg.TprTally(spark) if out_dir and has_label else None
+    tally = agg.TprTally(spark) if has_label else None
 
     def score_calibrate() -> DataFrame:
         # one grouped kernel per mode, ordered by turn_idx (SURVEY.md M7 /
@@ -189,28 +194,27 @@ def run_pipeline(
 
     scored = stage("score_calibrate", score_calibrate)
 
+    # the write is the plan's only execution: the counters ride it
+    # (df.observe) and the kernel's tally is the TPR histogram
+    obs = Observation()
+    observed = scored.observe(obs, *route_ops.flag_aggs())
     sink_paths: dict = {}
     if out_dir:
-        # the write is the plan's only execution: the counters ride it
-        # (df.observe) and the kernel's tally is the TPR histogram
-        obs = Observation()
-        sink_paths = route_ops.write_fanout(
-            scored.observe(obs, *route_ops.flag_aggs()), out_dir
-        )
-        flags = obs.get
+        sink_paths = route_ops.write_fanout(observed, out_dir)
     else:
-        flags = route_ops.flag_counts(scored).first()
+        observed.write.format("noop").mode("overwrite").save()
+    flags = obs.get
     n_total = int(flags["n_total"])
     n_anom = int(flags["n_anom"] or 0)
     n_drift = int(flags["n_drift"] or 0)
 
     tpr = tally.tpr(n_total, target_fpr=0.01) if tally is not None else None
     if tpr is None and has_label:
-        # no tally (out_dir=None), or one that overflowed the cap or did
-        # not see each row once (a resumed score_calibrate checkpoint):
-        # TPR over the rows, read back from the sinks (a disjoint,
-        # union-complete partition of `scored`; doubles round-trip
-        # parquet exactly) or recomputed over `scored`
+        # a tally that overflowed the cap or did not see each row once
+        # (a resumed score_calibrate checkpoint): TPR over the rows, read
+        # back from the sinks (a disjoint, union-complete partition of
+        # `scored`; doubles round-trip parquet exactly) or recomputed
+        # over `scored`
         src = route_ops.read_fanout(spark, out_dir, sink_paths) if out_dir else scored
         if src is not None:
             tpr = agg.tpr_at_fpr(src, "score", "label", target_fpr=0.01)
@@ -250,34 +254,28 @@ def run_pipeline(
 def summary_from_result(
     spark: SparkSession, res: PipelineResult, cfg: PipelineConfig, dataset: str
 ) -> DataFrame:
+    """The run's one-row summary: the 24 `agg.SUMMARY_COLUMNS`, all
+    stringly-typed like the CSV ledger (NaN floats -> empty per
+    src/stream.py:107-110; `NA` for the calibration fields under
+    no_calib and the isolation-forest fields outside baseline mode)."""
     m = res.metrics
-    no_calib = cfg.calibration == "no_calib"
-    return agg.summary_row(
-        spark,
-        dataset=dataset,
-        mode=cfg.mode,
-        calibration=cfg.calibration,
-        seed=cfg.seed,
-        events=m["events"],
-        anomalies=m["anomalies"],
-        drifts=m["drifts"],
-        tpr_str=m["tpr_at_1pct_fpr"],
-        p95_ms=m["p95_ms"],
-        p99_ms=m["p99_ms"],
-        eps=m["eps"],
-        cpu_pct=m.get("cpu_pct", "NA"),
-        commit=agg.resolve_commit(),
-        calib_target_fpr="NA" if no_calib else f"{cfg.alpha:.6g}",
-        calib_window="NA" if no_calib else str(cfg.window),
-        warmup=cfg.warmup,
-        adwin_delta=cfg.adwin_delta,
-        iso_n_estimators=str(cfg.iso_n_estimators) if cfg.mode == "baseline" else "NA",
-        iso_max_samples=str(cfg.iso_max_samples) if cfg.mode == "baseline" else "NA",
-        iso_random_state=str(cfg.seed) if cfg.mode == "baseline" else "NA",
-        notes=(
-            f"{cfg.mode} {cfg.calibration};engine=pyspark;"
-            f"cpu_sampler={'proc_tree_delta' if m.get('cpu_pct', 'NA') != 'NA' else 'na'};"
-            "energy_na"
-        ),
-        drift_detector="ADWIN" if cfg.drift_detector == "adwin" else "none",
-    )
+
+    def fmt(x: float) -> str:
+        return "" if math.isnan(x) else f"{x:.6g}"
+
+    no_calib, iso = cfg.calibration == "no_calib", cfg.mode == "baseline"
+    cpu_pct = m.get("cpu_pct", "NA")
+    values = [
+        datetime.now(timezone.utc).strftime("%Y-%m-%d"), agg.resolve_commit(), dataset,
+        cfg.mode, cfg.calibration, "ADWIN" if cfg.drift_detector == "adwin" else "none",
+        str(cfg.seed), str(m["events"]), str(m["anomalies"]), str(m["drifts"]),
+        m["tpr_at_1pct_fpr"], fmt(m["p95_ms"]), fmt(m["p99_ms"]), fmt(m["eps"]), cpu_pct, "NA",
+        "NA" if no_calib else f"{cfg.alpha:.6g}", "NA" if no_calib else str(cfg.window),
+        str(cfg.warmup), fmt(cfg.adwin_delta),
+        str(cfg.iso_n_estimators) if iso else "NA", str(cfg.iso_max_samples) if iso else "NA",
+        str(cfg.seed) if iso else "NA",
+        f"{cfg.mode} {cfg.calibration};engine=pyspark;"
+        f"cpu_sampler={'proc_tree_delta' if cpu_pct != 'NA' else 'na'};energy_na",
+    ]
+    schema = ", ".join(f"`{c}` string" for c in agg.SUMMARY_COLUMNS)
+    return local_frame(spark, [values], schema)

@@ -385,22 +385,6 @@ def test_categorical_rank_sort(spark):
     assert [r["dataset"] for r in out] == ["synth", "mini", "alpha", "zeta"]
 
 
-def test_summary_row_schema(spark):
-    row = agg.summary_row(
-        spark,
-        dataset="synth", mode="baseline", calibration="conformal",
-        seed=20250819, events=2000, anomalies=3, drifts=0, tpr_str="1.0000",
-        p95_ms=1.0, p99_ms=2.0, eps=1000.0, cpu_pct="NA",
-        calib_target_fpr="0.01", calib_window="5000", warmup=200,
-        adwin_delta=0.002, iso_n_estimators="200", iso_max_samples="256",
-        iso_random_state="20250819", notes="test",
-    )
-    assert row.columns == agg.SUMMARY_COLUMNS
-    assert len(row.columns) == 24
-    r = row.first()
-    assert float(r["p95_ms"]) <= float(r["p99_ms"]) + 1e-9
-
-
 def test_approx_percentiles_rank_bound_and_plan(spark):
     """approx_percentiles: (a) guaranteed rank error <= n/accuracy vs
     the exact sorted column, (b) returned values are elements of the

@@ -145,14 +145,46 @@ def test_cpu_sampler_counts_children_in_their_own_process_group():
     assert reaped - before >= 0.25
 
 
+def test_cpu_sampler_under_spark_submit_counts_the_parent():
+    """spark-submit starts the Python driver as a child of the JVM and
+    sets PYSPARK_GATEWAY_PORT: a driver started with that variable walks
+    the tree from its parent, so it reports at least the parent's CPU
+    time, not only its own."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    while time.process_time() < 2.5:
+        pass  # the parent must outweigh the child's own import
+    parent = os.times()
+    probe = (
+        "import time\n"
+        "from log_project_spark.pipeline import _tree_cpu_seconds\n"
+        "print(_tree_cpu_seconds(), time.process_time())\n"
+    )
+    out = subprocess.check_output(
+        [sys.executable, "-c", probe], text=True,
+        env={**os.environ, "PYSPARK_GATEWAY_PORT": "1"}, cwd=Path(__file__).parents[1],
+    )
+    tree, child_own = map(float, out.split())
+    assert child_own < parent.user + parent.system
+    assert tree >= parent.user + parent.system
+
+
 def test_checkpoint_resume(spark, small_transcripts, tmp_path):
     cfg = PipelineConfig(mode="len", window=100, warmup=10, scope="conv_id")
     root = str(tmp_path / "ckpt")
     r1 = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root)
-    assert all(not m.get("resumed", False) for m in r1.stage_manifests)
+    assert [m["stage"] for m in r1.stage_manifests] == ["parse", "enrich", "score_calibrate"]
     assert all("partitions" in m and m["rows"] > 0 for m in r1.stage_manifests)
+    manifests = sorted(Path(root).glob("*/manifest.json"))
+    assert len(manifests) == 3
+    mtimes = [p.stat().st_mtime_ns for p in manifests]
     r2 = run_pipeline(spark, small_transcripts, cfg, checkpoint_root=root)
-    # second run resumed every stage from its manifest
+    # second run resumed every stage from its manifest: none rewritten
+    assert [p.stat().st_mtime_ns for p in manifests] == mtimes
+    assert r2.stage_manifests == r1.stage_manifests
     assert r2.metrics["events"] == r1.metrics["events"]
     assert r2.metrics["anomalies"] == r1.metrics["anomalies"]
     # manifests carry per-partition lineage
@@ -229,6 +261,73 @@ def test_empty_input_single_pass_path(spark, small_transcripts, tmp_path):
     m = res.metrics
     assert (m["events"], m["anomalies"], m["drifts"]) == (0, 0, 0)
     assert m["tpr_at_1pct_fpr"] == "NA"
+
+
+@pytest.mark.parametrize("mode,max_jobs", [("len", 4), ("baseline", 8), ("transformer", 4)])
+def test_no_sink_run_executes_plan_once(spark, mode, max_jobs, monkeypatch):
+    """Without out_dir the scored plan still runs once, into a noop
+    write: the counters are observed on it and TPR comes from the
+    kernel's tally, so tpr_at_fpr never runs and the run fits in one
+    execution's jobs (10/14/10 jobs when the counters and TPR re-ran
+    the plan). The metrics equal the aggregates over res.scored."""
+    from log_project_spark.operators import aggregate as agg
+
+    t = synth.transcripts(spark, 2000, n_convs=10, anom_ratio=0.03, seed=7)
+    cfg = PipelineConfig(mode=mode, window=200, warmup=20, alpha=0.05, iso_n_estimators=50)
+    real_tpr, tpr_calls = agg.tpr_at_fpr, []
+
+    def counting_tpr(*args, **kwargs):
+        tpr_calls.append(args)
+        return real_tpr(*args, **kwargs)
+
+    monkeypatch.setattr(agg, "tpr_at_fpr", counting_tpr)
+    sc, group = spark.sparkContext, f"no_sink_{mode}"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_pipeline(spark, t, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tpr_calls == []
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= max_jobs, n_jobs
+    flags = route.flag_counts(res.scored).first()
+    tpr, _ = real_tpr(res.scored, "score", "label", 0.01)
+    m = res.metrics
+    assert m["events"] == flags["n_total"] == 2000
+    assert (m["anomalies"], m["drifts"]) == (flags["n_anom"] or 0, flags["n_drift"] or 0)
+    assert m["tpr_at_1pct_fpr"] == f"{tpr:.4f}"
+
+
+def test_summary_from_result_na_fields(spark):
+    """no_calib reports NA for the calibration target and window, the
+    isolation-forest fields are NA outside baseline mode, NaN floats
+    are empty and a missing CPU figure is NA."""
+    from log_project_spark.operators.aggregate import SUMMARY_COLUMNS
+    from log_project_spark.pipeline import PipelineResult
+
+    metrics = {
+        "events": 0, "anomalies": 0, "drifts": 0, "tpr_at_1pct_fpr": "NA",
+        "p95_ms": float("nan"), "p99_ms": float("nan"), "eps": 0.0,
+    }
+    res = PipelineResult(scored=None, metrics=metrics)
+    rows = {
+        (mode, calibration): summary_from_result(
+            spark, res, PipelineConfig(mode=mode, calibration=calibration), dataset="d"
+        )
+        for mode in ("len", "baseline") for calibration in ("conformal", "no_calib")
+    }
+    for (mode, calibration), row in rows.items():
+        assert row.columns == SUMMARY_COLUMNS
+        r = row.first()
+        no_calib, baseline = calibration == "no_calib", mode == "baseline"
+        assert (r["calib_target_fpr"], r["calib_window"]) == (
+            ("NA", "NA") if no_calib else ("0.01", "5000")
+        )
+        iso = (r["iso_n_estimators"], r["iso_max_samples"], r["iso_random_state"])
+        assert iso == (("200", "512", "20250819") if baseline else ("NA", "NA", "NA"))
+        assert (r["p95_ms"], r["p99_ms"], r["eps"]) == ("", "", "0")
+        assert (r["CPU_pct"], r["energy_J"], r["TPR_at_1pct_FPR"]) == ("NA", "NA", "NA")
+        assert r["notes"] == f"{mode} {calibration};engine=pyspark;cpu_sampler=na;energy_na"
 
 
 def _count_read_backs():

@@ -49,15 +49,17 @@ def test_raw_log_source_cap(spark, tmp_path):
 
 
 def test_summary_csv_append_semantics(spark, tmp_path):
-    from log_project_spark.operators.aggregate import SUMMARY_COLUMNS, summary_row
+    from log_project_spark.config import PipelineConfig
+    from log_project_spark.operators.aggregate import SUMMARY_COLUMNS
+    from log_project_spark.pipeline import PipelineResult, summary_from_result
 
     out = tmp_path / "summary.csv"
-    row = summary_row(
-        spark, dataset="d", mode="baseline", calibration="conformal", seed=1,
-        events=10, anomalies=0, drifts=0, tpr_str="NA", p95_ms=1.0, p99_ms=2.0,
-        eps=5.0, cpu_pct="NA", calib_target_fpr="0.01", calib_window="5000",
-        warmup=200, adwin_delta=0.002, iso_n_estimators="NA", iso_max_samples="NA",
-        iso_random_state="NA", notes="n",
+    metrics = {
+        "events": 10, "anomalies": 0, "drifts": 0, "tpr_at_1pct_fpr": "NA",
+        "p95_ms": 1.0, "p99_ms": 2.0, "eps": 5.0, "cpu_pct": "NA",
+    }
+    row = summary_from_result(
+        spark, PipelineResult(scored=None, metrics=metrics), PipelineConfig(seed=1), dataset="d"
     )
     formats.append_summary_csv(row, str(out))
     formats.append_summary_csv(row, str(out))
