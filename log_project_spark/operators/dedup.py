@@ -39,7 +39,6 @@ and joins it with `pairs_sharing`; the Jaccard inverted index joins on
 
 from __future__ import annotations
 
-import math
 import operator
 from functools import reduce
 
@@ -520,13 +519,6 @@ def jaccard_pairs(
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dups (banded SRP-LSH candidates + exact verify)
 # ---------------------------------------------------------------------------
-
-def srp_recall(cos: float, n_bands: int, band_bits: int) -> float:
-    """Probability a pair at cosine `cos` shares at least one band:
-    1 - (1 - p^b)^m with p = 1 - acos(cos)/pi."""
-    p = 1.0 - math.acos(max(-1.0, min(1.0, cos))) / math.pi
-    return 1.0 - (1.0 - p**band_bits) ** n_bands
-
 
 def embedding_near_dups(
     df: DataFrame,

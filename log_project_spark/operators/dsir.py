@@ -15,7 +15,7 @@ Documented contract (mirrored by the DuckDB oracle):
 - model: add-1 smoothing over the bucket space,
   logp(f) = ln((c_f + 1) / (C + buckets)) with C = total feature
   count of the fit corpus; features unseen in the fit corpus score
-  the same formula with c_f = 0 (the model's `default_logp`).
+  the same formula with c_f = 0.
 - weight: logw(doc) = sum over the doc's feature OCCURRENCES of
   (logp_target(f) - logp_raw(f)), rounded to `dp`; docs with zero
   features (empty after tokenization) get no row.
@@ -25,14 +25,20 @@ Documented contract (mirrored by the DuckDB oracle):
 
 Scale design (100 TB raw corpus):
 
+- one lazy plan, no driver action: building the DataFrame runs no
+  Spark job, and nothing is cached.
 - feature extraction is pure codegen: n-grams from the one gram
   builder (explode of parse.ngram_windows, then parse.ngram_text),
   md5 hashing JVM-side.
-- model fit: one exchange keyed on the 8-byte feature id with
-  map-side partial aggregation; the fitted model is <= `buckets`
-  rows and BROADCASTS into scoring, so weighting is one exchange
-  keyed on the doc id (map-side partials over the exploded grams).
-  The only driver action per fit is the scalar total count.
+- the raw corpus's grams are built once, into one per-(doc, feature)
+  count frame (map-side partials absorb in-document repeats). Summed
+  by feature it is the raw model; the target model counts the target
+  corpus's grams by feature. The two models full-join into <=
+  2*`buckets` rows, and a 1-row aggregate of that frame gives both
+  totals C in the plan.
+- weighting: the per-feature log-ratio broadcasts back onto the same
+  per-(doc, feature) counts, and one exchange keyed on the doc id
+  sums count x log-ratio.
 - selection: orderBy(key).limit(k) => TakeOrderedAndProject
   (per-partition top-k + driver merge of k rows — bounded by k, no
   global sort shuffle); the k winners broadcast back as a flag join.
@@ -48,24 +54,13 @@ LLM-training-data toolkit beside lm_score (quality), sampling
 
 from __future__ import annotations
 
-import math
-from typing import NamedTuple, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from log_project_spark.operators.parse import ngram_text, ngram_windows, word_tokens_col
 from log_project_spark.operators.sampling import HASH_BITS, hash60
-
-
-class HashedNgramLM(NamedTuple):
-    """Fitted bag-of-hashed-n-grams model: <= `buckets` feature rows,
-    add-1 smoothed; `default_logp` covers unseen features."""
-
-    features: DataFrame  # (feature bigint, logp double)
-    default_logp: float
-    total: int  # C, total feature occurrences in the fit corpus
-    buckets: int
 
 
 def hashed_ngram_features(
@@ -97,64 +92,6 @@ def hashed_ngram_features(
     )
 
 
-def fit_hashed_ngram_lm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: Sequence[int] = (1, 2),
-    buckets: int = 10_000,
-    seed: int = 7,
-) -> HashedNgramLM:
-    """Fit the add-1-smoothed feature model. One feature-keyed exchange
-    plus the scalar total-count action."""
-    feats = hashed_ngram_features(df, text_col, id_col, ns, buckets, seed)
-    counts = feats.groupBy("feature").agg(F.count(F.lit(1)).alias("c"))
-    total = counts.agg(F.sum("c")).first()[0] or 0
-    denom = float(total + buckets)
-    features = counts.select(
-        "feature", F.log((F.col("c") + F.lit(1.0)) / F.lit(denom)).alias("logp")
-    )
-    return HashedNgramLM(
-        features=features,
-        default_logp=math.log(1.0 / denom),
-        total=int(total),
-        buckets=buckets,
-    )
-
-
-def dsir_log_weights(
-    df: DataFrame,
-    target: HashedNgramLM,
-    raw: HashedNgramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: Sequence[int] = (1, 2),
-    seed: int = 7,
-    dp: int = 6,
-) -> DataFrame:
-    """(id, n_feats bigint, logw double): per-doc log importance
-    weight under the two broadcast models. Feature hashing must use
-    the same (ns, buckets, seed) as the fits — buckets equality is
-    asserted, the rest is the caller's contract."""
-    if target.buckets != raw.buckets:
-        raise ValueError(
-            f"model bucket spaces differ: target {target.buckets} vs raw {raw.buckets}"
-        )
-    feats = hashed_ngram_features(df, text_col, id_col, ns, target.buckets, seed)
-    t = F.broadcast(
-        target.features.select("feature", F.col("logp").alias("__lt__"))
-    )
-    r = F.broadcast(raw.features.select("feature", F.col("logp").alias("__lr__")))
-    joined = feats.join(t, "feature", "left").join(r, "feature", "left")
-    delta = F.coalesce(F.col("__lt__"), F.lit(target.default_logp)) - F.coalesce(
-        F.col("__lr__"), F.lit(raw.default_logp)
-    )
-    return joined.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_feats"),
-        F.round(F.sum(delta), dp).alias("logw"),
-    )
-
-
 def gumbel_key(logw: Column, id_col: Column, seed: int, dp: int = 6) -> Column:
     """round(logw + Gumbel(0,1) noise, dp) with deterministic uniform
     u = (hash60(id, seed)+1)/(2^60+2) in (0,1) — identical algebra in
@@ -181,9 +118,36 @@ def dsir_select(
     not just the winners — are verifiable."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    target = fit_hashed_ngram_lm(target_df, text_col, id_col, ns, buckets, seed)
-    raw = fit_hashed_ngram_lm(df, text_col, id_col, ns, buckets, seed)
-    scored = dsir_log_weights(df, target, raw, text_col, id_col, ns, seed, dp)
+    per_doc = (
+        hashed_ngram_features(df, text_col, id_col, ns, buckets, seed)
+        .groupBy(id_col, "feature")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    raw = per_doc.groupBy("feature").agg(F.sum("c").alias("c_raw"))
+    tgt = (
+        hashed_ngram_features(target_df, text_col, id_col, ns, buckets, seed)
+        .groupBy("feature")
+        .agg(F.count(F.lit(1)).alias("c_tgt"))
+    )
+    model = raw.join(tgt, "feature", "full").na.fill(0, ["c_raw", "c_tgt"])
+    totals = model.agg(F.sum("c_raw").alias("tot_raw"), F.sum("c_tgt").alias("tot_tgt"))
+
+    def logp(c: str, total: str) -> Column:
+        return F.log((F.col(c) + F.lit(1.0)) / (F.col(total) + F.lit(buckets)))
+
+    delta = model.crossJoin(totals).select(
+        "feature", (logp("c_tgt", "tot_tgt") - logp("c_raw", "tot_raw")).alias("delta")
+    )
+    # a left join infers no not-null filter on per_doc, so the
+    # weighting reads the same per_doc exchange as the raw model
+    scored = (
+        per_doc.join(F.broadcast(delta), "feature", "left")
+        .groupBy(id_col)
+        .agg(
+            F.sum("c").alias("n_feats"),
+            F.round(F.sum(F.col("c") * F.col("delta")), dp).alias("logw"),
+        )
+    )
     keyed = scored.withColumn(
         "gkey", gumbel_key(F.col("logw"), F.col(id_col), gumbel_seed, dp)
     )

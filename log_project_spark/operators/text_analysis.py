@@ -173,8 +173,9 @@ def repetition_stats(
     the DuckDB oracle."""
     toked = df.select(
         F.col(id_col), word_tokens_col(F.col(text_col)).alias("__toks__")
-    ).where(F.size("__toks__") >= n)
-    # grams from the one codegen builder (parse.ngram_windows)
+    )
+    # grams from the one codegen builder (parse.ngram_windows); a doc
+    # with fewer than n tokens explodes to no gram, so it emits no row
     grams = toked.select(
         F.col(id_col), F.explode(ngram_windows(F.col("__toks__"), n)).alias("__g__")
     ).select(F.col(id_col), ngram_text(F.col("__g__"), n).alias("__gram__"))

@@ -96,9 +96,11 @@ AUDITS = [
     (
         "repetition_stats",
         "gram multiplicities keyed on (doc_id, xxhash64(gram)) — 16-byte "
-        "composite, never gram text; map-side partial aggregation present",
+        "composite, never gram text; map-side partial aggregation present; "
+        "no row filter drags the tokenizer below the input spread's "
+        "round-robin, so each document is tokenized once",
         ["partial_count", "xxhash64"],
-        ["hashpartitioning(text"],
+        ["hashpartitioning(text", "RoundRobinPartitioning > regexp_replace"],
     ),
     (
         "dedup_keep_min",

@@ -1,5 +1,5 @@
-"""DSIR importance resampling: pure-Python reference parity, model
-normalization, target-enrichment behavior, partition invariance,
+"""DSIR importance resampling: pure-Python reference parity,
+target-enrichment behavior, partition invariance, a lazy build,
 validation, and plan hygiene."""
 
 import hashlib
@@ -95,14 +95,6 @@ def test_reference_parity(spark, corpus_df):
     assert sum(v[3] for v in got.values()) == 3
 
 
-def test_model_probabilities_normalize(spark, corpus_df):
-    m = dsir.fit_hashed_ngram_lm(corpus_df, buckets=BUCKETS, seed=SEED)
-    logps = {r["feature"]: r["logp"] for r in m.features.collect()}
-    total = sum(math.exp(lp) for lp in logps.values())
-    total += (BUCKETS - len(logps)) * math.exp(m.default_logp)
-    assert total == pytest.approx(1.0, abs=1e-9)
-
-
 def test_target_enrichment_on_documents(spark):
     """Behavioral: selecting with an English target raises the English
     fraction among winners above the corpus base rate."""
@@ -125,11 +117,20 @@ def test_partition_invariance(spark, corpus_df):
     assert a == b
 
 
+def test_build_runs_no_job(spark, corpus_df):
+    """dsir_select is one lazy plan: both model totals are computed in
+    the plan, so building the DataFrame runs no Spark job."""
+    target = corpus_df.where(F.col("doc_id").isin(list(TARGET_IDS)))
+    sc = spark.sparkContext
+    sc.setJobGroup("dsir_build", "dsir_build")
+    try:
+        dsir.dsir_select(corpus_df, target, k=3, buckets=BUCKETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("dsir_build") == []
+
+
 def test_validation(spark, corpus_df):
-    m1 = dsir.fit_hashed_ngram_lm(corpus_df, buckets=64)
-    m2 = dsir.fit_hashed_ngram_lm(corpus_df, buckets=128)
-    with pytest.raises(ValueError, match="bucket spaces differ"):
-        dsir.dsir_log_weights(corpus_df, m1, m2)
     with pytest.raises(ValueError, match="k must be"):
         dsir.dsir_select(corpus_df, corpus_df, k=0)
     with pytest.raises(ValueError, match="ns"):
