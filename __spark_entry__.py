@@ -26,6 +26,7 @@ from log_project_spark.operators import parse as parse_ops
 from log_project_spark.operators import route as route_ops
 from log_project_spark.operators import scoring
 from log_project_spark.operators import sessionize
+from log_project_spark.operators import text_analysis as ta
 from log_project_spark.operators.calibrate import calibrate
 from log_project_spark.pipeline import parse_stage
 from log_project_spark.session import local_frame
@@ -44,6 +45,9 @@ _DUCK_TOKENS = (
     "'\\d+', '<num>', 'g'),"
     "'\\s+'), x -> x != '')"
 )
+
+# DuckDB list literal of the package's English stopwords
+_DUCK_STOP_LIST = "[" + ",".join(f"'{w}'" for w in ta.STOPWORDS) + "]"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -375,86 +379,47 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.select("vec_id", F.round("cos", 6).alias("cos"))
 
 
-_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
-
-
 def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram-free stopword-ratio language ID heuristic; confusion
-    counts against the table's lang column. Stopword occurrences via
-    ONE regexp_count over the collapsed norm text — no HOF lambda
-    (VERDICT r1 #5)."""
-    from log_project_spark.operators.text_analysis import n_tokens, stopword_count
-
+    """Stopword-ratio language flag (`text_analysis.with_lang_id`,
+    en/other); confusion counts against the table's lang column."""
     docs = _spread(_t(spark, sf_dir, "documents"))
-    norm = parse_ops.ws_collapsed_col(F.col("text"))
-    ratio = stopword_count(norm, _STOPWORDS) / n_tokens(norm)
-    pred = F.when(ratio > 0.08, F.lit("en")).otherwise(F.lit("other"))
     return (
-        docs.select("lang", pred.alias("pred"))
+        ta.with_lang_id(docs, out_col="pred")
         .groupBy("lang", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text quality features: token count, mean token length, stopword
-    ratio — token count from the single-char split, token-length sum
-    from length arithmetic, stopwords from one regexp_count (VERDICT
-    r1 #5: zero HOF lambdas in the plan)."""
-    from log_project_spark.operators.text_analysis import n_tokens, stopword_count
-
+    """Text quality features of `text_analysis.with_quality_features`:
+    token count, mean token length, stopword ratio."""
     docs = _t(spark, sf_dir, "documents")
-    norm = parse_ops.ws_collapsed_col(F.col("text"))
-    n_tok = n_tokens(norm)
-    n_stop = stopword_count(norm, _STOPWORDS)
-    tok_chars = F.when(n_tok > 0, F.length(norm) - (n_tok - F.lit(1))).otherwise(F.lit(0))
-    return docs.select(
-        "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
-        F.round(tok_chars / n_tok, 6).alias("avg_token_len"),
-        F.round(n_stop / n_tok, 6).alias("stop_ratio"),
+    return ta.with_quality_features(docs).select(
+        "doc_id", "n_tokens", "avg_token_len", "stop_ratio"
     )
 
 
 def q_token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish regex token counting: words + standalone punctuation."""
-    from log_project_spark.operators.text_analysis import with_bpe_token_count
-
     docs = _t(spark, sf_dir, "documents")
-    return with_bpe_token_count(docs).select("doc_id", "n_bpe")
+    return ta.with_bpe_token_count(docs).select("doc_id", "n_bpe")
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: sha256 over the normalized text."""
-    parsed = _parsed_docs(spark, sf_dir)
-    return parsed.select(
-        "doc_id", F.substring(F.sha2(F.col("norm_text"), 256), 1, 16).alias("fp")
-    )
+    """Document fingerprint (`text_analysis.with_fingerprint`) over the
+    parsed norm text, which its whitespace collapse leaves unchanged."""
+    return ta.with_fingerprint(_parsed_docs(spark, sf_dir), "norm_text").select("doc_id", "fp")
 
 
 def q_multimodal_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: text -> binary column -> mapInPandas
-    'decode' stub extracting (n_bytes, header_byte). The decode is a
-    deterministic fake (real image/audio libs are absent); the Spark
-    plumbing — binary schema, Arrow batches, UDF signature — is real
-    and oracle-checked."""
-    import pandas as pd
+    """Multimodal plumbing: text -> binary column -> the Arrow-batched
+    decode stub `multimodal.extract_features` (n_bytes, header_byte)."""
+    from log_project_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("blob")
     )
-
-    def decode_stub(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["blob"].map(len).astype("int64"),
-                    "header_byte": pdf["blob"].map(lambda b: int(b[0]) if len(b) else -1).astype("int64"),
-                }
-            )
-
-    return docs.mapInPandas(decode_stub, schema="doc_id long, n_bytes long, header_byte long")
+    return multimodal.extract_features(docs)
 
 
 # ---- rows-only (non-SQL-expressible; pytest oracles in tests/) ----------
@@ -525,7 +490,6 @@ def _core_oracles() -> dict[str, str]:
     word_toks = (
         "list_filter(string_split_regex(lower(text), '\\s+'), x -> x != '')"
     )
-    stop_list = "['the','a','of','and','to','in','is','it']"
     return {
         "parse_norm_documents": parse_docs_sql,
         "parse_pandas_udf": parse_docs_sql,
@@ -709,8 +673,8 @@ def _core_oracles() -> dict[str, str]:
         "lang_id_heuristic": f"""
             WITH toked AS (SELECT lang, {word_toks} AS toks FROM documents),
             p AS (SELECT lang,
-                         CASE WHEN CAST(len(list_filter(toks, x -> list_contains({stop_list}, x))) AS DOUBLE)
-                                   / len(toks) > 0.08
+                         CASE WHEN CAST(len(list_filter(toks, x -> list_contains({_DUCK_STOP_LIST}, x))) AS DOUBLE)
+                                   / greatest(len(toks), 1) > 0.08
                               THEN 'en' ELSE 'other' END AS pred
                   FROM toked)
             SELECT lang, pred, count(*) AS n FROM p GROUP BY lang, pred
@@ -719,8 +683,10 @@ def _core_oracles() -> dict[str, str]:
             WITH toked AS (SELECT doc_id, {word_toks} AS toks FROM documents)
             SELECT doc_id,
                    len(toks) AS n_tokens,
-                   round(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks), 6) AS avg_token_len,
-                   round(CAST(len(list_filter(toks, x -> list_contains({stop_list}, x))) AS DOUBLE) / len(toks), 6) AS stop_ratio
+                   round(CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS DOUBLE)
+                         / greatest(len(toks), 1), 6) AS avg_token_len,
+                   round(CAST(len(list_filter(toks, x -> list_contains({_DUCK_STOP_LIST}, x))) AS DOUBLE)
+                         / greatest(len(toks), 1), 6) AS stop_ratio
             FROM toked
         """,
         "token_count_regex": r"""
@@ -1046,7 +1012,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Every stage is the library operator the individual gates
     already check."""
     from log_project_spark.operators import dedup
-    from log_project_spark.operators import text_analysis as ta
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     fp = ta.with_fingerprint(docs)
@@ -1068,7 +1033,6 @@ def _corpus_curation_sql(max_hamming: int = 3, n_bands: int = 4, min_q: float = 
         f" (simhash >> {width * b}) & {mask} AS bucket FROM sig"
         for b in range(n_bands)
     )
-    stop = "['the','a','of','and','to','in','is','it','that','for']"
     return f"""
         WITH RECURSIVE norm0 AS (
           SELECT doc_id, text,
@@ -1113,7 +1077,7 @@ def _corpus_curation_sql(max_hamming: int = 3, n_bands: int = 4, min_q: float = 
                  len(regexp_extract_all(text, '[.,!?;:''"()\\[\\]{{}}]')) AS n_punct,
                  len(regexp_extract_all(text, '[A-Z]')) AS n_upper,
                  len(regexp_extract_all(text, '[0-9]')) AS n_digit,
-                 len(list_filter(string_split(norm, ' '), x -> list_contains({stop}, x))) AS n_stop
+                 len(list_filter(string_split(norm, ' '), x -> list_contains({_DUCK_STOP_LIST}, x))) AS n_stop
           FROM surv),
         feat AS (
           SELECT doc_id,
@@ -1217,10 +1181,8 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-grams (default hash-keyed scale path; the oracle groups the raw
     gram strings — identical values absent a 64-bit in-doc
     collision)."""
-    from log_project_spark.operators import text_analysis
-
     docs = _spread(_t(spark, sf_dir, "documents"))
-    return text_analysis.repetition_stats(docs, n=2)
+    return ta.repetition_stats(docs, n=2)
 
 
 def q_decontam_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,18 +1211,12 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style per-language percentile curation gate: keep the top
-    20% (q=80) of each language by rounded stopword ratio,
-    rank-deterministic (ties by doc_id), lower-index k formula."""
+    20% (q=80) of each language by `with_quality_features`' stopword
+    ratio, rank-deterministic (ties by doc_id), lower-index k formula."""
     from log_project_spark.operators.aggregate import percentile_rank_filter
-    from log_project_spark.operators.text_analysis import n_tokens, stopword_count
 
     docs = _t(spark, sf_dir, "documents")
-    norm = parse_ops.ws_collapsed_col(F.col("text"))
-    scored = docs.select(
-        "lang",
-        "doc_id",
-        F.round(stopword_count(norm, _STOPWORDS) / n_tokens(norm), 6).alias("stop_ratio"),
-    )
+    scored = ta.with_quality_features(docs).select("lang", "doc_id", "stop_ratio")
     return percentile_rank_filter(scored, "stop_ratio", 80.0, ["lang"], "doc_id")
 
 
@@ -1906,13 +1862,12 @@ def oracle_sql() -> dict[str, str]:
                round((r / sum(r) OVER ()) / p, 6) AS epochs
         FROM t
     """
-    stop_list = "['the','a','of','and','to','in','is','it']"
     out["quality_percentile_filter"] = f"""
         WITH toked AS (SELECT lang, doc_id, {_DUCK_WORD_TOKS} AS toks FROM documents),
         scored AS (
           SELECT lang, doc_id,
-                 round(CAST(len(list_filter(toks, x -> list_contains({stop_list}, x))) AS DOUBLE)
-                       / len(toks), 6) AS stop_ratio
+                 round(CAST(len(list_filter(toks, x -> list_contains({_DUCK_STOP_LIST}, x))) AS DOUBLE)
+                       / greatest(len(toks), 1), 6) AS stop_ratio
           FROM toked),
         ranked AS (
           SELECT lang, doc_id, stop_ratio,

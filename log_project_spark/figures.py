@@ -13,8 +13,8 @@ ymax*1.15, NA rows skipped. Per-bar value labels ('%.1f') are kept for
 byte-level parity with the reference's draw() even though they label
 every mark.
 
-Data shaping reuses reporting.latest_per_config + canonical_sort so
-figures and the README table can never disagree on row selection.
+Data shaping is reporting.latest_per_config + canonical_sort, the
+reference table's row selection.
 """
 
 from __future__ import annotations
@@ -64,8 +64,7 @@ def _nice_ticks(ymax: float, n: int = 5) -> list[float]:
 
 
 def _svg_open(width: int, height: int) -> list[str]:
-    """SVG header + background shared by every chart so the figure set
-    reads as one system."""
+    """SVG header + background."""
     return [
         f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" height="{height}" '
         f'viewBox="0 0 {width} {height}" font-family="Helvetica, Arial, sans-serif">',
@@ -75,7 +74,7 @@ def _svg_open(width: int, height: int) -> list[str]:
 
 def _tick_grid(parts, ticks, sy, ml, plot_w, metric) -> None:
     """Recessive dashed y-grid behind the marks (axisbelow + grid '--')
-    with right-aligned tick labels — shared by all bar renderers."""
+    with right-aligned tick labels."""
     for t in ticks:
         y = sy(t)
         parts.append(
@@ -89,7 +88,7 @@ def _tick_grid(parts, ticks, sy, ml, plot_w, metric) -> None:
 
 
 def _axis_and_ylabel(parts, ml, mt, plot_w, plot_h, ylabel) -> None:
-    """Baseline x-axis + rotated y-axis label — shared."""
+    """Baseline x-axis + rotated y-axis label."""
     parts.append(
         f'<line x1="{ml}" y1="{mt + plot_h}" x2="{ml + plot_w}" y2="{mt + plot_h}" '
         f'stroke="{INK}" stroke-width="1.2"/>'
@@ -157,142 +156,6 @@ def render_bar_svg(
             )
     _axis_and_ylabel(parts, ml, mt, plot_w, plot_h, ylabel)
     return _write_svg(parts, out_path)
-
-
-CAL_COLORS = {  # calibration hue key (grouped charts); C0/C1 cycle
-    "conformal": "#1f77b4",
-    "no_calib": "#ff7f0e",
-}
-FALLBACK_CAL_COLOR = "#7f7f7f"
-
-MULTI_METRICS = [
-    ("p95_ms", "p95 latency (ms)", "Latency p95", "latency_p95_ms.svg"),
-    ("p99_ms", "p99 latency (ms)", "Latency p99", "latency_p99_ms.svg"),
-    ("eps", "events/s", "Throughput", "throughput_eps.svg"),
-]
-
-
-def render_grouped_bar_svg(
-    groups: list[tuple[str, list[tuple[str, str, float]]]],
-    ylabel: str,
-    title: str,
-    metric: str,
-    out_path: str,
-) -> str:
-    """Grouped multi-series bar chart (VERDICT r2 #6): one x-group per
-    dataset, one bar per (mode, calibration) config inside it, bar hue
-    keyed by calibration with a legend. The grouped/hued/legend form is
-    an ENHANCEMENT over the reference's bar_plot, which draws flat
-    single-hue bars with combined x-labels (ADVICE r3 — parity holds
-    for the data pipeline, not this chart form). Bars carry the
-    reference's one_decimal value labels with a 1%-of-max pad
-    (make_multi_plots_v2.py:146-158); grid/axis styling matches
-    render_bar_svg so the figure set reads as one system.
-
-    groups: [(dataset, [(mode, calibration, value), ...]), ...]
-    already in draw order (multi_config_shape)."""
-    all_vals = [v for _, bars in groups for _, _, v in bars]
-    if not all_vals:
-        raise ValueError("no numeric values to plot")
-    slot, bar_w, group_pad = 84, 60, 34
-    ml, mr, mt, mb = 90, 24, 56, 76
-    plot_w = sum(len(bars) * slot for _, bars in groups) + group_pad * len(groups)
-    plot_h = 340
-    width, height = ml + plot_w + mr, mt + plot_h + mb
-    vmax = max(all_vals)
-    ymax = max(vmax, 1e-9) * 1.15
-    ypad_px = plot_h * 0.01
-    ticks = _nice_ticks(vmax)
-    cals_in_legend: list[str] = []
-    for _, bars in groups:
-        for _, cal, _ in bars:
-            if cal not in cals_in_legend:
-                cals_in_legend.append(cal)
-
-    def sy(v: float) -> float:
-        return mt + plot_h - (v / ymax) * plot_h
-
-    parts = _svg_open(width, height)
-    parts.append(
-        f'<text x="{ml}" y="22" font-size="15" fill="{INK}">{escape(title)}</text>'
-    )
-    _tick_grid(parts, ticks, sy, ml, plot_w, metric)
-    x = float(ml) + group_pad / 2
-    for dataset, bars in groups:
-        gx0 = x
-        for mode, cal, v in bars:
-            bx = x + (slot - bar_w) / 2
-            y = sy(v)
-            color = CAL_COLORS.get(cal, FALLBACK_CAL_COLOR)
-            parts.append(
-                f'<rect x="{bx:.1f}" y="{y:.1f}" width="{bar_w}" '
-                f'height="{mt + plot_h - y:.1f}" fill="{color}" rx="2"/>'
-            )
-            parts.append(
-                f'<text x="{bx + bar_w / 2:.1f}" y="{y - 4 - ypad_px:.1f}" '
-                f'text-anchor="middle" font-size="11" fill="{INK}">{v:.1f}</text>'
-            )
-            parts.append(
-                f'<text x="{bx + bar_w / 2:.1f}" y="{mt + plot_h + 20}" '
-                f'text-anchor="middle" font-size="11" fill="{INK}">{escape(mode)}</text>'
-            )
-            x += slot
-        parts.append(
-            f'<text x="{(gx0 + x) / 2:.1f}" y="{mt + plot_h + 40}" '
-            f'text-anchor="middle" font-size="12" fill="{INK}">{escape(dataset)}</text>'
-        )
-        x += group_pad
-    # legend: calibration hue key, upper right
-    lx = ml + plot_w - 150
-    for i, cal in enumerate(cals_in_legend):
-        ly = 14 + i * 18
-        color = CAL_COLORS.get(cal, FALLBACK_CAL_COLOR)
-        parts.append(f'<rect x="{lx}" y="{ly}" width="12" height="12" fill="{color}" rx="2"/>')
-        parts.append(
-            f'<text x="{lx + 18}" y="{ly + 10}" font-size="12" fill="{INK}">'
-            f"{escape(cal)}</text>"
-        )
-    _axis_and_ylabel(parts, ml, mt, plot_w, plot_h, ylabel)
-    return _write_svg(parts, out_path)
-
-
-def make_multi_plots(
-    summary: DataFrame,
-    outdir: str,
-    calibrations: list[str] | None = None,
-    collapse: str = "last",
-    drop_zero: bool = True,
-) -> dict[str, str]:
-    """Multi-config charts over the reference's v2 data pipeline.
-
-    The DATA SHAPING is make_multi_plots_v2.py parity (calibration
-    filter -> zero-latency drop -> collapse last|median|none -> smart
-    order, main:215-240); the RENDERING is an extension, not parity
-    (ADVICE r3): the reference's bar_plot draws single-hue flat bars
-    with combined dataset/mode/cal x-labels and no legend, while this
-    renderer groups bars per dataset with calibration-keyed hues and a
-    legend. Returns metric -> file path; metrics where every row is NA
-    are skipped."""
-    rows = reporting.multi_config_shape(
-        summary, calibrations=calibrations, collapse=collapse, drop_zero=drop_zero
-    ).collect()
-    out: dict[str, str] = {}
-    for metric, ylabel, title, fname in MULTI_METRICS:
-        groups: list[tuple[str, list[tuple[str, str, float]]]] = []
-        for r in rows:
-            v = _to_float(r[metric])
-            if v is None:
-                continue
-            ds = r["dataset"]
-            if not groups or groups[-1][0] != ds:
-                groups.append((ds, []))
-            groups[-1][1].append((r["mode"], r["calibration"], v))
-        if not groups:
-            continue
-        path = os.path.join(outdir, fname)
-        render_grouped_bar_svg(groups, ylabel, title, metric, path)
-        out[metric] = path
-    return out
 
 
 def make_plots(summary: DataFrame, outdir: str) -> dict[str, str]:

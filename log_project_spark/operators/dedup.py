@@ -50,37 +50,6 @@ from .parse import ngram_text, ngram_windows
 SIMHASH_BITS = 60
 
 
-def exact_dup_groups(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Groups of byte-identical values: key, n, min_id (the keeper).
-
-    Shuffle discipline (VERDICT r3 #1): the full-table pass aggregates
-    an (8-byte xxhash64(key), id) projection — the heavy exchange never
-    carries the document payload, as key OR value. Only rows whose hash
-    group has n > 1 (real duplicates plus ~n^2/2^65 accidental 64-bit
-    collisions) are joined back and re-grouped on (hash, key), so exact
-    key equality decides group membership and a collision can never
-    merge distinct texts. When the candidate hash list is small (the
-    common mostly-unique corpus) AQE broadcasts it and the payload is
-    never shuffled at all; when it is huge the fallback join still
-    shuffles on the 8-byte hash."""
-    kh = F.xxhash64(F.col(key_col)).alias("__kh__")
-    cand = (
-        df.select(kh)
-        .groupBy("__kh__")
-        .agg(F.count(F.lit(1)).alias("__hn__"))
-        .where(F.col("__hn__") > 1)
-        .select("__kh__")
-    )
-    return (
-        df.select(kh, key_col, id_col)
-        .join(cand, "__kh__")
-        .groupBy("__kh__", key_col)
-        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n") > 1)
-        .select(key_col, "n", "keep_id")
-    )
-
-
 def dedup_exact(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id row per identical key (deterministic winner).
 

@@ -75,46 +75,6 @@ def session_stats(
     )
 
 
-def session_window_stats(
-    df: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Same rollup via Spark's native `session_window` (merging
-    event-time windows) — the streaming-ready formulation: swap the
-    batch groupBy for `readStream` + watermark and the query is a
-    stateful streaming sessionization with bounded state.
-
-    Parity with `session_stats` is exact, INCLUDING the boundary: an
-    event at exactly `gap_seconds` after the previous one merges into
-    the session in both implementations (session_window's end is
-    inclusive for a coinciding event start; with_session_id keeps
-    `gap <= gap_seconds`). Pinned in test_sessionize."""
-    sw = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
-    return (
-        df.groupBy(F.col(key), sw)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("t_first"),
-            F.max(ts_col).alias("t_last"),
-        )
-        .select(
-            key,
-            "n_events",
-            "t_first",
-            "t_last",
-            (
-                (
-                    F.unix_micros(F.col("t_last").cast("timestamp"))
-                    - F.unix_micros(F.col("t_first").cast("timestamp"))
-                )
-                / F.lit(1_000_000)
-            ).cast("double").alias("span_seconds"),
-        )
-    )
-
-
 def tumbling_counts(
     df: DataFrame,
     ts_col: str = "ts",

@@ -1,5 +1,6 @@
-"""Text-analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+"""Text-analysis operators for training-data pipelines: an English /
+other language flag, quality scoring, token counting, document
+fingerprinting.
 
 All pure Catalyst expressions (whole-stage codegen, no Python), built
 on the same tokenization primitives as the parse stage. These extend
@@ -21,13 +22,9 @@ from pyspark.sql import functions as F
 
 from .parse import ngram_text, ngram_windows, word_tokens_col, ws_collapsed_col
 
-# small built-in stopword profiles for the n-gram-free heuristic
-STOPWORDS = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
-    "es": ["el", "la", "de", "que", "y", "en", "un", "es", "los", "por"],
-    "fr": ["le", "la", "de", "et", "les", "des", "en", "un", "du", "que"],
-    "de": ["der", "die", "das", "und", "in", "den", "von", "zu", "mit", "ist"],
-}
+# the English stopword list: the quality features, the lang-id rule and
+# the DuckDB oracles of their gate queries all read this one spelling
+STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"]
 
 BPE_ISH_PATTERN = r"\w+|[^\w\s]"
 
@@ -38,44 +35,33 @@ def n_tokens(norm: Column) -> Column:
     return F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
 
 
-def stopword_count(norm: Column, words: list[str]) -> Column:
-    """Occurrences of any listed stopword as a whole token in the
+def stopword_count(norm: Column) -> Column:
+    """Occurrences of any STOPWORDS word as a whole token in the
     collapsed norm text: one regexp_count over the space-padded text —
     ' (w1|w2|...)(?= )' consumes the leading delimiter only, so
     adjacent stopwords all count."""
-    pat = " (?:" + "|".join(words) + ")(?= )"
+    pat = " (?:" + "|".join(STOPWORDS) + ")(?= )"
     padded = F.concat(F.lit(" "), norm, F.lit(" "))
     return F.regexp_count(padded, F.lit(pat))
 
 
-def with_lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-language stopword-ratio columns lang_score_<lang>."""
-    out = df.withColumn("__norm__", ws_collapsed_col(F.col(text_col)))
-    n_tok = n_tokens(F.col("__norm__"))
-    for lang, words in STOPWORDS.items():
-        out = out.withColumn(
-            f"lang_score_{lang}", stopword_count(F.col("__norm__"), words) / n_tok
-        )
-    return out.drop("__norm__")
+def _safe_tokens(norm: Column) -> Column:
+    """The token count as a divisor: 1 for a document with no token,
+    so its ratios read 0.0 instead of raising DIVIDE_BY_ZERO (ANSI)."""
+    n_tok = n_tokens(norm)
+    return F.when(n_tok > 0, n_tok).otherwise(F.lit(1))
 
 
-def with_lang_id(
-    df: DataFrame, text_col: str = "text", out_col: str = "lang_pred", min_score: float = 0.02
-) -> DataFrame:
-    """Argmax over the language scores; 'und' when no profile clears
-    min_score."""
-    scored = with_lang_scores(df, text_col)
-    langs = list(STOPWORDS)
-    best_lang = F.lit(langs[0])
-    best_score = F.col(f"lang_score_{langs[0]}")
-    for lang in langs[1:]:
-        cond = F.col(f"lang_score_{lang}") > best_score
-        best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(cond, F.col(f"lang_score_{lang}")).otherwise(best_score)
-    out = scored.withColumn(
-        out_col, F.when(best_score >= min_score, best_lang).otherwise(F.lit("und"))
-    )
-    return out.drop(*[f"lang_score_{lang}" for lang in langs])
+def _stop_ratio(norm: Column) -> Column:
+    """English stopwords per token, unrounded."""
+    return stopword_count(norm) / _safe_tokens(norm)
+
+
+def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+    """'en' when the document's English stopword ratio (the unrounded
+    stop_ratio of `with_quality_features`) is > 0.08, else 'other'."""
+    ratio = _stop_ratio(ws_collapsed_col(F.col(text_col)))
+    return df.withColumn(out_col, F.when(ratio > 0.08, F.lit("en")).otherwise(F.lit("other")))
 
 
 def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -88,10 +74,9 @@ def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_punct = F.regexp_count(text, F.lit(r"[.,!?;:'\"()\[\]{}]"))
     n_upper = F.regexp_count(text, F.lit(r"[A-Z]"))
     n_digit = F.regexp_count(text, F.lit(r"[0-9]"))
-    n_stop = stopword_count(norm, STOPWORDS["en"])
     # sum of token lengths == collapsed length minus the n-1 separators
     tok_chars = F.when(n_tok > 0, F.length(norm) - (n_tok - F.lit(1))).otherwise(F.lit(0))
-    safe_tok = F.when(n_tok > 0, n_tok).otherwise(F.lit(1))
+    safe_tok = _safe_tokens(norm)
     safe_chars = F.when(n_chars > 0, n_chars).otherwise(F.lit(1))
     return (
         df.withColumn("n_tokens", n_tok.cast("long"))
@@ -100,7 +85,7 @@ def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("punct_ratio", F.round(n_punct / safe_chars, 6))
         .withColumn("upper_ratio", F.round(n_upper / safe_chars, 6))
         .withColumn("digit_ratio", F.round(n_digit / safe_chars, 6))
-        .withColumn("stop_ratio", F.round(n_stop / safe_tok, 6))
+        .withColumn("stop_ratio", F.round(_stop_ratio(norm), 6))
     )
 
 

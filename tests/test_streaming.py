@@ -231,175 +231,3 @@ def test_streaming_drift_parity_across_microbatches(spark, tmp_path, calibration
         for r in spark.sql(f"SELECT * FROM drift_stream_out_{calibration}").collect()
     }
     assert got == batch
-
-
-def _feed_files(spark, src_dir, batches, schema_df_builder):
-    """Write each batch as one parquet file with strictly increasing
-    mtimes (file-source micro-batch order)."""
-    import shutil
-
-    os.makedirs(src_dir, exist_ok=True)
-    stamp = 1_700_000_000
-    for i, rows in enumerate(batches):
-        tmp = f"{src_dir}__stage{i}"
-        schema_df_builder(rows).coalesce(1).write.mode("overwrite").parquet(tmp)
-        for f_ in sorted(os.listdir(tmp)):
-            if f_.endswith(".parquet"):
-                dst = os.path.join(src_dir, f"b{i}_{f_}")
-                shutil.copy(os.path.join(tmp, f_), dst)
-                stamp += 60
-                os.utime(dst, (stamp, stamp))
-
-
-def test_streaming_dedup_exact_across_microbatches(spark, tmp_path):
-    """dedup_stream_exact drops re-occurrences WITHIN and ACROSS
-    micro-batches; result set == batch dropDuplicates."""
-    from log_project_spark.streaming.dedup_stream import dedup_stream_exact
-
-    batches = [
-        [("d1", "alpha"), ("d2", "beta"), ("d1", "alpha-dup-in-batch")],
-        [("d2", "beta-dup-across"), ("d3", "gamma")],
-        [("d1", "alpha-dup-late"), ("d4", "delta")],
-    ]
-    src = str(tmp_path / "in")
-    _feed_files(
-        spark, src, batches,
-        lambda rows: spark.createDataFrame(rows, "doc_id string, text string"),
-    )
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        dedup_stream_exact(stream, ["doc_id"])
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_exact_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r["doc_id"] for r in spark.sql("SELECT * FROM dedup_exact_out").collect()}
-    n = spark.sql("SELECT count(*) AS n FROM dedup_exact_out").first()["n"]
-    assert got == {"d1", "d2", "d3", "d4"} and n == 4
-
-
-def test_streaming_dedup_watermark_bounded_state(spark, tmp_path):
-    """dedup_stream_within_watermark: duplicate inside the delay is
-    dropped; once the watermark passes the key's event time + delay,
-    state is evicted and a later re-occurrence EMITS AGAIN (the
-    bounded-state trade-off the module documents)."""
-    from datetime import datetime
-
-    from log_project_spark.streaming.dedup_stream import (
-        dedup_stream_within_watermark,
-    )
-
-    t = lambda m: datetime(2026, 1, 1, 10, m)  # noqa: E731
-    batches = [
-        [("A", t(0), "first")],
-        # dup of A within 10 min -> dropped; B advances the watermark
-        # to 10:30 - 10m = 10:20 > 10:00 + 10m -> A's state expires
-        [("A", t(2), "dup-within-delay"), ("B", t(30), "advance")],
-        # eviction runs at batch END with a one-batch watermark lag, so
-        # an intermediate batch lets A's state actually drop
-        [("C", t(31), "settle")],
-        # A re-occurs after expiry (event time above the 10:21
-        # watermark, so not late-dropped) -> emits again
-        [("A", t(25), "re-occurrence-after-expiry")],
-    ]
-    src = str(tmp_path / "in")
-    _feed_files(
-        spark, src, batches,
-        lambda rows: spark.createDataFrame(rows, "doc_id string, ts timestamp, tag string"),
-    )
-    stream = (
-        spark.readStream.schema("doc_id string, ts timestamp, tag string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        dedup_stream_within_watermark(stream, ["doc_id"], "ts", "10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_wm_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT doc_id, tag FROM dedup_wm_out").collect()
-    tags = sorted(r["tag"] for r in rows)
-    assert "dup-within-delay" not in tags
-    assert tags == ["advance", "first", "re-occurrence-after-expiry", "settle"]
-
-
-def test_streaming_session_windows(spark, tmp_path):
-    """Backs session_window_stats's streaming-readiness claim: the
-    same session_window expression under readStream + watermark
-    produces, once all batches are processed, exactly the batch
-    rollup (closed sessions emit in append mode as the watermark
-    passes; processAllAvailable + a final far-future event flushes
-    the rest)."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    # two sessions for user 1 (gap 2h), one for user 2
-    events = [
-        (1, t0), (1, t0 + timedelta(minutes=5)),
-        (2, t0 + timedelta(minutes=1)),
-        (1, t0 + timedelta(hours=2)),
-    ]
-    flush = [(99, t0 + timedelta(days=2), )]  # advances watermark past all
-    batches = [events[:2], events[2:], [(u, ts) for u, ts in flush]]
-    src = str(tmp_path / "in")
-    _feed_files(
-        spark, src, batches,
-        lambda rows: spark.createDataFrame(rows, "user_id long, ts timestamp"),
-    )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy("user_id", F.session_window("ts", "1800 seconds"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", "n_events")
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(
-        (r["user_id"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
-        if r["user_id"] != 99
-    )
-    # batch truth via the library operator
-    from log_project_spark.operators import sessionize
-
-    batch = sorted(
-        (r["user_id"], r["n_events"])
-        for r in sessionize.session_window_stats(
-            spark.createDataFrame(events, "user_id long, ts timestamp"),
-            gap_seconds=1800,
-        ).collect()
-    )
-    assert got == batch == [(1, 1), (1, 2), (2, 1)]

@@ -1,4 +1,4 @@
-"""Text analysis: lang-id heuristic, quality features, BPE-ish token
+"""Text analysis: en/other lang flag, quality features, BPE-ish token
 count, fingerprint stability."""
 
 import pytest
@@ -6,12 +6,19 @@ from pyspark.sql import functions as F
 
 from log_project_spark.operators import text_analysis as ta
 
+_FILLER = " ".join(f"w{i}" for i in range(23))
+
+# (doc_id, text, with_lang_id's flag)
 SAMPLES = [
     (0, "the cat sat on the mat and it is a good day for the dog", "en"),
-    (1, "el perro y el gato en la casa de los abuelos es un lugar", "es"),
-    (2, "le chat et le chien dans la maison des voisins en France", "fr"),
-    (3, "der hund und die katze in den garten mit der familie ist da", "de"),
-    (4, "zzz qqq xxx www", "und"),
+    (1, "el perro y el gato en la casa de los abuelos es un lugar", "other"),
+    (2, "le chat et le chien dans la maison des voisins en France", "other"),
+    # one English stopword ('in') of 13 tokens: 0.077 <= 0.08
+    (3, "der hund und die katze in den garten mit der familie ist da", "other"),
+    (4, "zzz qqq xxx www", "other"),
+    (5, "the a " + _FILLER, "other"),  # 2 of 25 == 0.08: the rule is strict >
+    (6, "the a of " + _FILLER, "en"),  # 3 of 26
+    (7, "   ", "other"),  # no token: ratio 0.0
 ]
 
 
@@ -33,7 +40,7 @@ def test_quality_features_values(spark, docs):
     assert row["n_tokens"] == len(toks)
     assert row["n_chars_text"] == len(text)
     assert row["avg_token_len"] == pytest.approx(sum(len(t) for t in toks) / len(toks), abs=1e-6)
-    n_stop = sum(1 for t in toks if t in ta.STOPWORDS["en"])
+    n_stop = sum(1 for t in toks if t in ta.STOPWORDS)
     assert row["stop_ratio"] == pytest.approx(n_stop / len(toks), abs=1e-6)
     assert row["punct_ratio"] == 0.0
 
@@ -115,3 +122,33 @@ def test_repetition_stats_hash_parity_and_plan(spark):
         if "Exchange hashpartitioning" in ln:
             inner = ln.split("hashpartitioning(", 1)[1]
             assert "text#" not in inner
+
+
+def test_text_gate_pairs_on_empty_documents(spark, tmp_path):
+    """Empty and whitespace-only documents have no token to divide by:
+    the lang-id and quality queries must return their DuckDB oracle's
+    rows (ratio 0.0, avg_token_len 0.0), not raise DIVIDE_BY_ZERO
+    under ANSI."""
+    from collections import Counter
+
+    import duckdb
+    import __spark_entry__ as entry
+
+    rows = [(0, "the cat is here", "en"), (1, "", "en"), (2, "   ", "es"), (3, "\t\n", "es")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    sf_dir = str(tmp_path)
+    docs.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet/*.parquet'"
+    )
+    qs, sql = entry.queries(), entry.oracle_sql()
+    for name in ("lang_id_heuristic", "quality_score", "quality_percentile_filter"):
+        got = Counter(tuple(r) for r in qs[name](spark, sf_dir).collect())
+        want = Counter(con.sql(sql[name]).fetchall())
+        assert got == want, name
+    scores = {r["doc_id"]: r for r in qs["quality_score"](spark, sf_dir).collect()}
+    assert scores[1]["stop_ratio"] == 0.0 and scores[1]["avg_token_len"] == 0.0
+    assert scores[0]["stop_ratio"] == 0.5  # 'the', 'is' of 4 tokens
+    langs = Counter(tuple(r) for r in qs["lang_id_heuristic"](spark, sf_dir).collect())
+    assert langs == Counter({("en", "en", 1): 1, ("en", "other", 1): 1, ("es", "other", 2): 1})
