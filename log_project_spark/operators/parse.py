@@ -12,6 +12,26 @@ Mask order is a correctness invariant: hex before num so `0xDEAD`
 never half-matches, ip before num so `10.0.0.5` stays one `<ip>`
 token instead of `<num>.<num>.<num>.<num>`.
 
+Literal guards: each regex pass runs only on the rows whose RAW text
+holds a literal every match needs, and leaves the others unchanged
+(CASE WHEN probe THEN pass(c) ELSE c END), so the output is
+byte-identical to running every pass on every row. The probes are
+byte-level `contains` on the raw text, plus one character-class
+`rlike` for the control chars. Lowercasing maps no code point
+into or out of 'x', '0', '.' or a Java `\\s` char (checked on the JVM
+over all of Unicode), a hex span and '<hex>' hold no '.', and no
+mask's span or literal holds whitespace, so a probe on the raw text
+sees what its pass would see:
+- hex `0x[0-9a-f]+` on lower(text) needs "0x" there, i.e. "0x" or
+  "0X" in the raw text;
+- ip needs a '.', which lowercasing and the hex mask neither create
+  nor remove;
+- the `\\s+` -> ' ' collapse changes the text only where it holds two
+  spaces in a row or one of \\t \\n \\x0B \\f \\r (Java's `\\s` is
+  exactly those and the space): otherwise every whitespace run is one
+  space already, and masking neither joins nor splits runs;
+- num stays unguarded: almost every log line holds a digit.
+
 Two implementations with identical output:
 - `tokens_col` / `norm_text_col` / `has_token_col` — native Catalyst
   expressions (regexp_replace/split): whole-stage codegen, no Python in
@@ -40,22 +60,47 @@ IP_PATTERN = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 NUM_PATTERN = r"\d+"
 
 
+def _guarded(probe: Column, c: Column, pattern: str, replacement: str) -> Column:
+    """regexp_replace(c, pattern, replacement) on the rows where `probe`
+    holds, c itself on the others. `probe` must be a necessary
+    condition for `pattern` to match c (module docstring), and it reads
+    the raw text, never c: whichever branch runs evaluates c once, so
+    the pass runs at most once per row with or without Catalyst's
+    subexpression elimination (a Filter does none)."""
+    return F.when(probe, F.regexp_replace(c, pattern, replacement)).otherwise(c)
+
+
+def _ws_collapsed(text: Column, c: Column) -> Column:
+    """c with runs of Java-`\\s` collapsed to one space and spaces
+    trimmed, where c is `text` lowercased (and masked): the collapse
+    runs only on rows whose raw text holds two spaces in a row or a
+    whitespace char other than the space; on the others every
+    whitespace run is one space already."""
+    # the control chars by one character-class find, since their raw
+    # literals would break the plan's lines; one `  |[...]` alternation
+    # would cost about as much as the collapse it guards
+    probe = text.contains("  ") | text.rlike(r"[\t\n\x0B\f\r]")
+    # trim strips only spaces, like btrim(_, ' '), but returns its
+    # input uncopied when there is none to strip
+    return F.trim(_guarded(probe, c, r"\s+", " "))
+
+
 def _masked_unstripped(text: Column) -> Column:
     """Mask chain WITHOUT the strip pass (whitespace handled later by
-    collapse+btrim — masking never matches whitespace and lowercasing
-    never creates/destroys it, so the passes commute)."""
+    collapse+trim — masking never matches whitespace and lowercasing
+    never creates/destroys it, so the passes commute). The hex and ip
+    passes run only where their literal occurs in the raw text."""
     c = F.lower(text)
-    c = F.regexp_replace(c, HEX_PATTERN, "<hex>")
-    c = F.regexp_replace(c, IP_PATTERN, "<ip>")
-    c = F.regexp_replace(c, NUM_PATTERN, "<num>")
-    return c
+    c = _guarded(text.contains("0x") | text.contains("0X"), c, HEX_PATTERN, "<hex>")
+    c = _guarded(text.contains("."), c, IP_PATTERN, "<ip>")
+    return F.regexp_replace(c, NUM_PATTERN, "<num>")
 
 
 def tokens_col(text: Column) -> Column:
     """Masked token array (no empty tokens, like str.split()).
 
     Derived from the collapsed norm_text: after `\\s+` -> ' ' collapse
-    and btrim the delimiter is exactly one space, so the split is a
+    and trim the delimiter is exactly one space, so the split is a
     single-char split whose only possible empty token is the one the
     empty string splits into, which array_remove drops. No higher-order
     filter() lambda anywhere (Catalyst interprets HOF lambdas per
@@ -70,11 +115,11 @@ def has_token_col(text: Column) -> Column:
     """Cheap predicate equivalent to `size(tokens_col(text)) > 0`.
 
     Proof of equivalence: tokens are the single-space split of
-    btrim(collapse(mask(lower(text)))). Lowercasing maps no character
+    trim(collapse(mask(lower(text)))). Lowercasing maps no character
     into or out of whitespace; each mask replaces non-whitespace spans
     with non-empty non-whitespace literals ('<hex>', '<ip>', '<num>');
     so the masked text contains a non-whitespace char iff the raw text
-    does. The collapse/btrim/split then yields >= 1 token iff a
+    does. The collapse/trim/split then yields >= 1 token iff a
     non-whitespace char survives. Hence: any Java-`\\S` match on the
     RAW text <=> non-empty token array. NULL propagates to NULL on
     both forms (row dropped either way).
@@ -94,16 +139,16 @@ def norm_text_col(text: Column) -> Column:
     """Masked, space-rejoined scoring text (reference joins token
     sequences back with " ": src/stream.py:135) ==
     " ".join(mask(line).split()). Collapsing `\\s+` to ' ' then
-    btrimming spaces is equivalent to strip-then-collapse and saves a
-    regex pass (btrim is a plain char scan)."""
-    return F.btrim(F.regexp_replace(_masked_unstripped(text), r"\s+", " "), F.lit(" "))
+    trimming spaces is equivalent to strip-then-collapse and saves a
+    regex pass (trim is a plain char scan)."""
+    return _ws_collapsed(text, _masked_unstripped(text))
 
 
 def ws_collapsed_col(text: Column) -> Column:
     """Lowercased text with runs of whitespace collapsed to single
     spaces and ends trimmed (NO masking) — the 'norm' form the
     text-analysis/dedup operators tokenize from."""
-    return F.btrim(F.regexp_replace(F.lower(text), r"\s+", " "), F.lit(" "))
+    return _ws_collapsed(text, F.lower(text))
 
 
 def word_tokens_col(text: Column) -> Column:

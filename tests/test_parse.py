@@ -2,6 +2,8 @@
 byte parity with the reference's committed mini_tokens.json artifact."""
 
 import json
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -99,13 +101,22 @@ def test_plan_is_native(spark, tricky_df):
 
 def test_tokens_projection_runs_mask_chain_once(spark, tricky_df):
     """A projection that keeps `tokens` without `norm_text` (transformer
-    mode's walk input, the word-token operators) evaluates the mask
-    chain once per row: 3 masks + the whitespace collapse, 4
-    regexp_replace (8 while tokens_col named norm_text in both a CASE
-    condition and its ELSE branch). Its rows equal tokenize_pandas."""
+    mode's walk input, the word-token operators) holds one copy of the
+    mask chain: as many regexp_replace as one norm_text_col expression
+    (a guarded pass names its input in both CASE branches, so that is
+    more than the 4 passes; 2 copies of the chain while tokens_col
+    named norm_text in both a CASE condition and its ELSE branch). No
+    CASE condition runs a pass: the guards probe the raw text, so
+    whichever branch runs evaluates the pass's input once. Its rows
+    equal tokenize_pandas."""
     tokens = parse_stage(tricky_df).select("id", "tokens")
     plan = tokens._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("regexp_replace(") == 4, plan
+    one_chain = str(parse.norm_text_col(F.col("text"))).count("regexp_replace(")
+    assert one_chain >= 4 and plan.count("regexp_replace(") == one_chain, plan
+    conditions = re.findall(r"WHEN (.*?) THEN", plan, re.S)
+    assert conditions, plan
+    # a condition holding a CASE would hide that CASE's own condition
+    assert not any("regexp_replace" in c or "CASE" in c for c in conditions), plan
     udf = tricky_df.withColumn("tokens", parse.tokenize_pandas(F.col("text")))
     assert _collected(tokens) == [(i, t) for i, t in _collected(udf) if t]
 
@@ -125,7 +136,92 @@ ADVERSARIAL = TRICKY + [
     "a  b   c",
     "  leading",
     "trailing  ",
+    # a guard's literal present with nothing for its pass to replace
+    "0X",
+    "0xg",
+    "a.b",
+    "1.2.3",
+    "1.2.3.4.5",
+    "\x0b",
 ]
+
+
+# every literal a pass's guard probes for, with and without a match
+# behind it, both cases of the hex digits, NBSP (not Java whitespace),
+# every Java `\s` char, and two letters whose lowercase is unusual:
+# U+0130 (two chars, i + combining dot) and the Kelvin sign (ASCII k)
+GUARD_ALPHABET = [
+    "0", "x", "X", ".", "1", "9", "a", "f", "A", "F",
+    " ", "\t", "\n", "\x0b", "\f", "\r", "\u00a0", "\u0130", "\u212a",
+]
+# digits, dots and spaces drawn often enough that dotted quads, hex
+# runs and space runs all occur
+GUARD_WEIGHTS = [4, 2, 1, 3, 4, 2, 1, 1, 1, 1, 4, 1, 1, 1, 1, 1, 1, 1, 1]
+
+
+def _guard_texts(n=5000, seed=7):
+    rng = random.Random(seed)
+    texts = [
+        "".join(rng.choices(GUARD_ALPHABET, GUARD_WEIGHTS, k=rng.randint(0, 24)))
+        for _ in range(n)
+    ]
+    return texts + ADVERSARIAL
+
+
+def _unguarded_collapse(c):
+    return F.btrim(F.regexp_replace(c, r"\s+", " "), F.lit(" "))
+
+
+def _unguarded_norm_text(text):
+    """The mask chain with every pass run on every row."""
+    c = F.lower(text)
+    c = F.regexp_replace(c, parse.HEX_PATTERN, "<hex>")
+    c = F.regexp_replace(c, parse.IP_PATTERN, "<ip>")
+    c = F.regexp_replace(c, parse.NUM_PATTERN, "<num>")
+    return _unguarded_collapse(c)
+
+
+def _split(c):
+    return F.array_remove(F.split(c, " "), "")
+
+
+def test_guarded_chain_equals_unguarded(spark):
+    """Every pass's guard is a necessary condition for the pass to
+    change its input, so the guarded columns equal the unguarded chain
+    byte for byte, on NULL, empty and whitespace-only rows too; on the
+    ASCII rows they equal the reference tokenizer."""
+    texts = _guard_texts()
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    t = F.col("text")
+    cols = {
+        "norm_text": (parse.norm_text_col(t), _unguarded_norm_text(t)),
+        "tokens": (parse.tokens_col(t), _split(_unguarded_norm_text(t))),
+        "ws": (parse.ws_collapsed_col(t), _unguarded_collapse(F.lower(t))),
+        "word_tokens": (parse.word_tokens_col(t), _split(_unguarded_collapse(F.lower(t)))),
+    }
+    rows = df.select(
+        "id", *[c.alias(f"g_{k}") for k, (c, _) in cols.items()],
+        *[c.alias(f"u_{k}") for k, (_, c) in cols.items()],
+    ).orderBy("id").collect()
+    assert len(rows) == len(texts)
+    for k in cols:
+        diff = [(texts[r["id"]], r[f"g_{k}"], r[f"u_{k}"])
+                for r in rows if r[f"g_{k}"] != r[f"u_{k}"]]
+        assert not diff, (k, diff[:5])
+    norm = [r["u_norm_text"] or "" for r in rows]
+    # the input reaches every pass with and without a match
+    assert all(any(m in s for s in norm) for m in ("<hex>", "<ip>", "<num>"))
+    lowered = [(t or "").lower() for t in texts]
+    assert any("." in t and "<ip>" not in s for t, s in zip(lowered, norm))
+    assert any("0x" in t and "<hex>" not in s for t, s in zip(lowered, norm))
+    for r in rows:
+        raw = texts[r["id"]]
+        if raw is None or not raw.isascii():
+            continue
+        want = oracle.tokenize_line(raw)
+        assert list(r["g_tokens"]) == want, raw
+        assert r["g_norm_text"] == " ".join(want), raw
+        assert r["g_ws"] == " ".join(raw.lower().split()), raw
 
 
 def test_drop_empty_predicate_equivalence(spark):
