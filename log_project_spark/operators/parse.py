@@ -12,25 +12,29 @@ Mask order is a correctness invariant: hex before num so `0xDEAD`
 never half-matches, ip before num so `10.0.0.5` stays one `<ip>`
 token instead of `<num>.<num>.<num>.<num>`.
 
-Literal guards: each regex pass runs only on the rows whose RAW text
-holds a literal every match needs, and leaves the others unchanged
-(CASE WHEN probe THEN pass(c) ELSE c END), so the output is
-byte-identical to running every pass on every row. The probes are
-byte-level `contains` on the raw text, plus one character-class
-`rlike` for the control chars. Lowercasing maps no code point
-into or out of 'x', '0', '.' or a Java `\\s` char (checked on the JVM
-over all of Unicode), a hex span and '<hex>' hold no '.', and no
-mask's span or literal holds whitespace, so a probe on the raw text
-sees what its pass would see:
-- hex `0x[0-9a-f]+` on lower(text) needs "0x" there, i.e. "0x" or
-  "0X" in the raw text;
+Literal guards: two passes run only on the rows whose RAW text holds
+a literal every match needs, and leave the others unchanged (CASE WHEN
+probe THEN pass(c) ELSE c END), so the output is byte-identical to
+running every pass on every row. The probes are byte-level `contains`
+on the raw text. Lowercasing maps no code point into or out of '.' or
+a Java `\\s` char (checked on the JVM over all of Unicode), and no
+mask's span or literal holds whitespace or a '.' outside an ip span:
+- the `\\s+` -> ' ' collapse runs FIRST, on the raw text, and changes
+  it only where it holds two spaces in a row or one of \\t \\n \\x0B
+  \\f \\r (Java's `\\s` is exactly those and the space); otherwise
+  every whitespace run is one space already. Collapsing before the
+  masks and lowercasing gives what collapsing after them gives: no
+  mask matches or makes whitespace, every `\\s` char is a non-word
+  char to the ip pattern's `\\b`, and whitespace is neither cased nor
+  case-ignorable, so no lowercase context changes. The collapse's
+  input is the raw column, so the CASE copies no other pass;
 - ip needs a '.', which lowercasing and the hex mask neither create
-  nor remove;
-- the `\\s+` -> ' ' collapse changes the text only where it holds two
-  spaces in a row or one of \\t \\n \\x0B \\f \\r (Java's `\\s` is
-  exactly those and the space): otherwise every whitespace run is one
-  space already, and masking neither joins nor splits runs;
-- num stays unguarded: almost every log line holds a digit.
+  nor remove.
+hex and num run on every row. A "0x"/"0X" probe for hex was measured
+and left out: the hex pass is the cheapest of the four, and skipping
+it on the 3 rows in 4 of the skew input without a hex value saved
+less than the measurement's spread. Almost every log line holds a
+digit, so num has no literal to skip on.
 
 Two implementations with identical output:
 - `tokens_col` / `norm_text_col` / `has_token_col` — native Catalyst
@@ -60,39 +64,31 @@ IP_PATTERN = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 NUM_PATTERN = r"\d+"
 
 
-def _guarded(probe: Column, c: Column, pattern: str, replacement: str) -> Column:
-    """regexp_replace(c, pattern, replacement) on the rows where `probe`
-    holds, c itself on the others. `probe` must be a necessary
-    condition for `pattern` to match c (module docstring), and it reads
-    the raw text, never c: whichever branch runs evaluates c once, so
-    the pass runs at most once per row with or without Catalyst's
+# Java's `\s` minus the space, as one-byte binary literals: a string
+# literal would print them raw and break the plan's lines
+_CONTROL_WS = [bytes([b]) for b in b"\t\n\x0b\f\r"]
+
+
+def _collapsed(text: Column) -> Column:
+    """text with every run of Java-`\\s` replaced by one space: the
+    collapse runs only on rows whose raw text holds two spaces in a
+    row or a whitespace char other than the space."""
+    raw = text.cast("binary")
+    probe = text.contains("  ")
+    for b in _CONTROL_WS:
+        probe = probe | F.contains(raw, F.lit(b))
+    return F.when(probe, F.regexp_replace(text, r"\s+", " ")).otherwise(text)
+
+
+def _masked(text: Column) -> Column:
+    """Collapsed, lowercased and masked, not yet trimmed (masking never
+    matches whitespace, so one trim at the end strips what a strip
+    first would). The ip pass runs only where the raw text holds a '.';
+    its probe reads the raw text, never the pass's input, so whichever
+    branch runs evaluates that input once, with or without Catalyst's
     subexpression elimination (a Filter does none)."""
-    return F.when(probe, F.regexp_replace(c, pattern, replacement)).otherwise(c)
-
-
-def _ws_collapsed(text: Column, c: Column) -> Column:
-    """c with runs of Java-`\\s` collapsed to one space and spaces
-    trimmed, where c is `text` lowercased (and masked): the collapse
-    runs only on rows whose raw text holds two spaces in a row or a
-    whitespace char other than the space; on the others every
-    whitespace run is one space already."""
-    # the control chars by one character-class find, since their raw
-    # literals would break the plan's lines; one `  |[...]` alternation
-    # would cost about as much as the collapse it guards
-    probe = text.contains("  ") | text.rlike(r"[\t\n\x0B\f\r]")
-    # trim strips only spaces, like btrim(_, ' '), but returns its
-    # input uncopied when there is none to strip
-    return F.trim(_guarded(probe, c, r"\s+", " "))
-
-
-def _masked_unstripped(text: Column) -> Column:
-    """Mask chain WITHOUT the strip pass (whitespace handled later by
-    collapse+trim — masking never matches whitespace and lowercasing
-    never creates/destroys it, so the passes commute). The hex and ip
-    passes run only where their literal occurs in the raw text."""
-    c = F.lower(text)
-    c = _guarded(text.contains("0x") | text.contains("0X"), c, HEX_PATTERN, "<hex>")
-    c = _guarded(text.contains("."), c, IP_PATTERN, "<ip>")
+    c = F.regexp_replace(F.lower(_collapsed(text)), HEX_PATTERN, "<hex>")
+    c = F.when(text.contains("."), F.regexp_replace(c, IP_PATTERN, "<ip>")).otherwise(c)
     return F.regexp_replace(c, NUM_PATTERN, "<num>")
 
 
@@ -141,14 +137,16 @@ def norm_text_col(text: Column) -> Column:
     " ".join(mask(line).split()). Collapsing `\\s+` to ' ' then
     trimming spaces is equivalent to strip-then-collapse and saves a
     regex pass (trim is a plain char scan)."""
-    return _ws_collapsed(text, _masked_unstripped(text))
+    # trim strips only spaces, like btrim(_, ' '), but returns its
+    # input uncopied when there is none to strip
+    return F.trim(_masked(text))
 
 
 def ws_collapsed_col(text: Column) -> Column:
     """Lowercased text with runs of whitespace collapsed to single
     spaces and ends trimmed (NO masking) — the 'norm' form the
     text-analysis/dedup operators tokenize from."""
-    return _ws_collapsed(text, F.lower(text))
+    return F.trim(F.lower(_collapsed(text)))
 
 
 def word_tokens_col(text: Column) -> Column:

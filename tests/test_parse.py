@@ -148,15 +148,17 @@ ADVERSARIAL = TRICKY + [
 
 # every literal a pass's guard probes for, with and without a match
 # behind it, both cases of the hex digits, NBSP (not Java whitespace),
-# every Java `\s` char, and two letters whose lowercase is unusual:
-# U+0130 (two chars, i + combining dot) and the Kelvin sign (ASCII k)
+# every Java `\s` char, and three letters whose lowercase is unusual:
+# U+0130 (two chars, i + combining dot), the Kelvin sign (ASCII k) and
+# capital sigma (final or medial form by its neighbours, so collapsing
+# whitespace before lowercasing must not change its context)
 GUARD_ALPHABET = [
     "0", "x", "X", ".", "1", "9", "a", "f", "A", "F",
-    " ", "\t", "\n", "\x0b", "\f", "\r", "\u00a0", "\u0130", "\u212a",
+    " ", "\t", "\n", "\x0b", "\f", "\r", "\u00a0", "\u0130", "\u212a", "\u03a3",
 ]
 # digits, dots and spaces drawn often enough that dotted quads, hex
 # runs and space runs all occur
-GUARD_WEIGHTS = [4, 2, 1, 3, 4, 2, 1, 1, 1, 1, 4, 1, 1, 1, 1, 1, 1, 1, 1]
+GUARD_WEIGHTS = [4, 2, 1, 3, 4, 2, 1, 1, 1, 1, 4, 1, 1, 1, 1, 1, 1, 1, 1, 1]
 
 
 def _guard_texts(n=5000, seed=7):
